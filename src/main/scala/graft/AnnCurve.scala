@@ -162,18 +162,20 @@ object AnnCurve {
     out("\n| probe p | ef=16 | ef=64 | ef=128 | ef=256 |")
     out("|---|---|---|---|---|")
     val base = Hnsw.baseDir(spark)
+    def search(q: Array[Float], ef: Int, p: Int, margin: Double = 0.0) =
+      Hnsw.searchBatch(None, base, meta, Array(q), k, ef, p, margin).head
     for (p <- Seq(1, 2, 4, 8, clusters)) {
       val cells = for (ef <- Seq(16, 64, 128, 256)) yield {
         // warm pass: load the routed segments' graphs once (the serving
         // steady state — a 100 TB cluster's executors keep graphs cached)
-        queryVecs.foreach { case (_, q) => Hnsw.searchMeta(base, meta, q, k, ef, p) }
+        queryVecs.foreach { case (_, q) => search(q, ef, p) }
         val lat = new Array[Double](queryVecs.length)
         var hit = 0
         var i = 0
         while (i < queryVecs.length) {
           val (qid, q) = queryVecs(i)
           val s0 = System.nanoTime()
-          val got = Hnsw.searchMeta(base, meta, q, k, ef, p)
+          val got = search(q, ef, p)
           lat(i) = (System.nanoTime() - s0) / 1e6
           hit += got.count { case (id, _) => truth(qid).contains(id) }
           i += 1
@@ -198,7 +200,7 @@ object AnnCurve {
         Seq(1.1, 1.25, 1.5, 2.0).map(m => (f"adaptive p=2 m=$m%.2f", 2, m))
     for ((label, p, margin) <- rows) {
       val cells = for (ef <- Seq(64, 256)) yield {
-        queryVecs.foreach { case (_, q) => Hnsw.searchMeta(base, meta, q, k, ef, p, margin) }
+        queryVecs.foreach { case (_, q) => search(q, ef, p, margin) }
         val lat = new Array[Double](queryVecs.length)
         var hit = 0
         var probes = 0L
@@ -206,7 +208,7 @@ object AnnCurve {
         while (i < queryVecs.length) {
           val (qid, q) = queryVecs(i)
           val s0 = System.nanoTime()
-          val got = Hnsw.searchMeta(base, meta, q, k, ef, p, margin)
+          val got = search(q, ef, p, margin)
           lat(i) = (System.nanoTime() - s0) / 1e6
           hit += got.count { case (id, _) => truth(qid).contains(id) }
           probes += meta.routedSegments(q, p, margin).size

@@ -2,12 +2,15 @@ package graft
 
 import java.io.File
 
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
 
-import graft.index.{GraphCache, HnswGraph, HnswIndexMeta, IndexCatalog}
+import graft.index.{GraphCache, HnswGraph, HnswIndexMeta, IndexCatalog, TombstoneCache}
 
 /**
  * Public index-management API — the Spark re-expression of the reference's
@@ -214,7 +217,7 @@ object Hnsw {
           val f = f"$prefix-$i%05d.hnsw"
           IndexCatalog.writeGraph(new File(dirPath, f), g)
           val (lo, hi) = g.keyRange.get
-          Iterator.single((f, g.count.toLong, lo, hi,
+          Iterator.single((f, g.size.toLong, lo, hi,
             sum.map(x => (x / n).toFloat)))
         }
       }
@@ -232,18 +235,30 @@ object Hnsw {
 
   // ----------------------------------------------------------------- search
 
+  /** Per-segment tombstone over-fetch cap: every segment search fetches
+    * k + min(catalog tombstones, this) candidates, so dropped tombstones
+    * cannot starve the merged top-k. Bounded because compaction, not
+    * over-fetch, is the fix for large tombstone sets; the filtered index
+    * scan's exhaustion proof ([[graft.plans.HnswIndexScanExec]]) relies on
+    * this cap. */
+  private[graft] val MaxTombstoneOverfetch = 1024
+
+  /** Most segments a driver-side call touches in the calling thread; with
+    * more, a Spark job (one task per segment) is cheaper than the loop. */
+  private val DriverLocalSegments = 4
+
   /**
-   * Raw ANN search: top-k (rowid, internal-metric distance) ascending.
-   * Fans out over segments, filters tombstones, merges. Distances are the
-   * index metric's (l2sq/cosine/ip ordering — monotone with the SQL-surface
-   * functions; SURVEY §7.3 item 5).
+   * Raw ANN search in the calling thread: top-k (rowid, internal-metric
+   * distance) ascending. Distances are the index metric's
+   * (l2sq/cosine/ip ordering — monotone with the SQL-surface functions;
+   * SURVEY §7.3 item 5).
    */
   def searchRaw(spark: SparkSession, name: String, q: Array[Float], k: Int,
       efOverride: Option[Int] = None): Array[(Long, Double)] = {
     val base = baseDir(spark)
     val meta = IndexCatalog.load(base, name)
-    searchMeta(base, meta, q, k, efOverride.getOrElse(efSearch(spark, meta)),
-      probeSegments(spark), adaptiveProbeMargin(spark))
+    searchBatch(None, base, meta, Array(q), k, efOverride.getOrElse(efSearch(spark, meta)),
+      probeSegments(spark), adaptiveProbeMargin(spark)).head
   }
 
   /**
@@ -254,7 +269,9 @@ object Hnsw {
    * names are never reused — so a reader that loaded meta pre-swap can only
    * fail with missing-file, and the reloaded meta is always servable.
    * Post-compaction contents are search-equivalent (compaction removes only
-   * tombstoned entries, which search filters anyway).
+   * tombstoned entries, which search filters anyway). A task-side missing
+   * file surfaces wrapped in SparkException; isMissingFile walks the cause
+   * chain.
    */
   private def withFreshMeta[T](base: String, meta: HnswIndexMeta)(
       body: HnswIndexMeta => T): T =
@@ -269,123 +286,65 @@ object Hnsw {
     case _ => false
   }
 
-  private[graft] def searchMeta(base: String, meta: HnswIndexMeta, q: Array[Float],
-      k: Int, ef: Int, probe: Int = 0, margin: Double = 0.0): Array[(Long, Double)] =
+  /** Apply `f` to each per-segment item, in order. Without a session
+    * (executor side) or with at most [[DriverLocalSegments]] items it runs
+    * in the calling thread; otherwise as one Spark task per item, each
+    * task reading its segment through its executor's GraphCache. */
+  private def perSegment[A: ClassTag, B: ClassTag](spark: Option[SparkSession],
+      items: Seq[A])(f: A => B): Iterator[B] = spark match {
+    case Some(s) if items.size > DriverLocalSegments =>
+      s.sparkContext.parallelize(items, items.size).map(f).collect().iterator
+    case _ => items.iterator.map(f)
+  }
+
+  /**
+   * The index's one search: for each query (null → empty), the ascending
+   * top-k (rowid, index-metric distance) over its routed segments
+   * ([[graft.index.HnswIndexMeta.routedSegments]] at `probe`, `margin`).
+   *
+   * Segment-outer: each routed segment is loaded once through GraphCache
+   * and serves every query routed to it before the next segment is
+   * touched — per-query segment loops would reload every segment per query
+   * whenever the byte-bounded cache is smaller than the index. Routing
+   * happens before the fan-out decision, so a 1000-segment index routed to
+   * p = 8 never becomes a 1000-task job; a segment no query routed to is
+   * never loaded. Catalog tombstones are dropped from each segment's hits,
+   * then each query's partial top-ks are merged. `spark` picks where the
+   * segments run ([[perSegment]]): the SQL index scan passes its session;
+   * executor-side callers (the index join) and single-thread callers pass
+   * None.
+   */
+  private[graft] def searchBatch(spark: Option[SparkSession], base: String,
+      meta: HnswIndexMeta, queries: Array[Array[Float]], k: Int, ef: Int,
+      probe: Int, margin: Double): Array[Array[(Long, Double)]] =
     withFreshMeta(base, meta) { meta =>
-      val dir = IndexCatalog.indexDir(base, meta.name)
-      val tombs = graft.index.TombstoneCache.get(base, meta.name)
-      // Over-fetch per segment so catalog-level tombstones can't starve the
-      // merged top-k (bounded: compaction is the fix for large tombstone sets).
-      val fetch = k + math.min(tombs.size, 1024)
-      meta.routedSegments(q, probe, margin).iterator
-        .flatMap { s =>
-          GraphCache.get(new File(dir, s)).search(q, fetch, ef)
-            .filterNot { case (key, _) => tombs.contains((s, key)) }
-        }
-        .toArray.sortBy(_._2).take(k)
-    }
-
-  /**
-   * Batched multi-query search, segment-outer: each segment graph is loaded
-   * once and serves every query in the batch before the next segment is
-   * touched. This is the executor-side shape for the index join — per-row
-   * segment iteration would reload every segment per outer row whenever the
-   * byte-bounded GraphCache is smaller than the index (thrash); per-batch
-   * iteration amortizes each load over the whole batch. Returns one
-   * ascending top-k array per query (null queries → empty).
-   */
-  private[graft] def searchBatch(base: String, meta: HnswIndexMeta,
-      queries: Array[Array[Float]], k: Int, ef: Int,
-      probe: Int = 0, margin: Double = 0.0): Array[Array[(Long, Double)]] =
-    withFreshMeta(base, meta)(
-      searchBatchOnce(base, _, queries, k, ef, probe, margin))
-
-  private def searchBatchOnce(base: String, meta: HnswIndexMeta,
-      queries: Array[Array[Float]], k: Int, ef: Int,
-      probe: Int, margin: Double): Array[Array[(Long, Double)]] = {
-    val dir = IndexCatalog.indexDir(base, meta.name)
-    val tombs = graft.index.TombstoneCache.get(base, meta.name)
-    val fetch = k + math.min(tombs.size, 1024)
-    val acc = Array.fill(queries.length)(
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Double)])
-    // Per-query routing: each query searches only its p nearest segments
-    // (null = all — routing off or inapplicable). The segment-outer loop
-    // is preserved (one graph load serves the whole batch); a segment no
-    // query routed to is never loaded at all.
-    val routed: Array[java.util.HashSet[String]] =
-      if (probe <= 0) null
-      else queries.map { q =>
-        if (q == null) null
-        else new java.util.HashSet[String](
-          scala.jdk.CollectionConverters.SeqHasAsJava(
-            meta.routedSegments(q, probe, margin)).asJava)
+      val dirPath = IndexCatalog.indexDir(base, meta.name).getAbsolutePath
+      val tombs = TombstoneCache.get(base, meta.name)
+      val fetch = k + math.min(tombs.size, MaxTombstoneOverfetch)
+      val routed = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofInt]
+      queries.indices.foreach { i =>
+        if (queries(i) != null) meta.routedSegments(queries(i), probe, margin)
+          .foreach(s => routed.getOrElseUpdate(s, new mutable.ArrayBuilder.ofInt) += i)
       }
-    meta.segments.foreach { s =>
-      var any = false
-      var i = 0
-      while (i < queries.length && !any) {
-        any = queries(i) != null && (routed == null || routed(i).contains(s))
-        i += 1
+      val work = meta.segments.flatMap(s => routed.get(s).map(qs => (s, qs.result())))
+      val hits = perSegment(spark, work) { case (s, qs) =>
+        val g = GraphCache.get(new File(dirPath, s))
+        qs.map(i => g.search(queries(i), fetch, ef))
       }
-      if (any) {
-        val g = GraphCache.get(new File(dir, s))
-        i = 0
-        while (i < queries.length) {
-          if (queries(i) != null && (routed == null || routed(i).contains(s))) {
-            acc(i) ++= g.search(queries(i), fetch, ef)
-              .filterNot { case (key, _) => tombs.contains((s, key)) }
-            // Keep each accumulator bounded: only the best k can survive.
-            if (acc(i).length > 4 * fetch) {
-              val best = acc(i).sortBy(_._2).take(k)
-              acc(i).clear(); acc(i) ++= best
-            }
+      val acc = Array.fill(queries.length)(mutable.ArrayBuffer.empty[(Long, Double)])
+      work.iterator.zip(hits).foreach { case ((s, qs), segHits) =>
+        qs.indices.foreach { j =>
+          val buf = acc(qs(j))
+          buf ++= segHits(j).filterNot { case (key, _) => tombs.contains((s, key)) }
+          // Keep each accumulator bounded: only the best k can survive.
+          if (buf.length > 4 * fetch) {
+            val best = buf.sortBy(_._2).take(k)
+            buf.clear(); buf ++= best
           }
-          i += 1
         }
       }
+      acc.map(_.sortBy(_._2).take(k).toArray)
     }
-    acc.map(buf => buf.sortBy(_._2).take(k).toArray)
-  }
-
-  /**
-   * Segment-parallel search: for many-segment indexes, fan the per-segment
-   * searches out as a Spark job (each task warms its executor's GraphCache
-   * from shared storage) and merge the partial top-ks on the driver — the
-   * multi-executor scaling path for [[graft.plans.HnswIndexScanExec]]. For
-   * few segments the driver-local loop is cheaper than a job launch.
-   */
-  private[graft] def searchDistributed(spark: SparkSession, base: String,
-      meta: HnswIndexMeta, q: Array[Float], k: Int, ef: Int): Array[(Long, Double)] =
-    // A task-side missing file surfaces wrapped in SparkException;
-    // isMissingFile walks the cause chain, and the retry re-plans the job
-    // over the fresh segment list.
-    withFreshMeta(base, meta)(
-      searchDistributedOnce(spark, base, _, q, k, ef, probeSegments(spark),
-        adaptiveProbeMargin(spark)))
-
-  private def searchDistributedOnce(spark: SparkSession, base: String,
-      meta: HnswIndexMeta, q: Array[Float], k: Int, ef: Int,
-      probe: Int, margin: Double): Array[(Long, Double)] = {
-    // Routing happens BEFORE the fan-out decision: a 1000-segment index
-    // routed to p=8 runs the driver-local loop, not a 1000-task job.
-    val segs = meta.routedSegments(q, probe, margin)
-    if (segs.size <= 4) return searchMeta(base, meta, q, k, ef, probe)
-    val dirPath = IndexCatalog.indexDir(base, meta.name).getAbsolutePath
-    val tombs = graft.index.TombstoneCache.get(base, meta.name)
-    val fetch = k + math.min(tombs.size, 1024)
-    val partial = spark.sparkContext
-      .parallelize(segs, segs.size)
-      .flatMap { s =>
-        GraphCache.get(new File(dirPath, s)).search(q, fetch, ef).map {
-          case (key, d) => (s, key, d)
-        }
-      }
-      .collect()
-    partial.iterator
-      .filterNot { case (s, key, _) => tombs.contains((s, key)) }
-      .map { case (_, key, d) => (key, d) }
-      .toArray.sortBy(_._2).take(k)
-  }
 
   /** Top-k as a DataFrame (id, distance) — the `hnsw_index_scan` surface. */
   def topK(spark: SparkSession, name: String, q: Array[Float], k: Int): DataFrame = {
@@ -444,8 +403,9 @@ object Hnsw {
     updated
   }
 
-  /** Mark rowids deleted (O12) — mark-only until [[compactIndex]], matching
-    * the reference (README.md:67-69).
+  /** Delete rowids (O12) by recording catalog tombstones — search drops
+    * them until [[compactIndex]] rebuilds without them, matching the
+    * reference's mark-then-compact contract (README.md:67-69).
     *
     * Scale shape: the membership probe is pruned driver-side by the
     * per-segment key ranges recorded at build (segments are
@@ -462,21 +422,10 @@ object Hnsw {
     val probes: Seq[(String, Seq[Long])] = distinctKeys
       .flatMap(k => meta.segmentsForKey(k).map(s => (s, k)))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-    val hits: Seq[(String, Long)] =
-      if (probes.size <= 4) {
-        // Few candidate segments: a job launch costs more than the probe.
-        probes.flatMap { case (s, ks) =>
-          val g = GraphCache.get(new File(dirPath, s))
-          ks.filter(g.contains).map(k => (s, k))
-        }
-      } else {
-        spark.sparkContext.parallelize(probes, probes.size)
-          .flatMap { case (s, ks) =>
-            val g = GraphCache.get(new File(dirPath, s))
-            ks.filter(g.contains).map(k => (s, k))
-          }
-          .collect().toSeq
-      }
+    val hits = perSegment(Some(spark), probes) { case (s, ks) =>
+      val g = GraphCache.get(new File(dirPath, s))
+      ks.filter(g.contains).map(k => (s, k))
+    }.flatten.toSeq
     recordTombstones(base, name, meta, existing, hits)
   }
 
@@ -528,7 +477,7 @@ object Hnsw {
     updated
   }
 
-  /** Rebuild segments without tombstoned/marked-deleted entries (O13).
+  /** Rebuild segments without catalog-tombstoned entries (O13).
     * The live entries never touch the driver: a task per old segment reads
     * its graph from shared storage and emits survivors, and the normal
     * partitioned build path writes the fresh segments. */
@@ -542,13 +491,13 @@ object Hnsw {
     val live = spark.sparkContext
       .parallelize(meta.segments, math.max(1, meta.segments.size))
       .flatMap { s =>
-        GraphCache.get(new File(dirPath, s)).liveEntries
+        GraphCache.get(new File(dirPath, s)).entries
           .filterNot { case (k, _) => tombs.contains((s, k)) }
       }.toDS()
     val opts = Options(meta.metric, meta.efConstruction, meta.efSearch, meta.m, meta.m0)
     // Build the replacement segments first under a fresh generation prefix
     // (max existing generation + 1 — a repeated count would reuse a live
-    // file name: the build would overwrite a segment the liveEntries tasks
+    // file name: the build would overwrite a segment the entries tasks
     // are reading, then the cleanup below would delete it), then atomically
     // swap via the metadata file.
     val gen = meta.segments
@@ -557,12 +506,16 @@ object Hnsw {
     val segs =
       if (meta.segments.isEmpty) Seq.empty
       else buildSegments(spark, live, dir, f"part-c$gen%03d", meta.dim, opts)
-    meta.segments.foreach(s => new File(dir, s).delete())
-    GraphCache.invalidate(dirPath)
-    IndexCatalog.writeTombstones(base, name, Set.empty)
+    // Commit order: the new meta first, so a reader never reloads a meta
+    // that names deleted files (withFreshMeta's retry). Old tombstones name
+    // only old-generation segments, so a reader between the save and the
+    // clear drops nothing from the new generation.
     val updated = meta.copy(count = segs.map(_._2).sum, segments = segs.map(_._1),
       segmentRanges = segs.map(s => (s._3, s._4)), centroids = segs.map(_._5))
     IndexCatalog.save(base, updated)
+    IndexCatalog.writeTombstones(base, name, Set.empty)
+    meta.segments.foreach(s => new File(dir, s).delete())
+    GraphCache.invalidate(dirPath)
     updated
   }
 
@@ -570,19 +523,16 @@ object Hnsw {
 
   /** Per-segment stats needed by [[indexInfo]] — computed where the graph
     * already lives (executor GraphCache) so the driver never deserializes a
-    * graph; a few segments stay driver-local (job launch costs more). */
-  private case class SegStats(maxLevel: Int, removed: Long, memBytes: Long,
+    * graph; a few segments stay driver-local ([[perSegment]]). */
+  private case class SegStats(maxLevel: Int, memBytes: Long,
       levels: Seq[(Long, Long, Long, Long)])
 
   private def segmentStats(spark: SparkSession, dirPath: String,
-      segments: Seq[String]): Seq[SegStats] = {
-    def statsOf(s: String): SegStats = {
+      segments: Seq[String]): Seq[SegStats] =
+    perSegment(Some(spark), segments) { s =>
       val g = GraphCache.get(new File(dirPath, s))
-      SegStats(g.maxLevel, g.removedCount.toLong, g.approxMemoryBytes, g.levelStats)
-    }
-    if (segments.size <= 4) segments.map(statsOf)
-    else spark.sparkContext.parallelize(segments, segments.size).map(statsOf).collect().toSeq
-  }
+      SegStats(g.maxLevel, g.approxMemoryBytes, g.levelStats)
+    }.toSeq
 
   /** One row per index — `pragma_hnsw_index_info()` parity
     * (hnsw_index_pragmas.cpp:41-173), including per-level allocated_bytes
@@ -600,7 +550,7 @@ object Hnsw {
       }
       Row(meta.name, meta.paths.mkString(","), meta.column, meta.idColumn,
         meta.metric, meta.dim, meta.count,
-        tombs.size.toLong + stats.map(_.removed).sum,
+        tombs.size.toLong,
         meta.segments.size, levels,
         stats.map(_.memBytes).sum, mergedStats)
     }

@@ -114,7 +114,7 @@ case class HnswIndexJoinCoreExec(
           val v = bound.eval(row)
           if (v == null) null else toFloats(v.asInstanceOf[ArrayData])
         }
-        val hits = Hnsw.searchBatch(b, m, queries, kk, e, probe, margin)
+        val hits = Hnsw.searchBatch(None, b, m, queries, kk, e, probe, margin)
         rows.iterator.zipWithIndex.flatMap { case (outerRow, ri) =>
           hits(ri).iterator.zipWithIndex.map { case ((id, d), i) =>
             resultProj(joined(outerRow,

@@ -42,7 +42,7 @@ object HnswQueries {
     IndexCatalog.exists(base, name) && {
       try {
         val meta = IndexCatalog.load(base, name)
-        meta.count > 0 && Hnsw.searchMeta(base, meta, QueryVec, 1, 1).nonEmpty
+        meta.count > 0 && Hnsw.searchBatch(None, base, meta, Array(QueryVec), 1, 1, 0, 0.0).head.nonEmpty
       } catch { case _: Exception => false }
     }
   }

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 
 import graft.index.{HnswIndexMeta, IndexCatalog}
@@ -192,5 +194,77 @@ class HnswRoutingSpec extends SparkSuite {
       segmentRanges = Seq((0L, 0L), (0L, 0L)),
       centroids = Seq(Array(1.0f, 0.0f), Array(0.0f, 1.0f)))
     assert(cos.routedSegments(Array(0.99f, 0.05f), 2, 1.5) == Seq("c0"))
+  }
+
+  test("path parity: SQL top-k, searchRaw and lateralTopK agree at every " +
+      "(probeSegments, adaptiveProbeMargin), driver-local and job fan-out") {
+    val k = 10
+    val dim = 8
+    // Cluster 0 holds fewer than k rows, each other cluster 40 (= the
+    // per-segment cap, so every cluster is one segment). A query inside
+    // cluster 0 stops at its segment under adaptive routing (margin 1.05)
+    // but also searches a second one under fixed p = 2, so a path that
+    // drops the margin returns different rows.
+    val q = Array.tabulate(dim)(j => if (j % 2 == 0) -1.484375f else -1.515625f)
+    val qSql = q.mkString("CAST(array(", ", ", ") AS ARRAY<FLOAT>)")
+    def build(name: String, clusters: Int): Set[Long] = {
+      val rnd = new scala.util.Random(clusters)
+      // Distinct hypercube corners; cluster 0 sits at all -1.5, next to q.
+      val centers = Array.tabulate(clusters, dim)((c, j) => if (((c >> j) & 1) == 1) 1.5f else -1.5f)
+      val sizes = Array.tabulate(clusters)(c => if (c == 0) 4 else 40)
+      // The first `clusters` ids take one row per cluster: the k-means
+      // init (smallest ids) then starts with one point per true cluster.
+      val owners = (0 until clusters) ++ (0 until clusters).flatMap(c => Seq.fill(sizes(c) - 1)(c))
+      val rows = owners.zipWithIndex.map { case (c, i) =>
+        (i.toLong, Array.tabulate(dim)(j => centers(c)(j) + (rnd.nextFloat() - 0.5f) * 0.1f))
+      }
+      val dir = Files.createTempDirectory(s"graft-$name").toFile.getAbsolutePath
+      rows.toDF("id", "vec").write.mode("overwrite").parquet(dir)
+      val df = spark.read.parquet(dir)
+      df.createOrReplaceTempView(name)
+      spark.conf.set(Hnsw.MaxVectorsPerPartitionKey, "40")
+      spark.conf.set(Hnsw.BuildPartitionByKey, "vector")
+      val meta = try Hnsw.createIndex(spark, name, df, "vec", "id",
+        Map("ef_search" -> "256"), overwrite = true)
+      finally {
+        spark.conf.unset(Hnsw.MaxVectorsPerPartitionKey)
+        spark.conf.unset(Hnsw.BuildPartitionByKey)
+      }
+      assert(meta.segments.size == clusters)
+      // Catalog tombstones: one row of cluster 0 and a spread of others.
+      val deleted = (clusters.toLong +: rows.map(_._1).filter(_ % 17 == 3)).toSet
+      Hnsw.delete(spark, name, deleted.toSeq)
+      deleted
+    }
+    for ((name, clusters) <- Seq(("parity_local", 3), ("parity_jobs", 6))) {
+      val deleted = build(name, clusters)
+      val inner = spark.table(name)
+      val outer = Seq((0L, q)).toDF("q_id", "q_vec")
+      for ((probe, margin) <- Seq((0, 0.0), (2, 0.0), (2, 1.05))) {
+        spark.conf.set(Hnsw.ProbeSegmentsKey, probe.toString)
+        spark.conf.set(Hnsw.AdaptiveProbeMarginKey, margin.toString)
+        try {
+          val sqlDf = spark.sql(
+            s"SELECT id, array_distance(vec, $qSql) AS d FROM $name ORDER BY d LIMIT $k")
+          assert(sqlDf.queryExecution.executedPlan.toString.contains("HnswIndexScan"))
+          val viaSql = sqlDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          val viaRaw = Hnsw.searchRaw(spark, name, q, k)
+            .map { case (id, d) => (id, math.sqrt(d)) }.toSeq
+          val latDf = graft.api.Vss.lateralTopK(outer, inner, "q_vec", "vec", "q_id", k)
+          assert(latDf.queryExecution.executedPlan.toString.contains("HnswIndexJoinCore"))
+          val viaLateral = latDf.orderBy("rn").select("id", "dist").collect()
+            .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          val at = s"$name, probe=$probe, margin=$margin"
+          assert(viaSql == viaRaw, at)
+          assert(viaLateral == viaRaw, at)
+          assert(viaRaw.forall(h => !deleted.contains(h._1)), at)
+          // The layout discriminates: adaptive routing stops short of k.
+          if (margin > 0) assert(viaRaw.size < k, at) else assert(viaRaw.size == k, at)
+        } finally {
+          spark.conf.unset(Hnsw.ProbeSegmentsKey)
+          spark.conf.unset(Hnsw.AdaptiveProbeMarginKey)
+        }
+      }
+    }
   }
 }

@@ -173,8 +173,8 @@ class StreamingIndexSpec extends SparkSuite {
       // The stale reader must not crash on the deleted files: the
       // missing-file retry reloads the catalog entry and serves the search
       // from the new generation (contents are search-equivalent).
-      val hits = Hnsw.searchMeta(base, staleMeta, Array(1f, 1f), 3,
-        ef = 1000000)
+      val hits = Hnsw.searchBatch(None, base, staleMeta, Array(Array(1f, 1f)), 3,
+        ef = 1000000, probe = 0, margin = 0.0).head
       assert(hits.map(_._1).toSet == Set(1L, 2L, 3L))
       assert(hits.head._1 == 3L)
     } finally query.stop()
