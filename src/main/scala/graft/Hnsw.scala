@@ -255,11 +255,14 @@ object Hnsw {
    */
   def searchRaw(spark: SparkSession, name: String, q: Array[Float], k: Int,
       efOverride: Option[Int] = None): Array[(Long, Double)] = {
-    val base = baseDir(spark)
-    val meta = IndexCatalog.load(base, name)
-    searchBatch(None, base, meta, Array(q), k, efOverride.getOrElse(efSearch(spark, meta)),
-      probeSegments(spark), adaptiveProbeMargin(spark)).head
+    val meta = IndexCatalog.load(baseDir(spark), name)
+    searchOne(spark, meta, q, k, efOverride.getOrElse(efSearch(spark, meta)))
   }
+
+  private def searchOne(spark: SparkSession, meta: HnswIndexMeta, q: Array[Float], k: Int,
+      ef: Int): Array[(Long, Double)] =
+    searchBatch(None, baseDir(spark), meta, Array(q), k, ef,
+      probeSegments(spark), adaptiveProbeMargin(spark)).head
 
   /**
    * Compaction-race shield: run `body` against `meta`, and when a segment
@@ -349,7 +352,7 @@ object Hnsw {
   /** Top-k as a DataFrame (id, distance) — the `hnsw_index_scan` surface. */
   def topK(spark: SparkSession, name: String, q: Array[Float], k: Int): DataFrame = {
     val meta = IndexCatalog.load(baseDir(spark), name)
-    val hits = searchRaw(spark, name, q, k)
+    val hits = searchOne(spark, meta, q, k, efSearch(spark, meta))
     spark.createDataFrame(
       java.util.Arrays.asList(hits.map(h => Row(h._1, h._2)): _*),
       StructType(Seq(

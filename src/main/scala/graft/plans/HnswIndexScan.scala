@@ -3,9 +3,15 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, In, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Statistics}
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeSet,
+  Expression, InSet, IsNotNull, Literal, NamedExpression, SortOrder, SubqueryExpression,
+  UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LeafNode, LocalLimit,
+  LogicalPlan, Project, Sort, Statistics}
+import org.apache.spark.sql.execution.{ExplainUtils, LeafExecNode, SQLExecution, SparkPlan,
+  SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.Hnsw
@@ -37,11 +43,13 @@ case class HnswIndexScan(
     query: Array[Float],
     k: Int,
     ef: Int,
-    condition: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
+    condition: Option[Expression] = None,
     /** Columns the parent actually consumes (always includes the id
-      * column). The rowid fetch projects to these, so the parquet
-      * ReadSchema shrinks accordingly — the reference's fetch-by-rowid
-      * projection pushdown (hnsw_index_scan.cpp:95-121). Empty = all. */
+      * column). The rowid fetch reads only these (or, when a projection
+      * above is folded into the exec, only that projection's columns), so
+      * the parquet ReadSchema shrinks accordingly — the reference's
+      * fetch-by-rowid projection pushdown (hnsw_index_scan.cpp:95-121).
+      * Empty = all. */
     required: Seq[Attribute] = Nil)
   extends LeafNode {
 
@@ -58,7 +66,7 @@ case class HnswIndexScan(
 }
 
 /**
- * Physical execution:
+ * Physical execution, started from `executeCollect` on the driver:
  *   1. ANN search through the index's one search path, [[Hnsw.searchBatch]],
  *      started from the driver like the reference's InitGlobal search
  *      (hnsw_index.cpp:315-341): the query is routed by the session's
@@ -66,15 +74,25 @@ case class HnswIndexScan(
  *      searched on the driver and more as one Spark task per segment, and
  *      deleted rowids (catalog tombstones) are dropped before the top-k
  *      merge.
- *   2. Fetch the ≤k matching base rows with a rowid-IN sub-job — the IN
- *      filter reaches the parquet scan (predicate pushdown + row-group
- *      pruning), the Spark analogue of fetch-by-rowid with projection
- *      pushdown (hnsw_index_scan.cpp:95-121).
- *   3. Emit rows re-ordered to the ANN ranking, as a single partition
- *      (k < 2048 — bounded by the same guard as the reference).
+ *   2. Fetch the matching base rows with one parallel Spark job that
+ *      computes `projectList` (plus the rowid when the projection drops
+ *      it) over `Filter(rowid IN hits [AND condition], relation)`. The
+ *      rowid set is an `InSet`, a reference object in the generated code,
+ *      so every query reuses the same compiled class; it reaches the
+ *      parquet scan as a pushed `In` filter (row-group pruning), the
+ *      Spark analogue of fetch-by-rowid with projection pushdown
+ *      (hnsw_index_scan.cpp:95-121). The fetch keeps its own partitioning
+ *      (`execute().coalesce(1)` would run a many-file fetch as one task).
+ *   3. Put the fetched rows in ANN rank order and drop a rowid the
+ *      projection did not ask for.
+ *
+ * [[HnswStrategy]] folds the projection above the logical scan into this
+ * node, so a top-k query's plan is this node alone and `collect` runs
+ * exactly one job per fetch round. Under another operator (an aggregate,
+ * a join) the ≤ k rows are handed on as a one-partition RDD.
  */
 case class HnswIndexScanExec(
-    output: Seq[Attribute],
+    projectList: Seq[NamedExpression],
     // Driver-only: the plan tree is shipped inside task closures by parent
     // operators, and a file relation (InMemoryFileIndex) is not serializable.
     // Search + fetch happen on the driver before any task is launched.
@@ -84,38 +102,72 @@ case class HnswIndexScanExec(
     query: Array[Float],
     k: Int,
     ef: Int,
-    @transient condition: Option[org.apache.spark.sql.catalyst.expressions.Expression])
+    @transient condition: Option[Expression])
   extends LeafExecNode {
   // Sub-job session: SparkPlan.session is the one active at planning time.
 
-  override def executeCollect(): Array[InternalRow] = fetchOrdered()
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "fetchRounds" -> SQLMetrics.createMetric(sparkContext, "fetch rounds"),
+    "rowsFetched" -> SQLMetrics.createMetric(sparkContext, "rows fetched"),
+    "bruteForce" -> SQLMetrics.createMetric(sparkContext, "brute-force fallback"),
+    "searchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "search time"))
+
+  @transient private lazy val idAttr: Attribute =
+    relation.output.find(_.name == meta.idColumn).getOrElse(
+      throw new IllegalStateException(s"id column '${meta.idColumn}' not in relation"))
+
+  /** Position of the rowid (a BIGINT: the rewrite rules match only such
+    * id columns) in the projection, when it is there as is. */
+  @transient private lazy val idOrdinal: Int = projectList.indexWhere {
+    case a: Attribute => a.exprId == idAttr.exprId
+    case _ => false
+  }
+
+  /** What the fetch computes: the projection, plus the rowid for ranking
+    * when the projection does not carry it. */
+  @transient private lazy val fetchList: Seq[NamedExpression] =
+    if (idOrdinal >= 0) projectList else projectList :+ idAttr
+
+  /** Base-relation columns the fetch reads for its projection. */
+  def fetchColumns: Seq[Attribute] = {
+    val refs = AttributeSet(fetchList.flatMap(_.references))
+    relation.output.filter(refs.contains)
+  }
+
+  override def executeCollect(): Array[InternalRow] = {
+    val rows = fetchOrdered()
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+    if (idOrdinal >= 0) rows
+    else {
+      val drop = UnsafeProjection.create(output, fetchList.map(_.toAttribute))
+      rows.map(r => drop(r).copy(): InternalRow)
+    }
+  }
 
   override protected def doExecute(): RDD[InternalRow] =
-    sparkContext.parallelize(fetchOrdered().toIndexedSeq, 1)
+    sparkContext.parallelize(executeCollect().toIndexedSeq, 1)
 
-  /** One search + fetch round at candidate width `kFetch`; the fetch's
-    * rowid-IN (and, for filtered scans, the residual predicate) reach the
-    * parquet scan as pushed filters, and the fetch projects to `output`
-    * (reference fetch projection pushdown, hnsw_index_scan.cpp:95-121).
-    * Returns survivors in ANN rank order. */
+  /** One search + fetch round at candidate width `kFetch`. Returns the
+    * search hits and the fetched rows (`fetchList`) in ANN rank order. */
   private def round(kFetch: Int): (Array[(Long, Double)], Array[InternalRow]) = {
+    val t0 = System.nanoTime()
     val hits = Hnsw.searchBatch(Some(session), base, meta, Array(query), kFetch,
       math.max(ef, kFetch), Hnsw.probeSegments(session), Hnsw.adaptiveProbeMargin(session)).head
+    metrics("searchTime") += System.nanoTime() - t0
     if (hits.isEmpty) return (hits, Array.empty)
-    val idAttr = relation.output.find(_.name == meta.idColumn).getOrElse(
-      throw new IllegalStateException(s"id column '${meta.idColumn}' not in relation"))
-    val inFilter: org.apache.spark.sql.catalyst.expressions.Expression =
-      In(idAttr, hits.map(h => Literal(h._1)).toIndexedSeq)
-    val filtered = Filter(condition.fold(inFilter)(
-      c => org.apache.spark.sql.catalyst.expressions.And(inFilter, c)), relation)
-    val fetchPlan =
-      if (output == relation.output) filtered
-      else org.apache.spark.sql.catalyst.plans.logical.Project(output, filtered)
+    val inSet = InSet(idAttr, hits.map(_._1).toSet[Any])
+    val fetchPlan = Project(fetchList,
+      Filter(condition.fold[Expression](inSet)(And(inSet, _)), relation))
     val fetched = Bridge.ofRows(session, fetchPlan)
       .queryExecution.executedPlan.executeCollect()
-    val idIdx = output.indexWhere(_.exprId == idAttr.exprId)
+    metrics("fetchRounds") += 1
+    metrics("rowsFetched") += fetched.length
+    val rankOrdinal = if (idOrdinal >= 0) idOrdinal else projectList.length
     val rank = hits.iterator.zipWithIndex.map { case ((id, _), i) => (id, i) }.toMap
-    (hits, fetched.sortBy(r => rank.getOrElse(r.getLong(idIdx), Int.MaxValue)))
+    (hits, fetched.sortBy(r => rank.getOrElse(r.getLong(rankOrdinal), Int.MaxValue)))
   }
 
   private def fetchOrdered(): Array[InternalRow] = {
@@ -141,33 +193,31 @@ case class HnswIndexScanExec(
       if (kFetch >= meta.count + tombCount) return survivors
       kFetch = math.min(kFetch * 4L, Int.MaxValue.toLong).toInt
     }
+    metrics("bruteForce") += 1
     bruteForce()
   }
 
   /** Starvation fallback: TopN over `Filter(cond, relation)` as an ordinary
-    * distributed plan (scan → filter → TakeOrdered k). The Sort is tagged
-    * so the TopN rewrite leaves it alone — without the tag this exact shape
-    * would rewrite straight back into this node. */
+    * distributed plan (scan → filter → TakeOrdered k), projected to
+    * `fetchList`. The Sort is tagged so the TopN rewrite leaves it alone —
+    * without the tag this exact shape would rewrite straight back into
+    * this node. */
   private def bruteForce(): Array[InternalRow] = {
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, GlobalLimit, Project, Sort}
     val vecAttr = relation.output.find(_.name == meta.column).getOrElse(
       throw new IllegalStateException(s"vector column '${meta.column}' not in relation"))
-    val qLit = Literal.create(query, org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.FloatType, containsNull = false))
-    val distExpr: org.apache.spark.sql.catalyst.expressions.Expression = meta.metric match {
+    val qLit = Literal.create(query, ArrayType(FloatType, containsNull = false))
+    val distExpr: Expression = meta.metric match {
       case "cosine" => graft.expressions.ArrayCosineDistance(vecAttr, qLit)
       case "ip" => graft.expressions.ArrayNegativeInnerProduct(vecAttr, qLit)
       case _ => graft.expressions.ArraySquaredDistance(vecAttr, qLit)
     }
     // NULL vectors are never in the index, so the index path never returns
     // them; exclude them here too for path-independent results.
-    val filtered = Filter(org.apache.spark.sql.catalyst.expressions.And(
-      condition.get, org.apache.spark.sql.catalyst.expressions.IsNotNull(vecAttr)), relation)
+    val filtered = Filter(And(condition.get, IsNotNull(vecAttr)), relation)
     val sorted = Sort(Seq(SortOrder(distExpr, Ascending)), global = true, filtered)
     sorted.setTagValue(HnswIndexScanExec.NoRewriteTag, true)
     val limited = GlobalLimit(Literal(k), LocalLimit(Literal(k), sorted))
-    Bridge.ofRows(session, Project(output, limited))
+    Bridge.ofRows(session, Project(fetchList, limited))
       .queryExecution.executedPlan.executeCollect()
   }
 
@@ -181,6 +231,20 @@ case class HnswIndexScanExec(
   override def simpleString(maxFields: Int): String =
     s"HnswIndexScanExec [index=${meta.name}, metric=${meta.metric}, k=$k, ef=$ef" +
       condition.map(c => s", filtered=${c.sql}]").getOrElse("]")
+
+  /** `explain("formatted")`: output, fetch columns and the metrics of the
+    * runs so far. */
+  override def verboseStringWithOperatorId(): String = {
+    val ms = Seq("fetchRounds", "rowsFetched", "bruteForce").map(metrics)
+      .map(m => s"${m.name.getOrElse("")}: ${m.value}") :+
+      f"search time: ${metrics("searchTime").value / 1e6}%.3f ms"
+    s"""
+       |$formattedNodeName
+       |${ExplainUtils.generateFieldString("Output", output)}
+       |${ExplainUtils.generateFieldString("Fetch columns", fetchColumns)}
+       |Metrics: ${ms.mkString(", ")}
+       |""".stripMargin
+  }
 }
 
 object HnswIndexScanExec {
@@ -190,15 +254,22 @@ object HnswIndexScanExec {
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean]("graft.hnsw.noRewrite")
 }
 
-/** Planner strategy: logical [[HnswIndexScan]] → [[HnswIndexScanExec]]. */
+/** Planner strategy: logical [[HnswIndexScan]], with the projection above
+  * it, → [[HnswIndexScanExec]]; [[HnswIndexJoinCore]] →
+  * [[HnswIndexJoinCoreExec]]. */
 class HnswStrategy(session: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case s: HnswIndexScan =>
-      HnswIndexScanExec(s.output, s.relation, s.base, s.meta, s.query, s.k, s.ef,
-        s.condition) :: Nil
+    // The projection above the scan is computed by the fetch, which makes
+    // the scan the plan root. Subqueries stay in a ProjectExec above.
+    case Project(pl, s: HnswIndexScan) if !pl.exists(SubqueryExpression.hasSubquery) =>
+      exec(pl, s) :: Nil
+    case s: HnswIndexScan => exec(s.output, s) :: Nil
     case j: HnswIndexJoinCore =>
       HnswIndexJoinCoreExec(planLater(j.child), j.base, j.meta, j.queryExpr,
         j.k, j.ef, j.extra, j.probeOverride) :: Nil
     case _ => Nil
   }
+
+  private def exec(pl: Seq[NamedExpression], s: HnswIndexScan): HnswIndexScanExec =
+    HnswIndexScanExec(pl, s.relation, s.base, s.meta, s.query, s.k, s.ef, s.condition)
 }

@@ -144,8 +144,10 @@ object TextClassifier {
    * `HashingTF` + `LogisticRegression` past [[LocalFitMaxBytesKey]];
    * under it, the equivalent driver-local LBFGS (same objective, same
    * optimizer — parity spec'd; degenerate single-class frames fall back
-   * to `ml.fit`'s own handling). A null text trains as "" (which, like
-   * every text, contributes its space-split tokens — for "" that is one
+   * to `ml.fit`'s own handling). A null or NaN label fails on both paths
+   * with `ml.fit`'s "Labels MUST NOT be Null or NaN". A null text trains
+   * as "" (which, like every text, contributes its space-split tokens —
+   * for "" that is one
    * empty-string token, the same bucket the scorer hashes it to); at
    * SCORE time a null text returns null (no row is silently scored as
    * empty) — filter or coalesce upstream if nulls should score.
@@ -158,6 +160,10 @@ object TextClassifier {
     if (useLocalFit(df)) {
       val rows = df.select(coalesce(col(textCol), lit("")).cast("string"),
         col(labelCol).cast("double")).collect()
+      // ml.fit's label check (raise_error in its instance extraction),
+      // with the same message.
+      require(!rows.exists(r => r.isNullAt(1) || r.getDouble(1).isNaN),
+        s"Labels MUST NOT be Null or NaN (column '$labelCol')")
       val texts = rows.map(_.getString(0))
       val labels = rows.map(_.getDouble(1))
       val local =

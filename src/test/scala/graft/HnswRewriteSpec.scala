@@ -248,16 +248,119 @@ class HnswRewriteSpec extends SparkSuite {
       case e: graft.plans.HnswIndexScanExec => e
     }
     assert(scans.nonEmpty, q.queryExecution.executedPlan.toString)
-    assert(scans.head.output.map(_.name) == Seq("id"), scans.head.output.toString)
+    assert(scans.head.fetchColumns.map(_.name) == Seq("id"), scans.head.fetchColumns.toString)
     assert(q.collect().head.getLong(0) == 11L)
     // When the projection recomputes the distance, the vector column stays.
+    // The scan computes that projection itself, so its output is (id, d)
+    // and the columns its fetch reads are exactly (id, vec).
     val q2 = grid.select(col("id"), array_distance(col("vec"), qv).as("d"))
       .orderBy("d").limit(3)
     val scan2 = q2.queryExecution.executedPlan.collect {
       case e: graft.plans.HnswIndexScanExec => e
     }.head
-    assert(scan2.output.map(_.name).toSet == Set("id", "vec"))
+    assert(scan2.output.map(_.name) == Seq("id", "d"))
+    assert(scan2.fetchColumns.map(_.name).toSet == Set("id", "vec"))
     assert(q2.collect().map(_.getDouble(1)).toSeq == Seq(0.0, 1.0, 1.0))
+  }
+
+  /** 2,000 random 8-dim vectors with a `sel` column whose values 0..999
+    * each occur twice, so `sel < 5` keeps 0.5% of the rows. */
+  private lazy val served: DataFrame = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-served").toFile.getAbsolutePath
+    val rnd = new scala.util.Random(7)
+    val sel = rnd.shuffle((0 until 2000).map(_ % 1000))
+    (0 until 2000).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat), sel(i)))
+      .toDF("id", "vec", "sel").repartition(1).write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    Hnsw.createIndex(spark, "rw_served", df, "vec", "id", overwrite = true)
+    df
+  }
+
+  private def servedQuery(seed: Int, where: Option[Int] = None): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val q = lit_vector(Array.fill(8)(rnd.nextGaussian().toFloat))
+    where.fold(served)(t => served.where(col("sel") < t))
+      .select(col("id"), col("sel"), array_distance(col("vec"), q).as("d"))
+      .orderBy("d").limit(10)
+  }
+
+  private def scanOf(df: DataFrame): graft.plans.HnswIndexScanExec =
+    df.queryExecution.executedPlan.collectFirst {
+      case e: graft.plans.HnswIndexScanExec => e
+    }.getOrElse(fail(df.queryExecution.executedPlan.toString))
+
+  /** Jobs `body` starts, counted by a listener read after a bus drain. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark, 60000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      Bridge.drainListenerBus(spark, 60000)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("top-k is served by the scan as the plan root: one job, no per-query compile") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val first = servedQuery(1)
+    assert(first.queryExecution.executedPlan.isInstanceOf[graft.plans.HnswIndexScanExec],
+      first.queryExecution.executedPlan.toString)
+    val (rows, jobs) = jobsOf(first.collect())
+    assert(rows.length == 10 && jobs == 1, s"$jobs jobs")
+    // A new query vector: same generated code, so nothing compiles.
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (rows2, jobs2) = jobsOf(servedQuery(2).collect())
+    assert(rows2.length == 10 && jobs2 == 1, s"$jobs2 jobs")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles == 0)
+    // Filtered to 0.5%: the scan escalates, one fetch job per round.
+    val filtered = servedQuery(3, where = Some(5))
+    val (frows, fjobs) = jobsOf(filtered.collect())
+    val rounds = scanOf(filtered).metrics("fetchRounds").value
+    assert(frows.length == 10 && frows.forall(_.getInt(1) < 5))
+    assert(rounds > 1 && fjobs == rounds, s"$fjobs jobs, $rounds rounds")
+  }
+
+  test("a projection without the id column still returns rows in rank order") {
+    val withId = servedQuery(4).collect()
+    val rnd = new scala.util.Random(4)
+    val q = lit_vector(Array.fill(8)(rnd.nextGaussian().toFloat))
+    val noId = served.select(col("sel"), array_distance(col("vec"), q).as("d"))
+      .orderBy("d").limit(10)
+    assert(scanOf(noId).output.map(_.name) == Seq("sel", "d"))
+    val rows = noId.collect()
+    assert(rows.map(_.getDouble(1)).toSeq == withId.map(_.getDouble(2)).toSeq)
+    assert(rows.map(_.getInt(0)).toSeq == withId.map(_.getInt(1)).toSeq)
+    assert(rows.map(_.getDouble(1)).toSeq == rows.map(_.getDouble(1)).sorted.toSeq)
+  }
+
+  test("scan SQL metrics: fetch rounds, rows fetched, brute force, search time") {
+    import org.apache.spark.sql.execution.ExplainMode
+    val plain = servedQuery(5)
+    plain.collect()
+    val m = scanOf(plain).metrics
+    assert(m("fetchRounds").value == 1)
+    assert(m("rowsFetched").value == 10)
+    assert(m("bruteForce").value == 0)
+    val explained = plain.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    Seq("fetch rounds: 1", "rows fetched: 10", "brute-force fallback: 0", "search time")
+      .foreach(s => assert(explained.contains(s), explained))
+    val filtered = servedQuery(6, where = Some(5))
+    filtered.collect()
+    assert(scanOf(filtered).metrics("fetchRounds").value > 1)
+    // Past the fetch budget the brute-force fallback answers.
+    spark.conf.set(Hnsw.FilteredMaxFetchKey, "8")
+    try {
+      val starved = servedQuery(6, where = Some(5))
+      assert(starved.collect().length == 10)
+      assert(scanOf(starved).metrics("bruteForce").value == 1)
+    } finally spark.conf.unset(Hnsw.FilteredMaxFetchKey)
   }
 
   test("gate-shaped filtered TopN on real embeddings rides the index") {

@@ -186,6 +186,24 @@ class TextClassifierSpec extends SparkSuite {
     assert(mPredDiff == 0, s"$mPredDiff multiclass predictions diverged")
   }
 
+  test("train(): a null or NaN label fails with ml.fit's error on both the " +
+      "driver-local and the distributed fit") {
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    Seq(Some(Double.NaN), None).foreach { bad =>
+      val df = Seq(("a b", Some(1.0)), ("c d", Some(0.0)), ("e f", bad),
+        ("a c", Some(1.0))).toDF("text", "label")
+      def fail(): String = messages(intercept[Exception](
+        TextClassifier.train(df, "text", "label", numFeatures = 1 << 10, maxIter = 2)))
+      val local = fail() // default conf: the tiny frame takes the local path
+      spark.conf.set(TextClassifier.LocalFitMaxBytesKey, "0")
+      val distributed = try fail()
+      finally spark.conf.unset(TextClassifier.LocalFitMaxBytesKey)
+      Seq(local, distributed).foreach(m =>
+        assert(m.contains("Labels MUST NOT be Null or NaN"), s"label $bad: $m"))
+    }
+  }
+
   test("multiclass scorer edge cases: null -> null; k probabilities sum " +
       "context (winner prob in (0,1]); strict codegen; value-based model " +
       "equality dedups plans") {
