@@ -42,6 +42,16 @@ object Bench {
     }
   }
 
+  /** Scheduler counters read after a listener-bus drain, or None when the
+    * bus does not drain in time: the query then records no counters, and
+    * its timing and result stand (a slow bus is not a failed query). */
+  private[graft] def counterSnap(drain: () => Unit,
+      read: () => (Long, Long, Long)): Option[(Long, Long, Long)] =
+    try {
+      drain()
+      Some(read())
+    } catch { case _: java.util.concurrent.TimeoutException => None }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = envLong("SPARK_GRAFT_CPUS", 32).toString
@@ -174,11 +184,10 @@ object Bench {
         cTasks.addAndGet(j.stageInfos.map(_.numTasks.toLong).sum)
       }
     })
-    def counterSnap(): (Long, Long, Long) = {
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark, 10000L)
-      (cJobs.get, cStages.get, cTasks.get)
-    }
-    val results: Seq[(String, Either[String, (Double, (Long, Long, Long))])] =
+    def snap(): Option[(Long, Long, Long)] = counterSnap(
+      () => org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark, 10000L),
+      () => (cJobs.get, cStages.get, cTasks.get))
+    val results: Seq[(String, Either[String, (Double, Option[(Long, Long, Long)])])] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>
       // SPARK_GRAFT_PROFILE=1 splits each timed run into build (DataFrame
@@ -232,12 +241,13 @@ object Bench {
       }
       name -> (try {
         val r1 = once()
-        val s0 = counterSnap()
+        val s0 = snap()
         val r2 = once()
-        val s1 = counterSnap()
+        val s1 = snap()
         // Counters are the SECOND run's (steady state — the first run can
         // carry one-time artifact jobs the min-of-two exists to exclude).
-        Right((math.min(r1, r2), (s1._1 - s0._1, s1._2 - s0._2, s1._3 - s0._3)))
+        Right((math.min(r1, r2),
+          for (a <- s0; b <- s1) yield (b._1 - a._1, b._2 - a._2, b._3 - a._3)))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -248,7 +258,7 @@ object Bench {
       case (k, Right((v, _))) => jstr(k) + ":" + f"$v%.3f"
       case (k, Left(err)) => jstr(k) + ":{\"err\":" + jstr(err) + "}"
     }.mkString("{", ",", "}")
-    val counters = results.collect { case (k, Right((_, (j, s, t)))) =>
+    val counters = results.collect { case (k, Right((_, Some((j, s, t))))) =>
       jstr(k) + s""":{"jobs":$j,"stages":$s,"tasks":$t}"""
     }.mkString("{", ",", "}")
     val timed = results.collect { case (_, Right((v, _))) => v }

@@ -74,22 +74,26 @@ case class HnswIndexScan(
  *      searched on the driver and more as one Spark task per segment, and
  *      deleted rowids (catalog tombstones) are dropped before the top-k
  *      merge.
- *   2. Fetch the matching base rows with one parallel Spark job that
- *      computes `projectList` (plus the rowid when the projection drops
- *      it) over `Filter(rowid IN hits [AND condition], relation)`. The
- *      rowid set is an `InSet`, a reference object in the generated code,
- *      so every query reuses the same compiled class; it reaches the
- *      parquet scan as a pushed `In` filter (row-group pruning), the
- *      Spark analogue of fetch-by-rowid with projection pushdown
- *      (hnsw_index_scan.cpp:95-121). The fetch keeps its own partitioning
- *      (`execute().coalesce(1)` would run a many-file fetch as one task).
+ *   2. Fetch the matching base rows: plan `projectList` (plus the rowid
+ *      when the projection drops it) over `Filter(rowid IN hits [AND
+ *      condition], relation)`. The rowid set is an `InSet`, a reference
+ *      object in the generated code, so every query reuses the same
+ *      compiled class; it reaches the parquet scan as a pushed `In` filter
+ *      (row-group pruning), the Spark analogue of fetch-by-rowid with
+ *      projection pushdown (hnsw_index_scan.cpp:95-121). A fetch RDD of
+ *      one partition (one file split) is computed in the calling thread
+ *      ([[Bridge.collectInThread]]), like the reference's in-process
+ *      fetch: no Spark job. A fetch over more partitions runs as one
+ *      parallel job, keeping its partitioning (`execute().coalesce(1)`
+ *      would run a many-file fetch as one task).
  *   3. Put the fetched rows in ANN rank order and drop a rowid the
  *      projection did not ask for.
  *
  * [[HnswStrategy]] folds the projection above the logical scan into this
- * node, so a top-k query's plan is this node alone and `collect` runs
- * exactly one job per fetch round. Under another operator (an aggregate,
- * a join) the ≤ k rows are handed on as a one-partition RDD.
+ * node, so a top-k query's plan is this node alone and `collect` runs no
+ * job when the fetch is one partition and one job per fetch round
+ * otherwise (the "fetch jobs" metric). Under another operator (an
+ * aggregate, a join) the ≤ k rows are handed on as a one-partition RDD.
  */
 case class HnswIndexScanExec(
     projectList: Seq[NamedExpression],
@@ -110,6 +114,7 @@ case class HnswIndexScanExec(
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "fetchRounds" -> SQLMetrics.createMetric(sparkContext, "fetch rounds"),
+    "fetchJobs" -> SQLMetrics.createMetric(sparkContext, "fetch jobs"),
     "rowsFetched" -> SQLMetrics.createMetric(sparkContext, "rows fetched"),
     "bruteForce" -> SQLMetrics.createMetric(sparkContext, "brute-force fallback"),
     "searchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "search time"))
@@ -161,8 +166,15 @@ case class HnswIndexScanExec(
     val inSet = InSet(idAttr, hits.map(_._1).toSet[Any])
     val fetchPlan = Project(fetchList,
       Filter(condition.fold[Expression](inSet)(And(inSet, _)), relation))
-    val fetched = Bridge.ofRows(session, fetchPlan)
-      .queryExecution.executedPlan.executeCollect()
+    val rdd = Bridge.ofRows(session, fetchPlan).queryExecution.executedPlan.execute()
+    // One partition: a job would run this one task anyway, so run it here
+    // and skip the scheduling. More partitions keep the job's parallelism.
+    val fetched =
+      if (rdd.getNumPartitions == 1) Bridge.collectInThread(rdd)
+      else {
+        metrics("fetchJobs") += 1
+        rdd.map(_.copy()).collect()
+      }
     metrics("fetchRounds") += 1
     metrics("rowsFetched") += fetched.length
     val rankOrdinal = if (idOrdinal >= 0) idOrdinal else projectList.length
@@ -235,7 +247,7 @@ case class HnswIndexScanExec(
   /** `explain("formatted")`: output, fetch columns and the metrics of the
     * runs so far. */
   override def verboseStringWithOperatorId(): String = {
-    val ms = Seq("fetchRounds", "rowsFetched", "bruteForce").map(metrics)
+    val ms = Seq("fetchRounds", "fetchJobs", "rowsFetched", "bruteForce").map(metrics)
       .map(m => s"${m.name.getOrElse("")}: ${m.value}") :+
       f"search time: ${metrics("searchTime").value / 1e6}%.3f ms"
     s"""

@@ -3,10 +3,18 @@
 // .ExpressionUtils) — the standard pattern for Spark extension libraries.
 package org.apache.spark.sql.graftbridge
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.memory.TaskMemoryManager
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.util.Utils
 
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -19,6 +27,55 @@ object Bridge {
     * TimeoutException instead of hanging a wedged bus. */
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** Attempt ids of [[collectInThread]] runs, counted up from
+    * Long.MinValue: never a scheduler task's id (those are >= 0) nor
+    * BlockInfoManager's NON_TASK_WRITER (-1024), and distinct between
+    * concurrent runs, which share the memory and block managers. */
+  private val inThreadAttemptIds = new AtomicLong(Long.MinValue)
+
+  /** Compute a one-partition row RDD in the calling thread: the one task a
+    * job over it would run, without the scheduler (no job, stage, task
+    * launch or result serialization). The task runs in a context of its
+    * own, as an executor would set it up (Task.run): a real
+    * TaskMemoryManager, a copy of the caller's local properties (SQL confs
+    * read through SQLConf.get see what a task sees), and its attempt id
+    * registered with the block manager so broadcast reads (the hadoop
+    * conf of a file scan) can take block locks. Afterwards, on failure
+    * too, the completion listeners run (a file scan closes its readers),
+    * block locks and task memory are released and the context is unset;
+    * a failure marks the task failed and is rethrown as is. Rows are
+    * copied: the iterator reuses its UnsafeRow. */
+  def collectInThread(rdd: RDD[InternalRow]): Array[InternalRow] = {
+    require(rdd.getNumPartitions == 1,
+      s"collectInThread needs one partition, got ${rdd.getNumPartitions}")
+    val env = SparkEnv.get
+    val id = inThreadAttemptIds.getAndIncrement()
+    val memory = new TaskMemoryManager(env.memoryManager, id)
+    val ctx = new TaskContextImpl(stageId = 0, stageAttemptNumber = 0, partitionId = 0,
+      taskAttemptId = id, attemptNumber = 0, numPartitions = 1, taskMemoryManager = memory,
+      localProperties = Utils.cloneProperties(rdd.sparkContext.getLocalProperties),
+      metricsSystem = env.metricsSystem, taskMetrics = TaskMetrics.empty)
+    env.blockManager.registerTask(id)
+    TaskContext.setTaskContext(ctx)
+    var failure: Throwable = null
+    try rdd.iterator(rdd.partitions(0), ctx).map(_.copy()).toArray
+    catch {
+      case e: Throwable =>
+        failure = e
+        try ctx.markTaskFailed(e) catch { case t: Throwable => e.addSuppressed(t) }
+        throw e
+    } finally {
+      try ctx.markTaskCompleted(Option(failure))
+      catch { case t: Throwable if failure != null => failure.addSuppressed(t) }
+      finally {
+        try {
+          env.blockManager.releaseAllLocksForTask(id)
+          memory.cleanUpAllAllocatedMemory()
+        } finally TaskContext.unset()
+      }
+    }
+  }
 
   /** Full ColumnNode-tree conversion — needed for Columns COMPOSED from
     * `functions._` builders (struct/getField/when/…), which `expression`

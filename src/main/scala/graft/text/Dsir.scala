@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIdentifier
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graftbridge.Bridge
@@ -135,7 +136,7 @@ object Dsir {
       textCol, idCol, k, n, buckets)
 
   private def selectScored(raw: DataFrame, w: Array[Double], textCol: String,
-      idCol: String, k: Int, n: Int, buckets: Int): DataFrame =
+      idCol: String, k: Int, n: Int, buckets: Int): DataFrame = {
     // Bounded-heap top-k (r17; was orderBy + limit): as a MID-PLAN
     // operator — every digest/aggregate consumer — Limit(Sort) plans a
     // full RANGE sort whose partitioner SAMPLING pass re-executes the
@@ -145,10 +146,14 @@ object Dsir {
     // partial heaps (≤ k rows per task cross the shuffle) and no sort of
     // anything bigger than k. Order ties to (score DESC, idCol ASC),
     // identical to the sort spelling; rows emit best-first like before.
+    // The id name is quoted, not parsed: `doc.id` is a column, not field
+    // `id` of a struct `doc`.
+    val id = col(quoteIdentifier(idCol))
     raw.where(col(textCol).isNotNull)
-      .select(col(idCol), scoreColumn(col(textCol), w, n, buckets).as("score"))
-      .agg(graft.functions.min_by_k(struct(col(idCol), col("score")),
-        struct(-col("score"), col(idCol)), k).as("_dsir_top"))
+      .select(id, scoreColumn(col(textCol), w, n, buckets).as("score"))
+      .agg(graft.functions.min_by_k(struct(id, col("score")),
+        struct(-col("score"), id), k).as("_dsir_top"))
       .select(explode(col("_dsir_top")).as("_dsir_r"))
-      .select(col("_dsir_r." + idCol).as(idCol), col("_dsir_r.score").as("score"))
+      .select(col("_dsir_r").getField(idCol).as(idCol), col("_dsir_r.score").as("score"))
+  }
 }

@@ -73,6 +73,20 @@ class DsirSpec extends SparkSuite {
     assert(picked == (1L to 10L).toSet) // exactly the target-like docs
   }
 
+  test("select: an id column named doc.id gives the same rows as doc_id") {
+    val raw = ((1L to 8L).map(i => (i, s"alpha beta gamma doc$i")) ++
+      (9L to 20L).map(i => (i, s"uno dos tres doc$i"))).toDF("doc_id", "text")
+    val target = Seq("alpha beta gamma", "beta gamma alpha").toDF("text")
+    def rows(df: org.apache.spark.sql.DataFrame, id: String) = {
+      val out = Dsir.select(df, target, "text", id, k = 5, buckets = 101)
+      assert(out.columns.toSeq == Seq(id, "score"))
+      out.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
+    val plain = rows(raw, "doc_id")
+    assert(plain.length == 5)
+    assert(rows(raw.withColumnRenamed("doc_id", "doc.id"), "doc.id") == plain)
+  }
+
   test("fitWeightsWithin (one-pass labeled-subset fit) equals fitWeights exactly") {
     val raw = ((1L to 5L).map(i => (i, s"alpha beta doc$i", true)) ++
       (6L to 12L).map(i => (i, s"uno dos doc$i", false))).toDF("id", "text", "isT")

@@ -277,10 +277,22 @@ class HnswRewriteSpec extends SparkSuite {
     df
   }
 
-  private def servedQuery(seed: Int, where: Option[Int] = None): DataFrame = {
+  /** The rows of `served` as two parquet files (ids below 1,000, then the
+    * rest) with an index of their own: a fetch over two partitions. */
+  private lazy val servedTwoFiles: DataFrame = {
+    val dir = Files.createTempDirectory("graft-served2").toFile.getAbsolutePath
+    served.where(col("id") < 1000).write.mode("overwrite").parquet(dir)
+    served.where(col("id") >= 1000).write.mode("append").parquet(dir)
+    val df = spark.read.parquet(dir)
+    Hnsw.createIndex(spark, "rw_served2", df, "vec", "id", overwrite = true)
+    df
+  }
+
+  private def servedQuery(seed: Int, where: Option[Int] = None,
+      table: => DataFrame = served): DataFrame = {
     val rnd = new scala.util.Random(seed)
     val q = lit_vector(Array.fill(8)(rnd.nextGaussian().toFloat))
-    where.fold(served)(t => served.where(col("sel") < t))
+    where.fold(table)(t => table.where(col("sel") < t))
       .select(col("id"), col("sel"), array_distance(col("vec"), q).as("d"))
       .orderBy("d").limit(10)
   }
@@ -307,24 +319,57 @@ class HnswRewriteSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("top-k is served by the scan as the plan root: one job, no per-query compile") {
+  test("scan is the top-k plan root: 0 jobs on 1 file, 1 per round on 2, no compile") {
     import org.apache.spark.metrics.source.CodegenMetrics
     val first = servedQuery(1)
     assert(first.queryExecution.executedPlan.isInstanceOf[graft.plans.HnswIndexScanExec],
       first.queryExecution.executedPlan.toString)
+    // One file: the one-partition fetch runs in the calling thread.
     val (rows, jobs) = jobsOf(first.collect())
-    assert(rows.length == 10 && jobs == 1, s"$jobs jobs")
+    assert(rows.length == 10 && jobs == 0, s"$jobs jobs")
     // A new query vector: same generated code, so nothing compiles.
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (rows2, jobs2) = jobsOf(servedQuery(2).collect())
-    assert(rows2.length == 10 && jobs2 == 1, s"$jobs2 jobs")
+    assert(rows2.length == 10 && jobs2 == 0, s"$jobs2 jobs")
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles == 0)
-    // Filtered to 0.5%: the scan escalates, one fetch job per round.
+    // Filtered to 0.5%: the scan escalates, still without a job.
     val filtered = servedQuery(3, where = Some(5))
     val (frows, fjobs) = jobsOf(filtered.collect())
     val rounds = scanOf(filtered).metrics("fetchRounds").value
     assert(frows.length == 10 && frows.forall(_.getInt(1) < 5))
-    assert(rounds > 1 && fjobs == rounds, s"$fjobs jobs, $rounds rounds")
+    assert(rounds > 1 && fjobs == 0, s"$fjobs jobs, $rounds rounds")
+    // Two files: the fetch keeps its job, one per round, and answers the same.
+    def idDist(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    val cases = Seq((1, None, rows, 1L), (3, Some(5), frows, rounds))
+    for ((seed, where, oneFile, oneRounds) <- cases) {
+      val q = servedQuery(seed, where, servedTwoFiles)
+      val (two, twoJobs) = jobsOf(q.collect())
+      val m = scanOf(q).metrics
+      assert(Seq(twoJobs.toLong, m("fetchRounds").value, m("fetchJobs").value) ==
+        Seq.fill(3)(oneRounds), s"jobs, rounds, fetch jobs; one-file rounds $oneRounds")
+      assert(idDist(two) == idDist(oneFile))
+    }
+  }
+
+  test("a failed in-thread fetch raises the file-read error, leaves no task context") {
+    val dir = Files.createTempDirectory("graft-gone").toFile
+    served.write.mode("overwrite").parquet(dir.getAbsolutePath)
+    val gone = spark.read.parquet(dir.getAbsolutePath)
+    Hnsw.createIndex(spark, "rw_gone", gone, "vec", "id", overwrite = true)
+    try {
+      dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
+      val e = intercept[Exception](servedQuery(8, table = gone).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(!chain.exists(_.isInstanceOf[NullPointerException]), chain.mkString("\n"))
+      assert(chain.exists {
+        case t: org.apache.spark.SparkThrowable => t.getCondition == "FAILED_READ_FILE.FILE_NOT_EXIST"
+        case _ => false
+      }, chain.mkString("\n"))
+      assert(org.apache.spark.TaskContext.get() == null)
+      // Queries after the failure keep working.
+      (1 to 50).foreach(i => assert(servedQuery(100 + i).collect().length == 10))
+    } finally Hnsw.dropIndex(spark, "rw_gone")
   }
 
   test("a projection without the id column still returns rows in rank order") {
@@ -346,14 +391,16 @@ class HnswRewriteSpec extends SparkSuite {
     plain.collect()
     val m = scanOf(plain).metrics
     assert(m("fetchRounds").value == 1)
+    assert(m("fetchJobs").value == 0)
     assert(m("rowsFetched").value == 10)
     assert(m("bruteForce").value == 0)
     val explained = plain.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    Seq("fetch rounds: 1", "rows fetched: 10", "brute-force fallback: 0", "search time")
-      .foreach(s => assert(explained.contains(s), explained))
+    Seq("fetch rounds: 1, fetch jobs: 0", "rows fetched: 10", "brute-force fallback: 0",
+      "search time").foreach(s => assert(explained.contains(s), explained))
     val filtered = servedQuery(6, where = Some(5))
     filtered.collect()
     assert(scanOf(filtered).metrics("fetchRounds").value > 1)
+    assert(scanOf(filtered).metrics("fetchJobs").value == 0)
     // Past the fetch budget the brute-force fallback answers.
     spark.conf.set(Hnsw.FilteredMaxFetchKey, "8")
     try {
