@@ -4,12 +4,13 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeSet,
-  Expression, InSet, IsNotNull, Literal, NamedExpression, SortOrder, SubqueryExpression,
+  Expression, IsNotNull, Literal, NamedExpression, SortOrder, SubqueryExpression,
   UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LeafNode, LocalLimit,
   LogicalPlan, Project, Sort, Statistics}
 import org.apache.spark.sql.execution.{ExplainUtils, LeafExecNode, SQLExecution, SparkPlan,
   SparkStrategy}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -37,7 +38,7 @@ import graft.index.HnswIndexMeta
  * where_clause_segfault.test), standard SQL semantics are preserved.
  */
 case class HnswIndexScan(
-    relation: LogicalPlan,
+    relation: LogicalRelation,
     base: String,
     meta: HnswIndexMeta,
     query: Array[Float],
@@ -74,33 +75,33 @@ case class HnswIndexScan(
  *      searched on the driver and more as one Spark task per segment, and
  *      deleted rowids (catalog tombstones) are dropped before the top-k
  *      merge.
- *   2. Fetch the matching base rows: plan `projectList` (plus the rowid
- *      when the projection drops it) over `Filter(rowid IN hits [AND
- *      condition], relation)`. The rowid set is an `InSet`, a reference
- *      object in the generated code, so every query reuses the same
- *      compiled class; it reaches the parquet scan as a pushed `In` filter
- *      (row-group pruning), the Spark analogue of fetch-by-rowid with
- *      projection pushdown (hnsw_index_scan.cpp:95-121). A fetch RDD of
- *      one partition (one file split) is computed in the calling thread
- *      ([[Bridge.collectInThread]]), like the reference's in-process
- *      fetch: no Spark job. A fetch over more partitions runs as one
- *      parallel job, keeping its partitioning (`execute().coalesce(1)`
- *      would run a many-file fetch as one task).
+ *   2. Fetch the hits' rows by rowid ([[RowidFetch]]), the Spark analogue
+ *      of the reference's fetch-by-rowid with projection pushdown
+ *      (hnsw_index_scan.cpp:95-121): no query is planned. The relation's
+ *      file reader for this fetch shape (columns, condition, session
+ *      confs) is built once and cached; each fetch reads only the parquet
+ *      row groups whose id statistics can hold a hit, and applies rowid
+ *      membership, `condition` and `projectList` (plus the rowid when the
+ *      projection drops it) to their rows. Splits that pack into one
+ *      partition are read in the calling thread, like the reference's
+ *      in-process fetch; more run as one job.
  *   3. Put the fetched rows in ANN rank order and drop a rowid the
  *      projection did not ask for.
  *
  * [[HnswStrategy]] folds the projection above the logical scan into this
- * node, so a top-k query's plan is this node alone and `collect` runs no
- * job when the fetch is one partition and one job per fetch round
- * otherwise (the "fetch jobs" metric). Under another operator (an
- * aggregate, a join) the ≤ k rows are handed on as a one-partition RDD.
+ * node, so a top-k query's plan is this node alone. `collect` runs no job
+ * unless a fetch's splits exceed `spark.sql.files.maxPartitionBytes`, and
+ * then one per fetch round (the "fetch jobs" metric). The brute-force
+ * fallback of a starved filtered query is the one fetch that is planned
+ * as an ordinary query. Under another operator (an aggregate, a join) the
+ * ≤ k rows are handed on as a one-partition RDD.
  */
 case class HnswIndexScanExec(
     projectList: Seq[NamedExpression],
     // Driver-only: the plan tree is shipped inside task closures by parent
     // operators, and a file relation (InMemoryFileIndex) is not serializable.
     // Search + fetch happen on the driver before any task is launched.
-    @transient relation: LogicalPlan,
+    @transient relation: LogicalRelation,
     base: String,
     meta: HnswIndexMeta,
     query: Array[Float],
@@ -117,7 +118,10 @@ case class HnswIndexScanExec(
     "fetchJobs" -> SQLMetrics.createMetric(sparkContext, "fetch jobs"),
     "rowsFetched" -> SQLMetrics.createMetric(sparkContext, "rows fetched"),
     "bruteForce" -> SQLMetrics.createMetric(sparkContext, "brute-force fallback"),
-    "searchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "search time"))
+    "searchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "search time"),
+    "fetchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "fetch time"),
+    "rowGroupsRead" -> SQLMetrics.createMetric(sparkContext, "row groups read"),
+    "readerBuilds" -> SQLMetrics.createMetric(sparkContext, "reader builds"))
 
   @transient private lazy val idAttr: Attribute =
     relation.output.find(_.name == meta.idColumn).getOrElse(
@@ -163,18 +167,13 @@ case class HnswIndexScanExec(
       math.max(ef, kFetch), Hnsw.probeSegments(session), Hnsw.adaptiveProbeMargin(session)).head
     metrics("searchTime") += System.nanoTime() - t0
     if (hits.isEmpty) return (hits, Array.empty)
-    val inSet = InSet(idAttr, hits.map(_._1).toSet[Any])
-    val fetchPlan = Project(fetchList,
-      Filter(condition.fold[Expression](inSet)(And(inSet, _)), relation))
-    val rdd = Bridge.ofRows(session, fetchPlan).queryExecution.executedPlan.execute()
-    // One partition: a job would run this one task anyway, so run it here
-    // and skip the scheduling. More partitions keep the job's parallelism.
-    val fetched =
-      if (rdd.getNumPartitions == 1) Bridge.collectInThread(rdd)
-      else {
-        metrics("fetchJobs") += 1
-        rdd.map(_.copy()).collect()
-      }
+    val t1 = System.nanoTime()
+    val f = RowidFetch.fetch(session, relation, idAttr, hits.map(_._1), condition, fetchList)
+    metrics("fetchTime") += System.nanoTime() - t1
+    metrics("rowGroupsRead") += f.splits
+    if (f.readerBuilt) metrics("readerBuilds") += 1
+    if (f.job) metrics("fetchJobs") += 1
+    val fetched = f.rows
     metrics("fetchRounds") += 1
     metrics("rowsFetched") += fetched.length
     val rankOrdinal = if (idOrdinal >= 0) idOrdinal else projectList.length
@@ -247,9 +246,10 @@ case class HnswIndexScanExec(
   /** `explain("formatted")`: output, fetch columns and the metrics of the
     * runs so far. */
   override def verboseStringWithOperatorId(): String = {
-    val ms = Seq("fetchRounds", "fetchJobs", "rowsFetched", "bruteForce").map(metrics)
-      .map(m => s"${m.name.getOrElse("")}: ${m.value}") :+
-      f"search time: ${metrics("searchTime").value / 1e6}%.3f ms"
+    val ms = Seq("fetchRounds", "fetchJobs", "rowGroupsRead", "readerBuilds", "rowsFetched",
+      "bruteForce").map(metrics).map(m => s"${m.name.getOrElse("")}: ${m.value}") ++
+      Seq("searchTime", "fetchTime").map(metrics)
+        .map(m => f"${m.name.getOrElse("")}: ${m.value / 1e6}%.3f ms")
     s"""
        |$formattedNodeName
        |${ExplainUtils.generateFieldString("Output", output)}

@@ -461,7 +461,11 @@ object HnswMatch {
   def findIndex(base: String, rel: LogicalRelation, metrics: Set[String],
       a: Expression, b: Expression): Option[(HnswIndexMeta, Array[Float])] = {
     val relPaths = rel.relation match {
-      case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString).distinct.sorted
+      // The scan fetches rows through the file reader, which serves the
+      // table's own columns: a relation that also outputs a metadata
+      // column (`_metadata`) keeps its ordinary plan.
+      case fs: HadoopFsRelation if rel.output.forall(o => fs.schema.fieldNames.contains(o.name)) =>
+        fs.location.rootPaths.map(_.toString).distinct.sorted
       case _ => return None
     }
     val candidates = Seq((stripCast(a), b), (stripCast(b), a))

@@ -5,15 +5,20 @@ package org.apache.spark.sql.graftbridge
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils,
+  HadoopFsRelation}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.util.Utils
 
 object Bridge {
@@ -76,6 +81,20 @@ object Bridge {
       }
     }
   }
+
+  /** The source filters `FileSourceStrategy` pushes to the reader of
+    * `relation` for these predicates over its `output`. */
+  def pushedFilters(relation: HadoopFsRelation, predicates: Seq[Expression],
+      output: Seq[Attribute]): Seq[Filter] =
+    DataSourceStrategy.normalizeExprs(predicates, output).flatMap(
+      DataSourceStrategy.translateFilter(_, DataSourceUtils.supportNestedPredicatePushdown(relation)))
+
+  /** `rdd.mapPartitionsWithIndex(f)` without the closure check, which
+    * serializes `f` on every call: for an RDD built per query whose
+    * function is known to be serializable. */
+  def mapPartitionsWithIndex[T, U: ClassTag](rdd: RDD[T])(
+      f: (Int, Iterator[T]) => Iterator[U]): RDD[U] =
+    rdd.mapPartitionsWithIndexInternal(f)
 
   /** Full ColumnNode-tree conversion — needed for Columns COMPOSED from
     * `functions._` builders (struct/getField/when/…), which `expression`

@@ -570,7 +570,12 @@ object Dedup {
     * (visible to every executor) to route the same frames through
     * RELIABLE `checkpoint` instead: blocks survive executor loss at the
     * cost of a filesystem write. The first value seen wins for the
-    * SparkContext's checkpoint dir. */
+    * SparkContext's checkpoint dir. FILES ACCUMULATE: each materialization
+    * (every round of a label fixpoint, too) writes a checkpoint directory
+    * that Spark deletes only when `spark.cleaner.referenceTracking
+    * .cleanCheckpoints=true` is set before the SparkContext starts, and
+    * then only once the checkpointed frame is garbage collected; without
+    * it, clear the directory after the job. */
   private[graft] val ReliableCheckpointDirKey = "spark.graft.dedup.reliableCheckpointDir"
 
   /** Eagerly materialize a bounded decision/fixpoint frame with its

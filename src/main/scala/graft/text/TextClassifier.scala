@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Learned text classifier over hashed bag-of-tokens features — the
@@ -207,14 +208,15 @@ object TextClassifier {
     val maxClasses = 4096
     if (useLocalFit(df)) {
       // One collect replaces BOTH the distinct-labels job and the fit's
-      // own passes; labels derive locally (distinct, sorted — identical to
-      // the distributed spelling). Contract checks unchanged.
+      // own passes; labels derive locally (distinct, sorted in UTF-8 byte
+      // order like the distributed orderBy, not String's UTF-16 order).
+      // Contract checks unchanged.
       val rows = df.select(coalesce(col(textCol), lit("")).cast("string"),
           col(labelCol).cast("string"))
         .where(col(labelCol).cast("string").isNotNull).collect()
       val texts = rows.map(_.getString(0))
       val labelStrs = rows.map(_.getString(1))
-      val labelsL = labelStrs.distinct.sorted
+      val labelsL = labelStrs.distinct.sortBy(UTF8String.fromString)
       require(labelsL.length >= 2,
         s"need >= 2 distinct labels, got ${labelsL.length}")
       require(labelsL.length <= maxClasses,

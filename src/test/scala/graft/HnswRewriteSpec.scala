@@ -319,7 +319,7 @@ class HnswRewriteSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("scan is the top-k plan root: 0 jobs on 1 file, 1 per round on 2, no compile") {
+  test("scan is top-k plan root: 0 jobs on 1-2 files, 1 per split round, no compile") {
     import org.apache.spark.metrics.source.CodegenMetrics
     val first = servedQuery(1)
     assert(first.queryExecution.executedPlan.isInstanceOf[graft.plans.HnswIndexScanExec],
@@ -338,17 +338,27 @@ class HnswRewriteSpec extends SparkSuite {
     val rounds = scanOf(filtered).metrics("fetchRounds").value
     assert(frows.length == 10 && frows.forall(_.getInt(1) < 5))
     assert(rounds > 1 && fjobs == 0, s"$fjobs jobs, $rounds rounds")
-    // Two files: the fetch keeps its job, one per round, and answers the same.
+    // Two files: their row-group splits pack into one partition, so no job
+    // either. Splits larger than maxPartitionBytes each get a partition, and
+    // then every round is one job. Both answer as the one-file table does.
     def idDist(rs: Array[org.apache.spark.sql.Row]) =
       rs.map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    def counts(q: DataFrame): (Seq[Long], Array[org.apache.spark.sql.Row]) = {
+      val (rs, jobs) = jobsOf(q.collect())
+      val m = scanOf(q).metrics
+      (Seq(jobs.toLong, m("fetchRounds").value, m("fetchJobs").value), rs)
+    }
     val cases = Seq((1, None, rows, 1L), (3, Some(5), frows, rounds))
     for ((seed, where, oneFile, oneRounds) <- cases) {
-      val q = servedQuery(seed, where, servedTwoFiles)
-      val (two, twoJobs) = jobsOf(q.collect())
-      val m = scanOf(q).metrics
-      assert(Seq(twoJobs.toLong, m("fetchRounds").value, m("fetchJobs").value) ==
-        Seq.fill(3)(oneRounds), s"jobs, rounds, fetch jobs; one-file rounds $oneRounds")
+      val (packed, two) = counts(servedQuery(seed, where, servedTwoFiles))
+      assert(packed == Seq(0L, oneRounds, 0L), s"jobs, rounds, fetch jobs; one-file rounds $oneRounds")
       assert(idDist(two) == idDist(oneFile))
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+      try {
+        val (split, twoSplit) = counts(servedQuery(seed, where, servedTwoFiles))
+        assert(split == Seq.fill(3)(oneRounds), s"jobs, rounds, fetch jobs; one-file rounds $oneRounds")
+        assert(idDist(twoSplit) == idDist(oneFile))
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     }
   }
 
@@ -396,7 +406,16 @@ class HnswRewriteSpec extends SparkSuite {
     assert(m("bruteForce").value == 0)
     val explained = plain.queryExecution.explainString(ExplainMode.fromString("formatted"))
     Seq("fetch rounds: 1, fetch jobs: 0", "rows fetched: 10", "brute-force fallback: 0",
-      "search time").foreach(s => assert(explained.contains(s), explained))
+      "search time", "fetch time", "row groups read: 1").foreach(s =>
+      assert(explained.contains(s), explained))
+    // The second query of a shape reuses the first one's reader.
+    val second = servedQuery(7)
+    second.collect()
+    val m2 = scanOf(second).metrics
+    assert(m2("readerBuilds").value == 0 && m2("rowGroupsRead").value == 1)
+    assert(m2("fetchTime").value > 0)
+    assert(second.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      .contains("reader builds: 0"))
     val filtered = servedQuery(6, where = Some(5))
     filtered.collect()
     assert(scanOf(filtered).metrics("fetchRounds").value > 1)

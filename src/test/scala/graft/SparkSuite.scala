@@ -5,7 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object SparkSuite {
-  lazy val spark: SparkSession = {
+  private var current: SparkSession = _
+
+  /** The shared session; once a suite has stopped it, a new one with the
+    * same settings. */
+  def spark: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) current = build()
+    current
+  }
+
+  private def build(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")

@@ -204,6 +204,21 @@ class TextClassifierSpec extends SparkSuite {
     }
   }
 
+  test("trainMulticlass(): the driver-local and the distributed fit order labels alike " +
+      "(UTF-8 byte order)") {
+    // UTF-16 puts the surrogate pair of U+1F600 before U+FF21; UTF-8 bytes
+    // (F0 vs EF) put it after.
+    val df = Seq(("a b", "\uFF21"), ("c d", "\uD83D\uDE00"), ("a c", "\uFF21"),
+      ("d e", "\uD83D\uDE00"), ("b f", "z")).toDF("text", "label")
+    def fit() = TextClassifier.trainMulticlass(df, "text", "label", numFeatures = 1 << 10,
+      maxIter = 2).labels.toSeq
+    val local = fit() // default conf: the tiny frame takes the local path
+    spark.conf.set(TextClassifier.LocalFitMaxBytesKey, "0")
+    val distributed = try fit() finally spark.conf.unset(TextClassifier.LocalFitMaxBytesKey)
+    assert(local == Seq("z", "\uFF21", "\uD83D\uDE00"))
+    assert(distributed == local)
+  }
+
   test("multiclass scorer edge cases: null -> null; k probabilities sum " +
       "context (winner prob in (0,1]); strict codegen; value-based model " +
       "equality dedups plans") {
