@@ -163,7 +163,7 @@ object AnnCurve {
     out("|---|---|---|---|---|")
     val base = Hnsw.baseDir(spark)
     def search(q: Array[Float], ef: Int, p: Int, margin: Double = 0.0) =
-      Hnsw.searchBatch(None, base, meta, Array(q), k, ef, p, margin).head
+      Hnsw.searchBatch(None, base, meta, Array(q), k, ef, p, margin).hits.head
     for (p <- Seq(1, 2, 4, 8, clusters)) {
       val cells = for (ef <- Seq(16, 64, 128, 256)) yield {
         // warm pass: load the routed segments' graphs once (the serving

@@ -49,10 +49,6 @@ object Hnsw {
   /** Parity no-op: files are always persistent (SURVEY §2 O17). */
   val PersistenceKey = "spark.graft.hnsw.enableExperimentalPersistence"
   val MaxVectorsPerPartitionKey = "spark.graft.hnsw.build.maxVectorsPerPartition"
-  /** Initial candidate multiplier for filtered top-k index scans. */
-  val FilteredOverfetchKey = "spark.graft.hnsw.filteredScan.overfetch"
-  /** Widest filtered-scan candidate fetch before brute force takes over. */
-  val FilteredMaxFetchKey = "spark.graft.hnsw.filteredScan.maxFetch"
   /** Query→segment routing width p: search only the p segments whose
     * centroids are nearest the query (the sublinear many-segment path —
     * see HnswIndexMeta.routedSegments). 0 (default) = all segments, the
@@ -235,14 +231,6 @@ object Hnsw {
 
   // ----------------------------------------------------------------- search
 
-  /** Per-segment tombstone over-fetch cap: every segment search fetches
-    * k + min(catalog tombstones, this) candidates, so dropped tombstones
-    * cannot starve the merged top-k. Bounded because compaction, not
-    * over-fetch, is the fix for large tombstone sets; the filtered index
-    * scan's exhaustion proof ([[graft.plans.HnswIndexScanExec]]) relies on
-    * this cap. */
-  private[graft] val MaxTombstoneOverfetch = 1024
-
   /** Most segments a driver-side call touches in the calling thread; with
     * more, a Spark job (one task per segment) is cheaper than the loop. */
   private val DriverLocalSegments = 4
@@ -262,7 +250,7 @@ object Hnsw {
   private def searchOne(spark: SparkSession, meta: HnswIndexMeta, q: Array[Float], k: Int,
       ef: Int): Array[(Long, Double)] =
     searchBatch(None, baseDir(spark), meta, Array(q), k, ef,
-      probeSegments(spark), adaptiveProbeMargin(spark)).head
+      probeSegments(spark), adaptiveProbeMargin(spark)).hits.head
 
   /**
    * Compaction-race shield: run `body` against `meta`, and when a segment
@@ -300,6 +288,16 @@ object Hnsw {
     case _ => items.iterator.map(f)
   }
 
+  /** What [[searchBatch]] found: per query, the ascending top-k (rowid,
+    * index-metric distance), and how many segment searches were answered
+    * by exact distances over their allowed nodes. */
+  private[graft] final case class Found(hits: Array[Array[(Long, Double)]], exactSearches: Int)
+
+  /** One segment's answer: its live allowed nodes, per routed query the
+    * hits, and how many of them exact distances gave. */
+  private final case class SegmentHits(allowed: Int, hits: Array[Array[(Long, Double)]],
+      exact: Int)
+
   /**
    * The index's one search: for each query (null → empty), the ascending
    * top-k (rowid, index-metric distance) over its routed segments
@@ -311,42 +309,77 @@ object Hnsw {
    * whenever the byte-bounded cache is smaller than the index. Routing
    * happens before the fan-out decision, so a 1000-segment index routed to
    * p = 8 never becomes a 1000-task job; a segment no query routed to is
-   * never loaded. Catalog tombstones are dropped from each segment's hits,
-   * then each query's partial top-ks are merged. `spark` picks where the
-   * segments run ([[perSegment]]): the SQL index scan passes its session;
-   * executor-side callers (the index join) and single-thread callers pass
-   * None.
+   * never loaded. `spark` picks where the segments run ([[perSegment]]):
+   * the SQL index scan passes its session; executor-side callers (the
+   * index join) and single-thread callers pass None.
+   *
+   * Only allowed nodes enter a segment's result ([[HnswGraph.search]]):
+   * those not tombstoned in the catalog and, when `allow` is given (sorted
+   * rowids, the filtered scan's allow-list), whose rowid it holds. A
+   * segment with no more allowed nodes than the candidate width
+   * max(ef, k), or whose traversal returns fewer than k while at least k
+   * are allowed, is answered by exact distances over its allowed nodes
+   * ([[HnswGraph.exact]]). With `allow`, a query whose routed segments hold
+   * fewer than k allowed rows also searches every other segment. So a
+   * filtered search returns k rows whenever k indexed rows are allowed.
+   * The allow-list ships inside the per-segment function, which a Spark
+   * job broadcasts once with its task binary.
    */
   private[graft] def searchBatch(spark: Option[SparkSession], base: String,
       meta: HnswIndexMeta, queries: Array[Array[Float]], k: Int, ef: Int,
-      probe: Int, margin: Double): Array[Array[(Long, Double)]] =
+      probe: Int, margin: Double, allow: Option[Array[Long]] = None): Found =
     withFreshMeta(base, meta) { meta =>
       val dirPath = IndexCatalog.indexDir(base, meta.name).getAbsolutePath
-      val tombs = TombstoneCache.get(base, meta.name)
-      val fetch = k + math.min(tombs.size, MaxTombstoneOverfetch)
-      val routed = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofInt]
-      queries.indices.foreach { i =>
-        if (queries(i) != null) meta.routedSegments(queries(i), probe, margin)
-          .foreach(s => routed.getOrElseUpdate(s, new mutable.ArrayBuilder.ofInt) += i)
-      }
-      val work = meta.segments.flatMap(s => routed.get(s).map(qs => (s, qs.result())))
-      val hits = perSegment(spark, work) { case (s, qs) =>
-        val g = GraphCache.get(new File(dirPath, s))
-        qs.map(i => g.search(queries(i), fetch, ef))
-      }
-      val acc = Array.fill(queries.length)(mutable.ArrayBuffer.empty[(Long, Double)])
-      work.iterator.zip(hits).foreach { case ((s, qs), segHits) =>
-        qs.indices.foreach { j =>
-          val buf = acc(qs(j))
-          buf ++= segHits(j).filterNot { case (key, _) => tombs.contains((s, key)) }
-          // Keep each accumulator bounded: only the best k can survive.
-          if (buf.length > 4 * fetch) {
-            val best = buf.sortBy(_._2).take(k)
-            buf.clear(); buf ++= best
+      val tombs = TombstoneCache.bySegment(base, meta.name)
+      val allowIds = allow.orNull
+      val width = math.max(ef, k)
+      // Search each segment for the queries routed to it: segment → (query
+      // indices, hits).
+      def searchSegments(routes: Array[Seq[String]]): Map[String, (Array[Int], SegmentHits)] = {
+        val routed = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofInt]
+        routes.indices.foreach { i =>
+          routes(i).foreach(s => routed.getOrElseUpdate(s, new mutable.ArrayBuilder.ofInt) += i)
+        }
+        val work = meta.segments.flatMap(s => routed.get(s).map(qs =>
+          (s, qs.result(), tombs.getOrElse(s, Array.emptyLongArray))))
+        val found = perSegment(spark, work) { case (s, qs, deleted) =>
+          val g = GraphCache.get(new File(dirPath, s))
+          val allowed = g.allowedNodes(allowIds, deleted)
+          val n = if (allowed == null) g.size else allowed.cardinality
+          var exact = 0
+          val hits = qs.map { i =>
+            val traversed = if (allowed != null && n <= width) null
+              else g.search(queries(i), k, ef, allowed)
+            if (traversed != null && traversed.length >= math.min(k, n)) traversed
+            else { exact += 1; g.exact(queries(i), k, allowed) }
           }
+          SegmentHits(n, hits, exact)
+        }
+        work.iterator.zip(found).map { case ((s, qs, _), h) => s -> (qs, h) }.toMap
+      }
+      val routes = queries.map(q =>
+        if (q == null) Seq.empty[String] else meta.routedSegments(q, probe, margin))
+      val first = searchSegments(routes)
+      val widened = if (allow.isEmpty) Map.empty[String, (Array[Int], SegmentHits)] else {
+        searchSegments(routes.map { rs =>
+          if (rs.isEmpty || rs.map(first(_)._2.allowed).sum >= k) Seq.empty
+          else meta.segments.filterNot(rs.contains)
+        })
+      }
+      // Merge in catalog segment order, so equal distances break alike on
+      // every path.
+      val acc = Array.fill(queries.length)(mutable.ArrayBuffer.empty[(Long, Double)])
+      for (s <- meta.segments; (qs, h) <- first.get(s) ++ widened.get(s); j <- qs.indices) {
+        val buf = acc(qs(j))
+        buf ++= h.hits(j)
+        // Keep each accumulator bounded: only the best k can survive.
+        if (buf.length > 4 * k) {
+          val best = buf.sortBy(_._2).take(k)
+          buf.clear(); buf ++= best
         }
       }
-      acc.map(_.sortBy(_._2).take(k).toArray)
+      Found(acc.map(_.sortBy(_._2).take(k).toArray),
+        (first.valuesIterator ++ widened.valuesIterator).map(_._2.exact).sum)
     }
 
   /** Top-k as a DataFrame (id, distance) — the `hnsw_index_scan` surface. */

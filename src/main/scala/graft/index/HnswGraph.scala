@@ -154,8 +154,14 @@ final class HnswGraph(
    * Beam search at one level: returns up to `ef` nearest (dists, nodes)
    * parallel arrays, sorted ascending by distance. Primitive binary heaps —
    * the hot path of both build and search; no boxing.
+   *
+   * `allowed` (null = every node) bounds what enters the result: the
+   * traversal still expands a disallowed node closer than the ef-th allowed
+   * result, so a filter never cuts the graph's paths — the
+   * predicate-agnostic filtered search of ACORN (Patel et al., SIGMOD 2024).
    */
-  private def searchLayer(q: Array[Float], eps: Array[Int], ef: Int, level: Int): (Array[Double], Array[Int]) = {
+  private def searchLayer(q: Array[Float], eps: Array[Int], ef: Int, level: Int,
+      allowed: java.util.BitSet = null): (Array[Double], Array[Int]) = {
     val visited = new java.util.BitSet(size)
     val candidates = new HnswGraph.Heap(math.max(ef, 16), minHeap = true)
     val results = new HnswGraph.Heap(ef + 1, minHeap = false) // root = worst kept
@@ -166,8 +172,10 @@ final class HnswGraph(
         visited.set(ep)
         val d = distTo(ep, q)
         candidates.push(d, ep)
-        results.push(d, ep)
-        if (results.size > ef) results.pop()
+        if (allowed == null || allowed.get(ep)) {
+          results.push(d, ep)
+          if (results.size > ef) results.pop()
+        }
       }
       i += 1
     }
@@ -188,8 +196,10 @@ final class HnswGraph(
             val d = distTo(nb, q)
             if (results.size < ef || d < results.topDist) {
               candidates.push(d, nb)
-              results.push(d, nb)
-              if (results.size > ef) results.pop()
+              if (allowed == null || allowed.get(nb)) {
+                results.push(d, nb)
+                if (results.size > ef) results.pop()
+              }
             }
           }
           j += 1
@@ -248,19 +258,70 @@ final class HnswGraph(
   /**
    * Top-k nearest (key, distance) pairs by the index metric, ascending.
    * `ef` is the base-layer beam width (reference default 64,
-   * `SET hnsw_ef_search`, hnsw_index.cpp:318-329).
+   * `SET hnsw_ef_search`, hnsw_index.cpp:318-329). Only nodes in `allowed`
+   * ([[allowedNodes]]; null = every node) enter the result; the traversal
+   * walks the others too, so with a sparse filter it may return fewer than
+   * k — [[exact]] answers then.
    */
-  def search(q: Array[Float], k: Int, ef: Int = 64): Array[(Long, Double)] = {
+  def search(q: Array[Float], k: Int, ef: Int = 64,
+      allowed: java.util.BitSet = null): Array[(Long, Double)] = {
     if (entryPoint < 0) return Array.empty
-    require(q.length == dim,
-      s"HNSW query vector dimension mismatch: expected $dim, got ${q.length}")
+    checkDim(q)
     var ep = entryPoint
     var lc = topLevel
     while (lc > 0) { ep = greedyClosest(q, ep, lc); lc -= 1 }
-    val (foundD, foundN) = searchLayer(q, Array(ep), math.max(ef, k), 0)
+    val (foundD, foundN) = searchLayer(q, Array(ep), math.max(ef, k), 0, allowed)
     val n = math.min(k, foundN.length)
     Array.tabulate(n)(i => (keys(foundN(i)), foundD(i)))
   }
+
+  /** Top-k by exact distances over the `allowed` nodes (null = every
+    * node), ascending: no traversal, so nothing allowed is missed. */
+  def exact(q: Array[Float], k: Int, allowed: java.util.BitSet): Array[(Long, Double)] = {
+    if (size == 0 || k <= 0) return Array.empty
+    checkDim(q)
+    val best = new HnswGraph.Heap(k + 1, minHeap = false)
+    var i = if (allowed == null) 0 else allowed.nextSetBit(0)
+    while (i >= 0 && i < size) {
+      val d = distTo(i, q)
+      if (best.size < k || d < best.topDist) {
+        best.push(d, i)
+        if (best.size > k) best.pop()
+      }
+      i = if (allowed == null) i + 1 else allowed.nextSetBit(i + 1)
+    }
+    val (ds, ns) = best.drainSortedAsc()
+    Array.tabulate(ns.length)(j => (keys(ns(j)), ds(j)))
+  }
+
+  /** The nodes a filtered search may return: those whose key is in `allow`
+    * (sorted ascending; null = every key) and not in `deleted`, as node
+    * positions. Null when neither excludes anything. Costs
+    * min(allow size, graph size) lookups. */
+  def allowedNodes(allow: Array[Long], deleted: Array[Long]): java.util.BitSet = {
+    if (allow == null && deleted.isEmpty) return null
+    val bits = new java.util.BitSet(size)
+    if (allow == null) bits.set(0, size)
+    else if (allow.length <= size) allow.foreach { key =>
+      val node = keyToNode.getOrElse(key, -1)
+      if (node >= 0) bits.set(node)
+    } else {
+      var i = 0
+      while (i < size) {
+        if (java.util.Arrays.binarySearch(allow, keys(i)) >= 0) bits.set(i)
+        i += 1
+      }
+    }
+    deleted.foreach { key =>
+      val node = keyToNode.getOrElse(key, -1)
+      if (node >= 0) bits.clear(node)
+    }
+    bits
+  }
+
+  private def checkDim(q: Array[Float]): Unit =
+    require(q.length == dim,
+      s"HNSW query vector dimension mismatch: expected $dim, got ${q.length}")
 
   /** All (key, vector) pairs — what compaction rebuilds segments from. */
   def entries: Iterator[(Long, Array[Float])] =

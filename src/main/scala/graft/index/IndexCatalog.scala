@@ -354,25 +354,27 @@ object GraphCache {
   }
 }
 
-/** Per-JVM tombstone-set cache, one entry per file path validated by
-  * (mtime, size) — the join exec consults tombstones per batch, which must
-  * not mean a file read per call. Replacing the entry on staleness (rather
-  * than keying by version) keeps old versions from accumulating across
-  * repeated deletes. */
+/** Per-JVM tombstone cache, one entry per file path validated by
+  * (mtime, size) — search consults tombstones per query, which must not
+  * mean a file read per call. Replacing the entry on staleness (rather than
+  * keying by version) keeps old versions from accumulating across repeated
+  * deletes. */
 object TombstoneCache {
-  private case class Versioned(mtime: Long, size: Long, tombs: Set[(String, Long)])
+  private case class Versioned(mtime: Long, size: Long, bySegment: Map[String, Array[Long]])
   private val cache = TrieMap.empty[String, Versioned]
 
-  def get(base: String, name: String): Set[(String, Long)] = {
+  /** The index's tombstoned keys, by segment file. */
+  def bySegment(base: String, name: String): Map[String, Array[Long]] = {
     val f = new File(IndexCatalog.indexDir(base, name), IndexCatalog.TombFile)
-    if (!f.isFile) return Set.empty
+    if (!f.isFile) return Map.empty
     val (path, mtime, size) = (f.getAbsolutePath, f.lastModified(), f.length())
     cache.get(path) match {
-      case Some(v) if v.mtime == mtime && v.size == size => v.tombs
+      case Some(v) if v.mtime == mtime && v.size == size => v.bySegment
       case _ =>
-        val tombs = IndexCatalog.tombstones(base, name)
-        cache.put(path, Versioned(mtime, size, tombs))
-        tombs
+        val grouped = IndexCatalog.tombstones(base, name).groupBy(_._1)
+          .map { case (s, ks) => s -> ks.iterator.map(_._2).toArray }
+        cache.put(path, Versioned(mtime, size, grouped))
+        grouped
     }
   }
 }

@@ -3,17 +3,13 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeSet,
-  Expression, IsNotNull, Literal, NamedExpression, SortOrder, SubqueryExpression,
-  UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LeafNode, LocalLimit,
-  LogicalPlan, Project, Sort, Statistics}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression,
+  NamedExpression, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.execution.{ExplainUtils, LeafExecNode, SQLExecution, SparkPlan,
   SparkStrategy}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{ArrayType, FloatType}
-import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.Hnsw
 import graft.index.HnswIndexMeta
@@ -31,11 +27,12 @@ import graft.index.HnswIndexMeta
  * (hnsw_optimize_scan.cpp:161-198).
  *
  * `condition`, when set, makes this a *filtered* top-k scan
- * (`WHERE p ORDER BY dist LIMIT k`): the exec over-fetches candidates,
- * post-filters, and escalates until k survivors are found or the index is
- * exhausted — so unlike the reference's filter pull-up (which accepts
- * fewer-than-k post-filter semantics, hnsw_optimize_scan.cpp:161-198 +
- * where_clause_segfault.test), standard SQL semantics are preserved.
+ * (`WHERE p ORDER BY dist LIMIT k`): the exec collects the rowids that pass
+ * it, and one index search admits only those to its result — so unlike the
+ * reference's filter pull-up (which accepts fewer-than-k post-filter
+ * semantics, hnsw_optimize_scan.cpp:161-198 + where_clause_segfault.test),
+ * standard SQL semantics are preserved: k rows whenever k indexed rows
+ * qualify.
  */
 case class HnswIndexScan(
     relation: LogicalRelation,
@@ -68,14 +65,24 @@ case class HnswIndexScan(
 
 /**
  * Physical execution, started from `executeCollect` on the driver:
- *   1. ANN search through the index's one search path, [[Hnsw.searchBatch]],
- *      started from the driver like the reference's InitGlobal search
- *      (hnsw_index.cpp:315-341): the query is routed by the session's
- *      probeSegments/adaptiveProbeMargin, a few routed segments are
- *      searched on the driver and more as one Spark task per segment, and
- *      deleted rowids (catalog tombstones) are dropped before the top-k
- *      merge.
- *   2. Fetch the hits' rows by rowid ([[RowidFetch]]), the Spark analogue
+ *   1. Filtered scans only: the allow-list pass ([[RowidFetch.allowList]])
+ *      reads the rowid and `condition`'s columns, with the condition pushed
+ *      to the file reader, and collects the rowids that pass, sorted. With
+ *      none, the scan returns no rows without a search or a fetch. The list
+ *      costs 8 bytes per qualifying row on the driver; past
+ *      [[HnswIndexScanExec.maxAllowedIds]] (an eighth of the driver's max
+ *      heap) the query fails and names the rewrite's kill switch.
+ *   2. One ANN search through the index's one search path,
+ *      [[Hnsw.searchBatch]], started from the driver like the reference's
+ *      InitGlobal search (hnsw_index.cpp:315-341): the query is routed by
+ *      the session's probeSegments/adaptiveProbeMargin, a few routed
+ *      segments are searched on the driver and more as one Spark task per
+ *      segment. Only allowed nodes — not tombstoned and, when filtered, on
+ *      the allow-list — enter the result, and a segment the traversal
+ *      cannot fill is answered by exact distances, so a filtered query
+ *      returns k rows whenever k indexed rows qualify (the predicate-agnostic
+ *      filtered HNSW search of ACORN, Patel et al., SIGMOD 2024).
+ *   3. Fetch the hits' rows by rowid ([[RowidFetch]]), the Spark analogue
  *      of the reference's fetch-by-rowid with projection pushdown
  *      (hnsw_index_scan.cpp:95-121): no query is planned. The relation's
  *      file reader for this fetch shape (columns, condition, session
@@ -85,16 +92,15 @@ case class HnswIndexScan(
  *      projection drops it) to their rows. Splits that pack into one
  *      partition are read in the calling thread, like the reference's
  *      in-process fetch; more run as one job.
- *   3. Put the fetched rows in ANN rank order and drop a rowid the
+ *   4. Put the fetched rows in ANN rank order and drop a rowid the
  *      projection did not ask for.
  *
  * [[HnswStrategy]] folds the projection above the logical scan into this
  * node, so a top-k query's plan is this node alone. `collect` runs no job
- * unless a fetch's splits exceed `spark.sql.files.maxPartitionBytes`, and
- * then one per fetch round (the "fetch jobs" metric). The brute-force
- * fallback of a starved filtered query is the one fetch that is planned
- * as an ordinary query. Under another operator (an aggregate, a join) the
- * ≤ k rows are handed on as a one-partition RDD.
+ * unless a read's splits exceed `spark.sql.files.maxPartitionBytes`, and
+ * then one per read (the "fetch jobs" metric counts the fetch's). Under
+ * another operator (an aggregate, a join) the ≤ k rows are handed on as a
+ * one-partition RDD.
  */
 case class HnswIndexScanExec(
     projectList: Seq[NamedExpression],
@@ -117,7 +123,9 @@ case class HnswIndexScanExec(
     "fetchRounds" -> SQLMetrics.createMetric(sparkContext, "fetch rounds"),
     "fetchJobs" -> SQLMetrics.createMetric(sparkContext, "fetch jobs"),
     "rowsFetched" -> SQLMetrics.createMetric(sparkContext, "rows fetched"),
-    "bruteForce" -> SQLMetrics.createMetric(sparkContext, "brute-force fallback"),
+    "rowsAllowed" -> SQLMetrics.createMetric(sparkContext, "rows allowed"),
+    "exactSearches" -> SQLMetrics.createMetric(sparkContext, "exact segment searches"),
+    "allowTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "allow-list time"),
     "searchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "search time"),
     "fetchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "fetch time"),
     "rowGroupsRead" -> SQLMetrics.createMetric(sparkContext, "row groups read"),
@@ -159,85 +167,43 @@ case class HnswIndexScanExec(
   override protected def doExecute(): RDD[InternalRow] =
     sparkContext.parallelize(executeCollect().toIndexedSeq, 1)
 
-  /** One search + fetch round at candidate width `kFetch`. Returns the
-    * search hits and the fetched rows (`fetchList`) in ANN rank order. */
-  private def round(kFetch: Int): (Array[(Long, Double)], Array[InternalRow]) = {
+  /** The allow-list pass, one search, one fetch: the k rows (`fetchList`)
+    * in ANN rank order. */
+  private def fetchOrdered(): Array[InternalRow] = {
+    val allow = condition.map { c =>
+      val t0 = System.nanoTime()
+      val max = HnswIndexScanExec.maxAllowedIds(Runtime.getRuntime.maxMemory)
+      val pass = RowidFetch.allowList(session, relation, idAttr, c, max)
+      metrics("allowTime") += System.nanoTime() - t0
+      if (pass.readerBuilt) metrics("readerBuilds") += 1
+      if (pass.rows.length > max) throw new IllegalStateException(
+        s"filtered top-k on index '${meta.name}': more than $max rows pass ${c.sql}, " +
+          "over the allow-list's bound of an eighth of the driver's max heap; raise " +
+          s"spark.driver.memory or set ${Hnsw.RewriteEnabledKey}=false to run the query " +
+          "without the index")
+      metrics("rowsAllowed") += pass.rows.length
+      pass.rows
+    }
+    if (allow.exists(_.isEmpty)) return Array.empty
     val t0 = System.nanoTime()
-    val hits = Hnsw.searchBatch(Some(session), base, meta, Array(query), kFetch,
-      math.max(ef, kFetch), Hnsw.probeSegments(session), Hnsw.adaptiveProbeMargin(session)).head
+    val found = Hnsw.searchBatch(Some(session), base, meta, Array(query), k, ef,
+      Hnsw.probeSegments(session), Hnsw.adaptiveProbeMargin(session), allow)
     metrics("searchTime") += System.nanoTime() - t0
-    if (hits.isEmpty) return (hits, Array.empty)
+    metrics("exactSearches") += found.exactSearches
+    val hits = found.hits.head
+    if (hits.isEmpty) return Array.empty
     val t1 = System.nanoTime()
     val f = RowidFetch.fetch(session, relation, idAttr, hits.map(_._1), condition, fetchList)
     metrics("fetchTime") += System.nanoTime() - t1
     metrics("rowGroupsRead") += f.splits
     if (f.readerBuilt) metrics("readerBuilds") += 1
     if (f.job) metrics("fetchJobs") += 1
-    val fetched = f.rows
     metrics("fetchRounds") += 1
-    metrics("rowsFetched") += fetched.length
+    metrics("rowsFetched") += f.rows.length
     val rankOrdinal = if (idOrdinal >= 0) idOrdinal else projectList.length
     val rank = hits.iterator.zipWithIndex.map { case ((id, _), i) => (id, i) }.toMap
-    (hits, fetched.sortBy(r => rank.getOrElse(r.getLong(rankOrdinal), Int.MaxValue)))
+    f.rows.sortBy(r => rank.getOrElse(r.getLong(rankOrdinal), Int.MaxValue))
   }
-
-  private def fetchOrdered(): Array[InternalRow] = {
-    if (condition.isEmpty) return round(k)._2
-    // Filtered top-k: over-fetch, post-filter, escalate until k survivors,
-    // the index is provably exhausted, or the candidate width passes the
-    // fetch budget — then fall back to a fully-distributed brute-force
-    // TopN over the filtered relation (never collect the index into an
-    // IN-literal list the driver can't hold).
-    val tombCount = graft.index.TombstoneCache.get(base, meta.name).size
-    var kFetch = math.min(math.max(k.toLong * OverfetchFactor, k + 16L),
-      Int.MaxValue.toLong).toInt
-    val budget = math.max(MaxIndexFetch, kFetch)
-    while (kFetch <= budget) {
-      val (hits, survivors) = round(kFetch)
-      if (survivors.length >= k) return survivors.take(k)
-      // `hits < kFetch` proves every live entry was considered ONLY when
-      // the per-segment tombstone over-fetch cap cannot have swallowed live
-      // candidates; with more tombstones the proof needs kFetch to cover
-      // every graph entry, dead or alive.
-      val capSafe = tombCount <= Hnsw.MaxTombstoneOverfetch || kFetch >= meta.count + tombCount
-      if (hits.length < kFetch && capSafe) return survivors
-      if (kFetch >= meta.count + tombCount) return survivors
-      kFetch = math.min(kFetch * 4L, Int.MaxValue.toLong).toInt
-    }
-    metrics("bruteForce") += 1
-    bruteForce()
-  }
-
-  /** Starvation fallback: TopN over `Filter(cond, relation)` as an ordinary
-    * distributed plan (scan → filter → TakeOrdered k), projected to
-    * `fetchList`. The Sort is tagged so the TopN rewrite leaves it alone —
-    * without the tag this exact shape would rewrite straight back into
-    * this node. */
-  private def bruteForce(): Array[InternalRow] = {
-    val vecAttr = relation.output.find(_.name == meta.column).getOrElse(
-      throw new IllegalStateException(s"vector column '${meta.column}' not in relation"))
-    val qLit = Literal.create(query, ArrayType(FloatType, containsNull = false))
-    val distExpr: Expression = meta.metric match {
-      case "cosine" => graft.expressions.ArrayCosineDistance(vecAttr, qLit)
-      case "ip" => graft.expressions.ArrayNegativeInnerProduct(vecAttr, qLit)
-      case _ => graft.expressions.ArraySquaredDistance(vecAttr, qLit)
-    }
-    // NULL vectors are never in the index, so the index path never returns
-    // them; exclude them here too for path-independent results.
-    val filtered = Filter(And(condition.get, IsNotNull(vecAttr)), relation)
-    val sorted = Sort(Seq(SortOrder(distExpr, Ascending)), global = true, filtered)
-    sorted.setTagValue(HnswIndexScanExec.NoRewriteTag, true)
-    val limited = GlobalLimit(Literal(k), LocalLimit(Literal(k), sorted))
-    Bridge.ofRows(session, Project(fetchList, limited))
-      .queryExecution.executedPlan.executeCollect()
-  }
-
-  private def OverfetchFactor: Int =
-    session.conf.get(Hnsw.FilteredOverfetchKey, "4").toInt
-
-  /** Widest index candidate fetch before brute force takes over. */
-  private def MaxIndexFetch: Int =
-    session.conf.get(Hnsw.FilteredMaxFetchKey, "16384").toInt
 
   override def simpleString(maxFields: Int): String =
     s"HnswIndexScanExec [index=${meta.name}, metric=${meta.metric}, k=$k, ef=$ef" +
@@ -247,8 +213,9 @@ case class HnswIndexScanExec(
     * runs so far. */
   override def verboseStringWithOperatorId(): String = {
     val ms = Seq("fetchRounds", "fetchJobs", "rowGroupsRead", "readerBuilds", "rowsFetched",
-      "bruteForce").map(metrics).map(m => s"${m.name.getOrElse("")}: ${m.value}") ++
-      Seq("searchTime", "fetchTime").map(metrics)
+      "rowsAllowed", "exactSearches").map(metrics)
+      .map(m => s"${m.name.getOrElse("")}: ${m.value}") ++
+      Seq("allowTime", "searchTime", "fetchTime").map(metrics)
         .map(m => f"${m.name.getOrElse("")}: ${m.value / 1e6}%.3f ms")
     s"""
        |$formattedNodeName
@@ -260,10 +227,10 @@ case class HnswIndexScanExec(
 }
 
 object HnswIndexScanExec {
-  /** Set on the brute-force fallback's Sort so the TopN rewrite leaves it
-    * alone — that plan is the escape hatch FROM the index path. */
-  val NoRewriteTag: org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean] =
-    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean]("graft.hnsw.noRewrite")
+  /** Most rowids a filtered scan's allow-list may hold: 8 bytes each, at
+    * most an eighth of the driver's max heap `maxHeap`. */
+  def maxAllowedIds(maxHeap: Long): Int =
+    math.min(maxHeap / 64, Int.MaxValue - 8L).toInt
 }
 
 /** Planner strategy: logical [[HnswIndexScan]], with the projection above

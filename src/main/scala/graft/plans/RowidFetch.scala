@@ -1,12 +1,13 @@
 package graft.plans
 
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkContext
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression,
   NamedExpression, Predicate, PredicateHelper, UnsafeProjection}
@@ -25,10 +26,12 @@ import org.apache.spark.sql.types.StructType
  * through a file reader built once per fetch shape and only from the
  * parquet row groups whose id statistics can hold one of them — the Spark
  * analogue of the reference's `DataTable::Fetch` with projection pushdown
- * (hnsw_index_scan.cpp:95-121). No query is planned per fetch.
+ * (hnsw_index_scan.cpp:95-121). The same reads serve a filtered top-k's
+ * allow-list pass ([[allowList]]): the rowids of every row that passes the
+ * condition. No query is planned per read.
  *
  *  - **Reader.** The relation's `FileFormat` reader function over the
- *    fetch's columns (the id, the projection's and the condition's
+ *    read's columns (the id, the projection's and the condition's
  *    references), with the condition's translatable filters pushed, as
  *    `FileSourceStrategy` builds it. Building it broadcasts the hadoop
  *    conf, so it is kept in a bounded LRU keyed by everything it depends
@@ -40,25 +43,25 @@ import org.apache.spark.sql.types.StructType
  *    byte ranges, the id column's min and max) is cached by path, length
  *    and modification time, so a rewritten file gets a new one. A fetch
  *    keeps the row groups whose [min, max] holds a hit (or that have no
- *    statistics) and reads each as one split; parquet keeps the row group
- *    whose midpoint falls in a split. Other formats, and files whose footer
- *    cannot be read, are read whole, so the read reports their errors.
+ *    statistics), an allow-list pass all of them, and reads each as one
+ *    split; parquet keeps the row group whose midpoint falls in a split.
+ *    Other formats, and files whose footer cannot be read, are read whole,
+ *    so the read reports their errors.
  *  - **Execution.** The splits are packed by Spark's own
  *    `FilePartition.getFilePartitions` (`spark.sql.files.maxPartitionBytes`,
  *    `openCostInBytes`) into a `FileScanRDD` (input metrics, missing and
  *    corrupt file handling, `FAILED_READ_FILE` errors). The rowid
- *    membership, the condition and the projection are applied in the
- *    partition function, which builds its predicate and projection there:
- *    the codegen cache serves every query of a shape. One partition is
- *    computed in the calling thread ([[Bridge.collectInThread]]), more as
- *    one job.
+ *    membership, the condition and the projection (for the allow-list, the
+ *    condition) are applied in the partition function, which builds its
+ *    predicate and projection there: the codegen cache serves every query
+ *    of a shape. One partition is computed in the calling thread
+ *    ([[Bridge.collectInThread]]), more as one job.
  */
 private[graft] object RowidFetch extends PredicateHelper {
 
-  /** The rows of one fetch (`fetchList` per row, unordered) and what it
-    * cost: splits read, whether the reader was built and whether a job ran. */
-  final case class Result(rows: Array[InternalRow], splits: Int, readerBuilt: Boolean,
-      job: Boolean)
+  /** What one read returned (unordered) and what it cost: splits read,
+    * whether the reader was built and whether a job ran. */
+  final case class Result[T](rows: Array[T], splits: Int, readerBuilt: Boolean, job: Boolean)
 
   /** Everything a reader function depends on. */
   private final case class ReaderKey(sc: SparkContext, format: Class[_], dataSchema: StructType,
@@ -88,17 +91,65 @@ private[graft] object RowidFetch extends PredicateHelper {
     * `condition`, projected to `fetchList`. */
   def fetch(session: SparkSession, relation: LogicalRelation, idAttr: Attribute,
       hits: Array[Long], condition: Option[Expression],
-      fetchList: Seq[NamedExpression]): Result = {
+      fetchList: Seq[NamedExpression]): Result[InternalRow] = {
+    val sorted = hits.sorted
+    read(session, relation, idAttr, fetchList.flatMap(_.references), condition, Some(sorted)) {
+      (rowAttrs, idOrdinal) => (i, rows) =>
+        val keep = condition.map { c => val p = Predicate.create(c, rowAttrs); p.initialize(i); p }
+        val project = UnsafeProjection.create(fetchList, rowAttrs)
+        project.initialize(i)
+        rows.filter { r =>
+          !r.isNullAt(idOrdinal) &&
+            java.util.Arrays.binarySearch(sorted, r.getLong(idOrdinal)) >= 0 &&
+            keep.forall(_.eval(r))
+        }.map(r => project(r).copy())
+    }
+  }
+
+  /** The allow-list of a filtered top-k: the non-null rowids of the rows
+    * that pass `condition`, sorted ascending. Reads only the rowid and the
+    * condition's columns, with the condition pushed to the reader, from
+    * every row group. A partition stops after `maxIds + 1` ids, so a list
+    * longer than `maxIds` means "over the bound", not the whole list. */
+  def allowList(session: SparkSession, relation: LogicalRelation, idAttr: Attribute,
+      condition: Expression, maxIds: Int): Result[Long] = {
+    val parts = read(session, relation, idAttr, Nil, Some(condition), None) {
+      (rowAttrs, idOrdinal) => (i, rows) =>
+        val keep = Predicate.create(condition, rowAttrs)
+        keep.initialize(i)
+        val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+        var n = 0
+        while (n <= maxIds && rows.hasNext) {
+          val r = rows.next()
+          if (!r.isNullAt(idOrdinal) && keep.eval(r)) { ids += r.getLong(idOrdinal); n += 1 }
+        }
+        Iterator.single(ids.result())
+    }
+    val ids = parts.rows.flatten
+    java.util.Arrays.sort(ids)
+    parts.copy(rows = ids)
+  }
+
+  /**
+   * One read of `relation`: the id, `references` and `condition`'s columns,
+   * from the row groups that can hold one of `hits` (sorted; None = every
+   * row group), through `perPartition` — given the reader's row attributes
+   * and the id's ordinal there, it maps partition `i`'s rows to results.
+   */
+  private def read[T: ClassTag](session: SparkSession, relation: LogicalRelation,
+      idAttr: Attribute, references: Seq[Attribute], condition: Option[Expression],
+      hits: Option[Array[Long]])(
+      perPartition: (Seq[Attribute], Int) => (Int, Iterator[InternalRow]) => Iterator[T])
+      : Result[T] = {
     val fs = relation.relation.asInstanceOf[HadoopFsRelation]
     val partAttrs = relation.resolve(fs.partitionSchema, session.sessionState.conf.resolver)
     val partSet = AttributeSet(partAttrs)
-    val reads = AttributeSet(idAttr +: (fetchList ++ condition).flatMap(_.references))
+    val reads = AttributeSet(idAttr +: (references ++ condition.toSeq.flatMap(_.references)))
     val dataAttrs = relation.output.filter(a => reads.contains(a) && !partSet.contains(a))
     val conjuncts = condition.toSeq.flatMap(splitConjunctivePredicates)
     val (reader, built) = readerFor(session, relation, fs, dataAttrs, condition,
       conjuncts.filterNot(_.references.exists(partSet.contains)))
 
-    val sorted = hits.sorted
     val idName = Some(idAttr.name).filter(fs.dataSchema.fieldNames.contains)
     val parquet = fs.fileFormat.isInstanceOf[ParquetFileFormat]
     val splits = fs.location.listFiles(conjuncts.filter(_.references.subsetOf(partSet)), Nil)
@@ -109,11 +160,11 @@ private[graft] object RowidFetch extends PredicateHelper {
             SparkPath.fromFileStatus(st), start, length, Array.empty[String],
             st.getModificationTime, st.getLen)
           val groups = if (parquet) idName.flatMap(rowGroups(st, _, reader.hadoopConf)) else None
-          groups.fold(Seq(split(0, st.getLen)))(_.toSeq.filter(holdsHit(sorted, _))
-            .map(g => split(g.start, g.length)))
+          groups.fold(Seq(split(0, st.getLen)))(_.toSeq
+            .filter(g => hits.forall(holdsHit(_, g))).map(g => split(g.start, g.length)))
         }
       }
-    if (splits.isEmpty) return Result(Array.empty, 0, built, job = false)
+    if (splits.isEmpty) return Result(Array.empty[T], 0, built, job = false)
 
     val partitions = FilePartition.getFilePartitions(session, splits,
       session.sessionState.conf.filesMaxPartitionBytes)
@@ -121,16 +172,8 @@ private[graft] object RowidFetch extends PredicateHelper {
       Nil, fs.fileFormat.fileConstantMetadataExtractors, new FileSourceOptions(fs.options))
     // The reader's rows: the data columns read, then every partition column.
     val rowAttrs = dataAttrs ++ partAttrs
-    val idOrdinal = rowAttrs.indexWhere(_.exprId == idAttr.exprId)
-    val rdd: RDD[InternalRow] = Bridge.mapPartitionsWithIndex(scan) { (i, rows) =>
-      val keep = condition.map { c => val p = Predicate.create(c, rowAttrs); p.initialize(i); p }
-      val project = UnsafeProjection.create(fetchList, rowAttrs)
-      project.initialize(i)
-      rows.filter { r =>
-        !r.isNullAt(idOrdinal) && java.util.Arrays.binarySearch(sorted, r.getLong(idOrdinal)) >= 0 &&
-          keep.forall(_.eval(r))
-      }.map(r => project(r).copy())
-    }
+    val rdd = Bridge.mapPartitionsWithIndex(scan)(
+      perPartition(rowAttrs, rowAttrs.indexWhere(_.exprId == idAttr.exprId)))
     val job = partitions.length > 1
     val rows = if (job) rdd.collect() else Bridge.collectInThread(rdd)
     Result(rows, splits.length, built, job)

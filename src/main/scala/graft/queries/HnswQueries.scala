@@ -42,7 +42,7 @@ object HnswQueries {
     IndexCatalog.exists(base, name) && {
       try {
         val meta = IndexCatalog.load(base, name)
-        meta.count > 0 && Hnsw.searchBatch(None, base, meta, Array(QueryVec), 1, 1, 0, 0.0).head.nonEmpty
+        meta.count > 0 && Hnsw.searchBatch(None, base, meta, Array(QueryVec), 1, 1, 0, 0.0).hits.head.nonEmpty
       } catch { case _: Exception => false }
     }
   }
@@ -182,8 +182,8 @@ object HnswQueries {
     "hnsw_filtered_topn" -> ((s, dir) => {
       ensureIndexes(s, dir)
       // Filtered O3 shape (`WHERE p ORDER BY dist LIMIT k`,
-      // where_clause_segfault.test): rewrites to a filtered index scan with
-      // over-fetch + escalation; exact SQL semantics, so oracle-checkable.
+      // where_clause_segfault.test): rewrites to a filtered index scan, one
+      // allow-listed search; exact SQL semantics, so oracle-checkable.
       Tables.load(s, dir, "embeddings")
         .where(col("label") % 3 === 0)
         .select(col("vec_id"), col("label"),

@@ -50,9 +50,9 @@ object CosineDistanceRewrite extends Rule[LogicalPlan] {
  * common real ANN query) rewrites to a *filtered* index scan: the reference
  * pulls table filters above the k-limited scan and accepts fewer-than-k
  * post-filter semantics (hnsw_optimize_scan.cpp:161-198,
- * where_clause_segfault.test); we instead over-fetch + post-filter +
- * escalate inside [[HnswIndexScan]]'s exec, preserving standard SQL
- * semantics. Mirroring the reference's refusal to rewrite under dynamic
+ * where_clause_segfault.test); [[HnswIndexScan]]'s exec instead searches
+ * the index once with the allow-list of rowids that pass, preserving
+ * standard SQL semantics. Mirroring the reference's refusal to rewrite under dynamic
  * filters (hnsw_optimize_scan.cpp:82-85), only deterministic, subquery-free
  * predicates over the scanned relation qualify.
  */
@@ -62,25 +62,20 @@ class TopNToIndexScan(session: SparkSession) extends Rule[LogicalPlan] {
     if (!session.conf.get(Hnsw.RewriteEnabledKey, "true").toBoolean) return plan
     plan.transformDown {
       case l @ Limit(IntegerLiteral(k),
-          s @ Sort(Seq(SortOrder(key, Ascending, _, _)), true, child, _))
-          if k > 0 && k < 2048 && notOptedOut(s) =>
+          Sort(Seq(SortOrder(key, Ascending, _, _)), true, child, _))
+          if k > 0 && k < 2048 =>
         rewriteChild(child, key, k, None).getOrElse(l)
       // PushProjectionThroughLimit moves post-sort projections between the
       // limit and the sort; the reference's MergeProjections handles the
       // same shape (hnsw_optimize_scan.cpp:211-249). The outer projection's
       // references bound what the scan must fetch (projection pushdown).
       case l @ Limit(IntegerLiteral(k),
-          Project(pl, s @ Sort(Seq(SortOrder(key, Ascending, _, _)), true, child, _)))
-          if k > 0 && k < 2048 && notOptedOut(s) =>
+          Project(pl, Sort(Seq(SortOrder(key, Ascending, _, _)), true, child, _)))
+          if k > 0 && k < 2048 =>
         rewriteChild(child, key, k, Some(AttributeSet(pl.flatMap(_.references))))
           .map(Project(pl, _)).getOrElse(l)
     }
   }
-
-  /** The filtered scan's brute-force fallback tags its Sort: rewriting that
-    * plan would send the escape hatch straight back into the index path. */
-  private def notOptedOut(s: Sort): Boolean =
-    s.getTagValue(graft.plans.HnswIndexScanExec.NoRewriteTag).isEmpty
 
   /** Try to rewrite; None restores the original shape. Peels the optimized
     * sub-plan `[Project(pl)] [Filter(p)] [Project(attrs)] relation`,

@@ -12,7 +12,6 @@ import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
@@ -49,9 +48,10 @@ object Bridge {
     * conf of a file scan) can take block locks. Afterwards, on failure
     * too, the completion listeners run (a file scan closes its readers),
     * block locks and task memory are released and the context is unset;
-    * a failure marks the task failed and is rethrown as is. Rows are
-    * copied: the iterator reuses its UnsafeRow. */
-  def collectInThread(rdd: RDD[InternalRow]): Array[InternalRow] = {
+    * a failure marks the task failed and is rethrown as is. The elements
+    * are kept as the iterator hands them out, so an RDD whose iterator
+    * reuses a row object must copy it. */
+  def collectInThread[T: ClassTag](rdd: RDD[T]): Array[T] = {
     require(rdd.getNumPartitions == 1,
       s"collectInThread needs one partition, got ${rdd.getNumPartitions}")
     val env = SparkEnv.get
@@ -64,7 +64,7 @@ object Bridge {
     env.blockManager.registerTask(id)
     TaskContext.setTaskContext(ctx)
     var failure: Throwable = null
-    try rdd.iterator(rdd.partitions(0), ctx).map(_.copy()).toArray
+    try rdd.iterator(rdd.partitions(0), ctx).toArray
     catch {
       case e: Throwable =>
         failure = e

@@ -49,10 +49,12 @@ object Dsir {
 
   /** Smoothed per-bucket log importance weights, driver-side (the table is
     * `buckets` doubles). α is add-α smoothing over the bucket grid, so
-    * never-seen buckets get a finite, raw-favoring weight. */
+    * never-seen buckets get a finite, raw-favoring weight; an α that is not
+    * a finite number > 0 is rejected. */
   def fitWeights(target: DataFrame, raw: DataFrame, textCol: String,
       n: Int = DefaultN, buckets: Int = DefaultBuckets,
       alpha: Double = 1.0): Array[Double] = {
+    checkAlpha(alpha)
     // ONE tag-unioned featurize+count pass (r17; was two serial
     // collect-per-corpus passes): both frames union into a single explode
     // + conditional-count aggregate, so the fit is one action — half the
@@ -85,6 +87,7 @@ object Dsir {
   def fitWeightsWithin(raw: DataFrame, targetFilter: Column, textCol: String,
       n: Int = DefaultN, buckets: Int = DefaultBuckets,
       alpha: Double = 1.0): Array[Double] = {
+    checkAlpha(alpha)
     val rows = raw.where(col(textCol).isNotNull)
       .select(targetFilter.as("_t"),
         explode(Bridge.column(graft.expressions.DsirBuckets(
@@ -97,6 +100,13 @@ object Dsir {
     val rc = rows.map(r => (r.getLong(0), r.getLong(1))).toMap
     weightsFromCounts(tc, rc, buckets, alpha)
   }
+
+  /** Add-α smoothing keeps every weight finite only for a finite α > 0:
+    * α < 0 can make a bucket's probability negative, α = 0 zero on an
+    * empty corpus, and both give NaN or infinite log-weights. */
+  private def checkAlpha(alpha: Double): Unit =
+    if (!(alpha > 0) || alpha.isInfinite) throw new IllegalArgumentException(
+      s"DSIR smoothing alpha must be a finite number > 0, got $alpha")
 
   private def weightsFromCounts(tc: Map[Long, Long], rc: Map[Long, Long],
       buckets: Int, alpha: Double): Array[Double] = {

@@ -95,6 +95,26 @@ class DsirSpec extends SparkSuite {
     assert(twoPass.toSeq == onePass.toSeq) // same doubles, bit-exact
   }
 
+  test("fitWeights and fitWeightsWithin reject a non-positive or non-finite alpha") {
+    val target = Seq("alpha beta gamma").toDF("text")
+    val raw = Seq("alpha beta gamma", "delta epsilon zeta").toDF("text")
+    val empty = Seq.empty[String].toDF("text")
+    for (alpha <- Seq(-1.0, -0.5, 0.0, Double.NaN, Double.PositiveInfinity)) {
+      val fits = Seq(
+        () => Dsir.fitWeights(target, raw, "text", buckets = 13, alpha = alpha),
+        () => Dsir.fitWeights(empty, raw, "text", buckets = 13, alpha = alpha),
+        () => Dsir.fitWeightsWithin(raw, col("text").startsWith("alpha"), "text",
+          buckets = 13, alpha = alpha))
+      fits.foreach { fit =>
+        val e = intercept[IllegalArgumentException](fit())
+        assert(e.getMessage == s"DSIR smoothing alpha must be a finite number > 0, got $alpha")
+      }
+    }
+    // A small positive alpha on an empty target still gives finite weights.
+    assert(Dsir.fitWeights(empty, raw, "text", buckets = 13, alpha = 1e-9).forall(!_.isNaN))
+    assert(Dsir.fitWeights(empty, raw, "text", buckets = 13, alpha = 1e-9).forall(!_.isInfinite))
+  }
+
   test("dsir_buckets SQL surface parses with and without literal args") {
     Seq((1L, "a b c")).toDF("id", "text").createOrReplaceTempView("dsir_t")
     val n3 = spark.sql("SELECT size(dsir_buckets(text)) AS n FROM dsir_t")

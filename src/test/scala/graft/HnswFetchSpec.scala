@@ -134,7 +134,8 @@ class HnswFetchSpec extends SparkSuite {
       assert(run(2)._2 == 0)
       spark.conf.set(key, "false")
       val (rowReader, builds3) = try run(1) finally spark.conf.unset(key)
-      assert(builds3 == 1 && rowReader == first)
+      // One more reader per read shape: the allow-list pass and the fetch.
+      assert(builds3 == 2 && rowReader == first)
       assert(run(1) == (first, 0L))
       assert(first == idDist(bruteForce(query(t, 1, Some(col("sel") < 500)))))
     } finally Hnsw.dropIndex(spark, "fetch_conf")

@@ -114,25 +114,23 @@ class HnswRewriteSpec extends SparkSuite {
     assert(r4.length == 3 && r4.forall(_.getLong(0) > 100))
   }
 
-  test("filtered TopN past the fetch budget falls back to distributed brute force") {
+  test("filtered TopN, starved predicate: one search answers as brute force does") {
     val qv = lit_vector(Array(1f, 2f, 3f))
     val d = array_distance(col("vec"), qv)
-    // Rows far from the query + a tiny fetch budget: the first over-fetch
-    // round finds no survivors and the escalation immediately exceeds the
-    // budget, so HnswIndexScanExec.bruteForce answers. Results must still
-    // match the un-rewritten plan exactly (and not loop back into the
-    // index path — NoRewriteTag guards the escape hatch).
+    // The 9 rows that pass sit in the grid's far corner, and 9 is under the
+    // candidate width (ef 64), so the segment is answered by exact
+    // distances over its allowed nodes: one search, one fetch.
     def q = grid.where(col("id") >= 720).select(col("id"), d.as("dd")).orderBy("dd").limit(5)
     spark.conf.set(Hnsw.RewriteEnabledKey, "false")
     val brute = try q.collect().toSeq finally spark.conf.set(Hnsw.RewriteEnabledKey, "true")
-    spark.conf.set(Hnsw.FilteredMaxFetchKey, "8")
-    try {
-      assert(planOf(q).contains("filtered="), planOf(q))
-      val fell = q.collect().toSeq
-      assert(fell.map(_.getDouble(1)) == brute.map(_.getDouble(1)))
-      assert(fell.forall(_.getLong(0) >= 720))
-      assert(fell.length == 5)
-    } finally spark.conf.unset(Hnsw.FilteredMaxFetchKey)
+    assert(planOf(q).contains("filtered="), planOf(q))
+    val starved = q
+    val rows = starved.collect().toSeq
+    assert(rows.map(_.getDouble(1)) == brute.map(_.getDouble(1)))
+    assert(rows.forall(_.getLong(0) >= 720))
+    assert(rows.length == 5)
+    val m = scanOf(starved).metrics
+    assert(Seq("rowsAllowed", "exactSearches", "fetchRounds").map(m(_).value) == Seq(9L, 1L, 1L))
   }
 
   test("SQL surface: ORDER BY array_distance LIMIT k uses the index") {
@@ -332,15 +330,17 @@ class HnswRewriteSpec extends SparkSuite {
     val (rows2, jobs2) = jobsOf(servedQuery(2).collect())
     assert(rows2.length == 10 && jobs2 == 0, s"$jobs2 jobs")
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles == 0)
-    // Filtered to 0.5%: the scan escalates, still without a job.
+    // Filtered to 0.5%: the allow-list pass and the fetch both read in the
+    // calling thread, so still no job, and there is one fetch round.
     val filtered = servedQuery(3, where = Some(5))
     val (frows, fjobs) = jobsOf(filtered.collect())
     val rounds = scanOf(filtered).metrics("fetchRounds").value
     assert(frows.length == 10 && frows.forall(_.getInt(1) < 5))
-    assert(rounds > 1 && fjobs == 0, s"$fjobs jobs, $rounds rounds")
+    assert(rounds == 1 && fjobs == 0, s"$fjobs jobs, $rounds rounds")
     // Two files: their row-group splits pack into one partition, so no job
     // either. Splits larger than maxPartitionBytes each get a partition, and
-    // then every round is one job. Both answer as the one-file table does.
+    // then every read is one job: the fetch, and a filtered query's
+    // allow-list pass. Both answer as the one-file table does.
     def idDist(rs: Array[org.apache.spark.sql.Row]) =
       rs.map(r => (r.getLong(0), r.getDouble(2))).toSeq
     def counts(q: DataFrame): (Seq[Long], Array[org.apache.spark.sql.Row]) = {
@@ -348,15 +348,15 @@ class HnswRewriteSpec extends SparkSuite {
       val m = scanOf(q).metrics
       (Seq(jobs.toLong, m("fetchRounds").value, m("fetchJobs").value), rs)
     }
-    val cases = Seq((1, None, rows, 1L), (3, Some(5), frows, rounds))
-    for ((seed, where, oneFile, oneRounds) <- cases) {
+    for ((seed, where, oneFile) <- Seq((1, None, rows), (3, Some(5), frows))) {
+      val passJobs = where.size.toLong
       val (packed, two) = counts(servedQuery(seed, where, servedTwoFiles))
-      assert(packed == Seq(0L, oneRounds, 0L), s"jobs, rounds, fetch jobs; one-file rounds $oneRounds")
+      assert(packed == Seq(0L, 1L, 0L), "jobs, rounds, fetch jobs")
       assert(idDist(two) == idDist(oneFile))
       spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
       try {
         val (split, twoSplit) = counts(servedQuery(seed, where, servedTwoFiles))
-        assert(split == Seq.fill(3)(oneRounds), s"jobs, rounds, fetch jobs; one-file rounds $oneRounds")
+        assert(split == Seq(passJobs + 1, 1L, 1L), s"jobs, rounds, fetch jobs; pass jobs $passJobs")
         assert(idDist(twoSplit) == idDist(oneFile))
       } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     }
@@ -395,38 +395,67 @@ class HnswRewriteSpec extends SparkSuite {
     assert(rows.map(_.getDouble(1)).toSeq == rows.map(_.getDouble(1)).sorted.toSeq)
   }
 
-  test("scan SQL metrics: fetch rounds, rows fetched, brute force, search time") {
+  test("scan SQL metrics: fetch rounds, rows fetched, allow-list, search time") {
     import org.apache.spark.sql.execution.ExplainMode
+    def formatted(df: DataFrame) = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     val plain = servedQuery(5)
     plain.collect()
     val m = scanOf(plain).metrics
     assert(m("fetchRounds").value == 1)
     assert(m("fetchJobs").value == 0)
     assert(m("rowsFetched").value == 10)
-    assert(m("bruteForce").value == 0)
-    val explained = plain.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    Seq("fetch rounds: 1, fetch jobs: 0", "rows fetched: 10", "brute-force fallback: 0",
-      "search time", "fetch time", "row groups read: 1").foreach(s =>
-      assert(explained.contains(s), explained))
+    assert(m("rowsAllowed").value == 0 && m("allowTime").value == 0)
+    assert(m("exactSearches").value == 0)
+    val explained = formatted(plain)
+    Seq("fetch rounds: 1, fetch jobs: 0", "rows fetched: 10", "rows allowed: 0",
+      "exact segment searches: 0", "allow-list time", "search time", "fetch time",
+      "row groups read: 1").foreach(s => assert(explained.contains(s), explained))
+    assert(!explained.contains("brute-force"), explained)
     // The second query of a shape reuses the first one's reader.
     val second = servedQuery(7)
     second.collect()
     val m2 = scanOf(second).metrics
     assert(m2("readerBuilds").value == 0 && m2("rowGroupsRead").value == 1)
     assert(m2("fetchTime").value > 0)
-    assert(second.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      .contains("reader builds: 0"))
-    val filtered = servedQuery(6, where = Some(5))
-    filtered.collect()
-    assert(scanOf(filtered).metrics("fetchRounds").value > 1)
-    assert(scanOf(filtered).metrics("fetchJobs").value == 0)
-    // Past the fetch budget the brute-force fallback answers.
-    spark.conf.set(Hnsw.FilteredMaxFetchKey, "8")
-    try {
-      val starved = servedQuery(6, where = Some(5))
-      assert(starved.collect().length == 10)
-      assert(scanOf(starved).metrics("bruteForce").value == 1)
-    } finally spark.conf.unset(Hnsw.FilteredMaxFetchKey)
+    assert(formatted(second).contains("reader builds: 0"))
+    // Every selectivity: one allow-list pass (rows allowed = the rows that
+    // pass, counted once) and one fetch round. 2% and 0.5% allow no more
+    // nodes than the candidate width (ef 64), so exact distances answer.
+    for ((t, exact) <- Seq((500, 0L), (100, 0L), (20, 1L), (5, 1L))) {
+      val filtered = servedQuery(6, where = Some(t))
+      assert(filtered.collect().length == 10)
+      val fm = scanOf(filtered).metrics
+      val at = s"sel < $t"
+      assert(fm("rowsAllowed").value == 2L * t, at)
+      assert(fm("fetchRounds").value == 1 && fm("fetchJobs").value == 0, at)
+      assert(fm("rowsFetched").value == 10 && fm("exactSearches").value == exact, at)
+      assert(fm("allowTime").value > 0, at)
+      assert(formatted(filtered).contains("fetch rounds: 1, fetch jobs: 0"), at)
+      assert(formatted(filtered).contains(s"rows allowed: ${2 * t}"), at)
+    }
+  }
+
+  test("filtered scan: fewer qualifying rows than k, none, and the allow-list bound") {
+    // Fewer rows pass than k: all of them come back, nearest first, as the
+    // plan without the index returns them.
+    val rnd = new scala.util.Random(9)
+    val qv = lit_vector(Array.fill(8)(rnd.nextGaussian().toFloat))
+    def few = served.where(col("sel") < 5 && col("id") < 1000)
+      .select(col("id"), array_distance(col("vec"), qv).as("d")).orderBy("d").limit(10)
+    spark.conf.set(Hnsw.RewriteEnabledKey, "false")
+    val want = try few.collect().toSeq finally spark.conf.set(Hnsw.RewriteEnabledKey, "true")
+    assert(want.nonEmpty && want.length < 10, s"${want.length} rows pass")
+    assert(planOf(few).contains("filtered="), planOf(few))
+    assert(few.collect().toSeq == want)
+    // No row passes: no rows, no search result, no fetch.
+    val none = servedQuery(9, where = Some(0))
+    assert(planOf(none).contains("filtered="), planOf(none))
+    assert(none.collect().isEmpty)
+    val m = scanOf(none).metrics
+    assert(Seq("rowsAllowed", "fetchRounds", "rowsFetched").map(m(_).value) == Seq(0L, 0L, 0L))
+    // The bound: 8 bytes per rowid, an eighth of the max heap.
+    assert(graft.plans.HnswIndexScanExec.maxAllowedIds(64L << 20) == (1 << 20))
+    assert(graft.plans.HnswIndexScanExec.maxAllowedIds(Long.MaxValue) < Int.MaxValue)
   }
 
   test("gate-shaped filtered TopN on real embeddings rides the index") {

@@ -196,48 +196,62 @@ class HnswRoutingSpec extends SparkSuite {
     assert(cos.routedSegments(Array(0.99f, 0.05f), 2, 1.5) == Seq("c0"))
   }
 
+  /** A `clusters`-segment vector-partitioned index over a parquet table
+    * `name` (id, vec, sel) at distinct hypercube corners: cluster 0 sits
+    * at all -1.5 and holds 4 rows, each other cluster `perCluster` (the
+    * per-segment cap, so every cluster is one segment). `sel` is 0..999,
+    * spread evenly over the rows, so `sel < t` keeps t / 1000 of them;
+    * `nulls` more rows have a NULL vector and `sel` 0. Catalog tombstones:
+    * one row of cluster 0 and a spread of others. A `reinsert` id is
+    * deleted and then inserted again with its table vector, so it lives in
+    * a delta segment while its old copy is tombstoned. Returns the rowids
+    * the index no longer holds. */
+  private def buildParity(name: String, clusters: Int, perCluster: Int = 40, nulls: Int = 0,
+      reinsert: Option[Long] = None): Set[Long] = {
+    val dim = 8
+    val rnd = new scala.util.Random(clusters)
+    val centers = Array.tabulate(clusters, dim)((c, j) => if (((c >> j) & 1) == 1) 1.5f else -1.5f)
+    val sizes = Array.tabulate(clusters)(c => if (c == 0) 4 else perCluster)
+    // The first `clusters` ids take one row per cluster: the k-means init
+    // (smallest ids) then starts with one point per true cluster.
+    val owners = (0 until clusters) ++ (0 until clusters).flatMap(c => Seq.fill(sizes(c) - 1)(c))
+    val vectors = owners.zipWithIndex.map { case (c, i) =>
+      (i.toLong, Array.tabulate(dim)(j => centers(c)(j) + (rnd.nextFloat() - 0.5f) * 0.1f))
+    }
+    val n = vectors.size
+    val rows = vectors.map { case (id, v) => (id, Option(v), (id * 1000 / n).toInt) } ++
+      (0 until nulls).map(i => ((n + i).toLong, Option.empty[Array[Float]], 0))
+    val dir = Files.createTempDirectory(s"graft-$name").toFile.getAbsolutePath
+    rows.toDF("id", "vec", "sel").write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    df.createOrReplaceTempView(name)
+    spark.conf.set(Hnsw.MaxVectorsPerPartitionKey, perCluster.toString)
+    spark.conf.set(Hnsw.BuildPartitionByKey, "vector")
+    val meta = try Hnsw.createIndex(spark, name, df, "vec", "id",
+      Map("ef_search" -> "1024"), overwrite = true)
+    finally {
+      spark.conf.unset(Hnsw.MaxVectorsPerPartitionKey)
+      spark.conf.unset(Hnsw.BuildPartitionByKey)
+    }
+    assert(meta.segments.size == clusters)
+    val deleted = (clusters.toLong +: vectors.map(_._1).filter(_ % 17 == 3)).toSet
+    Hnsw.delete(spark, name, (deleted ++ reinsert).toSeq)
+    reinsert.foreach(id => Hnsw.insert(spark, name, vectors.filter(_._1 == id).toDF("id", "vec")))
+    deleted -- reinsert
+  }
+
   test("path parity: SQL top-k, searchRaw and lateralTopK agree at every " +
       "(probeSegments, adaptiveProbeMargin), driver-local and job fan-out") {
     val k = 10
     val dim = 8
-    // Cluster 0 holds fewer than k rows, each other cluster 40 (= the
-    // per-segment cap, so every cluster is one segment). A query inside
-    // cluster 0 stops at its segment under adaptive routing (margin 1.05)
-    // but also searches a second one under fixed p = 2, so a path that
-    // drops the margin returns different rows.
+    // Cluster 0 holds fewer than k rows. A query inside cluster 0 stops at
+    // its segment under adaptive routing (margin 1.05) but also searches a
+    // second one under fixed p = 2, so a path that drops the margin
+    // returns different rows.
     val q = Array.tabulate(dim)(j => if (j % 2 == 0) -1.484375f else -1.515625f)
     val qSql = q.mkString("CAST(array(", ", ", ") AS ARRAY<FLOAT>)")
-    def build(name: String, clusters: Int): Set[Long] = {
-      val rnd = new scala.util.Random(clusters)
-      // Distinct hypercube corners; cluster 0 sits at all -1.5, next to q.
-      val centers = Array.tabulate(clusters, dim)((c, j) => if (((c >> j) & 1) == 1) 1.5f else -1.5f)
-      val sizes = Array.tabulate(clusters)(c => if (c == 0) 4 else 40)
-      // The first `clusters` ids take one row per cluster: the k-means
-      // init (smallest ids) then starts with one point per true cluster.
-      val owners = (0 until clusters) ++ (0 until clusters).flatMap(c => Seq.fill(sizes(c) - 1)(c))
-      val rows = owners.zipWithIndex.map { case (c, i) =>
-        (i.toLong, Array.tabulate(dim)(j => centers(c)(j) + (rnd.nextFloat() - 0.5f) * 0.1f))
-      }
-      val dir = Files.createTempDirectory(s"graft-$name").toFile.getAbsolutePath
-      rows.toDF("id", "vec").write.mode("overwrite").parquet(dir)
-      val df = spark.read.parquet(dir)
-      df.createOrReplaceTempView(name)
-      spark.conf.set(Hnsw.MaxVectorsPerPartitionKey, "40")
-      spark.conf.set(Hnsw.BuildPartitionByKey, "vector")
-      val meta = try Hnsw.createIndex(spark, name, df, "vec", "id",
-        Map("ef_search" -> "256"), overwrite = true)
-      finally {
-        spark.conf.unset(Hnsw.MaxVectorsPerPartitionKey)
-        spark.conf.unset(Hnsw.BuildPartitionByKey)
-      }
-      assert(meta.segments.size == clusters)
-      // Catalog tombstones: one row of cluster 0 and a spread of others.
-      val deleted = (clusters.toLong +: rows.map(_._1).filter(_ % 17 == 3)).toSet
-      Hnsw.delete(spark, name, deleted.toSeq)
-      deleted
-    }
     for ((name, clusters) <- Seq(("parity_local", 3), ("parity_jobs", 6))) {
-      val deleted = build(name, clusters)
+      val deleted = buildParity(name, clusters)
       val inner = spark.table(name)
       val outer = Seq((0L, q)).toDF("q_id", "q_vec")
       for ((probe, margin) <- Seq((0, 0.0), (2, 0.0), (2, 1.05))) {
@@ -265,6 +279,58 @@ class HnswRoutingSpec extends SparkSuite {
           spark.conf.unset(Hnsw.AdaptiveProbeMarginKey)
         }
       }
+    }
+  }
+
+  test("filtered path parity: SQL filtered top-k equals brute force at 50/10/2/0.5% " +
+      "and starved predicates, probe 0 and 2") {
+    val k = 10
+    // The query sits off cluster 0 towards cluster 1, so cluster 1's rows
+    // are nearer than any other cluster's: the two segments probe 2 routes
+    // to hold the true nearest rows, and a match at probe 2 checks that a
+    // routed search short of k allowed rows searches the other segments.
+    val q = Array.tabulate(8)(j => if (j == 0) -1.0f else -1.5f)
+    val qSql = q.mkString("CAST(array(", ", ", ") AS ARRAY<FLOAT>)")
+    def distSql(name: String, where: String) =
+      s"SELECT id, array_distance(vec, $qSql) AS d FROM $name WHERE $where ORDER BY d LIMIT $k"
+    for ((name, clusters) <- Seq(("filtered_local", 3), ("filtered_jobs", 6))) {
+      // Id clusters - 1 is the last (farthest) cluster's first row, and its
+      // sel is under 5: starved predicates reach its re-inserted copy in the
+      // delta segment, once.
+      val reinserted = clusters - 1L
+      val gone = buildParity(name, clusters, perCluster = 200, nulls = 5,
+        reinsert = Some(reinserted))
+      val nullIds = spark.table(name).where("vec IS NULL").collect().map(_.getLong(0)).toSet
+      assert(nullIds.size == 5)
+      val live = s"vec IS NOT NULL AND id NOT IN (${gone.mkString(", ")})"
+      for (probe <- Seq(0, 2); (where, qualifying) <- Seq(("sel < 500", k), ("sel < 100", k),
+          ("sel < 20", -1), ("sel < 5", -1), ("sel < 0", 0))) {
+        spark.conf.set(Hnsw.ProbeSegmentsKey, probe.toString)
+        val at = s"$name, probe=$probe, $where"
+        try {
+          spark.conf.set(Hnsw.RewriteEnabledKey, "false")
+          val brute = try spark.sql(distSql(name, s"$where AND $live")).collect()
+            .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          finally spark.conf.unset(Hnsw.RewriteEnabledKey)
+          val sqlDf = spark.sql(distSql(name, where))
+          val scan = sqlDf.queryExecution.executedPlan.collectFirst {
+            case e: graft.plans.HnswIndexScanExec => e
+          }.getOrElse(fail(s"$at: ${sqlDf.queryExecution.executedPlan}"))
+          val got = sqlDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          assert(got == brute, at)
+          assert(got.forall(h => !nullIds.contains(h._1) && !gone.contains(h._1)), at)
+          if (qualifying >= 0) assert(got.size == qualifying, at)
+          val m = scan.metrics
+          assert(m("fetchRounds").value == (if (got.isEmpty) 0 else 1), at)
+          if (got.isEmpty) assert(m("rowsFetched").value == 0 && m("rowsAllowed").value == 0, at)
+        } finally spark.conf.unset(Hnsw.ProbeSegmentsKey)
+      }
+      // The re-inserted row passes sel < 5 and comes back exactly once.
+      spark.conf.set(Hnsw.ProbeSegmentsKey, "2")
+      try {
+        val starved = spark.sql(distSql(name, "sel < 5")).collect().map(_.getLong(0)).toSeq
+        assert(starved.size < k && starved.count(_ == reinserted) == 1, s"$name: $starved")
+      } finally spark.conf.unset(Hnsw.ProbeSegmentsKey)
     }
   }
 }

@@ -174,7 +174,7 @@ class StreamingIndexSpec extends SparkSuite {
       // missing-file retry reloads the catalog entry and serves the search
       // from the new generation (contents are search-equivalent).
       val hits = Hnsw.searchBatch(None, base, staleMeta, Array(Array(1f, 1f)), 3,
-        ef = 1000000, probe = 0, margin = 0.0).head
+        ef = 1000000, probe = 0, margin = 0.0).hits.head
       assert(hits.map(_._1).toSet == Set(1L, 2L, 3L))
       assert(hits.head._1 == 3L)
     } finally query.stop()
