@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 /** Driver-run benchmark: times every gate query at SPARK_GRAFT_SF_DIR and
   * emits the full one-line JSON (written to BENCH_OUT, default
-  * /root/repo/BENCH_LOCAL.json, AND printed to stdout — sbt log noise made
+  * [[defaultOut]] in the working directory, AND printed to stdout — sbt log noise made
   * round 1's line unparseable, BENCH_r01 "parsed": null), followed by ONE
   * COMPACT final JSON line (total/errors/sf/n_queries + a pointer to the
   * full map). The compact line exists because the driver captures only a
@@ -51,6 +51,12 @@ object Bench {
       drain()
       Some(read())
     } catch { case _: java.util.concurrent.TimeoutException => None }
+
+  /** The full record's file when BENCH_OUT is unset:
+    * `BENCH_LOCAL_<scale-factor directory's name>_c<cores>.json`, so runs at
+    * another scale factor or core count do not overwrite it. */
+  def defaultOut(sfDir: String, cores: Int): String =
+    s"BENCH_LOCAL_${Paths.get(sfDir).getFileName}_c$cores.json"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -267,7 +273,7 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""counters":$counters,"errors":$nErr,"sf":"$sfDir"}"""
-    val out = sys.env.getOrElse("BENCH_OUT", "/root/repo/BENCH_LOCAL.json")
+    val out = sys.env.getOrElse("BENCH_OUT", defaultOut(sfDir, cpus.toInt))
     Files.writeString(Paths.get(out), json + "\n")
     spark.stop()
     // Full contract line first (complete per-query map for full-stdout

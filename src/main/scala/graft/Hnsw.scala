@@ -289,14 +289,18 @@ object Hnsw {
   }
 
   /** What [[searchBatch]] found: per query, the ascending top-k (rowid,
-    * index-metric distance), and how many segment searches were answered
-    * by exact distances over their allowed nodes. */
-  private[graft] final case class Found(hits: Array[Array[(Long, Double)]], exactSearches: Int)
+    * index-metric distance); how many segment searches were answered by
+    * exact distances over their allowed nodes; how many segments were
+    * searched; and how many of their graphs this call loaded from files
+    * (GraphCache misses, in tasks too) and the nanoseconds that took. */
+  private[graft] final case class Found(hits: Array[Array[(Long, Double)]], exactSearches: Int,
+      segments: Int, graphLoads: Int, loadNanos: Long)
 
   /** One segment's answer: its live allowed nodes, per routed query the
-    * hits, and how many of them exact distances gave. */
+    * hits, how many of them exact distances gave, and the nanoseconds its
+    * graph took to load (0 from the cache). */
   private final case class SegmentHits(allowed: Int, hits: Array[Array[(Long, Double)]],
-      exact: Int)
+      exact: Int, loadNanos: Long)
 
   /**
    * The index's one search: for each query (null → empty), the ascending
@@ -343,7 +347,7 @@ object Hnsw {
         val work = meta.segments.flatMap(s => routed.get(s).map(qs =>
           (s, qs.result(), tombs.getOrElse(s, Array.emptyLongArray))))
         val found = perSegment(spark, work) { case (s, qs, deleted) =>
-          val g = GraphCache.get(new File(dirPath, s))
+          val (g, loadNanos) = GraphCache.load(new File(dirPath, s))
           val allowed = g.allowedNodes(allowIds, deleted)
           val n = if (allowed == null) g.size else allowed.cardinality
           var exact = 0
@@ -353,7 +357,7 @@ object Hnsw {
             if (traversed != null && traversed.length >= math.min(k, n)) traversed
             else { exact += 1; g.exact(queries(i), k, allowed) }
           }
-          SegmentHits(n, hits, exact)
+          SegmentHits(n, hits, exact, loadNanos)
         }
         work.iterator.zip(found).map { case ((s, qs, _), h) => s -> (qs, h) }.toMap
       }
@@ -378,8 +382,9 @@ object Hnsw {
           buf.clear(); buf ++= best
         }
       }
-      Found(acc.map(_.sortBy(_._2).take(k).toArray),
-        (first.valuesIterator ++ widened.valuesIterator).map(_._2.exact).sum)
+      val searched = (first.valuesIterator ++ widened.valuesIterator).map(_._2).toSeq
+      Found(acc.map(_.sortBy(_._2).take(k).toArray), searched.map(_.exact).sum,
+        searched.size, searched.count(_.loadNanos > 0), searched.map(_.loadNanos).sum)
     }
 
   /** Top-k as a DataFrame (id, distance) — the `hnsw_index_scan` surface. */

@@ -298,24 +298,29 @@ object GraphCache {
   private val missCount = new java.util.concurrent.atomic.AtomicLong
   private val loadNanos = new java.util.concurrent.atomic.AtomicLong
 
-  def get(file: File): HnswGraph = {
+  def get(file: File): HnswGraph = load(file)._1
+
+  /** The graph of `file` and the nanoseconds this call spent loading it
+    * from the file: 0 when the cache served it. */
+  def load(file: File): (HnswGraph, Long) = {
     val k = Key(file.getAbsolutePath, file.lastModified(), file.length())
     cache.synchronized {
       val hit = cache.get(k)
-      if (hit != null) { hitCount.incrementAndGet(); return hit.graph }
+      if (hit != null) { hitCount.incrementAndGet(); return (hit.graph, 0L) }
     }
     // Load outside the lock; duplicate loads are benign (immutable files).
     missCount.incrementAndGet()
     val t0 = System.nanoTime()
     val g = IndexCatalog.readGraph(file)
-    loadNanos.addAndGet(System.nanoTime() - t0)
+    val nanos = math.max(1L, System.nanoTime() - t0)
+    loadNanos.addAndGet(nanos)
     val e = Entry(g, g.approxMemoryBytes)
     cache.synchronized {
       val prev = cache.put(k, e)
       totalBytes += e.bytes - (if (prev == null) 0L else prev.bytes)
       evictLocked()
     }
-    g
+    (g, nanos)
   }
 
   /** (hits, misses, total load millis) since JVM start. */

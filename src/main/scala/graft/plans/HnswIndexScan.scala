@@ -66,12 +66,14 @@ case class HnswIndexScan(
 /**
  * Physical execution, started from `executeCollect` on the driver:
  *   1. Filtered scans only: the allow-list pass ([[RowidFetch.allowList]])
- *      reads the rowid and `condition`'s columns, with the condition pushed
- *      to the file reader, and collects the rowids that pass, sorted. With
- *      none, the scan returns no rows without a search or a fetch. The list
- *      costs 8 bytes per qualifying row on the driver; past
- *      [[HnswIndexScanExec.maxAllowedIds]] (an eighth of the driver's max
- *      heap) the query fails and names the rewrite's kill switch.
+ *      reads the rowid and `condition`'s columns from every row group and
+ *      collects the rowids that pass, sorted. With none, the scan returns no
+ *      rows without a search or a fetch. The list costs 8 bytes per
+ *      qualifying row on the driver; past [[HnswIndexScanExec.maxAllowedIds]]
+ *      (an eighth of the driver's max heap) the query fails and names the
+ *      rewrite's kill switch. Its row groups come from the driver's
+ *      row-group cache, as the fetch's do (step 3): the cache key leaves the
+ *      condition out, so a new predicate, or a new literal, reads no file.
  *   2. One ANN search through the index's one search path,
  *      [[Hnsw.searchBatch]], started from the driver like the reference's
  *      InitGlobal search (hnsw_index.cpp:315-341): the query is routed by
@@ -83,24 +85,33 @@ case class HnswIndexScan(
  *      returns k rows whenever k indexed rows qualify (the predicate-agnostic
  *      filtered HNSW search of ACORN, Patel et al., SIGMOD 2024).
  *   3. Fetch the hits' rows by rowid ([[RowidFetch]]), the Spark analogue
- *      of the reference's fetch-by-rowid with projection pushdown
- *      (hnsw_index_scan.cpp:95-121): no query is planned. The relation's
- *      file reader for this fetch shape (columns, condition, session
- *      confs) is built once and cached; each fetch reads only the parquet
- *      row groups whose id statistics can hold a hit, and applies rowid
- *      membership, `condition` and `projectList` (plus the rowid when the
- *      projection drops it) to their rows. Splits that pack into one
- *      partition are read in the calling thread, like the reference's
- *      in-process fetch; more run as one job.
+ *      of the reference's fetch-by-rowid from in-memory column segments with
+ *      projection pushdown (hnsw_index_scan.cpp:95-121): no query is
+ *      planned. Only the parquet row groups whose id statistics can hold a
+ *      hit are read, and rowid membership, `condition` and `projectList`
+ *      (plus the rowid when the projection drops it) apply to their rows.
+ *      When the row groups pack into one partition, each is taken from the
+ *      driver's row-group cache: its full decoded rows, keyed by the file's
+ *      path, length and mtime, the row group's start, the read columns, the
+ *      session's SQL confs and the SparkContext, within a sixteenth of the
+ *      driver's max heap (LRU). A miss is read once in the calling thread
+ *      through a reader that pushes no filters — parquet's column-index and
+ *      dictionary filtering would drop rows another condition needs — and a
+ *      row group over a quarter of the budget is streamed, never kept. More
+ *      than one partition is read as one job through the cached reader with
+ *      the condition pushed.
  *   4. Put the fetched rows in ANN rank order and drop a rowid the
  *      projection did not ask for.
  *
  * [[HnswStrategy]] folds the projection above the logical scan into this
  * node, so a top-k query's plan is this node alone. `collect` runs no job
  * unless a read's splits exceed `spark.sql.files.maxPartitionBytes`, and
- * then one per read (the "fetch jobs" metric counts the fetch's). Under
- * another operator (an aggregate, a join) the ≤ k rows are handed on as a
- * one-partition RDD.
+ * then one per read (the "fetch jobs" metric counts the fetch's); a warm
+ * query reads no file. "row groups read" and "row groups cached" count the
+ * pass's and the fetch's row groups decoded from files and served from
+ * memory; "segments searched", "graph loads" and "graph load time" the
+ * search's segments and its graph-cache misses. Under another operator (an
+ * aggregate, a join) the ≤ k rows are handed on as a one-partition RDD.
  */
 case class HnswIndexScanExec(
     projectList: Seq[NamedExpression],
@@ -129,7 +140,11 @@ case class HnswIndexScanExec(
     "searchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "search time"),
     "fetchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "fetch time"),
     "rowGroupsRead" -> SQLMetrics.createMetric(sparkContext, "row groups read"),
-    "readerBuilds" -> SQLMetrics.createMetric(sparkContext, "reader builds"))
+    "rowGroupsCached" -> SQLMetrics.createMetric(sparkContext, "row groups cached"),
+    "readerBuilds" -> SQLMetrics.createMetric(sparkContext, "reader builds"),
+    "segmentsSearched" -> SQLMetrics.createMetric(sparkContext, "segments searched"),
+    "graphLoads" -> SQLMetrics.createMetric(sparkContext, "graph loads"),
+    "graphLoadTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "graph load time"))
 
   @transient private lazy val idAttr: Attribute =
     relation.output.find(_.name == meta.idColumn).getOrElse(
@@ -175,7 +190,7 @@ case class HnswIndexScanExec(
       val max = HnswIndexScanExec.maxAllowedIds(Runtime.getRuntime.maxMemory)
       val pass = RowidFetch.allowList(session, relation, idAttr, c, max)
       metrics("allowTime") += System.nanoTime() - t0
-      if (pass.readerBuilt) metrics("readerBuilds") += 1
+      count(pass)
       if (pass.rows.length > max) throw new IllegalStateException(
         s"filtered top-k on index '${meta.name}': more than $max rows pass ${c.sql}, " +
           "over the allow-list's bound of an eighth of the driver's max heap; raise " +
@@ -190,19 +205,28 @@ case class HnswIndexScanExec(
       Hnsw.probeSegments(session), Hnsw.adaptiveProbeMargin(session), allow)
     metrics("searchTime") += System.nanoTime() - t0
     metrics("exactSearches") += found.exactSearches
+    metrics("segmentsSearched") += found.segments
+    metrics("graphLoads") += found.graphLoads
+    metrics("graphLoadTime") += found.loadNanos
     val hits = found.hits.head
     if (hits.isEmpty) return Array.empty
     val t1 = System.nanoTime()
     val f = RowidFetch.fetch(session, relation, idAttr, hits.map(_._1), condition, fetchList)
     metrics("fetchTime") += System.nanoTime() - t1
-    metrics("rowGroupsRead") += f.splits
-    if (f.readerBuilt) metrics("readerBuilds") += 1
+    count(f)
     if (f.job) metrics("fetchJobs") += 1
     metrics("fetchRounds") += 1
     metrics("rowsFetched") += f.rows.length
     val rankOrdinal = if (idOrdinal >= 0) idOrdinal else projectList.length
     val rank = hits.iterator.zipWithIndex.map { case ((id, _), i) => (id, i) }.toMap
     f.rows.sortBy(r => rank.getOrElse(r.getLong(rankOrdinal), Int.MaxValue))
+  }
+
+  /** A read's row groups, from files and from memory, and reader build. */
+  private def count(read: RowidFetch.Result[_]): Unit = {
+    metrics("rowGroupsRead") += read.splitsRead
+    metrics("rowGroupsCached") += read.splitsCached
+    if (read.readerBuilt) metrics("readerBuilds") += 1
   }
 
   override def simpleString(maxFields: Int): String =
@@ -212,10 +236,11 @@ case class HnswIndexScanExec(
   /** `explain("formatted")`: output, fetch columns and the metrics of the
     * runs so far. */
   override def verboseStringWithOperatorId(): String = {
-    val ms = Seq("fetchRounds", "fetchJobs", "rowGroupsRead", "readerBuilds", "rowsFetched",
-      "rowsAllowed", "exactSearches").map(metrics)
+    val ms = Seq("fetchRounds", "fetchJobs", "rowGroupsRead", "rowGroupsCached",
+      "readerBuilds", "rowsFetched", "rowsAllowed", "exactSearches", "segmentsSearched",
+      "graphLoads").map(metrics)
       .map(m => s"${m.name.getOrElse("")}: ${m.value}") ++
-      Seq("allowTime", "searchTime", "fetchTime").map(metrics)
+      Seq("allowTime", "searchTime", "graphLoadTime", "fetchTime").map(metrics)
         .map(m => f"${m.name.getOrElse("")}: ${m.value / 1e6}%.3f ms")
     s"""
        |$formattedNodeName

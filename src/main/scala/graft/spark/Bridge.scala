@@ -38,9 +38,9 @@ object Bridge {
     * concurrent runs, which share the memory and block managers. */
   private val inThreadAttemptIds = new AtomicLong(Long.MinValue)
 
-  /** Compute a one-partition row RDD in the calling thread: the one task a
-    * job over it would run, without the scheduler (no job, stage, task
-    * launch or result serialization). The task runs in a context of its
+  /** Compute partition `partition` of an RDD in the calling thread: the
+    * task a job over it would run, without the scheduler (no job, stage,
+    * task launch or result serialization). The task runs in a context of its
     * own, as an executor would set it up (Task.run): a real
     * TaskMemoryManager, a copy of the caller's local properties (SQL confs
     * read through SQLConf.get see what a task sees), and its attempt id
@@ -51,20 +51,20 @@ object Bridge {
     * a failure marks the task failed and is rethrown as is. The elements
     * are kept as the iterator hands them out, so an RDD whose iterator
     * reuses a row object must copy it. */
-  def collectInThread[T: ClassTag](rdd: RDD[T]): Array[T] = {
-    require(rdd.getNumPartitions == 1,
-      s"collectInThread needs one partition, got ${rdd.getNumPartitions}")
+  def collectInThread[T: ClassTag](rdd: RDD[T], partition: Int = 0): Array[T] = {
+    val n = rdd.getNumPartitions
+    require(partition >= 0 && partition < n, s"no partition $partition of $n")
     val env = SparkEnv.get
     val id = inThreadAttemptIds.getAndIncrement()
     val memory = new TaskMemoryManager(env.memoryManager, id)
-    val ctx = new TaskContextImpl(stageId = 0, stageAttemptNumber = 0, partitionId = 0,
-      taskAttemptId = id, attemptNumber = 0, numPartitions = 1, taskMemoryManager = memory,
+    val ctx = new TaskContextImpl(stageId = 0, stageAttemptNumber = 0, partitionId = partition,
+      taskAttemptId = id, attemptNumber = 0, numPartitions = n, taskMemoryManager = memory,
       localProperties = Utils.cloneProperties(rdd.sparkContext.getLocalProperties),
       metricsSystem = env.metricsSystem, taskMetrics = TaskMetrics.empty)
     env.blockManager.registerTask(id)
     TaskContext.setTaskContext(ctx)
     var failure: Throwable = null
-    try rdd.iterator(rdd.partitions(0), ctx).toArray
+    try rdd.iterator(rdd.partitions(partition), ctx).toArray
     catch {
       case e: Throwable =>
         failure = e

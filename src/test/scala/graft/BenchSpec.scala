@@ -17,4 +17,9 @@ class BenchSpec extends AnyFunSuite {
     intercept[IllegalStateException](
       Bench.counterSnap(() => throw new IllegalStateException("x"), () => (0L, 0L, 0L)))
   }
+
+  test("defaultOut: one record file per scale factor and core count") {
+    assert(Bench.defaultOut("/data/tpch/sf0.1", 32) == "BENCH_LOCAL_sf0.1_c32.json")
+    assert(Bench.defaultOut("data/sf1/", 8) == "BENCH_LOCAL_sf1_c8.json")
+  }
 }

@@ -3,16 +3,20 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.{Callable, Executors, TimeUnit}
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{array_distance, lit_vector}
+import graft.plans.{RowGroupCache, RowidFetch}
 
-/** The SQL top-k scan's rowid fetch: a cached file reader over the row
-  * groups that can hold a hit. Every answer equals the brute-force plan's,
-  * across row groups, partitions, a rewritten table, a conf change,
-  * concurrent queries and a new SparkContext (the last test: it stops the
-  * shared session, and later suites get a new one). */
+/** The SQL top-k scan's rowid fetch: the row groups that can hold a hit,
+  * read through a cached file reader or served from the driver's row-group
+  * cache. Every answer equals the brute-force plan's, across row groups,
+  * partitions, a rewritten or replaced table, a conf change, row groups over
+  * the cache's entry cap, concurrent queries and a new SparkContext (the
+  * last test: it stops the shared session, and later suites get a new one). */
 class HnswFetchSpec extends SparkSuite {
 
   private val base: String = {
@@ -31,12 +35,13 @@ class HnswFetchSpec extends SparkSuite {
       .toDF("id", "vec", "sel", "part").coalesce(1).sortWithinPartitions("id")
   }
 
-  /** `rows` written to a new directory and indexed as `name`; the index's
-    * ef is large enough that its search is exact. */
+  /** `rows` (with `extend` applied) written to a new directory and indexed
+    * as `name`; the index's ef is large enough that its search is exact. */
   private def indexed(name: String,
-      write: DataFrameWriter[Row] => DataFrameWriter[Row] = identity): (String, DataFrame) = {
+      write: DataFrameWriter[Row] => DataFrameWriter[Row] = identity,
+      extend: DataFrame => DataFrame = identity): (String, DataFrame) = {
     val dir = Files.createTempDirectory(s"graft-$name").toFile.getAbsolutePath
-    write(rows().write.mode("overwrite")).parquet(dir)
+    write(extend(rows()).write.mode("overwrite")).parquet(dir)
     val t = spark.read.parquet(dir)
     Hnsw.createIndex(spark, name, t, "vec", "id", Map("ef_search" -> "100000"), overwrite = true)
     (dir, t)
@@ -58,6 +63,17 @@ class HnswFetchSpec extends SparkSuite {
 
   private def idDist(rs: Array[Row]): Seq[(Long, Double)] =
     rs.map(r => (r.getLong(0), r.getDouble(r.fieldIndex("d")))).toSeq
+
+  private def metric(q: DataFrame, name: String): Long = scanOf(q).metrics(name).value
+
+  /** Runs `body` with a fresh row-group cache of `budget` bytes in place of
+    * the driver's. */
+  private def withCache[T](budget: Long)(body: RowGroupCache => T): T = {
+    val saved = RowidFetch.rowGroupCache
+    val cache = new RowGroupCache(budget)
+    RowidFetch.rowGroupCache = cache
+    try body(cache) finally RowidFetch.rowGroupCache = saved
+  }
 
   /** The query's rows from the ordinary plan, without the index. */
   private def bruteForce(q: => DataFrame): Array[Row] = {
@@ -83,8 +99,13 @@ class HnswFetchSpec extends SparkSuite {
       for (seed <- 1 to 3) {
         val q = query(t, seed)
         val got = q.collect()
-        val read = scanOf(q).metrics("rowGroupsRead").value
+        val read = metric(q, "rowGroupsRead") + metric(q, "rowGroupsCached")
         assert(read <= 10 && read < groups, s"$read of $groups row groups read")
+        // The same query again: every row group it reads comes from memory.
+        val again = query(t, seed)
+        assert(idDist(again.collect()) == idDist(got))
+        assert(metric(again, "rowGroupsRead") == 0 && metric(again, "rowGroupsCached") == read)
+        assert(metric(again, "readerBuilds") == 0)
         assert(idDist(got) == idDist(bruteForce(query(t, seed))))
       }
     } finally Hnsw.dropIndex(spark, "fetch_groups")
@@ -121,6 +142,122 @@ class HnswFetchSpec extends SparkSuite {
     } finally Hnsw.dropIndex(spark, "fetch_rewrite")
   }
 
+  test("a file replaced in place: a new length or mtime returns the file's new rows") {
+    val (dir, t) = indexed("fetch_replace")
+    try {
+      val file = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val before = query(t, 1).collect()
+      assert(metric(query(t, 1).tap(_.collect()), "rowGroupsCached") == 1)
+      // The same bytes under a new mtime: a new key, so read from the file.
+      assert(file.setLastModified(file.lastModified() + 10000))
+      val touched = query(spark.read.parquet(dir), 1)
+      assert(idDist(touched.collect()) == idDist(before))
+      assert(metric(touched, "rowGroupsRead") == 1 && metric(touched, "rowGroupsCached") == 0)
+      // New rows copied over the same name: a new length (or mtime).
+      val next = Files.createTempDirectory("graft-replace-next").toFile
+      rows(selOffset = 5000).write.mode("overwrite").parquet(next.getAbsolutePath)
+      val replacement = next.listFiles().filter(_.getName.endsWith(".parquet")).head
+      // The file and its checksum, which the local file system checks.
+      def crc(f: java.io.File) = new java.io.File(f.getParentFile, s".${f.getName}.crc").toPath
+      for ((from, to) <- Seq((replacement.toPath, file.toPath), (crc(replacement), crc(file))))
+        Files.copy(from, to, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(file.setLastModified(file.lastModified() + 20000))
+      val t2 = spark.read.parquet(dir)
+      val after = query(t2, 1).collect()
+      assert(idDist(after) == idDist(before))
+      assert(after.map(_.getInt(1)).toSeq == before.map(_.getInt(1) + 5000).toSeq)
+      assert(idDist(after) == idDist(bruteForce(query(t2, 1))))
+      val cond = col("sel") < 5500
+      val filtered = query(t2, 2, Some(cond)).collect()
+      assert(filtered.forall(r => r.getInt(1) >= 5000 && r.getInt(1) < 5500))
+      assert(idDist(filtered) == idDist(bruteForce(query(t2, 2, Some(cond)))))
+    } finally Hnsw.dropIndex(spark, "fetch_replace")
+  }
+
+  test("row groups over the entry cap are streamed: brute-force rows, no bytes cached") {
+    // A constant 1,000-character string: dictionary-encoded, its footer size
+    // is small, but it decodes to about 2 MB.
+    val (_, t) = indexed("fetch_cap", extend = _.withColumn("pad", repeat(lit("x"), 1000)))
+    try {
+      // The pass reads `pad` too, so both reads are over the cap.
+      val cond = col("sel") < 200 && col("pad") =!= "y"
+      val want = Seq(None, Some(cond)).map(c => idDist(bruteForce(query(t, 3, c))))
+      // Budget 64 KB: the footer puts the row group's columns over the
+      // 16 KB cap, so it is never decoded into the cache. Budget 1 MB: under
+      // the 256 KB cap by the footer, over it decoded.
+      for (budget <- Seq(64L << 10, 1L << 20)) withCache(budget) { cache =>
+        for (round <- 1 to 2; (c, w) <- Seq(None, Some(cond)).zip(want)) {
+          val q = query(t, 3, c, extra = Seq("pad"))
+          val got = q.collect()
+          val at = s"budget $budget, round $round, $c"
+          assert(idDist(got) == w && got.forall(_.getString(2).length == 1000), at)
+          assert(metric(q, "rowGroupsRead") >= 1 && metric(q, "rowGroupsCached") == 0, at)
+          assert(cache.bytes == 0, at)
+        }
+      }
+    } finally Hnsw.dropIndex(spark, "fetch_cap")
+  }
+
+  test("the cache's bytes stay within its budget under concurrent fills; " +
+      "a duplicate fill counts once") {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.StructType
+    withCache(1000) { cache =>
+      def key(i: Int) = RowGroupCache.Key(RowidFetch.ReaderKey(spark.sparkContext,
+        classOf[ParquetFileFormat], new StructType(), new StructType(), Map.empty, Seq("id"),
+        None, Map.empty), RowidFetch.FileKey("f", 1L, 1L), i.toLong)
+      val rows = Array.empty[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
+      // Eight threads fill the same key at once: it is counted once.
+      val pool = Executors.newFixedThreadPool(8)
+      try {
+        val start = new java.util.concurrent.CountDownLatch(1)
+        (1 to 8).map(_ => pool.submit(new Runnable {
+          override def run(): Unit = { start.await(); cache.put(key(0), rows, 200) }
+        })).tap(_ => start.countDown()).foreach(_.get(1, TimeUnit.MINUTES))
+        assert(cache.bytes == 200)
+        // Then 2,000 fills of 100 keys, each 1 to 250 bytes (the cap), while
+        // a reader samples the total.
+        @volatile var done = false
+        var most = 0L
+        val sampler = new Thread(() => while (!done) most = math.max(most, cache.bytes))
+        sampler.start()
+        (0 until 8).map(w => pool.submit(new Runnable {
+          override def run(): Unit = {
+            val rnd = new scala.util.Random(w)
+            (1 to 250).foreach(_ => cache.put(key(rnd.nextInt(100)), rows, 1 + rnd.nextInt(250)))
+          }
+        })).foreach(_.get(1, TimeUnit.MINUTES))
+        done = true
+        sampler.join()
+        assert(most <= cache.budget && cache.bytes <= cache.budget, s"$most bytes held")
+      } finally pool.shutdown()
+    }
+    // End to end: a budget of a few row groups, 4 threads over a file of
+    // many, unfiltered and filtered: every answer as brute force gives it.
+    val (_, t) = indexed("fetch_fills", _.option("parquet.block.size", "4096"))
+    try {
+      val cond = col("sel") < 300
+      val seeds = 1 to 12
+      val want = seeds.map(s => s -> (idDist(bruteForce(query(t, s))),
+        idDist(bruteForce(query(t, s, Some(cond)))))).toMap
+      withCache(64L << 10) { cache =>
+        val pool = Executors.newFixedThreadPool(4)
+        try {
+          seeds.map(s => pool.submit(new Callable[(Int, Seq[(Long, Double)], Seq[(Long, Double)])] {
+            override def call() = {
+              val got = (s, idDist(query(t, s).collect()), idDist(query(t, s, Some(cond)).collect()))
+              assert(cache.bytes <= cache.budget)
+              got
+            }
+          })).map(_.get(5, TimeUnit.MINUTES)).foreach { case (s, plain, filtered) =>
+            assert((plain, filtered) == want(s), s"seed $s")
+          }
+        } finally pool.shutdown()
+        assert(cache.bytes > 0 && cache.bytes <= cache.budget)
+      }
+    } finally Hnsw.dropIndex(spark, "fetch_fills")
+  }
+
   test("a SQL conf change builds one more reader and returns the same rows") {
     val (_, t) = indexed("fetch_conf")
     val key = "spark.sql.parquet.enableVectorizedReader"
@@ -146,12 +283,21 @@ class HnswFetchSpec extends SparkSuite {
     try {
       val seeds = 1 to 24
       val want = seeds.map(s => s -> idDist(bruteForce(query(t, s)))).toMap
+      RowidFetch.rowGroupCache.clear()
       val pool = Executors.newFixedThreadPool(4)
       try {
-        val got = seeds.map(s => pool.submit(new Callable[(Int, Seq[(Long, Double)])] {
-          override def call() = (s, idDist(query(t, s).collect()))
-        })).map(_.get(5, TimeUnit.MINUTES))
-        got.foreach { case (s, rs) => assert(rs == want(s), s"seed $s") }
+        for (round <- Seq("cold", "warm")) {
+          val got = seeds.map(s => pool.submit(new Callable[(Int, Seq[(Long, Double)], Long)] {
+            override def call() = {
+              val q = query(t, s)
+              (s, idDist(q.collect()), metric(q, "rowGroupsRead"))
+            }
+          })).map(_.get(5, TimeUnit.MINUTES))
+          got.foreach { case (s, rs, read) =>
+            assert(rs == want(s), s"$round, seed $s")
+            if (round == "warm") assert(read == 0, s"$round, seed $s")
+          }
+        }
       } finally pool.shutdown()
     } finally Hnsw.dropIndex(spark, "fetch_threads")
   }
@@ -171,14 +317,20 @@ class HnswFetchSpec extends SparkSuite {
   test("a query after spark.stop() and a new session builds a new reader, same rows") {
     val (dir, t) = indexed("fetch_stop")
     val before = idDist(query(t, 1).collect())
+    val old = spark.sparkContext
+    assert(RowidFetch.rowGroupCache.contexts.contains(old))
     spark.stop()
     val s2 = SparkSuite.spark
-    assert(s2.sparkContext ne spark.sparkContext)
+    assert(s2.sparkContext ne old)
     s2.conf.set(Hnsw.LocationKey, base)
     try {
+      // The stopped context's cached row group is not served: the new one
+      // reads the file, and its fill drops the stopped context's entries.
       val q = query(s2.read.parquet(dir), 1)
       assert(idDist(q.collect()) == before)
-      assert(scanOf(q).metrics("readerBuilds").value == 1)
+      assert(metric(q, "readerBuilds") == 1)
+      assert(metric(q, "rowGroupsRead") == 1 && metric(q, "rowGroupsCached") == 0)
+      assert(RowidFetch.rowGroupCache.contexts == Set(s2.sparkContext))
     } finally Hnsw.dropIndex(s2, "fetch_stop")
   }
 }

@@ -237,6 +237,33 @@ class HnswRewriteSpec extends SparkSuite {
     } finally spark.conf.unset(Hnsw.MaxVectorsPerPartitionKey)
   }
 
+  test("graph-cache metrics: segments searched, graph loads and load time on the scan") {
+    import graft.index.{GraphCache, IndexCatalog}
+    val dir = Files.createTempDirectory("graft-loads").toFile.getAbsolutePath
+    grid.write.mode("overwrite").parquet(dir)
+    val t = spark.read.parquet(dir)
+    spark.conf.set(Hnsw.MaxVectorsPerPartitionKey, "100") // 8 segments
+    try Hnsw.createIndex(spark, "rw_loads", t, "vec", "id", overwrite = true)
+    finally spark.conf.unset(Hnsw.MaxVectorsPerPartitionKey)
+    try {
+      def run(): Map[String, Long] = {
+        val q = t.select(col("id"), array_distance(col("vec"), lit_vector(Array(1f, 2f, 3f))).as("d"))
+          .orderBy("d").limit(3)
+        assert(q.collect().map(_.getDouble(1)).toSeq == Seq(0.0, 1.0, 1.0))
+        scanOf(q).metrics.map { case (k, m) => k -> m.value }
+      }
+      // More segments than the driver searches itself: the loads happen in
+      // tasks and are counted there too.
+      GraphCache.invalidate(IndexCatalog.indexDir(base, "rw_loads").getAbsolutePath)
+      val cold = run()
+      assert(cold("segmentsSearched") == 8 && cold("graphLoads") == 8, cold)
+      assert(cold("graphLoadTime") > 0, cold)
+      val warm = run()
+      assert(warm("segmentsSearched") == 8 && warm("graphLoads") == 0, warm)
+      assert(warm("graphLoadTime") == 0, warm)
+    } finally Hnsw.dropIndex(spark, "rw_loads")
+  }
+
   test("fetch projection pushdown: scan outputs only consumed columns (hnsw_index_scan.cpp:95-121)") {
     val qv = lit_vector(Array(1f, 2f, 3f))
     // Outer projection keeps only `id`: the sort key's vector column is
@@ -398,6 +425,8 @@ class HnswRewriteSpec extends SparkSuite {
   test("scan SQL metrics: fetch rounds, rows fetched, allow-list, search time") {
     import org.apache.spark.sql.execution.ExplainMode
     def formatted(df: DataFrame) = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    // Cold: the one row group is decoded from the file.
+    graft.plans.RowidFetch.rowGroupCache.clear()
     val plain = servedQuery(5)
     plain.collect()
     val m = scanOf(plain).metrics
@@ -409,23 +438,32 @@ class HnswRewriteSpec extends SparkSuite {
     val explained = formatted(plain)
     Seq("fetch rounds: 1, fetch jobs: 0", "rows fetched: 10", "rows allowed: 0",
       "exact segment searches: 0", "allow-list time", "search time", "fetch time",
-      "row groups read: 1").foreach(s => assert(explained.contains(s), explained))
+      "row groups read: 1, row groups cached: 0").foreach(s => assert(explained.contains(s), explained))
     assert(!explained.contains("brute-force"), explained)
-    // The second query of a shape reuses the first one's reader.
+    // The second query of a shape reads its row group from memory: no file
+    // read, no reader built, no job.
     val second = servedQuery(7)
-    second.collect()
+    val (_, jobs2) = jobsOf(second.collect())
     val m2 = scanOf(second).metrics
-    assert(m2("readerBuilds").value == 0 && m2("rowGroupsRead").value == 1)
+    assert(m2("readerBuilds").value == 0 && m2("rowGroupsRead").value == 0)
+    assert(m2("rowGroupsCached").value == 1 && jobs2 == 0, s"$jobs2 jobs")
     assert(m2("fetchTime").value > 0)
-    assert(formatted(second).contains("reader builds: 0"))
+    assert(formatted(second).contains("row groups read: 0, row groups cached: 1, reader builds: 0"))
     // Every selectivity: one allow-list pass (rows allowed = the rows that
     // pass, counted once) and one fetch round. 2% and 0.5% allow no more
     // nodes than the candidate width (ef 64), so exact distances answer.
+    // The pass's row group is decoded once, at the first selectivity; the
+    // fetch's is the unfiltered queries'. Later selectivities read both from
+    // memory: no file read, no reader built, no job.
     for ((t, exact) <- Seq((500, 0L), (100, 0L), (20, 1L), (5, 1L))) {
       val filtered = servedQuery(6, where = Some(t))
-      assert(filtered.collect().length == 10)
+      val (frows, fjobs) = jobsOf(filtered.collect())
+      assert(frows.length == 10 && fjobs == 0)
       val fm = scanOf(filtered).metrics
       val at = s"sel < $t"
+      val read = if (t == 500) 1L else 0L
+      assert(fm("rowGroupsRead").value == read && fm("rowGroupsCached").value == 2 - read, at)
+      if (t != 500) assert(fm("readerBuilds").value == 0, at)
       assert(fm("rowsAllowed").value == 2L * t, at)
       assert(fm("fetchRounds").value == 1 && fm("fetchJobs").value == 0, at)
       assert(fm("rowsFetched").value == 10 && fm("exactSearches").value == exact, at)
@@ -448,11 +486,18 @@ class HnswRewriteSpec extends SparkSuite {
     assert(planOf(few).contains("filtered="), planOf(few))
     assert(few.collect().toSeq == want)
     // No row passes: no rows, no search result, no fetch.
+    graft.plans.RowidFetch.rowGroupCache.clear()
     val none = servedQuery(9, where = Some(0))
     assert(planOf(none).contains("filtered="), planOf(none))
     assert(none.collect().isEmpty)
     val m = scanOf(none).metrics
     assert(Seq("rowsAllowed", "fetchRounds", "rowsFetched").map(m(_).value) == Seq(0L, 0L, 0L))
+    // That pass cached its row group whole, though `sel < 0` excludes it by
+    // its statistics: a wider predicate served from it still sees every row.
+    val wide = servedQuery(9, where = Some(500))
+    assert(wide.collect().length == 10)
+    assert(scanOf(wide).metrics("rowsAllowed").value == 1000)
+    assert(scanOf(wide).metrics("rowGroupsCached").value >= 1)
     // The bound: 8 bytes per rowid, an eighth of the max heap.
     assert(graft.plans.HnswIndexScanExec.maxAllowedIds(64L << 20) == (1 << 20))
     assert(graft.plans.HnswIndexScanExec.maxAllowedIds(Long.MaxValue) < Int.MaxValue)

@@ -312,17 +312,24 @@ class HnswRoutingSpec extends SparkSuite {
           val brute = try spark.sql(distSql(name, s"$where AND $live")).collect()
             .map(r => (r.getLong(0), r.getDouble(1))).toSeq
           finally spark.conf.unset(Hnsw.RewriteEnabledKey)
-          val sqlDf = spark.sql(distSql(name, where))
-          val scan = sqlDf.queryExecution.executedPlan.collectFirst {
-            case e: graft.plans.HnswIndexScanExec => e
-          }.getOrElse(fail(s"$at: ${sqlDf.queryExecution.executedPlan}"))
-          val got = sqlDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-          assert(got == brute, at)
-          assert(got.forall(h => !nullIds.contains(h._1) && !gone.contains(h._1)), at)
-          if (qualifying >= 0) assert(got.size == qualifying, at)
-          val m = scan.metrics
-          assert(m("fetchRounds").value == (if (got.isEmpty) 0 else 1), at)
-          if (got.isEmpty) assert(m("rowsFetched").value == 0 && m("rowsAllowed").value == 0, at)
+          // Cold, then with every row group the reads need in memory.
+          graft.plans.RowidFetch.rowGroupCache.clear()
+          for (run <- Seq("cold", "warm")) {
+            val sqlDf = spark.sql(distSql(name, where))
+            val scan = sqlDf.queryExecution.executedPlan.collectFirst {
+              case e: graft.plans.HnswIndexScanExec => e
+            }.getOrElse(fail(s"$at: ${sqlDf.queryExecution.executedPlan}"))
+            val got = sqlDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+            assert(got == brute, s"$at, $run")
+            assert(got.forall(h => !nullIds.contains(h._1) && !gone.contains(h._1)), at)
+            if (qualifying >= 0) assert(got.size == qualifying, at)
+            val m = scan.metrics
+            assert(m("fetchRounds").value == (if (got.isEmpty) 0 else 1), at)
+            if (got.isEmpty) assert(m("rowsFetched").value == 0 && m("rowsAllowed").value == 0, at)
+            val read = m("rowGroupsRead").value
+            if (run == "cold") assert(read > 0, at)
+            else assert(read == 0 && m("rowGroupsCached").value > 0, at)
+          }
         } finally spark.conf.unset(Hnsw.ProbeSegmentsKey)
       }
       // The re-inserted row passes sel < 5 and comes back exactly once.

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Time the DuckDB oracle SQL (the reference engine) against BENCH_LOCAL.json.
+"""Time the DuckDB oracle SQL (the reference engine) against a graft.Bench record.
 
 duckdb-vss IS duckdb, so running each gate's oracle SQL in DuckDB over the
 same sf0.1 parquet measures the reference engine on identical queries +
@@ -9,7 +9,10 @@ oracles (all-pairs dedup verifies, recursive-CTE connected components) are
 excluded — there the oracle is a correctness spec, not the reference's
 algorithm. Writes PERF_LOCAL.md (PERF_OUT overrides).
 
-Usage: python3 tools/bench_duckdb.py [sf_dir] [verify_dump_dir]
+Usage: python3 tools/bench_duckdb.py [sf_dir] [verify_dump_dir] [bench_record]
+
+bench_record defaults to graft.Bench's default BENCH_OUT:
+BENCH_LOCAL_<basename of sf_dir>_c<SPARK_GRAFT_CPUS, default 32>.json.
 """
 import json, os, sys, time, pathlib
 
@@ -17,6 +20,9 @@ import duckdb
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 DUMP = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
+RECORD = sys.argv[3] if len(sys.argv) > 3 else (
+    f"BENCH_LOCAL_{os.path.basename(os.path.normpath(SF))}"
+    f"_c{os.environ.get('SPARK_GRAFT_CPUS', '32')}.json")
 
 # Fair comparisons: same algorithm on both engines.
 FAIR = [k for k in json.load(open(f"{DUMP}/oracle_sql.json"))
@@ -54,7 +60,7 @@ def main():
             if p.exists():
                 con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
         cons.append(con)
-    spark = json.load(open("BENCH_LOCAL.json"))["queries"]
+    spark = json.load(open(RECORD))["queries"]
     rows = []
     for name in sorted(FAIR):
         if name not in oracle:
