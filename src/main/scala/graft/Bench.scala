@@ -69,7 +69,8 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // Let ensureBucketed's sorted single-file-per-bucket layouts
-      // advertise their sort order (sort-free merge join for q2_bucketed).
+      // advertise their sort order (a sort-free merge join when
+      // q2_bucketed's kernel falls back to its declarative plan).
       // Harness-level opt-in: the library APIs never set session confs
       // (r13 verdict item 4); Spark still refuses to advertise ordering
       // for multi-file buckets, so this cannot mis-order other tables.
@@ -80,8 +81,6 @@ object Bench {
       .config(graft.spark.ExecTuning.SmallQueryShufflePartitionsKey,
         envLong("SPARK_GRAFT_SMALL_SHUFFLE",
           graft.spark.ExecTuning.DefaultSmallQueryShufflePartitions.toLong).toString)
-      .config(graft.spark.ExecTuning.SmallQueryCodegenKey,
-        sys.env.getOrElse("SPARK_GRAFT_SMALL_CODEGEN", "true"))
       // Fixed-overhead trims (round-4 verdict: the ~0.2-0.4 s/query floor
       // at small SF is scheduling + exchange setup, not per-row work):
       // coalesce post-shuffle partitions to a small advisory size: fewer
@@ -104,10 +103,6 @@ object Bench {
       // text-heavy file packs into 1-2 splits no matter how fine its row
       // groups are.
       .config("spark.sql.files.openCostInBytes", (256L << 10).toString)
-      // A/B knob for q2_bucketed's join strategy (kernel | smj |
-      // shuffle_hash) — same env-override channel as the other knobs.
-      .config("spark.graft.q2.bucketJoin",
-        sys.env.getOrElse("SPARK_GRAFT_Q2_STRAT", "kernel"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_ONLY=a,b,c restricts the run for quick iteration and for

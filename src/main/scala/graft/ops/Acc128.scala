@@ -8,8 +8,9 @@ package graft.ops
  * carry formula. One spelling instead of six hand copies — a fix to the
  * add (or an overflow-hardening change) lands everywhere at once.
  * Methods are tiny statics; C2 inlines them into the per-batch loops —
- * warm TimeQuery mins at sf10 measured unchanged across the r16 dedup
- * refactor (q2_join_agg 1.27 → 1.22 s, q2_bucketed 0.99 s).
+ * warm mins at sf10 measured unchanged across the r16 dedup refactor
+ * (q2_join_agg 1.27 → 1.22 s, q2_bucketed 0.99 s; PERF_VS_DUCKDB.md
+ * round 16).
  */
 private[ops] object Acc128 {
 

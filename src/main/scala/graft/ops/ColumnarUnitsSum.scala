@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
  * accumulates into a per-task (group × bucket) grid of 128-bit two-long
  * registers (the [[graft.aggregates.Sum128]] carry formula) — measured
  * 4.1× the row-codegen plan and ~55M surviving rows/s/32-threads at sf10
- * (tools/ColumnarKernelProbe, r15).
+ * (PERF_VS_DUCKDB.md round 15).
  *
  * == Semantics ==
  *

@@ -40,7 +40,8 @@ import org.apache.spark.sql.types.StructType
  *    reused), the file format, schemas and options, the read columns, the
  *    condition (normalized to column ordinals, so a new DataFrame over the
  *    same files reuses it; None for a reader that pushes no filters) and
- *    the session's SQL conf settings.
+ *    the session's SQL conf settings other than this library's own
+ *    `spark.graft.*` keys, which no reader reads.
  *  - **Row-group locator.** Each parquet file's footer summary (row-group
  *    byte ranges, the id column's min and max, each column's uncompressed
  *    size) is cached by path, length and modification time, so a rewritten
@@ -90,6 +91,12 @@ private[graft] object RowidFetch extends PredicateHelper {
   private[graft] final case class ReaderKey(sc: SparkContext, format: Class[_],
       dataSchema: StructType, partitionSchema: StructType, options: Map[String, String],
       readColumns: Seq[String], condition: Option[Expression], sqlConf: Map[String, String])
+
+  /** The session's SQL confs a file reader can depend on: all but this
+    * library's own `spark.graft.*` keys, which no reader reads, so setting
+    * one (say, `spark.graft.hnsw.rewrite.enabled`) keeps both caches warm. */
+  private def readerConf(session: SparkSession): Map[String, String] =
+    session.sessionState.conf.getAllConfs.filter { case (k, _) => !k.startsWith("spark.graft.") }
 
   private final class Reader(val read: PartitionedFile => Iterator[InternalRow],
       val requiredSchema: StructType)
@@ -230,7 +237,7 @@ private[graft] object RowidFetch extends PredicateHelper {
     val cache = rowGroupCache
     val shape = ReaderKey(session.sparkContext, fs.fileFormat.getClass, fs.dataSchema,
       fs.partitionSchema, fs.options, dataAttrs.map(_.name), None,
-      session.sessionState.conf.getAllConfs)
+      readerConf(session))
     val keys = splits.map(s => RowGroupCache.Key(shape, s.key, s.file.start))
     val held = keys.map(cache.get).toArray
     def inMemory(i: Int) = held(i) != null && (held(i) ne RowGroupCache.TooLarge)
@@ -267,7 +274,7 @@ private[graft] object RowidFetch extends PredicateHelper {
     val key = ReaderKey(session.sparkContext, fs.fileFormat.getClass, fs.dataSchema,
       fs.partitionSchema, fs.options, dataAttrs.map(_.name),
       condition.map(c => QueryPlan.normalizeExpressions(c, relation.output).canonicalized),
-      session.sessionState.conf.getAllConfs)
+      readerConf(session))
     readers.synchronized {
       val hit = readers.get(key)
       if (hit != null) return (hit, false)

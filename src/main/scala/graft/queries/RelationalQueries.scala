@@ -141,6 +141,23 @@ object RelationalQueries {
     tbl
   }
 
+  /** A q2 kernel's (c_nationkey, sum, n_rows) grid as (n_name, revenue,
+    * n_rows). The 25-row nation names are collected while the eager
+    * `grid` computes (the q7 device); the name join rides the aggregated
+    * grid as a literal map, never the fact rows. */
+  private def revenuePerNation(n: DataFrame)(grid: => DataFrame): DataFrame = {
+    val nationF = scala.concurrent.Future {
+      n.select(col("n_nationkey").cast("int"), col("n_name"))
+        .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    }(scala.concurrent.ExecutionContext.global)
+    val g = grid
+    val nationNames = scala.concurrent.Await.result(nationF,
+      scala.concurrent.duration.Duration.Inf)
+    g.select(
+      element_at(typedLit(nationNames), col("c_nationkey")).as("n_name"),
+      outD(col("sum")).as("revenue"), col("n_rows"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_agg" -> ((s, dir) => {
       // Money sums run in the 128-bit units accumulator (sum128): exact like
@@ -156,180 +173,61 @@ object RelationalQueries {
     "q2_join_agg" -> ((s, dir) => {
       // revenue per nation: lineitem ⋈ orders ⋈ customer ⋈ nation.
       //
-      // r16: the default path is the dense-key broadcast-probe kernel
-      // (ops.DenseSnowflakeSum) — the flat-layout sibling of q2_bucketed's
-      // kernel. Warehouse orderkeys are DENSE, so the 15M-entry
-      // (o_orderkey → nationkey) map is a ~15 MB byte ARRAY, broadcastable
-      // where the r8 A/B's LongHashedRelation was the measured loss: two
-      // jobs (pack build pairs; probe fact batches by array index into the
-      // 128-bit grid), ZERO exchanges of any width. Falls back internally
-      // (sparse keys / non-bare lineage / >254 groups) to the declarative
-      // snowflake; spark.graft.q2.flat = shuffle_hash selects the tuned
-      // r8–r15 shuffle spelling below (kept as the A/B reference and the
-      // no-dense-key-scale answer). EAGER like q7/q2_bucketed: the
-      // kernel runs its jobs at construction and returns the
-      // materialized grid.
-      //
-      // r8 plan (measured A/B at sf1, AQE off, steady-state):
-      //  - The dimension side collapses FIRST: o⋈c⋈n reduces to a 2-column
-      //    (o_orderkey, n_name) map before lineitem is touched, so the fact
-      //    rows pay ONE narrow probe instead of three full-width ones.
-      //  - The fact⋈dim join is an explicit SHUFFLE_HASH: 0.84 s vs 1.56 s
-      //    for the broadcast spelling (the driver serially collects 1.5M
-      //    dim rows and builds the hashed relation before any probe can
-      //    start) and 2.9 s for sort-merge (two 6M/1.5M-row sorts for a
-      //    join both engines answer with a hash table). SHJ builds
-      //    per-partition hash tables of |orders|/N rows in parallel — the
-      //    plan a native engine runs, and the scale-safe one: the join key
-      //    is unique on the build side (no skew), and the per-task build
-      //    is bounded by the shuffle partition count, which AQE sizes at
-      //    100×. A pre-aggregate of lineitem by orderkey below the join
-      //    was also measured (1.0-1.7 s): the 1.5M-group hash table costs
-      //    more than the narrower shuffle saves at every tested scale —
-      //    re-measured at derived sf10 (local[32], fast window): pre-agg
-      //    4.44 s vs 3.5-4.2 s for this spelling, a wash-to-worse even
-      //    where the shuffle-volume argument is strongest (15M pre-agg
-      //    groups cost what the 60M->15M shuffle reduction saves).
-      //  - CAUTION if revisiting broadcast here: with a 3-column pruned
-      //    lineitem scan, the static planner's estimate of the FACT side
-      //    slips under the broadcast threshold and it builds a hash of 6M
-      //    fact rows (BuildLeft, measured 2.5x worse than everything).
+      // r16: the dense-key broadcast-probe kernel (ops.DenseSnowflakeSum)
+      // — the flat-layout sibling of q2_bucketed's kernel. Warehouse
+      // orderkeys are DENSE, so the 15M-entry (o_orderkey → nationkey) map
+      // is a ~15 MB byte ARRAY, broadcastable where the r8 A/B's
+      // LongHashedRelation was the measured loss: two jobs (pack build
+      // pairs; probe fact batches by array index into the 128-bit grid),
+      // ZERO exchanges of any width. Falls back internally (sparse keys /
+      // non-bare lineage / >254 groups) to its declarative snowflake.
+      // EAGER like q7/q2_bucketed: the kernel runs its jobs at
+      // construction and returns the materialized grid. The declarative
+      // spellings measured against it (shuffle-hash, broadcast and
+      // sort-merge fact joins; PERF_VS_DUCKDB.md rounds 8–16) all lost.
       val li = Tables.load(s, dir, "lineitem")
       val o = Tables.load(s, dir, "orders")
       val c = Tables.load(s, dir, "customer")
       val n = Tables.load(s, dir, "nation")
-      val strat = s.conf.getOption("spark.graft.q2.flat").getOrElse("kernel")
-      if (strat == "kernel") {
-        // 25-row nation names overlap the grid computation (the q7 /
-        // q2_bucketed device); the name join rides the aggregated grid as
-        // a literal map, never the fact rows.
-        val nationF = scala.concurrent.Future {
-          n.select(col("n_nationkey").cast("int"), col("n_name"))
-            .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-        }(scala.concurrent.ExecutionContext.global)
-        val grid = graft.ops.DenseSnowflakeSum.groupSum(
-          li, "l_orderkey",
-          measureA = ("l_extendedprice", 2),
-          measureB = Some((100L, "l_discount", 2)), outScale = 4,
-          build = o, buildKeyCol = "o_orderkey", buildRefCol = "o_custkey",
-          dim = c, dimKeyCol = "c_custkey", dimGroupCol = "c_nationkey")
-        val nationNames = scala.concurrent.Await.result(nationF,
-          scala.concurrent.duration.Duration.Inf)
-        grid.select(
-          element_at(typedLit(nationNames), col("c_nationkey")).as("n_name"),
-          outD(col("sum")).as("revenue"), col("n_rows"))
-      } else {
-        // r9 A/B at sf10 (3 interleaved runs each): broadcasting a
-        // customer→nation map under orders (no o⋈c shuffle, but a 0.7 s
-        // SERIAL driver build of the 1.5M-entry hashed relation) ties this
-        // shuffle spelling within noise (3.74 vs 3.61 s min). Keep the
-        // shuffle: at warehouse scale customer outgrows any broadcast while
-        // per-partition SHJ builds stay bounded.
-        // No strings in the hot path (r12, the q7 lesson applied here too):
-        // the dim map ships (o_orderkey, nationkey INT) instead of the name
-        // string — a narrower 15M-row exchange — the fact agg groups on the
-        // int, and the 25-row name join runs over the aggregated grid.
-        val dim = o.select(col("o_orderkey"), col("o_custkey"))
-          .join(c.select(col("c_custkey"), col("c_nationkey")),
-            col("o_custkey") === col("c_custkey"))
-          .select(col("o_orderkey"), col("c_nationkey"))
-        // price_cents × (100 − disc_cents) = the revenue term's unscaled
-        // value at scale 4, exactly the DECIMAL(38,4) product the oracle
-        // sums — but in long registers, and computed BEFORE the fact
-        // shuffle: it only reads lineitem columns, so folding it here
-        // shrinks the 60M-row exchange to (key, one long) and leaves no
-        // per-row arithmetic after the probe.
-        li.select(col("l_orderkey"),
-            (double_units(col("l_extendedprice"), 2) *
-              (lit(100L) - double_units(col("l_discount"), 2))).as("_rev"))
-          .join(dim.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("c_nationkey"))
-          .agg(
-            outD(sum128(col("_rev"), 4)).as("revenue"),
-            count(lit(1)).as("n_rows"))
-          .join(broadcast(n.select(col("n_nationkey"), col("n_name"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("n_name"), col("revenue"), col("n_rows"))
-      }
+      revenuePerNation(n)(graft.ops.DenseSnowflakeSum.groupSum(
+        li, "l_orderkey",
+        measureA = ("l_extendedprice", 2),
+        measureB = Some((100L, "l_discount", 2)), outScale = 4,
+        build = o, buildKeyCol = "o_orderkey", buildRefCol = "o_custkey",
+        dim = c, dimKeyCol = "c_custkey", dimGroupCol = "c_nationkey"))
     }),
     "q2_bucketed" -> ((s, dir) => {
       // q2 over the CO-BUCKETED warehouse layout — the r8/r10 bucketed-
-      // layout answer promoted from a spike (BucketSpike, 3.59 s vs 5.45 s
-      // flat at sf10) to a scoreboard row. lineitem and orders are both
-      // hash-bucketed ×32 on the order key (the storage-partitioned-join
-      // layout a 100 TB warehouse maintains for its biggest co-joined
-      // pair); the bucketed scans report HashPartitioning(orderkey, 32),
-      // so the 60M-row fact exchange — q2-flat's measured residual —
-      // never exists. The dim side stays map-only: customer⋈nation
-      // collapses to a 2-column (c_custkey → n_name) broadcast probed by
-      // bucketed orders, preserving the bucket partitioning into the fact
-      // join, so the WHOLE plan has zero fact-width exchanges. (At scales
-      // where customer outgrows a broadcast, the dim side becomes the
-      // q2-flat shuffle shape and only the 15M-row narrow dim map pays an
-      // exchange — still never the fact table.) Same oracle SQL as q2:
-      // the bucketed files hold row-identical data, DuckDB reads its own
-      // best (flat) layout — generous to the baseline, see
+      // layout answer promoted from a spike (PERF_VS_DUCKDB.md round 10:
+      // 3.59 s vs 5.45 s flat at sf10) to a scoreboard row. lineitem and
+      // orders are both hash-bucketed ×32 on the order key (the
+      // storage-partitioned-join layout a 100 TB warehouse maintains for
+      // its biggest co-joined pair), so the 60M-row fact exchange —
+      // q2-flat's measured residual — never exists. Same oracle SQL as
+      // q2: the bucketed files hold row-identical data, DuckDB reads its
+      // own best (flat) layout — generous to the baseline, see
       // PERF_VS_DUCKDB.md round 12.
       val liT = ensureBucketed(s, dir, "lineitem", "l_orderkey")
       val oT = ensureBucketed(s, dir, "orders", "o_orderkey")
       val c = Tables.load(s, dir, "customer")
-      // r16: the default path is the bucket-local hash-probe kernel
-      // (ops.BucketedSnowflakeSum) — ColumnarUnitsSum's vectorized
-      // pattern generalized past the broadcast cap: per bucket, the task
-      // builds the (o_orderkey → nationkey) table from ITS orders bucket
-      // (~470k keys at sf10 — task-local, never broadcast) and streams
-      // the co-bucketed lineitem bucket's ColumnarBatches through the
-      // probe+grid loop. One job, 32 tasks, zero fact-width exchanges,
-      // no sort. The r15 no-go (b4103a5) covered the columnar
-      // MERGE-join; this is the hash shape the verdict ordered.
-      // spark.graft.q2.bucketJoin = smj | shuffle_hash selects the
-      // declarative spellings (smj: the buckets' sort order makes the
-      // fact join a SORT-FREE merge join under the harness's legacy
-      // outputOrdering conf — the r12–r15 default).
-      val strat = s.conf.getOption("spark.graft.q2.bucketJoin").getOrElse("kernel")
+      // r16: the bucket-local hash-probe kernel (ops.BucketedSnowflakeSum)
+      // — ColumnarUnitsSum's vectorized pattern generalized past the
+      // broadcast cap: per bucket, the task builds the (o_orderkey →
+      // nationkey) table from ITS orders bucket (~470k keys at sf10 —
+      // task-local, never broadcast) and streams the co-bucketed lineitem
+      // bucket's ColumnarBatches through the probe+grid loop. One job, 32
+      // tasks, zero fact-width exchanges, no sort. The r15 no-go
+      // (b4103a5) covered the columnar MERGE-join; this is the hash shape
+      // the verdict ordered; it beat the sort-free merge-join spelling
+      // (PERF_VS_DUCKDB.md round 16).
       val n = Tables.load(s, dir, "nation")
-      if (strat == "kernel") {
-        // 25-row nation names overlap the grid computation (the q7
-        // device); the name join rides the aggregated grid as a literal
-        // map, never the fact rows.
-        val nationF = scala.concurrent.Future {
-          n.select(col("n_nationkey").cast("int"), col("n_name"))
-            .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-        }(scala.concurrent.ExecutionContext.global)
-        val grid = graft.ops.BucketedSnowflakeSum.groupSum(
-          s.table(liT), "l_orderkey",
-          measureA = ("l_extendedprice", 2),
-          measureB = Some((100L, "l_discount", 2)), outScale = 4,
-          build = s.table(oT), buildKeyCol = "o_orderkey",
-          buildRefCol = "o_custkey",
-          dim = c, dimKeyCol = "c_custkey", dimGroupCol = "c_nationkey")
-        val nationNames = scala.concurrent.Await.result(nationF,
-          scala.concurrent.duration.Duration.Inf)
-        grid.select(
-          element_at(typedLit(nationNames), col("c_nationkey")).as("n_name"),
-          outD(col("sum")).as("revenue"), col("n_rows"))
-      } else {
-        // No strings in the hot path (the q7 lesson): the broadcast
-        // payload and the group key are both the int nationkey; the
-        // 25-row name join runs over the aggregated grid, not 75M fact
-        // rows.
-        val dim = s.table(oT).select(col("o_orderkey"), col("o_custkey"))
-          .join(broadcast(c.select(col("c_custkey"), col("c_nationkey"))),
-            col("o_custkey") === col("c_custkey"))
-          .select(col("o_orderkey"), col("c_nationkey"))
-        s.table(liT).select(col("l_orderkey"),
-            (double_units(col("l_extendedprice"), 2) *
-              (lit(100L) - double_units(col("l_discount"), 2))).as("_rev"))
-          .join(dim.hint(if (strat == "smj") "merge" else "shuffle_hash"),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("c_nationkey"))
-          .agg(
-            outD(sum128(col("_rev"), 4)).as("revenue"),
-            count(lit(1)).as("n_rows"))
-          .join(broadcast(n.select(col("n_nationkey"), col("n_name"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("n_name"), col("revenue"), col("n_rows"))
-      }
+      revenuePerNation(n)(graft.ops.BucketedSnowflakeSum.groupSum(
+        s.table(liT), "l_orderkey",
+        measureA = ("l_extendedprice", 2),
+        measureB = Some((100L, "l_discount", 2)), outScale = 4,
+        build = s.table(oT), buildKeyCol = "o_orderkey",
+        buildRefCol = "o_custkey",
+        dim = c, dimKeyCol = "c_custkey", dimGroupCol = "c_nationkey"))
     }),
     "q3_topn" -> ((s, dir) => {
       // Top 10 orders by total price (TopN pattern → TakeOrderedAndProject).
@@ -605,7 +503,7 @@ object RelationalQueries {
       // two-branch scan + join. Scattered domains degrade in-aggregate to
       // an exact stray set (r13: sparse blocks demote at ~16 B/key, so
       // memory stays bounded on every distribution). Measured crossover
-      // (ScatterDistinct, 60M rows × 3 groups): container-compact domains
+      // (PERF_VS_DUCKDB.md round 13, 60M rows × 3 groups): container-compact domains
       // bitmap 0.6-0.9 s vs salted 1.9-2.5 s (~3× win — this fixture's
       // regime); fully scattered domains bitmap 4.8-5.3 s vs salted
       // 2.0-2.1 s (~2.5× degrade — the un-salted plan funnels each

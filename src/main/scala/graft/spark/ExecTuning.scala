@@ -40,18 +40,6 @@ object ExecTuning {
   val SmallQueryShufflePartitionsKey = "spark.graft.smallQueryShufflePartitions"
   val DefaultSmallQueryShufflePartitions = 8
 
-  /** When false, small-input executions also disable WHOLE-STAGE codegen
-    * (expression codegen remains): each unique small query otherwise pays
-    * Janino compilation per WholeStageCodegen segment — a fixed cost when
-    * the input is a few MB. Measured (sf1 local[32], 11-query floor subset,
-    * 3 alternating A/B sessions): off 3.19/3.77/3.48 s vs on
-    * 3.91/3.77/3.78 s — a ~9% mean gain INSIDE the box's steal variance,
-    * i.e. whole-stage compile is not the dominant floor term (scheduling +
-    * per-exchange dispatch is). Default true: the gain doesn't clear the
-    * noise floor, and interpreted eval regresses mid-size inputs. At
-    * 100 TB the size gate never fires and codegen always runs. */
-  val SmallQueryCodegenKey = "spark.graft.smallQueryCodegen"
-
   /** Total static size estimate of the plan's leaves (bytes).
     *
     * Deliberately sums EVERY leaf, counting a twice-scanned file twice. A
@@ -206,15 +194,9 @@ object ExecTuning {
       spark.conf.set(aqeKey, "false")
       val prevShufN = scala.util.Try(prevShuf.toInt).getOrElse(Int.MaxValue)
       if (trim > 0 && trim < prevShufN) spark.conf.set(shufKey, trim.toString)
-      val wscKey = "spark.sql.codegen.wholeStage"
-      val prevWsc = spark.conf.get(wscKey, "true")
-      val keepCodegen = spark.conf.getOption(SmallQueryCodegenKey)
-        .forall(_.equalsIgnoreCase("true"))
-      if (!keepCodegen) spark.conf.set(wscKey, "false")
       try body finally {
         spark.conf.set(aqeKey, prev)
         spark.conf.set(shufKey, prevShuf)
-        spark.conf.set(wscKey, prevWsc)
       }
     } else {
       // Large input: size scan splits to the data (see ScanSplitsPerCoreKey).

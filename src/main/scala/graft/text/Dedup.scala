@@ -550,13 +550,6 @@ object Dedup {
       hugeSets = setsExceedBroadcast(df))
   }
 
-  /** [[ngramJaccardPairs]] candidate-pair materialization policy:
-    * negative/unset = AUTO (localCheckpoint once the corpus is past the
-    * broadcast regime, lazy triple-derivation at the floor where the
-    * copies overlap on idle cores); 0 = force lazy; positive = force
-    * checkpoint. */
-  private[graft] val JaccardCandsCheckpointKey = "spark.graft.dedup.jaccardCandsCheckpoint"
-
   /** Fault-tolerance escape hatch for the lineage-truncating
     * materializations ([[nearDupClusters]]' label fixpoint,
     * [[ngramJaccardPairs]]' candidate table, [[signBuckets]]' split
@@ -946,11 +939,6 @@ object Dedup {
     labels
   }
 
-  /** 0 disables [[dropNearDuplicates]]' keeper-id RDD barrier + size-gated
-    * broadcast hint (A/B + escape hatch; default on — see the in-body
-    * note). */
-  private[graft] val KeeperBarrierKey = "spark.graft.dedup.keeperBarrier"
-
   /** Edges per spanning-forest task: sizes each round's partition count so
     * per-task union-find state (a LongMap over the partition's vertices,
     * ~40 B/entry) stays bounded regardless of total edge count.
@@ -1058,14 +1046,10 @@ object Dedup {
     // contraction of corpus bytes — see corpusWithinBroadcast); past the
     // regime the keeper relation is corpus-correlated and the planner's
     // shuffle choice is right anyway (AQE is on there and refines it at
-    // runtime). Conf 0 restores the inline recompute-per-action shape
-    // (A/B + escape hatch).
+    // runtime).
+    val keepersRdd = org.apache.spark.sql.graftbridge.Bridge.rddBarrier(keepersAgg)
     val keepers =
-      if (graft.spark.ExecTuning.confLong(df.sparkSession,
-          KeeperBarrierKey, 1L) == 0L) keepersAgg
-      else if (corpusWithinBroadcast(df))
-        broadcast(org.apache.spark.sql.graftbridge.Bridge.rddBarrier(keepersAgg))
-      else org.apache.spark.sql.graftbridge.Bridge.rddBarrier(keepersAgg)
+      if (corpusWithinBroadcast(df)) broadcast(keepersRdd) else keepersRdd
     val exactLosers = df.where(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("id"))
       .join(keepers, Seq("id"), "left_anti")
@@ -1255,19 +1239,11 @@ object Dedup {
     // as concurrent broadcast-future jobs on idle cores, so eager
     // materialization buys nothing there (ABBA medians 1.1-1.2x) — while
     // at derived sf1+ the box is CPU-saturated and the checkpoint wins
-    // on min AND median (0.90x/0.82x). Default: checkpoint exactly when
-    // the corpus is past the broadcast regime (the same gate the verify
-    // fetch uses); conf forces it on (1) or off (0).
-    // One plan walk for both decisions (r16 ADVICE: this was evaluated
-    // twice — once for the checkpoint gate, once for the hugeSets arg).
+    // on min AND median (0.90x/0.82x). So: checkpoint exactly when the
+    // corpus is past the broadcast regime (the same gate the verify fetch
+    // uses). One plan walk serves both decisions.
     val huge = setsExceedBroadcast(df)
-    val ckpt = graft.spark.ExecTuning.confLong(spark,
-      JaccardCandsCheckpointKey, -1L) match {
-      case 0L => false
-      case v if v > 0L => true
-      case _ => huge
-    }
-    val cands = if (ckpt) truncateLineage(candsLazy) else candsLazy
+    val cands = if (huge) truncateLineage(candsLazy) else candsLazy
     // Verify: exact Jaccard over candidate pairs only, shingles re-derived
     // for candidate ids via semi-join (see the caching contract — the
     // corpus-sized shingle set is never cached).

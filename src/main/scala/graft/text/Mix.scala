@@ -105,7 +105,7 @@ object Mix {
     // path (where the barrier ships full rows and loses on small inputs),
     // the manifest's barriered exchange is the NARROW frame — a few bytes
     // per row — while the pass it saves re-runs scan + tokenCount over
-    // every text byte. In-session ABBA (r13, AbConf
+    // every text byte. In-session ABBA (PERF_VS_DUCKDB.md round 13,
     // spark.graft.mix.narrowInputBytes 1 vs 64M): barrier wins at BOTH
     // bench scales — 0.60 vs 0.68 s at sf0.1 (5.6 MB) and 0.75 vs 1.09 s
     // at sf10 (56 MB) — so there is no small side to protect.
@@ -547,12 +547,6 @@ object Mix {
     } catch { case _: Exception => false }
   }
 
-  /** 0 disables the [[withCumWeight]] RDD barrier (A/B + escape hatch):
-    * the shared-exchange path then falls back to the plain explicit
-    * repartition, whose consumers column pruning splits back into
-    * per-consumer exchanges (the r10 behavior). */
-  private[graft] val RddBarrierKey = "spark.graft.mix.rddBarrier"
-
   /** Byte threshold above which the budget fills and [[packSequences]]
     * switch from the direct full-row cumsum to the narrow-projection +
     * join-back plan (0 disables the narrow path). Same size-policy device
@@ -629,12 +623,9 @@ object Mix {
     // shareExchange=false on SMALL inputs (the same size policy that
     // picks the wide shape): there the double scan is a few MB and the
     // extra full-row exchange is pure floor (~+0.2 s/query at sf0.1).
-    val useBarrier = shareExchange &&
-      graft.spark.ExecTuning.confLong(df.sparkSession, RddBarrierKey, 1L) != 0L
-    val t = if (useBarrier)
+    val t = if (shareExchange)
       org.apache.spark.sql.graftbridge.Bridge.rddBarrier(
         t0.repartition(gcols :+ col("_mix_b"): _*))
-    else if (shareExchange) t0.repartition(gcols :+ col("_mix_b"): _*)
     else t0
 
     // Per-(group, bucket) totals → exclusive prefix sum over the bucket grid.

@@ -119,8 +119,9 @@ object TextClassifier {
     * identical objective (feature standardization, mean log-loss, L2 on
     * the standardized coefficients, Spark's initial intercepts), so the
     * coefficients match `ml.fit` to floating-point-order noise
-    * (TextClassifierSpec pins the parity). Motivation (r17 FitProf,
-    * warm): `ml.fit` at the gate floor is ~1.1 s of FIXED cost (input
+    * (TextClassifierSpec pins the parity). Motivation (warm
+    * profile, PERF_VS_DUCKDB.md round 16 OPTIMIZATION pass, item 5):
+    * `ml.fit` at the gate floor is ~1.1 s of FIXED cost (input
     * persist + summarizer pass + per-iteration treeAggregate job latency)
     * for a fit the driver computes in well under 0.1 s. Above the ceiling
     * the distributed `ml.fit` runs unchanged — the 100 TB train-once path

@@ -234,33 +234,33 @@ class DedupSpec extends SparkSuite {
     assert(filtered == unfiltered && filtered._2 == Set(1L, 3L, 5L, 6L))
   }
 
-  test("keeper-barrier policy settings never change the kept set") {
+  test("keeper-barrier drop keeps the smallest id per cluster") {
     // The keeper-id RDD barrier (+ size-gated broadcast hint) is pure plan
-    // shape — cross-action map-stage reuse; the kept set must be identical
-    // with it on (default) and off.
-    def kept(): Set[Long] =
-      Dedup.dropNearDuplicates(docs, "text", "doc_id", threshold = 0.5)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    val on = kept() // default: barrier on
-    spark.conf.set(Dedup.KeeperBarrierKey, "0")
-    val off = try kept() finally spark.conf.unset(Dedup.KeeperBarrierKey)
-    assert(on == off && on == Set(1L, 3L, 5L, 6L))
+    // shape — cross-action map-stage reuse; the kept set is the
+    // smallest id per near-duplicate cluster.
+    val kept = Dedup.dropNearDuplicates(docs, "text", "doc_id", threshold = 0.5)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(kept == Set(1L, 3L, 5L, 6L))
   }
 
   test("jaccard candidate-checkpoint policy settings never change the pair set") {
-    // Forced checkpoint (1) vs forced lazy (0) is pure materialization
-    // policy; the pair set and values must be identical (r16 ADVICE: the
-    // 0/positive/auto policy had no direct coverage).
+    // The candidate table is checkpointed exactly when setsExceedBroadcast
+    // holds. A 1-byte broadcast threshold makes it hold (checkpoint); the
+    // default threshold leaves this corpus lazy. Materialization policy
+    // only: the pairs and their values must be identical.
     def pairs(): Set[(Long, Long, Double)] =
       Dedup.ngramJaccardPairs(docs, "text", "doc_id", threshold = 0.5)
         .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)]
         .collect().toSet
-    spark.conf.set(Dedup.JaccardCandsCheckpointKey, "1")
-    val ckpt = try pairs()
-    finally spark.conf.unset(Dedup.JaccardCandsCheckpointKey)
-    spark.conf.set(Dedup.JaccardCandsCheckpointKey, "0")
-    val lazily = try pairs()
-    finally spark.conf.unset(Dedup.JaccardCandsCheckpointKey)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val ckpt = try {
+      assert(Dedup.setsExceedBroadcast(docs))
+      pairs()
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(!Dedup.setsExceedBroadcast(docs))
+    val lazily = pairs()
     assert(ckpt == lazily && ckpt.nonEmpty)
   }
 

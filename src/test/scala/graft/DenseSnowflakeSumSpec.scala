@@ -182,17 +182,10 @@ class DenseSnowflakeSumSpec extends SparkSuite {
 
   test("q2 shape on the fixture: kernel grid == the tuned shuffle gate spelling") {
     val dir = sf("0.001")
-    val s = spark
     val viaKernel = graft.queries.RelationalQueries
-      .queries("q2_join_agg")(s, dir)
+      .queries("q2_join_agg")(spark, dir)
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet
-    s.conf.set("spark.graft.q2.flat", "shuffle_hash")
-    try {
-      val viaShj = graft.queries.RelationalQueries
-        .queries("q2_join_agg")(s, dir)
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet
-      assert(viaKernel == viaShj)
-      assert(viaKernel.nonEmpty)
-    } finally s.conf.unset("spark.graft.q2.flat")
+    assert(viaKernel.nonEmpty)
+    assert(viaKernel == Q2Reference.rows(spark, dir, "shuffle_hash"))
   }
 }

@@ -128,6 +128,22 @@ class HnswFetchSpec extends SparkSuite {
     } finally Hnsw.dropIndex(spark, "fetch_parts")
   }
 
+  test("a spark.graft.* conf change keeps the warm reader and row groups") {
+    val (_, t) = indexed("fetch_graft_conf")
+    try {
+      val warm = query(t, 4).collect()
+      val again = query(t, 4).tap(_.collect())
+      assert(metric(again, "rowGroupsRead") == 0 && metric(again, "readerBuilds") == 0)
+      spark.conf.set(Hnsw.RewriteEnabledKey, "true")
+      try {
+        val after = query(t, 4)
+        assert(idDist(after.collect()) == idDist(warm))
+        assert(metric(after, "rowGroupsRead") == 0, "row groups read")
+        assert(metric(after, "readerBuilds") == 0, "reader builds")
+      } finally spark.conf.unset(Hnsw.RewriteEnabledKey)
+    } finally Hnsw.dropIndex(spark, "fetch_graft_conf")
+  }
+
   test("the table rewritten under the same path: a new DataFrame fetches the new rows") {
     val (dir, t) = indexed("fetch_rewrite")
     try {
