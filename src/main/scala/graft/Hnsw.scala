@@ -26,9 +26,10 @@ import graft.index.{GraphCache, HnswGraph, HnswIndexMeta, IndexCatalog, Tombston
  *
  * Architecture (SURVEY §2 O1/O11-O15): an index is a directory of immutable
  * HNSW segment files on shared storage. CREATE builds one graph per Spark
- * partition in parallel executors (`mapPartitions` — the Spark-native
- * analogue of the reference's N construction threads over a shared
- * collection, hnsw_index_physical_create.cpp:235-247). INSERT appends new
+ * partition in parallel executors (`mapPartitions`), each on its share of
+ * the session's cores — the reference's N construction threads over one
+ * shared graph (hnsw_index_physical_create.cpp:235-247), as a deterministic
+ * batch build ([[HnswGraph.addAll]]). INSERT appends new
  * delta segments; DELETE appends tombstone keys; COMPACT rebuilds. Search
  * fans out over segments and merges top-k — per-segment recall at equal ef
  * is ≥ a single graph's, so partitioning is correctness-safe (SURVEY §7.3).
@@ -133,12 +134,11 @@ object Hnsw {
       .where(col("_2").isNotNull)
       .as[(Long, Array[Float])]
 
-    val dim = data.head(1).headOption.map(_._2.length).getOrElse(0)
     val dir = IndexCatalog.indexDir(base, name)
     dir.mkdirs()
-    val segments =
-      if (dim == 0) Seq.empty // empty source: valid, zero-count index
-      else buildSegments(spark, data, dir, "part", dim, opts)
+    // An empty source builds no segment: a valid, zero-count index.
+    val segments = buildSegments(spark, data, dir, "part", None, opts)
+    val dim = segmentDim(dir, segments)
     val meta = HnswIndexMeta(
       name = name, paths = relationPaths(df), column = column, idColumn = idColumn,
       metric = opts.metric, dim = dim, m = opts.m, m0 = opts.m0,
@@ -156,7 +156,14 @@ object Hnsw {
   /** Build one immutable graph segment per partition; returns
     * (file, count, min key, max key, centroid) per segment. The centroid
     * (mean vector, accumulated in doubles) feeds query→segment routing
-    * ([[graft.index.HnswIndexMeta.routedSegments]]).
+    * ([[graft.index.HnswIndexMeta.routedSegments]]); its length is the
+    * segment's dimension — `dim` when given, else its first vector's.
+    *
+    * Each task inserts its rows in key order, so its graph depends only on
+    * which rows it holds, not on the order the shuffle delivers them. It
+    * builds on [[buildThreads]] threads ([[HnswGraph.addAll]]): the
+    * session's cores shared among the segments, so with as many segments as
+    * cores each task builds on one thread.
     *
     * Partition placement ([[BuildPartitionByKey]]):
     *  - "key" (default): range-partition on the id — deterministic
@@ -174,7 +181,7 @@ object Hnsw {
       data: org.apache.spark.sql.Dataset[(Long, Array[Float])],
       dir: File,
       prefix: String,
-      dim: Int,
+      dim: Option[Int],
       opts: Options): Seq[(String, Long, Long, Long, Array[Float])] = {
     val maxPer = spark.conf.getOption(MaxVectorsPerPartitionKey).map(_.toLong).getOrElse(262144L)
     val total = data.count()
@@ -197,28 +204,49 @@ object Hnsw {
           })
           .map(_._2)
       } else data.repartitionByRange(numParts, col("_1")).rdd
+    val parallelism = spark.sparkContext.defaultParallelism
     parted
       .mapPartitionsWithIndex { (i, rows) =>
-        val g = new HnswGraph(dim, metric, m, m0, efc, seed = 42L + i)
-        val sum = new Array[Double](dim)
-        var n = 0L
-        rows.foreach { case (k, v) =>
-          g.add(k, v)
-          var j = 0
-          while (j < dim) { sum(j) += v(j); j += 1 }
-          n += 1
-        }
-        if (g.size == 0) Iterator.empty
+        val sorted = rows.toArray.sortBy(_._1)
+        if (sorted.isEmpty) Iterator.empty
         else {
+          val vecs = sorted.map(_._2)
+          val d = dim.getOrElse(vecs.head.length)
+          val g = new HnswGraph(d, metric, m, m0, efc, seed = 42L + i)
+          g.addAll(sorted.map(_._1), vecs,
+            buildThreads(parallelism, numParts, Runtime.getRuntime.availableProcessors))
+          val sum = new Array[Double](d)
+          vecs.foreach { v =>
+            var j = 0
+            while (j < d) { sum(j) += v(j); j += 1 }
+          }
           val f = f"$prefix-$i%05d.hnsw"
           IndexCatalog.writeGraph(new File(dirPath, f), g)
           val (lo, hi) = g.keyRange.get
           Iterator.single((f, g.size.toLong, lo, hi,
-            sum.map(x => (x / n).toFloat)))
+            sum.map(x => (x / g.size).toFloat)))
         }
       }
       .collect().toSeq.sortBy(_._1)
   }
+
+  /** Threads for one build task: `parallelism` cores shared among
+    * `segments` tasks, at least one and at most the executor's
+    * `processors`. */
+  private[graft] def buildThreads(parallelism: Int, segments: Int, processors: Int): Int =
+    math.max(1, math.min(parallelism / segments, processors))
+
+  /** The dimension of freshly built `segments` (0 when there are none).
+    * Segments that disagree are deleted from `dir` and fail the build. */
+  private def segmentDim(dir: File, segments: Seq[(String, Long, Long, Long, Array[Float])]): Int =
+    segments.map(_._5.length).distinct match {
+      case Seq() => 0
+      case Seq(d) => d
+      case dims =>
+        segments.foreach(s => new File(dir, s._1).delete())
+        throw new IllegalArgumentException(
+          s"HNSW index vector dimension mismatch: segments hold ${dims.sorted.mkString(", ")}")
+    }
 
   /** Root paths of the scanned file relation — the index↔scan binding the
     * optimizer rules use (analogue of IsDuckTable + column binding checks,
@@ -412,10 +440,6 @@ object Hnsw {
     val data = df.select(col(meta.idColumn).cast(LongType).as("_1"), col(meta.column).as("_2"))
       .where(col("_2").isNotNull)
       .as[(Long, Array[Float])]
-    val dim =
-      if (meta.dim > 0) meta.dim
-      else data.head(1).headOption.map(_._2.length).getOrElse(0)
-    if (dim == 0) return meta
     val dir = IndexCatalog.indexDir(base, name)
     val opts = Options(meta.metric, meta.efConstruction, meta.efSearch, meta.m, meta.m0)
     // Monotonic stamp: max existing delta number + 1, never the segment
@@ -423,7 +447,10 @@ object Hnsw {
     val stamp = meta.segments
       .flatMap(s => DeltaName.findFirstMatchIn(s).map(_.group(1).toInt))
       .foldLeft(meta.segments.size)(math.max) + 1
-    val segs = buildSegments(spark, data, dir, f"delta-$stamp%05d", dim, opts)
+    val segs = buildSegments(spark, data, dir, f"delta-$stamp%05d",
+      Some(meta.dim).filter(_ > 0), opts)
+    if (segs.isEmpty) return meta
+    val dim = segmentDim(dir, segs)
     // A previously deleted key re-inserted here lives in the new segment;
     // per-segment tombstones keep only the old copies hidden.
     val haveRanges = meta.segmentRanges.size == meta.segments.size
@@ -546,7 +573,7 @@ object Hnsw {
       .foldLeft(0)(math.max) + 1
     val segs =
       if (meta.segments.isEmpty) Seq.empty
-      else buildSegments(spark, live, dir, f"part-c$gen%03d", meta.dim, opts)
+      else buildSegments(spark, live, dir, f"part-c$gen%03d", Some(meta.dim), opts)
     // Commit order: the new meta first, so a reader never reloads a meta
     // that names deleted files (withFreshMeta's retry). Old tombstones name
     // only old-generation segments, so a reader between the save and the

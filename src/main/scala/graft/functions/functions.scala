@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
@@ -65,22 +66,23 @@ object functions {
     col(ArrayDequantizeI8(expr(codes.cast(ArrayType(org.apache.spark.sql.types.ByteType))),
       expr(scale.cast(FloatType))))
 
-  /** A float-vector literal column. */
-  def lit_vector(v: Array[Float]): Column = {
-    import org.apache.spark.sql.functions.{array, lit}
-    vec(array(v.map(x => lit(x)).toIndexedSeq: _*))
-  }
+  /** A float-vector literal column: one ARRAY<FLOAT> literal over a copy
+    * of `v` — no per-element literals or cast for the analyzer to resolve.
+    * A column left unnamed is named by the literal's SQL,
+    * `ARRAY(CAST('1.0' AS FLOAT), …)`. */
+  def lit_vector(v: Array[Float]): Column =
+    col(Literal(new GenericArrayData(v), ArrayType(FloatType)))
 
   /** k-arg min_by: values for the k smallest orders, best first (LIST). */
   def min_by_k(value: Column, order: Column, k: Int): Column =
     col(graft.aggregates.MinMaxByK(expr(value), expr(order),
-      org.apache.spark.sql.catalyst.expressions.Literal(k), keepSmallest = true)
+      Literal(k), keepSmallest = true)
       .toAggregateExpression())
 
   /** k-arg max_by: values for the k largest orders, best first (LIST). */
   def max_by_k(value: Column, order: Column, k: Int): Column =
     col(graft.aggregates.MinMaxByK(expr(value), expr(order),
-      org.apache.spark.sql.catalyst.expressions.Literal(k), keepSmallest = false)
+      Literal(k), keepSmallest = false)
       .toAggregateExpression())
 
   /** Exact COUNT(DISTINCT x) for an integral column as one ObjectHashAgg —

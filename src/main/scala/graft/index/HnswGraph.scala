@@ -26,11 +26,19 @@ import graft.expressions.VectorMath
  * `Hnsw.compactIndex` rebuilds segments without them — the reference's
  * delete-then-`PRAGMA hnsw_compact_index` contract (README.md:67-69).
  *
- * Single-writer, multi-reader: `add` is not thread-safe; searches on a graph
- * that is no longer being mutated are. In the Spark engine each executor
- * builds one graph per partition inside `mapPartitions`, and served graphs
- * are immutable artifacts — so no locking is needed (unlike the reference's
- * StorageLock, hnsw_index.cpp:440-478).
+ * Batch build, multi-reader. [[addAll]] inserts in batches on a fixed
+ * schedule — prefix doubling (1, 2, 4, …) capped at [[HnswGraph.MaxBatchFraction]]
+ * of the graph being built — and spreads each batch over up to `threads`
+ * threads, the way the reference's N construction threads share one usearch
+ * graph (hnsw_index_physical_create.cpp:235-247), but deterministic: within
+ * a batch every new node searches the graph as it stood when the batch
+ * began, so the written graph is the same for any thread count
+ * ([[insertBatch]]). `add` is a batch of one, the paper's sequential insert.
+ * Calls that insert must not overlap each other or a search; searches on a
+ * graph that is no longer being mutated may run concurrently. In the Spark
+ * engine each build task builds one graph per partition inside
+ * `mapPartitions`, and served graphs are immutable artifacts — so no locking
+ * is needed (unlike the reference's StorageLock, hnsw_index.cpp:440-478).
  */
 final class HnswGraph(
     val dim: Int,
@@ -85,50 +93,125 @@ final class HnswGraph(
 
   private def capAt(level: Int): Int = if (level == 0) m0 else m
 
-  /** Insert a (rowid key, vector) pair; a key already present is rejected. */
-  def add(key: Long, vec: Array[Float]): Unit = {
-    require(vec.length == dim,
-      s"HNSW index vector dimension mismatch: expected $dim, got ${vec.length}")
-    if (keyToNode.contains(key))
-      throw new IllegalArgumentException(s"duplicate key $key in HNSW index")
+  /** Insert a (rowid key, vector) pair; a key already present is rejected.
+    * A batch of one: the sequential insert of the paper. */
+  def add(key: Long, vec: Array[Float]): Unit = addAll(Array(key), Array(vec))
 
-    val level = (-math.log(rng.nextDouble()) * levelMult).toInt
-    val node = keys.length
-    keys += key
-    vecs += vec
-    nodeLevels += level
-    links += Array.fill(level + 1)(new IntBuf(capAt(0) min 8))
-    keyToNode(key) = node
-
-    if (entryPoint < 0) { entryPoint = node; topLevel = level; return }
-
-    var ep = entryPoint
-    // Greedy descent through levels above the insertion level.
-    var lc = topLevel
-    while (lc > level) {
-      ep = greedyClosest(vec, ep, lc)
-      lc -= 1
+  /**
+   * Insert `newKeys(i)` → `newVecs(i)` in order, in batches of a fixed
+   * schedule ([[HnswGraph.batchSize]]), each built on up to `threads`
+   * threads: the calling thread and daemon threads of a shared pool
+   * ([[HnswGraph.parallelFor]]). The graph is the same for any `threads`.
+   * A batch is checked (dimension, duplicate keys) before any of it is
+   * inserted; the batches before a failing one stay inserted.
+   */
+  def addAll(newKeys: Array[Long], newVecs: Array[Array[Float]], threads: Int = 1): Unit = {
+    require(newKeys.length == newVecs.length,
+      s"${newKeys.length} keys for ${newVecs.length} vectors")
+    var from = 0
+    while (from < newKeys.length) {
+      val n = batchSize(size, newKeys.length - from, size + newKeys.length - from)
+      insertBatch(newKeys, newVecs, from, n, threads)
+      from += n
     }
-    // Beam search + connect at each level from min(topLevel, level) down to 0.
-    lc = math.min(topLevel, level)
-    var eps = Array(ep)
-    while (lc >= 0) {
-      val (foundD, foundN) = searchLayer(vec, eps, efConstruction, lc)
-      val selected = selectNeighbors(vec, foundD, foundN, capAt(lc))
-      val lb = links(node)(lc)
-      var i = 0
-      while (i < selected.length) {
-        val nb = selected(i)
-        lb.add(nb)
-        val back = links(nb)(lc)
-        back.add(node)
-        if (back.size > capAt(lc)) shrink(nb, lc)
-        i += 1
+  }
+
+  /**
+   * Insert `newKeys`/`newVecs` [from, from + n) as one batch — the
+   * deterministic batch insertion of ParlayANN (Manohar et al., PPoPP 2024):
+   *  1. In input order, each new node draws its level from the seeded RNG
+   *     and is appended with empty adjacency.
+   *  2. In parallel, each new node descends and beam-searches the graph as
+   *     it stood when the batch began (no old node links to a new one yet)
+   *     and keeps the heuristic's neighbours as its own adjacency.
+   *  3. The reverse edges are grouped by (target, level), sources ascending.
+   *     In parallel, each target appends its group and, when over the level
+   *     cap, is pruned by [[shrink]].
+   * Each parallel step reads only the frozen graph and writes only its own
+   * node's (or target's) adjacency, so the graph does not depend on the
+   * thread count. An empty graph takes a batch of one (the schedule's first),
+   * which becomes the entry point.
+   */
+  private def insertBatch(newKeys: Array[Long], newVecs: Array[Array[Float]], from: Int,
+      n: Int, threads: Int): Unit = {
+    val inBatch = if (n > 1) new mutable.LongMap[Unit](n) else null
+    var j = from
+    while (j < from + n) {
+      val key = newKeys(j)
+      require(newVecs(j).length == dim,
+        s"HNSW index vector dimension mismatch: expected $dim, got ${newVecs(j).length}")
+      if (keyToNode.contains(key) || (inBatch != null && inBatch.contains(key)))
+        throw new IllegalArgumentException(s"duplicate key $key in HNSW index")
+      if (inBatch != null) inBatch(key) = ()
+      j += 1
+    }
+    val first = size
+    val (ep0, top0) = (entryPoint, topLevel)
+    j = from
+    while (j < from + n) {
+      val level = (-math.log(rng.nextDouble()) * levelMult).toInt
+      keyToNode(newKeys(j)) = keys.length
+      keys += newKeys(j)
+      vecs += newVecs(j)
+      nodeLevels += level
+      links += Array.fill(level + 1)(new IntBuf(capAt(0) min 8))
+      j += 1
+    }
+
+    if (ep0 >= 0) parallelFor(n, threads) { i =>
+      val node = first + i
+      val vec = vecs(node)
+      val level = nodeLevels(node)
+      var ep = ep0
+      // Greedy descent through levels above the insertion level.
+      var lc = top0
+      while (lc > level) {
+        ep = greedyClosest(vec, ep, lc)
+        lc -= 1
       }
-      eps = foundN
-      lc -= 1
+      // Beam search + select at each level from min(top, level) down to 0.
+      lc = math.min(top0, level)
+      var eps = Array(ep)
+      while (lc >= 0) {
+        val (foundD, foundN) = searchLayer(vec, eps, efConstruction, lc)
+        links(node)(lc).reset(selectNeighbors(vec, foundD, foundN, capAt(lc)))
+        eps = foundN
+        lc -= 1
+      }
     }
-    if (level > topLevel) { topLevel = level; entryPoint = node }
+
+    // Reverse edges keyed (target << 8 | level); levels stay below 64.
+    val reverse = mutable.LongMap.empty[IntBuf]
+    var node = first
+    while (node < first + n) {
+      var lc = math.min(top0, nodeLevels(node))
+      while (lc >= 0) {
+        val nbs = links(node)(lc)
+        var i = 0
+        while (i < nbs.size) {
+          reverse.getOrElseUpdate(nbs(i).toLong << 8 | lc, new IntBuf(4)).add(node)
+          i += 1
+        }
+        lc -= 1
+      }
+      node += 1
+    }
+    val groups = reverse.toArray
+    parallelFor(groups.length, threads) { g =>
+      val (key, sources) = groups(g)
+      val target = (key >>> 8).toInt
+      val level = (key & 0xff).toInt
+      val back = links(target)(level)
+      var i = 0
+      while (i < sources.size) { back.add(sources(i)); i += 1 }
+      if (back.size > capAt(level)) shrink(target, level)
+    }
+
+    node = first
+    while (node < first + n) {
+      if (nodeLevels(node) > topLevel) { topLevel = nodeLevels(node); entryPoint = node }
+      node += 1
+    }
   }
 
   /** Greedy single-entry descent used above the target level. */
@@ -152,8 +235,10 @@ final class HnswGraph(
 
   /**
    * Beam search at one level: returns up to `ef` nearest (dists, nodes)
-   * parallel arrays, sorted ascending by distance. Primitive binary heaps —
-   * the hot path of both build and search; no boxing.
+   * parallel arrays, sorted ascending by distance. Primitive binary heaps
+   * and an epoch-stamped visited array, reused per thread
+   * ([[HnswGraph.Scratch]]) — the hot path of both build and search; no
+   * boxing, no per-call allocation beyond the result.
    *
    * `allowed` (null = every node) bounds what enters the result: the
    * traversal still expands a disallowed node closer than the ef-th allowed
@@ -162,14 +247,14 @@ final class HnswGraph(
    */
   private def searchLayer(q: Array[Float], eps: Array[Int], ef: Int, level: Int,
       allowed: java.util.BitSet = null): (Array[Double], Array[Int]) = {
-    val visited = new java.util.BitSet(size)
-    val candidates = new HnswGraph.Heap(math.max(ef, 16), minHeap = true)
-    val results = new HnswGraph.Heap(ef + 1, minHeap = false) // root = worst kept
+    val scratch = HnswGraph.scratch.get()
+    scratch.begin(size)
+    val candidates = scratch.candidates
+    val results = scratch.results // root = worst kept
     var i = 0
     while (i < eps.length) {
       val ep = eps(i)
-      if (!visited.get(ep)) {
-        visited.set(ep)
+      if (scratch.visit(ep)) {
         val d = distTo(ep, q)
         candidates.push(d, ep)
         if (allowed == null || allowed.get(ep)) {
@@ -191,8 +276,7 @@ final class HnswGraph(
         var j = 0
         while (j < nbs.size) {
           val nb = nbs(j)
-          if (!visited.get(nb)) {
-            visited.set(nb)
+          if (scratch.visit(nb)) {
             val d = distTo(nb, q)
             if (results.size < ef || d < results.topDist) {
               candidates.push(d, nb)
@@ -459,6 +543,93 @@ object HnswGraph {
     g
   }
 
+  /** Largest insertion batch, as a fraction of the graph an [[HnswGraph.addAll]]
+    * call ends with — ParlayANN's default (Manohar et al., PPoPP 2024). */
+  val MaxBatchFraction = 0.02
+
+  /** The next batch of an insertion that has `remaining` vectors left and
+    * ends with a graph of `total`: as many as the graph holds (prefix
+    * doubling; one into an empty graph), at most [[MaxBatchFraction]] of
+    * `total`, at least one. */
+  private[index] def batchSize(size: Int, remaining: Int, total: Int): Int =
+    math.min(remaining, math.max(1, math.min(size, (total * MaxBatchFraction).toInt)))
+
+  /** The build's worker threads: daemon threads shared by every build in the
+    * JVM, created on demand and retired after a minute idle. */
+  private lazy val pool: java.util.concurrent.ExecutorService = {
+    val made = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"hnsw-build-${made.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  /** `body(i)` for every i in [0, n), on the calling thread and up to
+    * `threads - 1` pool threads, each taking the next index in turn. The
+    * first error stops every worker from taking another index and is
+    * rethrown here once the pool threads have stopped; an interrupt of the
+    * calling thread is rethrown at once, the workers stopping after their
+    * current index. */
+  private[graft] def parallelFor(n: Int, threads: Int)(body: Int => Unit): Unit = {
+    val workers = math.min(threads, n)
+    if (workers <= 1) {
+      var i = 0
+      while (i < n) { body(i); i += 1 }
+      return
+    }
+    val next = new java.util.concurrent.atomic.AtomicInteger
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val work: Runnable = () => {
+      var i = next.getAndIncrement()
+      while (i < n && failure.get == null) {
+        try body(i) catch { case t: Throwable => failure.compareAndSet(null, t) }
+        i = next.getAndIncrement()
+      }
+    }
+    val helpers = Seq.fill[java.util.concurrent.Future[_]](workers - 1)(pool.submit(work))
+    work.run()
+    helpers.foreach { f =>
+      try f.get() catch {
+        case e: InterruptedException => failure.compareAndSet(null, e); throw e
+      }
+    }
+    val t = failure.get
+    if (t != null) throw t
+  }
+
+  /** One thread's search state, reused by every search the thread runs:
+    * an epoch-stamped visited array (a node is visited when its stamp is
+    * the current epoch, so starting a search clears nothing) and the two
+    * heaps. It grows to at most twice the largest graph the thread has
+    * searched (4 bytes a node). */
+  private final class Scratch {
+    private var stamps = new Array[Int](0)
+    private var epoch = 0
+    val candidates = new Heap(16, minHeap = true)
+    val results = new Heap(16, minHeap = false)
+
+    /** Start a search of a graph of `nodes` nodes: nothing visited, heaps empty. */
+    def begin(nodes: Int): Unit = {
+      if (stamps.length < nodes) {
+        stamps = new Array[Int](math.max(nodes, 2 * stamps.length))
+        epoch = 0
+      } else if (epoch == Int.MaxValue) {
+        java.util.Arrays.fill(stamps, 0)
+        epoch = 0
+      }
+      epoch += 1
+      candidates.clear()
+      results.clear()
+    }
+
+    /** Mark `node` visited; false when it already was. */
+    def visit(node: Int): Boolean =
+      if (stamps(node) == epoch) false else { stamps(node) = epoch; true }
+  }
+
+  private val scratch: ThreadLocal[Scratch] = ThreadLocal.withInitial(() => new Scratch)
+
   /**
    * Primitive binary heap over (dist, node) parallel arrays. `minHeap=true`
    * pops the smallest distance (candidate frontier); `minHeap=false` pops
@@ -471,6 +642,7 @@ object HnswGraph {
     @inline private def better(a: Double, b: Double): Boolean =
       if (minHeap) a < b else a > b
     def size: Int = n
+    def clear(): Unit = n = 0
     def topDist: Double = ds(0)
     def topNode: Int = ns(0)
     def push(d: Double, node: Int): Unit = {
@@ -519,8 +691,9 @@ object HnswGraph {
     }
   }
 
-  /** In-place insertion sort of parallel arrays by ascending distance
-    * (adjacency lists are tiny — at most M0+1 entries). */
+  /** In-place stable insertion sort of parallel arrays by ascending
+    * distance (adjacency lists are short — the level cap plus one batch's
+    * reverse edges). */
   private[index] def sortPairsAsc(ds: Array[Double], ns: Array[Int], n: Int): Unit = {
     var i = 1
     while (i < n) {

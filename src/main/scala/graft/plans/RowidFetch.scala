@@ -10,8 +10,9 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkContext
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression,
-  NamedExpression, Predicate, PredicateHelper, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BindReferences,
+  Expression, InterpretedUnsafeProjection, NamedExpression, Predicate, PredicateHelper,
+  UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.SparkSession
@@ -71,13 +72,15 @@ import org.apache.spark.sql.types.StructType
  *    unchanged, as a listing made before any read would name it.
  *  - **Execution.** The rowid membership, the condition and the projection
  *    (for the allow-list, the condition) are applied by one partition
- *    function, which builds its predicate and projection there (the codegen
- *    cache serves every query of a shape): on the driver over cached rows,
- *    and in a `FileScanRDD` (input metrics, missing and corrupt file
- *    handling, `FAILED_READ_FILE` errors) over streamed splits, in the
- *    calling thread ([[Bridge.collectInThread]]). Splits that pack into more
- *    than one partition are read through the pushed reader, as one job, and
- *    never cached.
+ *    function. A fetch tests membership first and evaluates the condition
+ *    and projection, interpreted, only on the rows that pass it; the
+ *    allow-list pass, which tests every row, generates its predicate (the
+ *    codegen cache serves every query of a shape). The function runs on the
+ *    driver over cached rows, and in a `FileScanRDD` (input metrics,
+ *    missing and corrupt file handling, `FAILED_READ_FILE` errors) over
+ *    streamed splits, in the calling thread ([[Bridge.collectInThread]]).
+ *    Splits that pack into more than one partition are read through the
+ *    pushed reader, as one job, and never cached.
  */
 private[graft] object RowidFetch extends PredicateHelper {
 
@@ -131,9 +134,20 @@ private[graft] object RowidFetch extends PredicateHelper {
     val sorted = hits.sorted
     read(session, relation, idAttr, fetchList.flatMap(_.references), condition, Some(sorted)) {
       (rowAttrs, idOrdinal) => (i, rows) =>
-        val keep = condition.map { c => val p = Predicate.create(c, rowAttrs); p.initialize(i); p }
-        val project = UnsafeProjection.create(fetchList, rowAttrs)
-        project.initialize(i)
+        // Rowid membership first; the condition and the projection run
+        // interpreted on the at most k rows that pass it, which costs less
+        // than generating their code.
+        val keep = condition.map { c =>
+          val p = Predicate.createInterpreted(BindReferences.bindReference(c, rowAttrs))
+          p.initialize(i)
+          p
+        }
+        val project = {
+          val p = InterpretedUnsafeProjection.createProjection(
+            BindReferences.bindReferences[Expression](fetchList, rowAttrs))
+          p.initialize(i)
+          p
+        }
         rows.filter { r =>
           !r.isNullAt(idOrdinal) &&
             java.util.Arrays.binarySearch(sorted, r.getLong(idOrdinal)) >= 0 &&

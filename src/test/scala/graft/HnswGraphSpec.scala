@@ -37,19 +37,23 @@ class HnswGraphSpec extends AnyFunSuite {
     val n = 2000
     val dim = 16
     val vecs = Array.fill(n)(Array.fill(dim)(rnd.nextFloat()))
-    val g = new HnswGraph(dim, "l2sq")
-    vecs.zipWithIndex.foreach { case (v, i) => g.add(i.toLong, v) }
-    var recallSum = 0.0
-    val trials = 20
-    for (t <- 0 until trials) {
-      val q = Array.fill(dim)(rnd.nextFloat())
-      val exact = vecs.zipWithIndex
-        .map { case (v, i) => (i.toLong, graft.expressions.VectorMath.l2Squared(q, v)) }
-        .sortBy(_._2).take(10).map(_._1).toSet
-      val approx = g.search(q, 10, ef = 64).map(_._1).toSet
-      recallSum += (exact & approx).size / 10.0
+    val sequential = new HnswGraph(dim, "l2sq")
+    vecs.zipWithIndex.foreach { case (v, i) => sequential.add(i.toLong, v) }
+    val batched = new HnswGraph(dim, "l2sq")
+    batched.addAll(vecs.indices.map(_.toLong).toArray, vecs, threads = 4)
+    val queries = Array.fill(20)(Array.fill(dim)(rnd.nextFloat()))
+    for ((name, g) <- Seq("sequential" -> sequential, "batch" -> batched)) {
+      var recallSum = 0.0
+      for (q <- queries) {
+        val exact = vecs.zipWithIndex
+          .map { case (v, i) => (i.toLong, graft.expressions.VectorMath.l2Squared(q, v)) }
+          .sortBy(_._2).take(10).map(_._1).toSet
+        val approx = g.search(q, 10, ef = 64).map(_._1).toSet
+        recallSum += (exact & approx).size / 10.0
+      }
+      val recall = recallSum / queries.length
+      assert(recall >= 0.95, s"$name recall $recall < 0.95")
     }
-    assert(recallSum / trials >= 0.95, s"recall ${recallSum / trials} < 0.95")
   }
 
   test("cosine and ip metrics order correctly") {
@@ -147,6 +151,76 @@ class HnswGraphSpec extends AnyFunSuite {
       System.clearProperty("graft.graphCache.maxBytes")
       GraphCache.invalidate(dir.getAbsolutePath)
     }
+  }
+
+  /** `n` serve-shaped vectors: 32 Gaussian clusters in a 12-dim latent
+    * space, projected to `dim` dimensions, plus a little noise. Streams
+    * differ by `stream` and share the clusters of `seed`. */
+  private def clustered(seed: Long, stream: Long, n: Int, dim: Int): Array[Array[Float]] = {
+    val init = new Random(seed)
+    val latent = 12
+    val proj = Array.fill(latent, dim)((init.nextGaussian() / math.sqrt(latent)).toFloat)
+    val centers = Array.fill(32, latent)((init.nextGaussian() * 2.0).toFloat)
+    val r = new Random(seed * 1000003L + stream)
+    Array.fill(n) {
+      val c = centers(r.nextInt(centers.length))
+      val z = Array.tabulate(latent)(i => c(i) + r.nextGaussian().toFloat)
+      Array.tabulate(dim)(j =>
+        (0 until latent).map(i => z(i) * proj(i)(j)).sum + 0.05f * r.nextGaussian().toFloat)
+    }
+  }
+
+  private def bytesOf(g: HnswGraph): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    g.write(new DataOutputStream(bos))
+    bos.toByteArray
+  }
+
+  private def batchBuilt(vecs: Array[Array[Float]], threads: Int): HnswGraph = {
+    val g = new HnswGraph(vecs.head.length, "l2sq")
+    g.addAll(vecs.indices.map(_.toLong).toArray, vecs, threads)
+    g
+  }
+
+  test("batch build: the same 3,000 vectors give byte-identical files on 1 and 4 threads") {
+    val vecs = clustered(5, 1, 3000, 32)
+    val one = batchBuilt(vecs, threads = 1)
+    assert(one.size == 3000)
+    assert(java.util.Arrays.equals(bytesOf(one), bytesOf(batchBuilt(vecs, threads = 4))))
+  }
+
+  test("batch build keeps recall@10 at ef=64 within 0.005 of the sequential build") {
+    val vecs = clustered(9, 1, 3000, 32)
+    val queries = clustered(9, 2, 200, 32)
+    val sequential = new HnswGraph(32, "l2sq")
+    vecs.indices.foreach(i => sequential.add(i.toLong, vecs(i)))
+    def recall(g: HnswGraph): Double = queries.map { q =>
+      val exact = vecs.indices
+        .sortBy(i => graft.expressions.VectorMath.l2Squared(q, vecs(i))).take(10).map(_.toLong).toSet
+      g.search(q, 10, ef = 64).count(h => exact.contains(h._1)) / 10.0
+    }.sum / queries.length
+    val seq = recall(sequential)
+    val batch = recall(batchBuilt(vecs, threads = 4))
+    assert(batch >= seq - 0.005, s"batch recall $batch vs sequential $seq")
+  }
+
+  test("a worker's error fails the build with that error; build threads are daemons") {
+    val boom = new IllegalStateException("worker failed")
+    val ran = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalStateException](HnswGraph.parallelFor(64, 4) { _ =>
+      Thread.sleep(1)
+      ran.incrementAndGet()
+      if (Thread.currentThread.getName.startsWith("hnsw-build-")) throw boom
+    })
+    assert(e eq boom)
+    assert(ran.get < 64, "workers kept taking indices after the error")
+    import scala.jdk.CollectionConverters._
+    val builders = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("hnsw-build-"))
+    assert(builders.nonEmpty && builders.forall(_.isDaemon))
+    // The pool still serves the next build.
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    HnswGraph.parallelFor(100, 4)(i => seen.add(i))
+    assert(seen.asScala.toSeq.sorted == (0 until 100))
   }
 
   test("exhaustive beam (ef >= n) on connected graph is exact") {

@@ -199,6 +199,46 @@ class HnswIndexSpec extends SparkSuite {
     Hnsw.dropIndex(spark, "recall_idx")
   }
 
+  test("build threads: the session's cores shared among segments, one each when segments >= cores") {
+    assert(Hnsw.buildThreads(parallelism = 4, segments = 1, processors = 4) == 4)
+    assert(Hnsw.buildThreads(parallelism = 4, segments = 2, processors = 4) == 2)
+    assert(Hnsw.buildThreads(parallelism = 4, segments = 3, processors = 4) == 1)
+    assert(Hnsw.buildThreads(parallelism = 4, segments = 4, processors = 4) == 1)
+    assert(Hnsw.buildThreads(parallelism = 4, segments = 9, processors = 4) == 1)
+    // Capped at the executor's processors.
+    assert(Hnsw.buildThreads(parallelism = 16, segments = 1, processors = 4) == 4)
+  }
+
+  test("createIndex takes the dimension from its segments: no job before the build") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-dim").toFile
+    val path = new java.io.File(dir, "t").getAbsolutePath
+    (0 until 300).map(i => (i.toLong, Array.fill(4)(i.toFloat))).toDF("id", "vec")
+      .withColumn("vec", col("vec").cast("array<float>")).write.parquet(path)
+    val df = spark.read.parquet(path)
+    val (meta, jobs) = jobsOf(Hnsw.createIndex(spark, "dim_idx", df, "vec", "id", overwrite = true))
+    assert(meta.dim == 4 && meta.count == 300)
+    // The count (two jobs under AQE), the range partitioner's sample and the
+    // build; a head(1) for the dimension would be a fifth.
+    assert(jobs == 4, s"createIndex ran $jobs jobs")
+    Hnsw.dropIndex(spark, "dim_idx")
+  }
+
+  test("segments that disagree on the dimension fail the build") {
+    import spark.implicits._
+    val mixed = Seq((1L, Array(1f, 2f, 3f)), (2L, Array(2f, 3f, 4f)),
+      (3L, Array(1f, 2f, 3f, 4f)), (4L, Array(2f, 3f, 4f, 5f))).toDF("id", "vec")
+      .withColumn("vec", col("vec").cast("array<float>"))
+    spark.conf.set(Hnsw.MaxVectorsPerPartitionKey, "2") // ids 1-2 and 3-4
+    try {
+      val e = intercept[IllegalArgumentException](
+        Hnsw.createIndex(spark, "mixed_idx", mixed, "vec", "id", overwrite = true))
+      assert(e.getMessage.contains("dimension mismatch"), e.getMessage)
+      assert(!IndexCatalog.exists(base, "mixed_idx"))
+      assert(IndexCatalog.indexDir(base, "mixed_idx").list().forall(!_.endsWith(".hnsw")))
+    } finally spark.conf.unset(Hnsw.MaxVectorsPerPartitionKey)
+  }
+
   test("dropIndex removes artifacts") {
     Hnsw.createIndex(spark, "tmp_idx", gridDf, "vec", "id", overwrite = true)
     assert(Hnsw.dropIndex(spark, "tmp_idx"))

@@ -327,23 +327,6 @@ class HnswRewriteSpec extends SparkSuite {
       case e: graft.plans.HnswIndexScanExec => e
     }.getOrElse(fail(df.queryExecution.executedPlan.toString))
 
-  /** Jobs `body` starts, counted by a listener read after a bus drain. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.graftbridge.Bridge
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    Bridge.drainListenerBus(spark, 60000)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      Bridge.drainListenerBus(spark, 60000)
-      (r, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("scan is top-k plan root: 0 jobs on 1-2 files, 1 per split round, no compile") {
     import org.apache.spark.metrics.source.CodegenMetrics
     val first = servedQuery(1)

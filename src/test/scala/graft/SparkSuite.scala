@@ -39,4 +39,21 @@ object SparkSuite {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
   def sf(s: String): String = s"/root/testdata/sf$s"
+
+  /** Jobs `body` starts, counted by a listener read after a bus drain. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark, 60000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      Bridge.drainListenerBus(spark, 60000)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

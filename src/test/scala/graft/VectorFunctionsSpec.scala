@@ -23,6 +23,23 @@ class VectorFunctionsSpec extends SparkSuite {
     assert(got.toSeq == Seq(0.0, 1.0, 1.0))
   }
 
+  test("lit_vector is one ARRAY<FLOAT> literal over a copy of its input, named by its SQL") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val v = Array(1f, 2f, 3f)
+    val c = lit_vector(v)
+    v(0) = 9f
+    functions.expr(c) match {
+      case Literal(a: org.apache.spark.sql.catalyst.util.ArrayData, t) =>
+        assert(t == ArrayType(FloatType, containsNull = true))
+        assert(a.toFloatArray().toSeq == Seq(1f, 2f, 3f))
+      case other => fail(s"not one literal: $other")
+    }
+    val names = Seq.fill(2)(grid729.select(array_distance(col("vec"), lit_vector(Array(1f, 2f, 3f))))
+      .columns.head)
+    assert(names.distinct.size == 1 && names.head.startsWith("array_distance(vec, ARRAY("), names.head)
+  }
+
   test("distance functions: known values") {
     val df = Seq((Array(1f, 2f, 3f), Array(4f, 6f, 8f))).toDF("a", "b")
     val row = df.select(
