@@ -135,10 +135,14 @@ object Bridge {
     * r11 first cut ran the eager stages at the session-default 4 MB
     * splits, outside any caller conf scope, which cost the narrow paths
     * more than the recompute they saved). Without AQE the RDD executes
-    * lazily at action time like any plan. */
-  def rddBarrier(df: DataFrame): DataFrame = {
+    * lazily at action time like any plan. `sizedBy` names the frame whose
+    * static input estimate sizes that scope: a frame built over another
+    * barrier must size by the original input, not by the barrier leaf. */
+  def rddBarrier(df: DataFrame): DataFrame = rddBarrier(df, df)
+
+  def rddBarrier(df: DataFrame, sizedBy: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    val plan = graft.spark.ExecTuning.withSizedAqe(df) {
+    val plan = graft.spark.ExecTuning.withSizedAqe(sizedBy) {
       org.apache.spark.sql.execution.LogicalRDD
         .fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false)
     }

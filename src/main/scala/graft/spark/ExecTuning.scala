@@ -54,6 +54,53 @@ object ExecTuning {
     df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
 
+  /** The session's broadcast threshold in bytes. Plain-long spelling is
+    * tried FIRST: "-1" (the standard disable value) throws in
+    * byteStringAsBytes, and the old parse fell back to the 10 MB default —
+    * making the documented "threshold <= 0 => guard not needed" branch
+    * unreachable with broadcast disabled (r16 ADVICE). A byte-suffixed
+    * spelling — the session default reads "10MB" — parses as bytes. */
+  private[graft] def sessionBroadcastThreshold(
+      spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption
+        .orElse(scala.util.Try(
+          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)).toOption))
+      .getOrElse(10L << 20)
+
+  /** Does re-deriving `df` re-execute an exchange? A bare (projected,
+    * filtered) scan re-reads its pruned columns cheaply, and a join whose
+    * one side is broadcast-sized by stats re-runs as a map-side probe —
+    * but a window, an aggregate, or a join BOTH of whose sides are big
+    * re-executes exchanges per consumer. The one test behind every
+    * "evaluate a composed input once" decision: `Mix`'s shared wide
+    * exchange (an expensive upstream amortized across the prefix sum's
+    * consumers) and `Dedup.dropNearDuplicates`' re-rooted input (its five
+    * consumers read one executed RDD). Cheap-to-re-run inputs keep their
+    * column-pruned plans — a 100 TB corpus with a tiny dim-table
+    * broadcast join in its lineage must NOT be forced through a full-row
+    * exchange (round-10 review). */
+  private[graft] def nontrivialUpstream(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.{logical => l}
+    try {
+      // When broadcast joins are DISABLED (threshold <= 0) this test still
+      // asks "is the small side dim-sized?" against the 10 MB default: a
+      // session that turns broadcasting off must not reclassify a 100 TB
+      // corpus's one tiny dim join as expensive (r10 advice). The re-run
+      // cost being estimated is a shuffle-join probe then — more than a
+      // broadcast probe, but still nothing like re-running a real
+      // multi-exchange upstream.
+      val conf = sessionBroadcastThreshold(df.sparkSession)
+      val bcast = if (conf <= 0) 10L << 20 else conf
+      df.queryExecution.optimizedPlan.exists {
+        case j: l.Join =>
+          j.left.stats.sizeInBytes.min(j.right.stats.sizeInBytes) > bcast
+        case _: l.Aggregate | _: l.Window => true
+        case _ => false
+      }
+    } catch { case _: Exception => false }
+  }
+
   /** Session conf as Long, naming the offending key on a bad value — the
     * one copy of the parse-with-context idiom every numeric knob uses. */
   private[graft] def confLong(spark: org.apache.spark.sql.SparkSession,

@@ -37,7 +37,12 @@ import TextFunctions._
  * propagation, [[signBuckets]]'s split loop) persist per-round state while
  * they run, then release it and hand back their small fixpoint as
  * executor-local `localCheckpoint` blocks (outside the SQL cache, freed by
- * the context cleaner when the result is dropped).
+ * the context cleaner when the result is dropped). Frames read across
+ * several actions ([[dropNearDuplicates]]' keeper ids, and its input when
+ * that is a composed upstream) are re-rooted over their executed RDD
+ * (`Bridge.rddBarrier`) instead: that caches nothing and keeps lineage —
+ * later jobs skip the map stages whose shuffle output already exists,
+ * and a lost shuffle file recomputes from the plan as any exchange does.
  */
 object Dedup {
 
@@ -59,11 +64,13 @@ object Dedup {
     * [[exactDupGroups]]. One hash-partitioned window shuffle (no second
     * corpus exchange, unlike a groupBy + self-semi-join spelling). NULL
     * texts pass through untouched: they are unknown content, not
-    * byte-identical to each other. */
+    * byte-identical to each other. A NULL id sorts LAST (DuckDB's default
+    * order, and `min` — [[exactDupGroups]]' keep_id — ignores NULLs), so
+    * it is kept only when its whole group has NULL ids. */
   def dropExactDuplicates(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(TextFunctions.md5Hex(col(textCol)))
-      .orderBy(col(idCol))
+      .orderBy(col(idCol).asc_nulls_last)
     df.withColumn("_dedup_rn", row_number().over(w))
       .where(col(textCol).isNull || col("_dedup_rn") === 1)
       .drop("_dedup_rn")
@@ -461,15 +468,17 @@ object Dedup {
     // without caching it.
     val sigs = minHashSignatures(df, textCol, idCol, shingleN, k, seed)
     verifiedPairs(df, sigs, textCol, idCol, threshold, shingleN, k,
-      bands, maxBucketSize, sigsBehindExchange = false)
+      bands, maxBucketSize, sortBarrier = true, sizedBy = df)
   }
 
   /** Band join + exact-Jaccard verification over prepared (id, sig) rows —
-    * the shared tail of [[nearDupPairs]] and [[dropNearDuplicates]]. */
+    * the shared tail of [[nearDupPairs]] and [[dropNearDuplicates]]. `df`
+    * supplies the shingle sets; `sizedBy` is the frame whose static input
+    * estimate drives the size gates (the caller's ORIGINAL input, even
+    * when `df` is a re-rooted barrier over it). */
   private def verifiedPairs(df: DataFrame, sigs: DataFrame, textCol: String,
       idCol: String, threshold: Double, shingleN: Int, k: Int, bands: Int,
-      maxBucketSize: Int = 0, sigsBehindExchange: Boolean = false,
-      sortBarrier: Boolean = true): DataFrame = {
+      maxBucketSize: Int, sortBarrier: Boolean, sizedBy: DataFrame): DataFrame = {
     // The signature frame feeds several subtrees (the pair join's two
     // sides — one canonicalized exchange — plus the occupancy counts and
     // the occupancy semi-join in lshCandidateIds). A bare map-only sigs
@@ -482,16 +491,12 @@ object Dedup {
     // Everything stays lazy — AQE's stage cache reuses the materialized
     // stages across consumers, and keeps exact runtime sizes so the
     // semi-join flips to broadcast when the candidate set is small.
-    // Map-only sigs (nearDupPairs): ALWAYS exchange — each of the 3+
-    // candidate-stage subtrees otherwise re-minhashes the corpus from
-    // the scan, and even at the sf0.1 floor the exchange wins (1.36 vs
-    // 1.48 s measured). Sigs already behind a caller's exchange
-    // (dropNearDuplicates' exact-dup window): exchange only above
-    // SigsExchangeMinBytes — below it the extra hop costs more than the
-    // cheap post-exchange re-projection it dedupes (measured +0.6 s on
-    // the floor), while at 10x+ scale the pruning-split window subtrees
-    // stop canonicalizing to one exchange and the explicit one wins
-    // (kept 38.8 -> 32.8 s at derived sf10).
+    // Both callers' sigs are map-side over their input (the keeper semi
+    // join of dropNearDuplicates is a broadcast probe at the floor), so
+    // without the exchange each of the 3+ candidate-stage subtrees
+    // re-minhashes the corpus; it runs unless the pair join is the only
+    // consumer (the semi skip below), and even at the sf0.1 floor it wins
+    // (1.36 vs 1.48 s measured).
     // Candidate-semi size gate (round 10): below CandidateSemiMinBytes the
     // per-doc sets relation is SMALL — the verify joins broadcast it
     // statically (parquet size stats drive autoBroadcastJoinThreshold) —
@@ -517,19 +522,14 @@ object Dedup {
     val semiMin = graft.spark.ExecTuning.confLong(df.sparkSession,
       CandidateSemiMinBytesKey, DefaultCandidateSemiMinBytes)
     val semiSkipped = semiMin > 0 &&
-      (try graft.spark.ExecTuning.inputBytes(df) < semiMin
-       catch { case _: Exception => false })
-    val sigsMin = graft.spark.ExecTuning.confLong(df.sparkSession,
-      SigsExchangeMinBytesKey, DefaultSigsExchangeMinBytes)
-    val sigsSmall = sigsBehindExchange && sigsMin > 0 &&
-      (try graft.spark.ExecTuning.inputBytes(df) < sigsMin
+      (try graft.spark.ExecTuning.inputBytes(sizedBy) < semiMin
        catch { case _: Exception => false })
     // The semi-skip only removes the sigs exchange when the pair join is
     // genuinely the signature frame's ONLY consumer: a maxBucketSize cap
     // rebuilds key sets through occupancy counts + a semi join, giving
     // sigs several non-canonicalizing consumers again (each would
     // re-minhash the corpus from the scan).
-    val sigsX = if (sigsSmall || (semiSkipped && maxBucketSize == 0)) sigs
+    val sigsX = if (semiSkipped && maxBucketSize == 0) sigs
       else sigs.repartition(
         df.sparkSession.sparkContext.defaultParallelism, col("id"))
     val keyed = explodedBandKeySets(sigsX, k, bands, maxBucketSize)
@@ -547,7 +547,7 @@ object Dedup {
     val sets = if (semiSkipped) allSets
       else allSets.join(lshCandidateIds(keyed), Seq("id"), "left_semi")
     verifyJaccard(cands, sets, threshold, sortBarrier,
-      hugeSets = setsExceedBroadcast(df))
+      hugeSets = setsExceedBroadcast(sizedBy))
   }
 
   /** Fault-tolerance escape hatch for the lineage-truncating
@@ -671,19 +671,6 @@ object Dedup {
     * hashed-relation overhead. Used by [[setsExceedBroadcast]]. */
   private val SetsExplosionFactor = 16L
 
-  /** The session's broadcast threshold in bytes. Plain-long spelling is
-    * tried FIRST: "-1" (the standard disable value) throws in
-    * byteStringAsBytes, and the old parse fell back to the 10 MB default —
-    * making the documented "threshold <= 0 => guard not needed" branch
-    * unreachable with broadcast disabled (r16 ADVICE). */
-  private[graft] def sessionBroadcastThreshold(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption
-        .orElse(scala.util.Try(
-          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)).toOption))
-      .getOrElse(10L << 20)
-
   /** Would the per-doc shingle-set relation derived from this corpus
     * overflow the session's broadcast regime once MATERIALIZED? The
     * planner's own estimate is the parquet byte count — measured at
@@ -695,7 +682,7 @@ object Dedup {
     * autoBroadcastJoinThreshold; threshold <= 0 (broadcast disabled)
     * never needs the guard. */
   private[graft] def setsExceedBroadcast(df: DataFrame): Boolean = {
-    val thr = sessionBroadcastThreshold(df.sparkSession)
+    val thr = graft.spark.ExecTuning.sessionBroadcastThreshold(df.sparkSession)
     if (thr <= 0) false
     else (try graft.spark.ExecTuning.inputBytes(df)
           catch { case _: Exception => return false }) * SetsExplosionFactor > thr
@@ -710,18 +697,10 @@ object Dedup {
     * estimate, and with AQE off at the small-query floor the planner
     * would otherwise fall back to a shuffle join). */
   private[graft] def corpusWithinBroadcast(df: DataFrame): Boolean = {
-    val thr = sessionBroadcastThreshold(df.sparkSession)
+    val thr = graft.spark.ExecTuning.sessionBroadcastThreshold(df.sparkSession)
     thr > 0 && (try graft.spark.ExecTuning.inputBytes(df) <= thr
       catch { case _: Exception => false })
   }
-
-  /** Corpus-size floor under which [[verifiedPairs]] skips the explicit
-    * signature exchange (0 disables the skip — always exchange). Above
-    * it, one (id, sig) shuffle saves each candidate-stage subtree a full
-    * minhash-the-corpus recompute; below it the recompute is cheaper
-    * than the exchange's scheduling. */
-  private[graft] val SigsExchangeMinBytesKey = "spark.graft.dedup.sigsExchangeMinBytes"
-  private[graft] val DefaultSigsExchangeMinBytes: Long = 16L << 20
 
   /** Payload fetch for verification: restrict `sh` (any (id, payload)
     * frame) to the ids appearing in candidate pairs via semi-join, so
@@ -1009,12 +988,30 @@ object Dedup {
    * member shares its keeper's text, so any near-dup connectivity it had
    * flows through the keeper, and the keeper (group min) can only lose to a
    * smaller cluster min the member would also have lost to.
+   *
+   * The input is read by five consumers — the keeper aggregate, the
+   * exact-loser anti join, the signatures, the verify's shingle sets and
+   * the final anti join — spread over several Spark actions (the
+   * connected-components probe runs at construction; the caller's action
+   * runs the rest). When re-deriving the input re-runs an exchange
+   * (`ExecTuning.nontrivialUpstream`: a composed upstream such as scrub →
+   * quality → decontamination → the exact-dedup window), the input is
+   * re-rooted ONCE over its executed RDD (`Bridge.rddBarrier`) and every
+   * consumer reads that frame: the upstream's map stages run in the first
+   * job and are skipped in every later one, and nothing is persisted. A
+   * bare or filtered scan re-reads its pruned columns cheaply and keeps
+   * the un-rooted plan. Every size decision reads the ORIGINAL input's
+   * estimate, so a re-rooted leaf never flips a plan.
    */
   def dropNearDuplicates(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.8, shingleN: Int = 3, k: Int = 64, bands: Int = 16,
       seed: Long = 42L, maxIterations: Int = 10,
       maxBucketSize: Int = 0): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
+    // Evaluated once per call, not once per consumer (see the scaladoc).
+    // `df` stays the size reference for every gate below.
+    val in = if (graft.spark.ExecTuning.nontrivialUpstream(df)) Bridge.rddBarrier(df)
+      else df
     // Keeper ids (smallest id per identical-text group) from ONE narrow
     // aggregate: min(id) partial-combines map-side and only
     // (16-byte md5-longs hash, id) rows shuffle. The r9 spelling ran a
@@ -1026,7 +1023,7 @@ object Dedup {
     // NULL-text rows never enter the dedup logic (md5(NULL) would pool
     // them into one bogus "exact-dup" group); absent from both loser sets,
     // they all survive the final anti-join untouched.
-    val keepersAgg = df.where(col(textCol).isNotNull)
+    val keepersAgg = in.where(col(textCol).isNotNull)
       .select(TextFunctions.md5Longs(col(textCol)).as("_h"),
         col(idCol).cast("long").as("id"))
       .groupBy(col("_h")).agg(min(col("id")).as("id"))
@@ -1047,10 +1044,10 @@ object Dedup {
     // regime the keeper relation is corpus-correlated and the planner's
     // shuffle choice is right anyway (AQE is on there and refines it at
     // runtime).
-    val keepersRdd = org.apache.spark.sql.graftbridge.Bridge.rddBarrier(keepersAgg)
+    val keepersRdd = Bridge.rddBarrier(keepersAgg, sizedBy = df)
     val keepers =
       if (corpusWithinBroadcast(df)) broadcast(keepersRdd) else keepersRdd
-    val exactLosers = df.where(col(textCol).isNotNull)
+    val exactLosers = in.where(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("id"))
       .join(keepers, Seq("id"), "left_anti")
     // LSH over exact-dup representatives only: byte-identical documents all
@@ -1069,23 +1066,18 @@ object Dedup {
     // NOT spread — same re-measured no-go as [[nearDupPairs]] (r17 ABBA
     // post-probe-restructure: the floor kernels overlap as concurrent
     // broadcast futures; a shared spread exchange only adds a hop).
-    val sigs = df.select(col(idCol).cast("long").as("id"),
+    val sigs = in.select(col(idCol).cast("long").as("id"),
         minhashText(col(textCol), shingleN, k, seed).as("sig"))
       .where(size(col("sig")) > 0)
       .join(keepers, Seq("id"), "left_semi")
-    // sigsBehindExchange = false: the keeper semi join is map-side under a
-    // broadcast, so re-deriving sigs re-runs minhash — the explicit
-    // exchange always pays for itself across the 3+ candidate-stage
-    // consumers (the map-only-sigs policy).
     // sortBarrier = false: the pairs feed nearDupClusters' persist, not a
     // sort — the barrier exchange would be a pure extra hop.
-    val pairs = verifiedPairs(df, sigs, textCol, idCol, threshold,
-      shingleN, k, bands, maxBucketSize, sigsBehindExchange = false,
-      sortBarrier = false)
+    val pairs = verifiedPairs(in, sigs, textCol, idCol, threshold,
+      shingleN, k, bands, maxBucketSize, sortBarrier = false, sizedBy = df)
     val nearLosers = nearDupClusters(pairs, maxIterations)
       .where(col("id") =!= col("cluster_id"))
       .select(col("id"))
-    df.join(exactLosers.union(nearLosers).withColumnRenamed("id", idCol),
+    in.join(exactLosers.union(nearLosers).withColumnRenamed("id", idCol),
       Seq(idCol), "left_anti")
   }
 

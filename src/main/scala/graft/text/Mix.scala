@@ -473,8 +473,9 @@ object Mix {
     // quality+decontam+exact-dedup chain three times). Shuffling the
     // pipeline's output rows ONCE through a shared wide exchange beats
     // re-running the pipeline at every scale, so upstream shape decides
-    // before input size does.
-    if (nontrivialUpstream(df)) {
+    // before input size does. The shape test is ExecTuning's
+    // nontrivialUpstream, the one Dedup.dropNearDuplicates also asks.
+    if (graft.spark.ExecTuning.nontrivialUpstream(df)) {
       withCumWeight(df, keyCol, weight, Seq(groupCol), buckets, cumCol,
           shareExchange = true, pruneBudget = Some(bdg))
         .where(col(cumCol) <= col("_mix_budget"))
@@ -512,39 +513,6 @@ object Mix {
         .where(col(cumCol) <= col("_mix_budget"))
         .drop("_mix_toks", "_mix_budget")
     }
-  }
-
-  /** Does re-deriving `df` re-execute real work? A bare (projected,
-    * filtered) scan re-reads its pruned columns cheaply, and a join whose
-    * one side is broadcast-sized by stats re-runs as a map-side probe —
-    * but a window, an aggregate, or a join BOTH of whose sides are big
-    * re-executes exchanges per consumer. Drives the shape decision in
-    * [[byWeightBudgetWith]]/[[packSequences]]: one shared wide exchange
-    * (the pipeline's output rows shuffled once) amortizes an expensive
-    * upstream across the prefix sum's consumers, while cheap-to-re-run
-    * inputs keep the size-based narrow/wide choice — a 100 TB corpus with
-    * a tiny dim-table broadcast join in its lineage must NOT be forced
-    * through a full-row window sort (round-10 review). */
-  private def nontrivialUpstream(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.{logical => l}
-    try {
-      // When broadcast joins are DISABLED (threshold <= 0) this test still
-      // asks "is the small side dim-sized?" against the 10 MB default: a
-      // session that turns broadcasting off must not reclassify a 100 TB
-      // corpus's one tiny dim join as expensive and force the full-row
-      // wide window sort (r10 advice). The re-run cost being estimated is
-      // a shuffle-join probe then — more than a broadcast probe, but still
-      // nothing like re-running a real multi-exchange upstream.
-      val conf = graft.spark.ExecTuning.confLong(df.sparkSession,
-        "spark.sql.autoBroadcastJoinThreshold", 10L << 20)
-      val bcast = if (conf <= 0) 10L << 20 else conf
-      df.queryExecution.optimizedPlan.exists {
-        case j: l.Join =>
-          j.left.stats.sizeInBytes.min(j.right.stats.sizeInBytes) > bcast
-        case _: l.Aggregate | _: l.Window => true
-        case _ => false
-      }
-    } catch { case _: Exception => false }
   }
 
   /** Byte threshold above which the budget fills and [[packSequences]]
@@ -708,7 +676,7 @@ object Mix {
       s"input columns [${clash.mkString(", ")}] collide with packSequences " +
         s"output/temporaries (${out.mkString(", ")}, '_mix_*') — rename them first")
     def coordsOf(cum: DataFrame): DataFrame = seqCoords(cum, seqLen)
-    if (nontrivialUpstream(df)) {
+    if (graft.spark.ExecTuning.nontrivialUpstream(df)) {
       // Expensive upstream: wide + shared exchange — the narrow shape's
       // join-back re-executes the upstream pipeline (see byWeightBudgetWith).
       coordsOf(withCumWeight(df, keyCol,

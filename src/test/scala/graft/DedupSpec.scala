@@ -186,21 +186,6 @@ class DedupSpec extends SparkSuite {
     assert(Dedup.lastObservedMaxBucket.get() == 4L)
   }
 
-  test("sigs-exchange policy settings never change the kept set") {
-    // The exchange is pure plan shape: kept sets must be identical with
-    // the signature exchange forced ON (min=0) and forced OFF (huge min).
-    def kept(): Set[Long] =
-      Dedup.dropNearDuplicates(docs, "text", "doc_id", threshold = 0.5)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    spark.conf.set("spark.graft.dedup.sigsExchangeMinBytes", "0")
-    val alwaysOn = try kept()
-    finally spark.conf.unset("spark.graft.dedup.sigsExchangeMinBytes")
-    spark.conf.set("spark.graft.dedup.sigsExchangeMinBytes", s"${Long.MaxValue}")
-    val alwaysOff = try kept()
-    finally spark.conf.unset("spark.graft.dedup.sigsExchangeMinBytes")
-    assert(alwaysOn == alwaysOff && alwaysOn == Set(1L, 3L, 5L, 6L))
-  }
-
   test("kept set survives the shuffle-semi keeper regime (broadcast disabled)") {
     // At warehouse scale the keeper id set outgrows any broadcast and the
     // keeper semi join runs as a shuffle join whose probe side carries
@@ -243,6 +228,137 @@ class DedupSpec extends SparkSuite {
     assert(kept == Set(1L, 3L, 5L, 6L))
   }
 
+  /** (doc_id, text, lang) rows written as parquet and read back: a file
+    * scan the re-rooting specs can count and inspect. */
+  private def scanOf(rows: Seq[(Long, String)], tag: String) = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$tag").toFile
+    val path = new java.io.File(dir, "docs").getAbsolutePath
+    rows.toDF("doc_id", "text").withColumn("lang", lit("en"))
+      .repartition(2).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** 40-word texts: one substituted word keeps 3-shingle Jaccard at
+    * 35/41 ≈ 0.85, two far-apart substitutions drop it to 32/44 ≈ 0.73. */
+  private def words(p: String): IndexedSeq[String] = (0 until 40).map(i => s"$p$i")
+  private def sub(ws: IndexedSeq[String], at: Int): IndexedSeq[String] =
+    ws.updated(at, s"x${ws(at)}")
+
+  /** Near-duplicate chain 1 ~ 3 ~ 2 with 1 !~ 2 at J >= 0.8 (2 is dropped
+    * only through the component), exact copies (5 of 4, 6 of 1), NULL
+    * texts (7, 8) and an unrelated doc (9). Kept: 1, 4, 7, 8, 9. */
+  private lazy val chainRows: Seq[(Long, String)] = {
+    val a = words("w"); val b = sub(a, 30); val c = sub(b, 5)
+    Seq(1L -> a, 3L -> b, 2L -> c, 4L -> words("v"), 5L -> words("v"),
+      6L -> a, 9L -> words("u")).map { case (i, ws) => i -> ws.mkString(" ") } ++
+      Seq(7L -> null, 8L -> null)
+  }
+  private val chainKept = Set(1L, 4L, 7L, 8L, 9L)
+
+  test("dropExactDuplicates keeps the smallest non-NULL id (NULLS LAST)") {
+    // A NULL id must not win its group: the keeper is exactDupGroups'
+    // keep_id (2), as under DuckDB's default NULLS LAST order. The
+    // dedup_drop_exact TVF runs the same operator.
+    val df = Seq((Some(2L), "t"), (None, "t"), (Some(5L), "t"), (Some(7L), "u"))
+      .toDF("doc_id", "text")
+    val kept = Dedup.dropExactDuplicates(df, "text", "doc_id")
+      .select("doc_id").as[Option[Long]].collect().toSet
+    assert(kept == Set(Some(2L), Some(7L)))
+    assert(Dedup.exactDupGroups(df, "text", "doc_id")
+      .select("keep_id").as[Long].collect().toSeq == Seq(2L))
+    df.createOrReplaceTempView("dde_null_ids")
+    val viaSql = spark.sql(
+      "SELECT doc_id FROM dedup_drop_exact(TABLE(dde_null_ids), 'text', 'doc_id')")
+      .as[Option[Long]].collect().toSet
+    assert(viaSql == kept)
+  }
+
+  test("a composed near-dedup input runs its scan stage once per call plus collect") {
+    // Upstream = file scan -> counting UDF filter -> the exact-dedup
+    // window: re-deriving it re-runs the window exchange, so
+    // dropNearDuplicates re-roots it once and its five consumers (keeper
+    // aggregate, exact losers, signatures, shingle sets, final anti join)
+    // read that one RDD — the scan's map stage runs in the first job only
+    // (3 scan stages without the re-rooting). Nothing is cached.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val rows = (1L to 60L).map(i => i -> words(s"d${i % 45}_").mkString(" ")) ++
+      chainRows.map { case (i, t) => (i + 100L, t) }
+    val scan = scanOf(rows, "dedup-once")
+    val calls = spark.sparkContext.longAccumulator("dedup-once-udf")
+    val counted = udf { (t: String) => calls.add(1); true }
+    val upstream = Dedup.dropExactDuplicates(scan.where(counted(col("text"))),
+      "text", "doc_id")
+    assert(graft.spark.ExecTuning.nontrivialUpstream(upstream))
+    val scanStages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.contains("FileScanRDD")))
+          scanStages.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark, 60000)
+    spark.sparkContext.addSparkListener(listener)
+    val kept = try {
+      val k = Dedup.dropNearDuplicates(upstream, "text", "doc_id", threshold = 0.8)
+        .select("doc_id").as[Long].collect().toSet
+      Bridge.drainListenerBus(spark, 60000)
+      k
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(scanStages.get == 1, s"scan stages run: ${scanStages.get}")
+    assert(calls.value == rows.size, s"UDF calls: ${calls.value} for ${rows.size} rows")
+    // 45 distinct texts among ids 1-60 keep their first 45 ids.
+    assert(kept == (1L to 45L).toSet ++ chainKept.map(_ + 100L))
+    assert(spark.sharedState.cacheManager.isEmpty, "cache not empty after dropNearDuplicates")
+  }
+
+  test("re-rooted and un-rooted near-dedup keep the same ids, AQE off and on") {
+    // A bare scan is not re-rooted; the same rows behind the exact-dedup
+    // window are. Both must keep the chain's answer, with the small-query
+    // policy disabling AQE (default) and with AQE forced on, which makes
+    // the barriers materialize eagerly.
+    val scan = scanOf(chainRows, "dedup-same")
+    val composed = Dedup.dropExactDuplicates(scan, "text", "doc_id")
+    assert(!graft.spark.ExecTuning.nontrivialUpstream(scan))
+    assert(graft.spark.ExecTuning.nontrivialUpstream(composed))
+    def kept(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      Dedup.dropNearDuplicates(df, "text", "doc_id", threshold = 0.8)
+        .select("doc_id").as[Long].collect().toSet
+    val key = graft.spark.ExecTuning.SmallQueryBytesKey
+    for (aqeOn <- Seq(false, true)) {
+      if (aqeOn) spark.conf.set(key, "0")
+      try {
+        assert(kept(scan) == chainKept, s"bare scan, AQE on = $aqeOn")
+        assert(kept(composed) == chainKept, s"re-rooted, AQE on = $aqeOn")
+      } finally spark.conf.unset(key)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "cache not empty after dropNearDuplicates")
+  }
+
+  test("a bare-scan near-dedup input is not re-rooted: the keeper side reads a pruned scan") {
+    // The keeper barrier's lineage reaches the file scan directly, reading
+    // only (doc_id, text); a re-rooted composed input reads every column
+    // once, through the input barrier.
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    def scanColumns(rdd: org.apache.spark.rdd.RDD[_]): Seq[Seq[String]] = rdd match {
+      case f: FileScanRDD => Seq(f.readSchema.fieldNames.toSeq)
+      case r => r.dependencies.flatMap(d => scanColumns(d.rdd))
+    }
+    def barrierScans(df: org.apache.spark.sql.DataFrame): Seq[Seq[Seq[String]]] =
+      Dedup.dropNearDuplicates(df, "text", "doc_id", threshold = 0.8)
+        .queryExecution.optimizedPlan.collect { case r: LogicalRDD => r.rdd }
+        .distinctBy(_.id).map(scanColumns)
+    val scan = scanOf(chainRows, "dedup-bare")
+    val bare = barrierScans(scan)
+    assert(bare.size == 1, s"bare scan: expected only the keeper barrier, got $bare")
+    assert(bare.head.nonEmpty && bare.head.forall(_.toSet == Set("doc_id", "text")),
+      s"keeper side scan columns: ${bare.head}")
+    val composed = barrierScans(Dedup.dropExactDuplicates(scan, "text", "doc_id"))
+    assert(composed.size == 2, s"composed: expected input + keeper barriers, got $composed")
+    assert(composed.forall(_.forall(_.toSet == Set("doc_id", "text", "lang"))),
+      s"composed barrier scan columns: $composed")
+  }
+
   test("jaccard candidate-checkpoint policy settings never change the pair set") {
     // The candidate table is checkpointed exactly when setsExceedBroadcast
     // holds. A 1-byte broadcast threshold makes it hold (checkpoint); the
@@ -274,9 +390,9 @@ class DedupSpec extends SparkSuite {
     def withThr[T](v: String)(body: => T): T = {
       spark.conf.set(key, v); try body finally spark.conf.set(key, before)
     }
-    assert(withThr("-1") { Dedup.sessionBroadcastThreshold(spark) } == -1L)
-    assert(withThr("10MB") { Dedup.sessionBroadcastThreshold(spark) } == 10L << 20)
-    assert(withThr("1048576") { Dedup.sessionBroadcastThreshold(spark) } == 1L << 20)
+    assert(withThr("-1") { graft.spark.ExecTuning.sessionBroadcastThreshold(spark) } == -1L)
+    assert(withThr("10MB") { graft.spark.ExecTuning.sessionBroadcastThreshold(spark) } == 10L << 20)
+    assert(withThr("1048576") { graft.spark.ExecTuning.sessionBroadcastThreshold(spark) } == 1L << 20)
     // Guard consequences: broadcast disabled => neither guard fires
     // (shuffle plans need no enforcement), regardless of corpus size.
     withThr("-1") {

@@ -21,7 +21,6 @@ class KnobSurfaceSpec extends AnyFunSuite {
     "spark.graft.dedup.forestTaskEdges",
     "spark.graft.dedup.hotBucketWarnBucketSize",
     "spark.graft.dedup.reliableCheckpointDir",
-    "spark.graft.dedup.sigsExchangeMinBytes",
     "spark.graft.hnsw.adaptiveProbeMargin",
     "spark.graft.hnsw.build.maxVectorsPerPartition",
     "spark.graft.hnsw.build.partitionBy",
@@ -44,7 +43,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
 
   private val KeyLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
 
-  test("the spark.graft.* keys read under src/main/scala are exactly the listed 28") {
+  test("the spark.graft.* keys read under src/main/scala are exactly the listed 27") {
     val root: Path = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root),
       s"main sources not found at $root: run the suite from the project directory")
@@ -54,7 +53,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
         KeyLiteral.findAllMatchIn(Files.readString(f)).map(_.group(1))
       }.toSet
       finally files.close()
-    assert(Keys.size == 28)
+    assert(Keys.size == 27)
     assert((found -- Keys).isEmpty, s"keys not in the list: ${(found -- Keys).toSeq.sorted}")
     assert((Keys -- found).isEmpty, s"listed keys no longer read: ${(Keys -- found).toSeq.sorted}")
   }
