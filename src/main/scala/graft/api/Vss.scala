@@ -130,14 +130,15 @@ object Vss {
    * 352-363). Output: outer.*, inner.*, `dist` DOUBLE, `rn` INT (1-indexed,
    * best first), like the reference join's row_number output.
    *
-   * `outerKey` must uniquely identify outer rows (lateral semantics). When
-   * an HNSW index exists on `inner`'s vector column the plan is the
-   * canonical Filter(rn<=k, Window(row_number over dist)) shape and the
-   * LateralTopKToIndexJoin rule swaps in the index join automatically;
-   * without one, the brute-force path computes per-row top-k with the
-   * bounded-heap aggregate instead of a full-cross-product window shuffle
-   * (see [[lateralTopKAggregate]]). NULL vectors never match on either
-   * side, on every path.
+   * `outerKey` must uniquely identify outer rows (lateral semantics). The
+   * call builds the canonical Filter(rn<=k, Window(row_number over dist))
+   * shape and lets the LateralTopKToIndexJoin rule decide: when its
+   * optimized plan holds the index join, that plan is the answer;
+   * otherwise (no matching index, a filtered inner, a non-BIGINT id, the
+   * rewrite switched off) the brute-force path computes per-row top-k with
+   * the bounded-heap aggregate instead of a full-cross-product window
+   * shuffle (see [[lateralTopKAggregate]]). NULL vectors never match on
+   * either side, on every path.
    */
   def lateralTopK(outer: DataFrame, inner: DataFrame, outerCol: String, innerCol: String,
       outerKey: String, k: Int, metric: String = "l2sq"): DataFrame = {
@@ -156,11 +157,17 @@ object Vss {
       case "cosine" | "cos" => "cosine"
       case "ip" => "ip"
     }
-    val spark = outer.sparkSession
-    val indexable = spark.conf.get(graft.Hnsw.RewriteEnabledKey, "true").toBoolean &&
-      hasMatchingIndex(spark, inner, innerCol, metricName)
-    if (indexable) lateralTopKWindow(outerNN, innerNN, outer, inner, outerCol, innerCol, outerKey, k, metricName)
-    else lateralTopKAggregate(outerNN, innerNN, outerCol, innerCol, outerKey, k, metricName)
+    val rewritten =
+      try Some(lateralTopKWindow(outerNN, innerNN, outer, inner, outerCol, innerCol,
+        outerKey, k, metricName)).filter(_.queryExecution.optimizedPlan.exists(
+          _.isInstanceOf[graft.plans.HnswIndexJoinCore]))
+      catch {
+        // A window form that does not analyse (a self-join of one Dataset:
+        // its column references are ambiguous) cannot be rewritten either.
+        case _: org.apache.spark.sql.AnalysisException => None
+      }
+    rewritten.getOrElse(
+      lateralTopKAggregate(outerNN, innerNN, outerCol, innerCol, outerKey, k, metricName))
   }
 
   private def lateralDist(a: Column, b: Column, metricName: String): Column = metricName match {
@@ -169,23 +176,10 @@ object Vss {
     case "ip" => graft.functions.array_negative_inner_product(a, b)
   }
 
-  /** Does the session's index catalog hold an index that
-    * [[graft.rules.LateralTopKToIndexJoin]] could bind to `inner`'s
-    * `innerCol` under `metricName`? A light-weight mirror of
-    * `HnswMatch.findIndexJoin`'s catalog lookup — mis-detection is safe
-    * (the window shape still executes correctly, just brute-force). */
-  private def hasMatchingIndex(spark: org.apache.spark.sql.SparkSession,
-      inner: DataFrame, innerCol: String, metricName: String): Boolean =
-    try {
-      val paths = graft.Hnsw.relationPaths(inner)
-      paths.nonEmpty && graft.index.IndexCatalog.list(graft.Hnsw.baseDir(spark))
-        .exists(m => m.metric == metricName && m.paths == paths && m.column == innerCol)
-    } catch { case _: Exception => false }
-
   /** The canonical Filter(rn<=k, Window(row_number over dist)) shape the
-    * LateralTopKToIndexJoin rule accelerates — built only when a matching
-    * index exists, so the cross product below the window is plan-surgery
-    * input, never an executed brute path. */
+    * LateralTopKToIndexJoin rule accelerates — returned only when the rule
+    * fired, so the cross product below the window is plan-surgery input,
+    * never an executed brute path. */
   private def lateralTopKWindow(outerNN: DataFrame, innerNN: DataFrame,
       outer: DataFrame, inner: DataFrame, outerCol: String, innerCol: String,
       outerKey: String, k: Int, metricName: String): DataFrame = {

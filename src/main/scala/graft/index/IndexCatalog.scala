@@ -273,20 +273,20 @@ object IndexCatalog {
  * not entry count: 256 small segments and 256 × 256k-vector × high-dim
  * segments differ by orders of magnitude, and it's heap bytes that kill an
  * executor. LRU eviction runs until the total fits the budget
- * (`graft.graphCache.maxBytes`, default 4 GiB — size to a fraction of
- * executor heap via `spark.executor.extraJavaOptions=-Dgraft...`); a
- * `maxEntries` cap remains as a secondary bound. A single graph larger than
- * the budget is still served (admit-then-evict-others): refusing to cache
- * it would re-read it every call.
+ * (`graft.graphCache.maxBytes`, default a quarter of the JVM's max heap,
+ * the way `RowGroupCache` sizes itself; override per executor via
+ * `spark.executor.extraJavaOptions=-Dgraft...`); [[MaxEntries]] caps the
+ * entry count as a secondary bound. A single graph larger than the budget
+ * is still served (admit-then-evict-others): refusing to cache it would
+ * re-read it every call.
  */
 object GraphCache {
   private case class Key(path: String, mtime: Long, size: Long)
   private case class Entry(graph: HnswGraph, bytes: Long)
 
-  def MaxEntries: Int =
-    sys.props.get("graft.graphCache.maxEntries").map(_.toInt).getOrElse(256)
-  def MaxBytes: Long =
-    sys.props.get("graft.graphCache.maxBytes").map(_.toLong).getOrElse(4L << 30)
+  val MaxEntries = 256
+  def MaxBytes: Long = sys.props.get("graft.graphCache.maxBytes").map(_.toLong)
+    .getOrElse(Runtime.getRuntime.maxMemory / 4)
 
   private val cache = new java.util.LinkedHashMap[Key, Entry](64, 0.75f, true)
   private var totalBytes = 0L

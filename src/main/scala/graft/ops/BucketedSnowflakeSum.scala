@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+
+import graft.ops.GroupedSum.KeyProbe
 
 /**
  * Bucket-local hash-probe grouped sum over a CO-BUCKETED fact ⋈ build pair —
@@ -18,26 +18,18 @@ import org.apache.spark.sql.types._
  * than codegen SMJ. The shape that was never tried is the one a native
  * engine runs over a partitioned layout: per bucket, build the join hash
  * table TASK-LOCALLY from the build side's bucket file, then stream the
- * co-bucketed fact bucket's ColumnarBatches through the same probe+grid
- * loop as [[ColumnarUnitsSum]] — the hash table is ~|build|/numBuckets
- * keys per task (≈470k at sf10×32 buckets), lives only for the task, and
- * is NEVER broadcast, so the contract scales with bucket count, not data
- * size. One job, numBuckets tasks, zero exchanges of any width.
+ * co-bucketed fact bucket's ColumnarBatches through [[GroupedSum]]'s fact
+ * loop — the hash table is ~|build|/numBuckets keys per task (≈470k at
+ * sf10×32 buckets), lives only for the task, and is NEVER broadcast, so the
+ * contract scales with bucket count, not data size. One job, numBuckets
+ * tasks, zero exchanges of any width.
  *
  * == Semantics ==
  *
- * Result = the declarative spelling (the fallback path, also the spec
- * reference):
- * {{{
- *   fact.where(used cols notNull)
- *       .join(build.where(used cols notNull)
- *               .join(broadcast(dim), buildRef === dimKey),
- *             factKey === buildKey)
- *       .groupBy(dimGroup)
- *       .agg(sum128(units(a) × (bConst − units(b)), outScale), count(1))
- * }}}
- * emitted as (dimGroupCol INT, sum DECIMAL(38, outScale), n_rows LONG),
- * only non-empty groups. `measureB = None` sums plain `units(a)`.
+ * [[GroupedSum.snowflakeSum]]'s declarative spelling (shared with
+ * [[DenseSnowflakeSum]]), emitted as (dimGroupCol INT, sum DECIMAL(38,
+ * outScale), n_rows LONG), only non-empty groups. `measureB = None` sums
+ * plain `units(a)`.
  *
  * == Scale contract ==
  *
@@ -45,147 +37,20 @@ import org.apache.spark.sql.types._
  *   `factKeyCol` / `buildKeyCol` (LONG) with the SAME bucket count — the
  *   storage-partitioned layout a 100 TB warehouse maintains for its
  *   biggest co-joined pair. Anything else (flat layout, mismatched
- *   buckets, non-bare lineage — see [[ColumnarUnitsSum]]'s guard
- *   rationale) falls back to the declarative plan: the operator is total.
+ *   buckets, non-bare lineage — [[GroupedSum.isBare]]) falls back to the
+ *   declarative plan: the operator is total.
  * - `dim` follows the broadcast contract (≤ 2^21 rows, dense int group
  *   ids ≥ 0, unique keys — duplicates fail loudly); the grid is
  *   nGroups ≤ 2^22 cells of 24 bytes.
  * - `buildKeyCol` must be UNIQUE among rows whose ref hits the dim (a
  *   primary key, e.g. orderkey): the kernel fails loudly on a duplicate,
  *   where the fallback's join would silently fan fact rows out.
- * - Per-task state = one open-addressed long→int table sized by the
- *   BUCKET (grows by doubling), plus the grid. Partials reduce like
- *   [[ColumnarUnitsSum]]: plain `reduce` ≤ 512 partitions, `treeReduce`
- *   above.
+ * - Per-task state = one [[LongIntMap]] sized by the BUCKET (grows by
+ *   doubling), plus the grid.
  * - EAGER on the kernel path (same caveat as gridSum): the returned
  *   DataFrame is the materialized grid.
  */
 object BucketedSnowflakeSum {
-
-  /** Open-addressed long→int map that GROWS by doubling (the task-local
-    * build table: bucket sizes are unknown until the bucket is read).
-    * Linear probe, 0.5 max load. -1 = absent. */
-  final class GrowLongIntMap(initialPow2: Int = 1 << 16) extends Serializable {
-    private var cap = initialPow2
-    private var mask = cap - 1
-    private var keys = new Array[Long](cap)
-    private var vals = new Array[Int](cap)
-    private var used = new Array[Boolean](cap)
-    private var n = 0
-    def size: Int = n
-    /** @return false iff `k` was already present (value overwritten). */
-    def put(k: Long, v: Int): Boolean = {
-      if ((n + 1) * 2 > cap) grow()
-      var i = java.lang.Long.hashCode(k * -7046029254386353131L) & mask
-      while (used(i) && keys(i) != k) i = (i + 1) & mask
-      val fresh = !used(i)
-      if (fresh) n += 1
-      keys(i) = k; vals(i) = v; used(i) = true
-      fresh
-    }
-    def get(k: Long): Int = {
-      var i = java.lang.Long.hashCode(k * -7046029254386353131L) & mask
-      while (used(i)) {
-        if (keys(i) == k) return vals(i)
-        i = (i + 1) & mask
-      }
-      -1
-    }
-    private def grow(): Unit = {
-      val ok = keys; val ov = vals; val ou = used; val oc = cap
-      cap <<= 1; mask = cap - 1
-      keys = new Array[Long](cap); vals = new Array[Int](cap)
-      used = new Array[Boolean](cap)
-      var j = 0
-      while (j < oc) {
-        if (ou(j)) {
-          var i = java.lang.Long.hashCode(ok(j) * -7046029254386353131L) & mask
-          while (used(i)) i = (i + 1) & mask
-          keys(i) = ok(j); vals(i) = ov(j); used(i) = true
-        }
-        j += 1
-      }
-    }
-  }
-
-  /** Broadcast payload for the dim side: primitive key/group arrays (what
-    * actually ships — ~12 B/entry vs ~3× that for a serialized open-
-    * addressed table) with the probe map built LAZILY once per executor
-    * JVM and shared by its tasks. The lazy build also enforces the
-    * unique-key contract — a duplicate fails the first task that forces
-    * the map. */
-  final class DimSide(val keys: Array[Long], val groups: Array[Int],
-      val keyName: String) extends Serializable {
-    @transient lazy val map: ColumnarUnitsSum.LongIntMap = {
-      var capacity = 64
-      while (capacity < keys.length * 2) capacity <<= 1
-      val m = new ColumnarUnitsSum.LongIntMap(capacity)
-      var i = 0
-      while (i < keys.length) {
-        if (!m.put(keys(i), groups(i)))
-          throw new IllegalArgumentException(
-            s"duplicate dim key ${keys(i)}: $keyName must be unique")
-        i += 1
-      }
-      m
-    }
-  }
-
-  /** Landed dim as primitive arrays + the derived dense group count. */
-  private[ops] final case class LandedDim(keys: Array[Long],
-      groups: Array[Int], nGroups: Int)
-
-  /** Submit the dim landing job (per-partition primitive builders, ONE
-    * job, ~12 B/row — shared by this kernel and [[DenseSnowflakeSum]],
-    * one spelling of the dim contract) and return a handle that awaits,
-    * flattens, and validates. Callers overlap the await with scan-side
-    * plan derivation (the gridSum device). The row cap binds per
-    * PARTITION in-task and in total at the await — boundedDimCollect's
-    * documented posture: a contract-violating fact-sized "dim" ships at
-    * most cap+1 rows per partition before the total require rejects. */
-  private[ops] def landDim(dim: DataFrame, dimKeyCol: String,
-      dimGroupCol: String): () => LandedDim = {
-    val dimCap = 1 << 21
-    val f = scala.concurrent.Future {
-      dim.select(col(dimKeyCol).cast("long"), col(dimGroupCol).cast("int"))
-        .queryExecution.executedPlan.execute().mapPartitions { it =>
-          val kb = new scala.collection.mutable.ArrayBuilder.ofLong
-          val gb = new scala.collection.mutable.ArrayBuilder.ofInt
-          var n = 0
-          while (it.hasNext && n <= dimCap) {
-            val r = it.next()
-            if (r.isNullAt(0) || r.isNullAt(1) || r.getInt(1) < 0)
-              throw new IllegalArgumentException(
-                "dim keys/groups must be non-null, groups >= 0")
-            kb += r.getLong(0); gb += r.getInt(1); n += 1
-          }
-          Iterator.single((kb.result(), gb.result()))
-        }.collect()
-    }(scala.concurrent.ExecutionContext.global)
-    () => {
-      val parts = scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf)
-      val total = parts.iterator.map(_._1.length.toLong).sum
-      require(total <= dimCap,
-        s"dim must be dimension-sized (<= $dimCap rows)")
-      val keys = new Array[Long](total.toInt)
-      val groups = new Array[Int](total.toInt)
-      var off = 0
-      parts.foreach { case (ks, gs) =>
-        System.arraycopy(ks, 0, keys, off, ks.length)
-        System.arraycopy(gs, 0, groups, off, gs.length)
-        off += ks.length
-      }
-      var nGroups = 0
-      var gi = 0
-      while (gi < groups.length) {
-        if (groups(gi) >= nGroups) nGroups = groups(gi) + 1
-        gi += 1
-      }
-      require(nGroups <= (1 << 22), s"grid too large: $nGroups groups")
-      LandedDim(keys, groups, nGroups)
-    }
-  }
 
   /**
    * @param fact       bucketed fact table (see scale contract)
@@ -206,70 +71,24 @@ object BucketedSnowflakeSum {
       measureA: (String, Int), measureB: Option[(Long, String, Int)],
       outScale: Int,
       build: DataFrame, buildKeyCol: String, buildRefCol: String,
-      dim: DataFrame, dimKeyCol: String, dimGroupCol: String): DataFrame = {
-    require(outScale >= 0 && outScale <= 38, s"bad outScale $outScale")
-    val spark = fact.sparkSession
-    // SPARK_GRAFT_BSS_DEBUG=1: phase timings to stderr (counter-audit aid).
-    val dbg = sys.env.get("SPARK_GRAFT_BSS_DEBUG").contains("1")
-    var tMark = System.nanoTime()
-    def mark(label: String): Unit = if (dbg) {
-      val t = System.nanoTime()
-      System.err.println(f"[bss] $label ${(t - tMark) / 1e6}%.1fms")
-      tMark = t
-    }
-    val (aCol, aScale) = measureA
-    val factCols = Seq(factKeyCol, aCol) ++ measureB.map(_._2)
-    val buildCols = Seq(buildKeyCol, buildRefCol)
-
-    // Dim: one bounded collect (broadcast contract) AS PRIMITIVE ARRAYS —
-    // landing 1.5M customers as copied InternalRows + a driver-side map
-    // build measured ~0.5 s of the sf10 gate; [[landDim]] lands the same
-    // data in one job at ~12 B/row and the probe map is built lazily per
-    // executor JVM (see [[DimSide]]). Overlapped with the scan-side plan
-    // derivation below, the gridSum device.
-    val landed = landDim(dim, dimKeyCol, dimGroupCol)
-    val scans = coBucketedScans(fact, factKeyCol, factCols,
-      build, buildKeyCol, buildCols)
-    mark("scan-resolve")
-    val d = landed()
-    mark("dim-collect-await")
-    val nGroups = d.nGroups
-    val dimSide = new DimSide(d.keys, d.groups, dimKeyCol)
-
-    val outSchema = StructType(Seq(
-      StructField(dimGroupCol, IntegerType, nullable = false),
-      StructField("sum", DecimalType(38, outScale), nullable = false),
-      StructField("n_rows", LongType, nullable = false)))
-
-    scans match {
-      case Some((factScan, iFk, iA, iBOpt, buildScan, iBk, iRef)) =>
-        val bcDim = spark.sparkContext.broadcast(dimSide)
-        // Pre-force the lazy probe map CONCURRENTLY with broadcast
-        // registration + job setup: in local mode tasks receive this same
-        // instance (block-manager stores the value by reference), so the
-        // build never serializes into the zip job; on a cluster each
-        // executor builds its own copy lazily on first probe. A duplicate
-        // key makes this future throw — the tasks then throw the same
-        // error loudly, so failure stays on the job path.
-        scala.concurrent.Future(dimSide.map)(
-          scala.concurrent.ExecutionContext.global): Unit
-        mark("dim-broadcast")
-        val aFactor = math.pow(10.0, aScale)
-        val (bConst, bFactor) = measureB match {
-          case Some((c, _, s)) => (c, math.pow(10.0, s))
-          case None => (0L, 0.0)
-        }
-        val hasB = measureB.isDefined
-        val iB = iBOpt.getOrElse(-1) // sentinel: only read under hasB
-        val nCells = nGroups
-        val buildKeyName = buildKeyCol // locals for serialization
-        val partials = buildScan.executeColumnar()
-          .zipPartitions(factScan.executeColumnar()) { (buildIt, factIt) =>
+      dim: DataFrame, dimKeyCol: String, dimGroupCol: String): DataFrame =
+    GroupedSum.snowflakeSum(fact, factKeyCol, measureA, measureB, outScale,
+      build, buildKeyCol, buildRefCol, dim, dimKeyCol, dimGroupCol)(
+      bucketedScan) { (s, d) =>
+      if (numBuckets(s.fact) != numBuckets(s.build)) None
+      else {
+        val bcDim = d.broadcast(fact.sparkSession.sparkContext)
+        // Locals for the task closure: the scans must not serialize into it.
+        val (iFk, iBk, iRef, summand, nCells) =
+          (s.iFk, s.iBk, s.iRef, s.summand, d.nGroups)
+        val buildKeyName = buildKeyCol
+        Some(s.build.executeColumnar()
+          .zipPartitions(s.fact.executeColumnar()) { (buildIt, factIt) =>
             val dm = bcDim.value.map // per-JVM lazy build + unique check
             // Build phase: bucket-local (buildKey → group) table. Rows
             // whose ref misses the dim drop here (inner semantics), so
-            // the probe below is a single map lookup.
-            val local = new GrowLongIntMap()
+            // the fact probe is a single map lookup.
+            val local = new LongIntMap()
             buildIt.foreach { batch =>
               val cK = batch.column(iBk)
               val cR = batch.column(iRef)
@@ -279,166 +98,40 @@ object BucketedSnowflakeSum {
               while (i < n) {
                 if (!nullable || !(cK.isNullAt(i) || cR.isNullAt(i))) {
                   val g = dm.get(cR.getLong(i))
-                  if (g >= 0) {
-                    if (!local.put(cK.getLong(i), g))
-                      throw new IllegalArgumentException(
-                        s"duplicate build key ${cK.getLong(i)}: " +
-                          s"$buildKeyName must be unique")
-                  }
+                  if (g >= 0 && !local.put(cK.getLong(i), g))
+                    throw new IllegalArgumentException(
+                      s"duplicate build key ${cK.getLong(i)}: " +
+                        s"$buildKeyName must be unique")
                 }
                 i += 1
               }
             }
-            // Probe phase: stream the co-bucketed fact bucket through the
-            // gridSum accumulation loop (128-bit two-long registers).
-            val sumLo = new Array[Long](nCells)
-            val sumHi = new Array[Long](nCells)
-            val cnt = new Array[Long](nCells)
-            factIt.foreach { batch =>
-              val cKey = batch.column(iFk)
-              val cA = batch.column(iA)
-              val cB = if (hasB) batch.column(iB) else null
-              val nullable = cKey.hasNull || cA.hasNull || (hasB && cB.hasNull)
-              val n = batch.numRows()
-              var i = 0
-              while (i < n) {
-                if (!nullable || !(cKey.isNullAt(i) || cA.isNullAt(i) ||
-                    (hasB && cB.isNullAt(i)))) {
-                  val g = local.get(cKey.getLong(i))
-                  if (g >= 0) {
-                    val ua = java.lang.Math.round(cA.getDouble(i) * aFactor)
-                    val v = if (hasB)
-                      ua * (bConst - java.lang.Math.round(cB.getDouble(i) * bFactor))
-                    else ua
-                    Acc128.add(sumLo, sumHi, g, v)
-                    cnt(g) += 1L
-                  }
-                }
-                i += 1
-              }
-            }
-            Iterator.single((sumLo, sumHi, cnt))
-          }
-        val merge = (x: (Array[Long], Array[Long], Array[Long]),
-            y: (Array[Long], Array[Long], Array[Long])) => {
-          Acc128.mergeInto(x._1, x._2, y._1, y._2, nCells)
-          var i = 0
-          while (i < nCells) { x._3(i) += y._3(i); i += 1 }
-          x
-        }
-        val nParts = partials.getNumPartitions
-        val (tLo, tHi, tCnt) =
-          if (nParts == 0)
-            (new Array[Long](nCells), new Array[Long](nCells),
-              new Array[Long](nCells))
-          else if (nParts <= 512) partials.reduce(merge)
-          else partials.treeReduce(merge, depth = 2)
-        mark("zip-job+reduce")
-        val out = new java.util.ArrayList[Row](64)
-        var g = 0
-        while (g < nCells) {
-          if (tCnt(g) > 0)
-            out.add(Row(g, Acc128.toBigDecimal(tLo, tHi, g, outScale), tCnt(g)))
-          g += 1
-        }
-        spark.createDataFrame(out, outSchema)
-
-      case None => // declarative fallback — the semantics reference
-        import graft.functions.{double_units, sum128}
-        // The fallback's inner join would FAN OUT on a duplicate dim key
-        // where the kernel's map is one-group-per-row: force the unique
-        // check here (the kernel's first task forces the same check via
-        // DimSide.map) so both paths fail loudly instead of diverging.
-        dimSide.map: Unit
-        val dimN = dim.select(col(dimKeyCol).cast("long").as("_bss_dk"),
-          col(dimGroupCol).cast("int").as(dimGroupCol))
-        val buildN = build
-          .where(buildCols.map(col(_).isNotNull).reduce(_ && _))
-          .select(col(buildKeyCol).cast("long").as("_bss_bk"),
-            col(buildRefCol).cast("long").as("_bss_ref"))
-          .join(broadcast(dimN), col("_bss_ref") === col("_bss_dk"))
-          .select(col("_bss_bk"), col(dimGroupCol))
-        val unitsA = double_units(col(aCol), aScale)
-        val summand = measureB match {
-          case Some((c, bCol, s)) => unitsA * (lit(c) - double_units(col(bCol), s))
-          case None => unitsA
-        }
-        fact.where(factCols.map(col(_).isNotNull).reduce(_ && _))
-          .select(col(factKeyCol).cast("long").as("_bss_fk"),
-            summand.as("_bss_units"))
-          .join(buildN, col("_bss_fk") === col("_bss_bk"))
-          .groupBy(col(dimGroupCol))
-          .agg(sum128(col("_bss_units"), outScale).as("sum"),
-            count(lit(1)).as("n_rows"))
-    }
-  }
-
-  /** Resolve both sides to single vectorized parquet scans over
-    * CO-BUCKETED layouts (same bucket count, clustered on the resp. join
-    * key), with bucketed reading forced ON so partition i == bucket i on
-    * both (the zip alignment invariant). None → declarative fallback.
-    * Returns (factScan, factKey/A/B positions, buildScan, buildKey/ref
-    * positions). */
-  private def coBucketedScans(fact: DataFrame, factKeyCol: String,
-      factCols: Seq[String], build: DataFrame, buildKeyCol: String,
-      buildCols: Seq[String]): Option[(FileSourceScanExec, Int, Int,
-        Option[Int], FileSourceScanExec, Int, Int)] =
-    try {
-      def resolve(df: DataFrame, keyCol: String, cols: Seq[String])
-          : Option[(FileSourceScanExec, Int)] = {
-        if (!isBare(df.queryExecution.analyzed)) return None
-        val pruned = df.select(cols.distinct.map(col): _*)
-        pruned.queryExecution.executedPlan.collectLeaves() match {
-          case Seq(scan: FileSourceScanExec) if scan.supportsColumnar =>
-            scan.relation.bucketSpec match {
-              case Some(spec) if spec.bucketColumnNames == Seq(keyCol) =>
-                // DisableUnnecessaryBucketedScan turns bucketed reading
-                // off for a bare select (nothing above it wants the
-                // partitioning) — force it back on: the KERNEL is the
-                // operator that wants it. The copy is ours alone; the
-                // host plan is untouched.
-                val forced = scan.copy(disableBucketedScan = false)
-                if (forced.bucketedScan) Some((forced, spec.numBuckets))
-                else None // bucketing disabled session-wide
-              case _ => None
-            }
-          case _ => None
-        }
+            Iterator.single(GroupedSum.accumulate(factIt,
+              new KeyProbe(local, iFk), summand, nCells))
+          })
       }
-      for {
-        (factScan, factBuckets) <- resolve(fact, factKeyCol, factCols)
-        (buildScan, buildBuckets) <- resolve(build, buildKeyCol, buildCols)
-        if factBuckets == buildBuckets
-        if factScan.executeColumnar().getNumPartitions == factBuckets &&
-          buildScan.executeColumnar().getNumPartitions == factBuckets
-        iFk <- pos(factScan, factCols(0), _ == LongType)
-        iA <- pos(factScan, factCols(1), _ == DoubleType)
-        iB <- if (factCols.length <= 2) Some(None)
-              else pos(factScan, factCols(2), _ == DoubleType).map(Some(_))
-        iBk <- pos(buildScan, buildCols(0), _ == LongType)
-        iRef <- pos(buildScan, buildCols(1), _ == LongType)
-      } yield (factScan, iFk, iA, iB, buildScan, iBk, iRef)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private[ops] def pos(scan: FileSourceScanExec, c: String,
-      want: DataType => Boolean): Option[Int] = {
-    val i = scan.output.map(_.name).indexOf(c)
-    if (i >= 0 && want(scan.output(i).dataType)) Some(i) else None
-  }
-
-  /** Same bare-lineage guard as [[ColumnarUnitsSum]] (see its rationale):
-    * a filter above the scan would be silently dropped by direct batch
-    * consumption, so only attribute-pure lineage takes the kernel. */
-  private[ops] def isBare(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    plan match {
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        p.projectList.forall(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.expressions.AttributeReference]) &&
-          isBare(p.child)
-      case a: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-        isBare(a.child)
-      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
-      case _ => false
     }
+
+  /** A side's scan over a bucketed layout clustered on `keyCol`, with
+    * bucketed reading forced ON so partition i == bucket i (the zip
+    * alignment invariant), or None → declarative fallback. */
+  private def bucketedScan(df: DataFrame, keyCol: String,
+      cols: Seq[String]): Option[FileSourceScanExec] =
+    GroupedSum.bareScan(df, cols).flatMap { scan =>
+      scan.relation.bucketSpec match {
+        case Some(spec) if spec.bucketColumnNames == Seq(keyCol) =>
+          // DisableUnnecessaryBucketedScan turns bucketed reading off for
+          // a bare select (nothing above it wants the partitioning) —
+          // force it back on: the KERNEL is the operator that wants it.
+          // The copy is ours alone; the host plan is untouched. Bucketing
+          // disabled session-wide leaves it off.
+          Some(scan.copy(disableBucketedScan = false)).filter(forced =>
+            forced.bucketedScan &&
+              forced.executeColumnar().getNumPartitions == spec.numBuckets)
+        case _ => None
+      }
+    }
+
+  private def numBuckets(scan: FileSourceScanExec): Int =
+    scan.relation.bucketSpec.get.numBuckets
 }

@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.DataFrame
+
+import graft.ops.GroupedSum.KeyProbe
 
 /**
  * Dense-key broadcast-probe grouped sum over a FLAT (un-bucketed)
@@ -28,7 +27,7 @@ import org.apache.spark.sql.types._
  * ZERO exchanges of any width:
  *
  *  1. Build job: stream the build side's ColumnarBatches, probe the
- *     broadcast-contract dim ([[BucketedSnowflakeSum.DimSide]]) — rows
+ *     broadcast-contract dim ([[GroupedSum.DimSide]]) — rows
  *     whose ref misses the dim drop here (inner semantics) — and fill
  *     TASK-LOCAL page fragments (group+1; 0 = absent; an occupied slot
  *     fails loudly — the unique-key contract). Each task ships whichever
@@ -37,31 +36,20 @@ import org.apache.spark.sql.types._
  *     bytes) or extracted (key, group) pairs (scattered keys). The
  *     driver adopts disjoint pages by reference, merges overlaps (the
  *     cross-task duplicate check), and torrent-broadcasts the map.
- *  2. Fact job: stream the fact side's ColumnarBatches; the per-row probe
- *     is a bounds check + directory load + page index (no hashing); if it
- *     hits, accumulate into the (group) grid of 128-bit two-long
- *     registers (the [[graft.aggregates.Sum128]] carry formula); partials
- *     reduce like the sibling kernels.
+ *  2. Fact job: [[GroupedSum]]'s fact loop, whose per-row probe is a
+ *     bounds check + directory load + page index (no hashing).
  *
  * == Semantics ==
  *
- * Result = the declarative spelling (the fallback path, also the spec
- * reference — identical to [[BucketedSnowflakeSum]]'s):
- * {{{
- *   fact.where(used cols notNull)
- *       .join(build.where(used cols notNull)
- *               .join(broadcast(dim), buildRef === dimKey),
- *             factKey === buildKey)
- *       .groupBy(dimGroup)
- *       .agg(sum128(units(a) × (bConst − units(b)), outScale), count(1))
- * }}}
- * emitted as (dimGroupCol INT, sum DECIMAL(38, outScale), n_rows LONG),
- * only non-empty groups. `measureB = None` sums plain `units(a)`.
+ * [[GroupedSum.snowflakeSum]]'s declarative spelling (shared with
+ * [[BucketedSnowflakeSum]]), emitted as (dimGroupCol INT, sum DECIMAL(38,
+ * outScale), n_rows LONG), only non-empty groups. `measureB = None` sums
+ * plain `units(a)`.
  *
  * == Scale contract ==
  *
  * - Kernel path requires: bare-lineage vectorized parquet scans on BOTH
- *   sides ([[BucketedSnowflakeSum.isBare]]'s rationale); dim within the
+ *   sides ([[GroupedSum.isBare]]'s rationale); dim within the
  *   broadcast contract (≤ 2^21 rows, dense int group ids, unique keys —
  *   duplicates fail loudly); ≤ 254 groups (byte map); allocated page
  *   bytes ≤ `maxKeySpan` (default 2^27 — a 128 MB broadcast ceiling;
@@ -90,6 +78,7 @@ object DenseSnowflakeSum {
     * allocates 2 pages, not megabytes. */
   private[ops] final val PageShift = 17
   private[ops] final val PageMask = (1L << PageShift) - 1
+  private final val PageSize = 1 << PageShift
 
   /** Broadcast payload: the PAGED dense (key − minKey) → group+1 byte map.
     * Pages of 2^[[PageShift]] slots are allocated only where keys live, so
@@ -99,7 +88,7 @@ object DenseSnowflakeSum {
     * as null directory entries (~8 B each). 0 = absent; stored
     * value − 1 = group id. */
   final class DenseByteMap(val minKey: Long, val span: Long,
-      val pages: Array[Array[Byte]]) extends Serializable {
+      val pages: Array[Array[Byte]]) extends LongIntLookup {
     @inline def get(k: Long): Int = {
       val idx = k - minKey
       if (idx < 0 || idx >= span) -1
@@ -111,52 +100,92 @@ object DenseSnowflakeSum {
     }
   }
 
-  /** Page-dense map built driver-side from parallel key/group arrays.
-    * Returns null when not densifiable (groups past the byte encoding,
-    * directory past the cap, or allocation past `maxBytes`) — callers
-    * keep their hash path. Duplicate keys fail loudly. */
-  private[ops] def tryPaged(keys: Array[Long], groups: Array[Int],
-      maxBytes: Long, what: String, name: String): DenseByteMap = {
-    if (keys.isEmpty)
-      return new DenseByteMap(0L, 0L, new Array[Array[Byte]](0))
-    var maxG = 0
-    var i = 0
-    while (i < groups.length) {
-      if (groups(i) > maxG) maxG = groups(i); i += 1
+  /** Driver-side assembly of a [[DenseByteMap]] over the page numbers
+    * [minPage, minPage + nDir): single slots fill, whole pages adopt by
+    * reference (or merge byte-wise into an occupied one). A slot set twice
+    * is a unique-key violation and fails loudly. Allocation past
+    * `maxBytes` sets `overflow` and stops all further work: the caller
+    * falls back. */
+  private final class PageBuilder(minPage: Long, nDir: Int, maxBytes: Long,
+      what: String, name: String) {
+    private val pages = new Array[Array[Byte]](nDir)
+    private var allocated = 0L
+    var overflow = false
+
+    private def duplicate(k: Long): Nothing =
+      throw new IllegalArgumentException(s"duplicate $what $k: $name must be unique")
+
+    private def allocate(): Boolean = {
+      allocated += PageSize
+      overflow = allocated > maxBytes
+      !overflow
     }
-    if (maxG > 254) return null
+
+    /** slot(k) := v, v = group + 1. */
+    def put(k: Long, v: Byte): Unit = if (!overflow) {
+      val pIdx = ((k >> PageShift) - minPage).toInt
+      if (pages(pIdx) == null && allocate()) pages(pIdx) = new Array[Byte](PageSize)
+      if (!overflow) {
+        val page = pages(pIdx)
+        val s = (k & PageMask).toInt
+        if (page(s) != 0) duplicate(k)
+        page(s) = v
+      }
+    }
+
+    def merge(pNo: Long, incoming: Array[Byte]): Unit = if (!overflow) {
+      val pIdx = (pNo - minPage).toInt
+      val existing = pages(pIdx)
+      if (existing == null) { if (allocate()) pages(pIdx) = incoming }
+      else {
+        var s = 0
+        while (s < PageSize) {
+          if (incoming(s) != 0) {
+            if (existing(s) != 0) duplicate((pNo << PageShift) + s)
+            existing(s) = incoming(s)
+          }
+          s += 1
+        }
+      }
+    }
+
+    /** The map, or None after an overflow. */
+    def result: Option[DenseByteMap] =
+      if (overflow) None
+      else Some(new DenseByteMap(if (nDir == 0) 0L else minPage << PageShift,
+        nDir.toLong << PageShift, pages))
+  }
+
+  /** A [[PageBuilder]] over pages [minPage, maxPage] (empty when minPage >
+    * maxPage), or None when the directory itself passes its cap: one
+    * pointer per 2^17-key stretch, so a pathological span (random 64-bit
+    * keys) would blow the directory before any page allocates. */
+  private def pageBuilder(minPage: Long, maxPage: Long, maxBytes: Long,
+      what: String, name: String): Option[PageBuilder] = {
+    val nDir = if (minPage > maxPage) 0L else maxPage - minPage + 1
+    if (nDir > (1 << 22)) None
+    else Some(new PageBuilder(minPage, nDir.toInt, maxBytes, what, name))
+  }
+
+  /** Page-dense map of the dim's (key, group) arrays (≤ 254 groups), or
+    * None when not densifiable (directory past its cap, allocation past
+    * `maxBytes`). Duplicate keys fail loudly. */
+  private def pagedDim(d: GroupedSum.DimSide, maxBytes: Long): Option[DenseByteMap] = {
     var minP = Long.MaxValue
     var maxP = Long.MinValue
-    i = 0
-    while (i < keys.length) {
-      val p = keys(i) >> PageShift
+    d.keys.foreach { k =>
+      val p = k >> PageShift
       if (p < minP) minP = p
       if (p > maxP) maxP = p
-      i += 1
     }
-    val nDir = maxP - minP + 1
-    if (nDir > (1 << 22)) return null
-    val pages = new Array[Array[Byte]](nDir.toInt)
-    var alloc = 0L
-    i = 0
-    while (i < keys.length) {
-      val k = keys(i)
-      val pIdx = ((k >> PageShift) - minP).toInt
-      var pg = pages(pIdx)
-      if (pg == null) {
-        alloc += (1L << PageShift)
-        if (alloc > maxBytes) return null
-        pg = new Array[Byte](1 << PageShift)
-        pages(pIdx) = pg
+    pageBuilder(minP, maxP, maxBytes, "dim key", d.keyName).flatMap { b =>
+      var i = 0
+      while (i < d.keys.length && !b.overflow) {
+        b.put(d.keys(i), (d.groups(i) + 1).toByte)
+        i += 1
       }
-      val s = (k & PageMask).toInt
-      if (pg(s) != 0)
-        throw new IllegalArgumentException(
-          s"duplicate $what $k: $name must be unique")
-      pg(s) = (groups(i) + 1).toByte
-      i += 1
+      b.result
     }
-    new DenseByteMap(minP << PageShift, nDir << PageShift, pages)
   }
 
   /**
@@ -182,65 +211,28 @@ object DenseSnowflakeSum {
       build: DataFrame, buildKeyCol: String, buildRefCol: String,
       dim: DataFrame, dimKeyCol: String, dimGroupCol: String,
       maxKeySpan: Long = 1L << 27): DataFrame = {
-    require(outScale >= 0 && outScale <= 38, s"bad outScale $outScale")
     require(maxKeySpan > 0 && maxKeySpan <= (1L << 30),
       s"maxKeySpan out of range: $maxKeySpan")
-    val spark = fact.sparkSession
-    val dbg = sys.env.get("SPARK_GRAFT_DSS_DEBUG").contains("1")
-    var tMark = System.nanoTime()
-    def mark(label: String): Unit = if (dbg) {
-      val t = System.nanoTime()
-      System.err.println(f"[dss] $label ${(t - tMark) / 1e6}%.1fms")
-      tMark = t
-    }
-    val (aCol, aScale) = measureA
-    val factCols = Seq(factKeyCol, aCol) ++ measureB.map(_._2)
-    val buildCols = Seq(buildKeyCol, buildRefCol)
-
-    // Dim: [[BucketedSnowflakeSum.landDim]] — per-partition primitive
-    // builders in one job (the cap binds per partition in-task and in
-    // total at the await), overlapped with the scan-side plan derivation.
-    val landed = BucketedSnowflakeSum.landDim(dim, dimKeyCol, dimGroupCol)
-    val scans = flatScans(fact, factCols, build, buildCols)
-    mark("scan-resolve")
-    val d = landed()
-    mark("dim-collect-await")
-    val nGroups = d.nGroups
-    val dimKeys = d.keys
-    val dimGroups = d.groups
-    val dimSide = new BucketedSnowflakeSum.DimSide(dimKeys, dimGroups,
-      dimKeyCol)
-
-    val outSchema = StructType(Seq(
-      StructField(dimGroupCol, IntegerType, nullable = false),
-      StructField("sum", DecimalType(38, outScale), nullable = false),
-      StructField("n_rows", LongType, nullable = false)))
-
-    // The byte map stores group+1 in an unsigned byte: > 254 groups falls
-    // back (a snowflake group is a tiny dimension attribute — nation,
-    // region, flag; a wide group belongs in gridSum's int map).
-    val kernel = scans.filter(_ => nGroups <= 254)
-
-    kernel match {
-      case Some((factScan, iFk, iA, iBOpt, buildScan, iBk, iRef)) =>
+    GroupedSum.snowflakeSum(fact, factKeyCol, measureA, measureB, outScale,
+      build, buildKeyCol, buildRefCol, dim, dimKeyCol, dimGroupCol)(
+      (df, _, cols) => GroupedSum.bareScan(df, cols)) { (s, d) =>
+      // The byte map stores group+1 in an unsigned byte: > 254 groups
+      // falls back (a snowflake group is a tiny dimension attribute —
+      // nation, region, flag; a wide group belongs in gridSum's int map).
+      if (d.nGroups > 254) None
+      else {
+        val sc = fact.sparkSession.sparkContext
         // Dim probe structure: the dim's own keys usually come from the
         // same block-dense allocator as the build keys (customer keys in
         // q2), so try the paged byte map first — the build job's 15M
         // probes become bounds-check + array index instead of hash
         // lookups. The hash DimSide stays the path for non-dense dims
-        // (same loud duplicate check either way: tryPaged at the driver,
-        // DimSide.map at the first task).
-        val denseDim = tryPaged(dimKeys, dimGroups, 1L << 26,
-          "dim key", dimKeyCol)
-        val bcDenseDim = if (denseDim != null)
-          spark.sparkContext.broadcast(denseDim) else null
-        val bcDim = if (denseDim == null) {
-          val b = spark.sparkContext.broadcast(dimSide)
-          scala.concurrent.Future(dimSide.map)(
-            scala.concurrent.ExecutionContext.global): Unit
-          b
-        } else null
-        mark(s"dim-broadcast(dense=${denseDim != null})")
+        // (same loud duplicate check either way: pagedDim at the driver,
+        // DimSide.map when forced).
+        val bcPaged = pagedDim(d, 1L << 26).map(sc.broadcast(_))
+        val bcDim = if (bcPaged.isEmpty) Some(d.broadcast(sc)) else None
+        val (iBk, iRef) = (s.iBk, s.iRef)
+        val buildKeyName = buildKeyCol
         // Build job: each task fills ABSOLUTE-indexed page fragments
         // locally (page number = key >> 17, arithmetic shift — negative
         // keys floor correctly), catching its own duplicate keys at fill
@@ -249,13 +241,10 @@ object DenseSnowflakeSum {
         // order, the warehouse norm — touch near-disjoint page sets, so
         // the whole collect is ~occupancy bytes) or extracted (key,
         // group+1) pairs (scattered keys, where pages would ship mostly
-        // zeros). The driver adopts disjoint pages by reference and
-        // merges overlaps byte-wise (overlap collisions = the cross-task
-        // duplicate check).
-        val buildKeyName = buildKeyCol
-        val packed = buildScan.executeColumnar().mapPartitions { it =>
-          val dd = if (bcDenseDim != null) bcDenseDim.value else null
-          val dm = if (dd == null) bcDim.value.map else null
+        // zeros).
+        val packed = s.build.executeColumnar().mapPartitions { it =>
+          val dimLookup: LongIntLookup =
+            bcPaged.map(_.value).getOrElse(bcDim.get.value.map)
           val local = new java.util.HashMap[Long, Array[Byte]]()
           var nPairs = 0L
           // One-entry page cache: clustered keys make consecutive rows
@@ -270,8 +259,7 @@ object DenseSnowflakeSum {
             var i = 0
             while (i < n) {
               if (!nullable || !(cK.isNullAt(i) || cR.isNullAt(i))) {
-                val r = cR.getLong(i)
-                val g = if (dd != null) dd.get(r) else dm.get(r)
+                val g = dimLookup.get(cR.getLong(i))
                 if (g >= 0) {
                   val k = cK.getLong(i)
                   val pNo = k >> PageShift
@@ -279,282 +267,80 @@ object DenseSnowflakeSum {
                   if (page == null) {
                     page = local.get(pNo)
                     if (page == null) {
-                      page = new Array[Byte](1 << PageShift)
+                      page = new Array[Byte](PageSize)
                       local.put(pNo, page)
                     }
                     lastNo = pNo; lastArr = page
                   }
-                  val s = (k & PageMask).toInt
-                  if (page(s) != 0)
+                  val slot = (k & PageMask).toInt
+                  if (page(slot) != 0)
                     throw new IllegalArgumentException(
                       s"duplicate build key $k: $buildKeyName must be unique")
-                  page(s) = (g + 1).toByte
+                  page(slot) = (g + 1).toByte
                   nPairs += 1L
                 }
               }
               i += 1
             }
           }
-          val pageBytes = local.size.toLong << PageShift
-          if (pageBytes <= nPairs * 9) {
-            // Ship pages: (pageNo, bytes) pairs, no pair arrays.
-            val pn = new Array[Long](local.size)
-            val pd = new Array[Array[Byte]](local.size)
-            val eit = local.entrySet().iterator()
-            var j = 0
-            while (eit.hasNext) {
-              val e = eit.next(); pn(j) = e.getKey; pd(j) = e.getValue; j += 1
-            }
+          val pn = new Array[Long](local.size)
+          val pd = new Array[Array[Byte]](local.size)
+          var j = 0
+          local.forEach { (no, page) => pn(j) = no; pd(j) = page; j += 1 }
+          if ((local.size.toLong << PageShift) <= nPairs * 9)
             Iterator.single((pn, pd, null: Array[Long], null: Array[Byte]))
-          } else {
+          else {
             // Ship pairs extracted from the local pages.
             val kb = new Array[Long](nPairs.toInt)
             val gb = new Array[Byte](nPairs.toInt)
-            var j = 0
-            val eit = local.entrySet().iterator()
-            while (eit.hasNext) {
-              val e = eit.next()
-              val base = e.getKey << PageShift
-              val page = e.getValue
-              var s = 0
-              while (s < page.length) {
-                if (page(s) != 0) { kb(j) = base + s; gb(j) = page(s); j += 1 }
-                s += 1
+            j = 0
+            pn.indices.foreach { p =>
+              val base = pn(p) << PageShift
+              val page = pd(p)
+              var slot = 0
+              while (slot < PageSize) {
+                if (page(slot) != 0) { kb(j) = base + slot; gb(j) = page(slot); j += 1 }
+                slot += 1
               }
             }
             Iterator.single((null: Array[Long], null: Array[Array[Byte]], kb, gb))
           }
         }.collect()
-        mark("build-pack-collect")
-        // Observed page range across both encodings.
+        // The driver adopts disjoint pages by reference and merges
+        // overlaps byte-wise (overlap collisions = the cross-task
+        // duplicate check). Keys too sparse even page-wise (allocation
+        // past maxKeySpan, or the directory cap) fall back: the build
+        // scan is sunk cost, semantics come from the declarative spelling.
         var minPage = Long.MaxValue
         var maxPage = Long.MinValue
+        def cover(p: Long): Unit = {
+          if (p < minPage) minPage = p
+          if (p > maxPage) maxPage = p
+        }
         packed.foreach { case (pn, _, ks, _) =>
-          if (pn != null) {
-            var i = 0
-            while (i < pn.length) {
-              if (pn(i) < minPage) minPage = pn(i)
-              if (pn(i) > maxPage) maxPage = pn(i)
-              i += 1
-            }
-          } else {
-            var i = 0
-            while (i < ks.length) {
-              val p = ks(i) >> PageShift
-              if (p < minPage) minPage = p
-              if (p > maxPage) maxPage = p
-              i += 1
-            }
-          }
+          if (pn != null) pn.foreach(cover) else ks.foreach(k => cover(k >> PageShift))
         }
-        val nDirL = if (minPage > maxPage) 0L else maxPage - minPage + 1
-        val span = nDirL << PageShift
-        // Directory guard: one pointer per 2^17-key stretch of the span —
-        // a pathological span (random 64-bit keys) would blow the
-        // directory itself before any page allocates.
-        val dirOk = nDirL <= (1 << 22)
-        val pages = if (dirOk) new Array[Array[Byte]](nDirL.toInt) else null
-        var allocated = 0L
-        var overflow = !dirOk
-        var pi = 0
-        while (pi < packed.length && !overflow) {
-          val (pn, pd, ks, gs) = packed(pi)
-          if (pn != null) {
+        val map = pageBuilder(minPage, maxPage, maxKeySpan, "build key",
+          buildKeyName).flatMap { b =>
+          packed.foreach { case (pn, pd, ks, gs) =>
             var i = 0
-            while (i < pn.length && !overflow) {
-              val pIdx = (pn(i) - minPage).toInt
-              val incoming = pd(i)
-              val existing = pages(pIdx)
-              if (existing == null) {
-                allocated += (1L << PageShift)
-                if (allocated > maxKeySpan) overflow = true
-                else pages(pIdx) = incoming // adopt by reference
-              } else {
-                var s = 0
-                while (s < incoming.length) {
-                  if (incoming(s) != 0) {
-                    if (existing(s) != 0)
-                      throw new IllegalArgumentException(
-                        s"duplicate build key ${(pn(i) << PageShift) + s}: " +
-                          s"$buildKeyName must be unique")
-                    existing(s) = incoming(s)
-                  }
-                  s += 1
-                }
-              }
-              i += 1
-            }
-          } else {
-            var i = 0
-            while (i < ks.length && !overflow) {
-              val k = ks(i)
-              val pIdx = ((k >> PageShift) - minPage).toInt
-              var page = pages(pIdx)
-              if (page == null) {
-                allocated += (1L << PageShift)
-                if (allocated > maxKeySpan) overflow = true
-                else {
-                  page = new Array[Byte](1 << PageShift)
-                  pages(pIdx) = page
-                }
-              }
-              if (!overflow) {
-                val s = (k & PageMask).toInt
-                if (page(s) != 0)
-                  throw new IllegalArgumentException(
-                    s"duplicate build key $k: $buildKeyName must be unique")
-                page(s) = gs(i)
-                i += 1
-              }
+            if (pn != null) {
+              while (i < pn.length) { b.merge(pn(i), pd(i)); i += 1 }
+            } else {
+              while (i < ks.length) { b.put(ks(i), gs(i)); i += 1 }
             }
           }
-          pi += 1
+          b.result
         }
-        if (overflow) {
-          // Keys too sparse even page-wise: the map would exceed the
-          // broadcast byte ceiling (or the directory cap). The build-side
-          // scan is sunk cost; semantics come from the declarative
-          // reference.
-          mark(s"alloc-fallback(span=$span allocated=$allocated)")
-          declarative(fact, factCols, measureA, measureB, outScale,
-            build, buildCols, dim, dimKeyCol, dimGroupCol, dimSide)
-        } else {
-          val bcMap = spark.sparkContext.broadcast(
-            new DenseByteMap(if (span == 0) 0L else minPage << PageShift,
-              span, pages))
-          mark(s"dense-fill+broadcast(pages=${allocated >>> PageShift})")
-          val aFactor = math.pow(10.0, aScale)
-          val (bConst, bFactor) = measureB match {
-            case Some((c, _, s)) => (c, math.pow(10.0, s))
-            case None => (0L, 0.0)
+        map.map { m =>
+          val bcMap = sc.broadcast(m)
+          val (iFk, summand, nCells) = (s.iFk, s.summand, d.nGroups)
+          s.fact.executeColumnar().mapPartitions { it =>
+            Iterator.single(GroupedSum.accumulate(it,
+              new KeyProbe(bcMap.value, iFk), summand, nCells))
           }
-          val hasB = measureB.isDefined
-          val iB = iBOpt.getOrElse(-1) // sentinel: only read under hasB
-          val nCells = nGroups
-          val partials = factScan.executeColumnar().mapPartitions { it =>
-            val m = bcMap.value
-            val sumLo = new Array[Long](nCells)
-            val sumHi = new Array[Long](nCells)
-            val cnt = new Array[Long](nCells)
-            it.foreach { batch =>
-              val cKey = batch.column(iFk)
-              val cA = batch.column(iA)
-              val cB = if (hasB) batch.column(iB) else null
-              val nullable = cKey.hasNull || cA.hasNull || (hasB && cB.hasNull)
-              val n = batch.numRows()
-              var i = 0
-              while (i < n) {
-                if (!nullable || !(cKey.isNullAt(i) || cA.isNullAt(i) ||
-                    (hasB && cB.isNullAt(i)))) {
-                  val g = m.get(cKey.getLong(i))
-                  if (g >= 0) {
-                    val ua = java.lang.Math.round(cA.getDouble(i) * aFactor)
-                    val v = if (hasB)
-                      ua * (bConst - java.lang.Math.round(cB.getDouble(i) * bFactor))
-                    else ua
-                    Acc128.add(sumLo, sumHi, g, v)
-                    cnt(g) += 1L
-                  }
-                }
-                i += 1
-              }
-            }
-            Iterator.single((sumLo, sumHi, cnt))
-          }
-          val merge = (x: (Array[Long], Array[Long], Array[Long]),
-              y: (Array[Long], Array[Long], Array[Long])) => {
-            Acc128.mergeInto(x._1, x._2, y._1, y._2, nCells)
-            var i = 0
-            while (i < nCells) { x._3(i) += y._3(i); i += 1 }
-            x
-          }
-          val nParts = partials.getNumPartitions
-          val (tLo, tHi, tCnt) =
-            if (nParts == 0)
-              (new Array[Long](nCells), new Array[Long](nCells),
-                new Array[Long](nCells))
-            else if (nParts <= 512) partials.reduce(merge)
-            else partials.treeReduce(merge, depth = 2)
-          mark("fact-job+reduce")
-          val out = new java.util.ArrayList[Row](64)
-          var g = 0
-          while (g < nCells) {
-            if (tCnt(g) > 0)
-              out.add(Row(g, Acc128.toBigDecimal(tLo, tHi, g, outScale), tCnt(g)))
-            g += 1
-          }
-          spark.createDataFrame(out, outSchema)
-        }
-
-      case None =>
-        declarative(fact, factCols, measureA, measureB, outScale,
-          build, buildCols, dim, dimKeyCol, dimGroupCol, dimSide)
-    }
-  }
-
-  /** The declarative reference (verbatim the [[BucketedSnowflakeSum]]
-    * fallback — one snowflake semantics across the kernel family). */
-  private def declarative(fact: DataFrame, factCols: Seq[String],
-      measureA: (String, Int), measureB: Option[(Long, String, Int)],
-      outScale: Int, build: DataFrame, buildCols: Seq[String],
-      dim: DataFrame, dimKeyCol: String, dimGroupCol: String,
-      dimSide: BucketedSnowflakeSum.DimSide): DataFrame = {
-    import graft.functions.{double_units, sum128}
-    // Force the unique-dim check so both paths fail loudly on a
-    // duplicate dim key instead of the join silently fanning out.
-    dimSide.map: Unit
-    val (aCol, aScale) = measureA
-    val dimN = dim.select(col(dimKeyCol).cast("long").as("_dss_dk"),
-      col(dimGroupCol).cast("int").as(dimGroupCol))
-    val buildN = build
-      .where(buildCols.map(col(_).isNotNull).reduce(_ && _))
-      .select(col(buildCols(0)).cast("long").as("_dss_bk"),
-        col(buildCols(1)).cast("long").as("_dss_ref"))
-      .join(broadcast(dimN), col("_dss_ref") === col("_dss_dk"))
-      .select(col("_dss_bk"), col(dimGroupCol))
-    val unitsA = double_units(col(aCol), aScale)
-    val summand = measureB match {
-      case Some((c, bCol, s)) => unitsA * (lit(c) - double_units(col(bCol), s))
-      case None => unitsA
-    }
-    fact.where(factCols.map(col(_).isNotNull).reduce(_ && _))
-      .select(col(factCols(0)).cast("long").as("_dss_fk"),
-        summand.as("_dss_units"))
-      .join(buildN, col("_dss_fk") === col("_dss_bk"))
-      .groupBy(col(dimGroupCol))
-      .agg(sum128(col("_dss_units"), outScale).as("sum"),
-        count(lit(1)).as("n_rows"))
-  }
-
-  /** Resolve both sides to single bare vectorized parquet scans (no
-    * bucket-layout requirement — the flat-layout sibling of
-    * [[BucketedSnowflakeSum.coBucketedScans]]). None → fallback. */
-  private def flatScans(fact: DataFrame, factCols: Seq[String],
-      build: DataFrame, buildCols: Seq[String])
-      : Option[(FileSourceScanExec, Int, Int, Option[Int],
-        FileSourceScanExec, Int, Int)] =
-    try {
-      def resolve(df: DataFrame, cols: Seq[String])
-          : Option[FileSourceScanExec] = {
-        if (!BucketedSnowflakeSum.isBare(df.queryExecution.analyzed))
-          return None
-        val pruned = df.select(cols.distinct.map(col): _*)
-        pruned.queryExecution.executedPlan.collectLeaves() match {
-          case Seq(scan: FileSourceScanExec) if scan.supportsColumnar =>
-            Some(scan)
-          case _ => None
         }
       }
-      for {
-        factScan <- resolve(fact, factCols)
-        buildScan <- resolve(build, buildCols)
-        iFk <- BucketedSnowflakeSum.pos(factScan, factCols(0), _ == LongType)
-        iA <- BucketedSnowflakeSum.pos(factScan, factCols(1), _ == DoubleType)
-        iB <- if (factCols.length <= 2) Some(None)
-              else BucketedSnowflakeSum.pos(factScan, factCols(2),
-                _ == DoubleType).map(Some(_))
-        iBk <- BucketedSnowflakeSum.pos(buildScan, buildCols(0), _ == LongType)
-        iRef <- BucketedSnowflakeSum.pos(buildScan, buildCols(1), _ == LongType)
-      } yield (factScan, iFk, iA, iB, buildScan, iBk, iRef)
-    } catch { case scala.util.control.NonFatal(_) => None }
+    }
+  }
 }

@@ -222,6 +222,53 @@ class LateralTopKSpec extends SparkSuite {
     assert(rows.size == 9)
     // nearest by first coordinate: outer (1,2,3) → b_id 1,2,3 at rank order
     assert(rows.filter(_._1 == 1L).map(_._2).toSet == Set(1L, 2L, 3L))
+    // A self lateral join of one Dataset: every row's nearest is itself.
+    val self = Vss.lateralTopK(items, items, "b_vec", "b_vec", "b_id", 1)
+      .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(4)))
+    assert(self.length == 1000 && self.forall(t => t._1 == t._2 && t._3 == 0.0))
+  }
+
+  test("an indexed path the rule cannot bind (filtered inner, INT id) takes the aggregate, not the window") {
+    // The rule binds only a bare inner (at most the IsNotNull(vector)
+    // filter lateralTopK plants) with a BIGINT id column. Anything else over
+    // an indexed path must not leave the row_number window over the cross
+    // product to execute.
+    import spark.implicits._
+    def write(idType: String): DataFrame = {
+      val dir = Files.createTempDirectory(s"graft-lat-$idType").toFile.getAbsolutePath
+      (1 to 200).map(i => (i.toLong, Array(i.toFloat, 0f, 0f)))
+        .toDF("b_id", "b_vec")
+        .select(col("b_id").cast(idType).as("b_id"), col("b_vec").cast("array<float>").as("b_vec"))
+        .write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir)
+    }
+    def rows(df: DataFrame): Seq[(Long, Long, Double, Int)] =
+      df.select(col("a_id"), col("b_id").cast("long"), round(col("dist"), 6), col("rn"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .sortBy(t => (t._1, t._4)).toSeq
+    val longIds = write("bigint")
+    val intIds = write("int")
+    val filtered = longIds.where(col("b_id") > 3)
+    val unindexed = Seq(filtered, intIds).map(in =>
+      rows(Vss.lateralTopK(outer, in, "a_vec", "b_vec", "a_id", 3)))
+    Hnsw.createIndex(spark, "lat_nofire_long", longIds, "b_vec", "b_id", overwrite = true)
+    Hnsw.createIndex(spark, "lat_nofire_int", intIds, "b_vec", "b_id", overwrite = true)
+    try {
+      // Control: the bare BIGINT inner does take the index join.
+      assert(planOf(Vss.lateralTopK(outer, longIds, "a_vec", "b_vec", "a_id", 3))
+        .contains("HnswIndexJoinCore"))
+      Seq(filtered, intIds).zip(unindexed).foreach { case (in, expected) =>
+        val q = Vss.lateralTopK(outer, in, "a_vec", "b_vec", "a_id", 3)
+        val plan = planOf(q)
+        assert(!plan.contains("Window"), plan)
+        assert(!plan.contains("HnswIndexJoinCore"), plan)
+        assert(rows(q) == expected)
+        assert(expected.size == 9)
+      }
+    } finally {
+      Hnsw.dropIndex(spark, "lat_nofire_long")
+      Hnsw.dropIndex(spark, "lat_nofire_int")
+    }
   }
 
   test("neither brute path shuffles the cross product (bounded-heap vs window+group-limit, 10k rows)") {
