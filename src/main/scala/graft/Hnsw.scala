@@ -5,12 +5,14 @@ import java.io.File
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
 
 import graft.index.{GraphCache, HnswGraph, HnswIndexMeta, IndexCatalog, TombstoneCache}
+import graft.plans.RowidFetch
 
 /**
  * Public index-management API — the Spark re-expression of the reference's
@@ -160,12 +162,22 @@ object Hnsw {
     * segment's dimension — `dim` when given, else its first vector's.
     *
     * Each task inserts its rows in key order, so its graph depends only on
-    * which rows it holds, not on the order the shuffle delivers them. It
+    * which rows it holds, not on the order its input delivers them. It
     * builds on [[buildThreads]] threads ([[HnswGraph.addAll]]): the
     * session's cores shared among the segments, so with as many segments as
     * cores each task builds on one thread.
     *
-    * Partition placement ([[BuildPartitionByKey]]):
+    * Sizing: an upper bound on the input's rows — `rowsAtMost`, else
+    * [[rowsFromMetadata]] — that is at most
+    * [[MaxVectorsPerPartitionKey]] proves one segment without a job;
+    * otherwise a `count()` sizes the build. A bound only decides "one
+    * segment", so NULL vectors and filters never add a segment.
+    *
+    * Placement. One segment needs none: a bare scan or local relation is
+    * read by one task (`coalesce(1)`), so the whole build is one job with
+    * no shuffle; any other input keeps its map-side parallelism and meets
+    * one plain single-partition exchange. Several segments
+    * ([[BuildPartitionByKey]]):
     *  - "key" (default): range-partition on the id — deterministic
     *    placement, co-located id ranges keep the rowid fetch-back join
     *    prunable and key probes (delete) segment-prunable via the recorded
@@ -178,20 +190,25 @@ object Hnsw {
     *    recorded but overlap, so key probes degrade (stay correct). */
   private def buildSegments(
       spark: SparkSession,
-      data: org.apache.spark.sql.Dataset[(Long, Array[Float])],
+      data: Dataset[(Long, Array[Float])],
       dir: File,
       prefix: String,
       dim: Option[Int],
-      opts: Options): Seq[(String, Long, Long, Long, Array[Float])] = {
+      opts: Options,
+      rowsAtMost: Option[Long] = None): Seq[(String, Long, Long, Long, Array[Float])] = {
     val maxPer = spark.conf.getOption(MaxVectorsPerPartitionKey).map(_.toLong).getOrElse(262144L)
-    val total = data.count()
-    val numParts = math.max(1L, (total + maxPer - 1) / maxPer).toInt
+    val fromMetadata = rowsFromMetadata(data)
+    val numParts =
+      if (rowsAtMost.orElse(fromMetadata).exists(_ <= maxPer)) 1
+      else math.max(1L, (data.count() + maxPer - 1) / maxPer).toInt
     val dirPath = dir.getAbsolutePath
     val (metric, m, m0, efc) = (opts.metric, opts.m, opts.m0, opts.efConstruction)
     val byVector = numParts > 1 &&
       spark.conf.getOption(BuildPartitionByKey).exists(_.equalsIgnoreCase("vector"))
     val parted: org.apache.spark.rdd.RDD[(Long, Array[Float])] =
-      if (byVector) {
+      if (numParts == 1) {
+        (if (fromMetadata.isDefined) data.coalesce(1) else data.repartition(1)).rdd
+      } else if (byVector) {
         import spark.implicits._
         graft.embedding.Cluster.kmeansAssign(
             data.toDF("_1", "_2"), "_2", "_1", k = numParts, iters = 3)
@@ -228,6 +245,25 @@ object Hnsw {
         }
       }
       .collect().toSeq.sortBy(_._1)
+  }
+
+  /** An upper bound on `data`'s rows from metadata alone, when its
+    * optimized plan is a bare scan: only projections and filters over one
+    * parquet relation (the row counts of its footers, [[RowidFetch.rowCount]])
+    * or over a local relation. None for any other plan. */
+  private def rowsFromMetadata(data: Dataset[_]): Option[Long] = {
+    @scala.annotation.tailrec
+    def leaf(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => leaf(child)
+      case Filter(_, child) => leaf(child)
+      case other => other
+    }
+    leaf(data.queryExecution.optimizedPlan) match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        RowidFetch.rowCount(data.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], fs)
+      case local: LocalRelation => Some(local.data.length.toLong)
+      case _ => None
+    }
   }
 
   /** Threads for one build task: `parallelism` cores shared among
@@ -573,7 +609,8 @@ object Hnsw {
       .foldLeft(0)(math.max) + 1
     val segs =
       if (meta.segments.isEmpty) Seq.empty
-      else buildSegments(spark, live, dir, f"part-c$gen%03d", Some(meta.dim), opts)
+      else buildSegments(spark, live, dir, f"part-c$gen%03d", Some(meta.dim), opts,
+        rowsAtMost = Some(meta.count))
     // Commit order: the new meta first, so a reader never reloads a meta
     // that names deleted files (withFreshMeta's retry). Old tombstones name
     // only old-generation segments, so a reader between the save and the

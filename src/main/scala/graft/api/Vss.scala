@@ -142,6 +142,14 @@ object Vss {
    */
   def lateralTopK(outer: DataFrame, inner: DataFrame, outerCol: String, innerCol: String,
       outerKey: String, k: Int, metric: String = "l2sq"): DataFrame = {
+    // Both sides may be one relation with shared attribute ids (a self
+    // lateral join: one Dataset, or two TABLE(...) arguments naming it);
+    // re-aliasing every column gives each side fresh ids, so the window
+    // form's column references stay unambiguous. The redundant aliases are
+    // gone (RemoveRedundantAliases) before the index-join rule matches the
+    // inner side.
+    def freshIds(df: DataFrame): DataFrame = df.toDF(df.columns.toIndexedSeq: _*)
+    val (outerF, innerF) = (freshIds(outer), freshIds(inner))
     // NULL-vector semantics, unified across all three execution paths
     // (index join / window / bounded-heap aggregate): a NULL outer vector
     // emits no rows, a NULL inner vector never matches — the reference's
@@ -150,24 +158,17 @@ object Vss {
     // fallback would rank a NULL-vector outer row against NULL distances
     // (Spark ASC = NULLS FIRST) while the index path emits nothing —
     // the round-4 verdict's divergence.
-    val outerNN = outer.where(outer(outerCol).isNotNull)
-    val innerNN = inner.where(inner(innerCol).isNotNull)
+    val outerNN = outerF.where(outerF(outerCol).isNotNull)
+    val innerNN = innerF.where(innerF(innerCol).isNotNull)
     val metricName = metric match {
       case "l2sq" | "l2" => "l2sq"
       case "cosine" | "cos" => "cosine"
       case "ip" => "ip"
     }
-    val rewritten =
-      try Some(lateralTopKWindow(outerNN, innerNN, outer, inner, outerCol, innerCol,
-        outerKey, k, metricName)).filter(_.queryExecution.optimizedPlan.exists(
-          _.isInstanceOf[graft.plans.HnswIndexJoinCore]))
-      catch {
-        // A window form that does not analyse (a self-join of one Dataset:
-        // its column references are ambiguous) cannot be rewritten either.
-        case _: org.apache.spark.sql.AnalysisException => None
-      }
-    rewritten.getOrElse(
-      lateralTopKAggregate(outerNN, innerNN, outerCol, innerCol, outerKey, k, metricName))
+    Some(lateralTopKWindow(outerNN, innerNN, outerF, innerF, outerCol, innerCol,
+        outerKey, k, metricName))
+      .filter(_.queryExecution.optimizedPlan.exists(_.isInstanceOf[graft.plans.HnswIndexJoinCore]))
+      .getOrElse(lateralTopKAggregate(outerNN, innerNN, outerCol, innerCol, outerKey, k, metricName))
   }
 
   private def lateralDist(a: Column, b: Column, metricName: String): Column = metricName match {

@@ -3,6 +3,8 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -667,6 +669,50 @@ object TextHash {
   }
 
   /**
+   * The corpus quality score of a non-null text ([[graft.text.TextFunctions.qualityScore]])
+   * from one byte pass: chars as `length` counts them
+   * (`UTF8String.numChars`), tokens (spaces + 1), a-z bytes
+   * ([[ClassAlpha]]) and char-start bytes outside a-z / 0-9 / space
+   * ([[ClassNonAlnumSpace]]). The arithmetic and rounding are those of the
+   * [[graft.text.TextFunctions.textStats]] composition it replaces, in the
+   * same order, so the doubles are bit-identical. NaN for the empty text,
+   * whose ratios divide by zero.
+   */
+  def qualityScore(s: UTF8String): Double = {
+    val n = s.numBytes
+    var chars = 0
+    var spaces = 0
+    var alpha = 0
+    var punct = 0
+    var nextChar = 0
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (i >= nextChar) {
+        chars += 1
+        nextChar = i + UTF8String.numBytesForFirstByte(b)
+      }
+      if (b >= 'a' && b <= 'z') alpha += 1
+      else if (b == ' ') spaces += 1
+      else if ((b & 0xC0) != 0x80 && !(b >= '0' && b <= '9')) punct += 1
+      i += 1
+    }
+    if (chars == 0) return Double.NaN
+    val tokens = spaces + 1
+    val meanTokLen = roundHalfUp((chars - tokens + 1).toDouble / tokens.toDouble, 4)
+    val alphaRatio = roundHalfUp(alpha.toDouble / chars.toDouble, 4)
+    val punctRatio = roundHalfUp(punct.toDouble / chars.toDouble, 4)
+    val lengthOk = math.min(tokens.toDouble / 20.0, 1.0)
+    val punctOk = 1.0 - math.min(punctRatio * 4.0, 1.0)
+    val tokOk = if (meanTokLen >= 2.0 && meanTokLen <= 12.0) 1.0 else 0.25
+    roundHalfUp(lengthOk * 0.25 + alphaRatio * 0.35 + punctOk * 0.2 + tokOk * 0.2, 6)
+  }
+
+  /** Spark's `round(d, scale)` of a finite double. */
+  private def roundHalfUp(d: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(d).setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /**
    * Single-pass repetition signals over space-split tokens — the raw
    * counts behind the Gopher/MassiveText repetition filters (Rae et al.
    * 2021 §A1.1): total tokens, distinct tokens, total bigrams
@@ -1004,6 +1050,33 @@ case class AsciiClassCount(child: Expression, mode: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.expressions.TextHash.asciiClassCount($c, $mode)")
   override def prettyName: String = "ascii_class_count"
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** quality_score(text) -> DOUBLE — see [[TextHash.qualityScore]]. NULL for
+  * a NULL text. The empty text gives NULL, or under ANSI mode (read when
+  * the expression is built, as Spark's `/` reads it) the DIVIDE_BY_ZERO
+  * error, as the composition's ratios do. One expression, so a filter
+  * pushed below a projection evaluates the projected text once, not once
+  * per feature. */
+case class QualityScore(child: Expression, failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def nullSafeEval(v: Any): Any = {
+    val q = TextHash.qualityScore(v.asInstanceOf[UTF8String])
+    if (!q.isNaN) q else if (failOnError) throw Bridge.divideByZero() else null
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val q = ctx.freshName("quality")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""double $q = graft.expressions.TextHash.qualityScore($c);
+         |if (!Double.isNaN($q)) { ${ev.value} = $q; }
+         |else if ($failOnError) { throw org.apache.spark.sql.graftbridge.Bridge.divideByZero(); }
+         |else { ${ev.isNull} = true; }""".stripMargin)
+  }
+  override def prettyName: String = "quality_score"
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

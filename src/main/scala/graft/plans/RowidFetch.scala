@@ -44,13 +44,15 @@ import org.apache.spark.sql.types.StructType
  *    the session's SQL conf settings other than this library's own
  *    `spark.graft.*` keys, which no reader reads.
  *  - **Row-group locator.** Each parquet file's footer summary (row-group
- *    byte ranges, the id column's min and max, each column's uncompressed
- *    size) is cached by path, length and modification time, so a rewritten
- *    file gets a new one. A fetch keeps the row groups whose [min, max]
- *    holds a hit (or that have no statistics), an allow-list pass all of
- *    them, and reads each as one split; parquet keeps the row group whose
- *    midpoint falls in a split. Other formats, and files whose footer cannot
- *    be read, are read whole, so the read reports their errors.
+ *    byte ranges and row counts, each integer column's min and max, each
+ *    column's uncompressed size) is cached by path, length and modification
+ *    time, so a rewritten file gets a new one; index builds size their input
+ *    from the same summaries ([[rowCount]]). A fetch keeps the row groups
+ *    whose id [min, max] holds a hit (or that have no statistics), an
+ *    allow-list pass all of them, and reads each as one split; parquet keeps
+ *    the row group whose midpoint falls in a split. Other formats, and files
+ *    whose footer cannot be read, are read whole, so the read reports their
+ *    errors.
  *  - **Row-group cache.** When the splits pack into one partition (Spark's
  *    own `FilePartition.getFilePartitions`, `spark.sql.files.maxPartitionBytes`,
  *    `openCostInBytes`), each parquet split is taken from [[RowGroupCache]]:
@@ -104,10 +106,11 @@ private[graft] object RowidFetch extends PredicateHelper {
   private final class Reader(val read: PartitionedFile => Iterator[InternalRow],
       val requiredSchema: StructType)
 
-  /** A row group's split, the id column's [min, max] when recorded, and the
-    * uncompressed bytes of each top-level column (lower-cased name). */
-  private final case class RowGroup(start: Long, length: Long, ids: Option[(Long, Long)],
-      columnBytes: Map[String, Long])
+  /** A row group's split, its row count, the [min, max] of each integer
+    * column that records them (by dotted path), and the uncompressed bytes
+    * of each top-level column (lower-cased name). */
+  private final case class RowGroup(start: Long, length: Long, rows: Long,
+      bounds: Map[String, (Long, Long)], columnBytes: Map[String, Long])
 
   private[graft] final case class FileKey(path: String, length: Long, mtime: Long)
 
@@ -215,9 +218,9 @@ private[graft] object RowidFetch extends PredicateHelper {
         def split(start: Long, length: Long, bytes: Option[Long]) = Split(PartitionedFile(
           dir.values, SparkPath.fromFileStatus(st), start, length, Array.empty[String],
           st.getModificationTime, st.getLen), key, bytes)
-        val groups = if (parquet) idName.flatMap(rowGroups(st, key, _, footerConf)) else None
+        val groups = if (parquet && idName.isDefined) rowGroups(st, key, footerConf) else None
         groups.fold(Seq(split(0, st.getLen, None)))(_.toSeq
-          .filter(g => hits.forall(holdsHit(_, g)))
+          .filter(g => hits.forall(holdsHit(_, idName.flatMap(g.bounds.get))))
           .map(g => split(g.start, g.length,
             Some(readColumns.map(g.columnBytes.getOrElse(_, 0L)).sum))))
       }
@@ -309,11 +312,26 @@ private[graft] object RowidFetch extends PredicateHelper {
     (reader, true)
   }
 
+  /** Rows in the files of `fs`, summed from the cached footers: an upper
+    * bound on what a scan of it returns, whatever its filters. None when
+    * the relation is not parquet or a footer cannot be read. */
+  def rowCount(session: SparkSession, fs: HadoopFsRelation): Option[Long] = {
+    if (!fs.fileFormat.isInstanceOf[ParquetFileFormat]) return None
+    lazy val conf = session.sessionState.newHadoopConfWithOptions(fs.options)
+    fs.location.listFiles(Nil, Nil).flatMap(_.files).foldLeft(Option(0L)) { (total, f) =>
+      val st = f.fileStatus
+      for {
+        n <- total
+        groups <- rowGroups(st, FileKey(st.getPath.toString, st.getLen, st.getModificationTime), conf)
+      } yield n + groups.map(_.rows).sum
+    }
+  }
+
   /** Row groups of a parquet file in file order, each split from its first
     * byte to the next one's (the last to the end of the file), so each
     * split holds its own row group's midpoint and no other. None when the
     * footer cannot be read. */
-  private def rowGroups(st: FileStatus, key: FileKey, idName: String,
+  private def rowGroups(st: FileStatus, key: FileKey,
       conf: => Configuration): Option[Array[RowGroup]] = {
     val cached = footers.synchronized(footers.get(key))
     if (cached != null) return Some(cached)
@@ -324,26 +342,30 @@ private[graft] object RowidFetch extends PredicateHelper {
     import scala.jdk.CollectionConverters._
     val starts = blocks.asScala.map { b =>
       val columns = b.getColumns.asScala
-      val ids = columns.find(_.getPath.toDotString == idName)
-        .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
-        .flatMap(s => (s.genericGetMin, s.genericGetMax) match {
-          case (lo: Number, hi: Number) => Some((lo.longValue, hi.longValue))
-          case _ => None
-        })
+      val bounds = columns.flatMap { c =>
+        Option(c.getStatistics).filter(_.hasNonNullValue)
+          .flatMap(s => (s.genericGetMin, s.genericGetMax) match {
+            case (lo: java.lang.Integer, hi: java.lang.Integer) => Some((lo.longValue, hi.longValue))
+            case (lo: java.lang.Long, hi: java.lang.Long) => Some((lo.longValue, hi.longValue))
+            case _ => None
+          })
+          .map(c.getPath.toDotString -> _)
+      }.toMap
       val bytes = columns.groupMapReduce(
         _.getPath.toArray.head.toLowerCase(java.util.Locale.ROOT))(_.getTotalUncompressedSize)(_ + _)
-      (b.getStartingPos, ids, bytes)
+      (b.getStartingPos, b.getRowCount, bounds, bytes)
     }.sortBy(_._1)
     val ends = starts.drop(1).map(_._1) :+ st.getLen
-    val groups = starts.zip(ends).map { case ((s, ids, bytes), e) =>
-      RowGroup(s, e - s, ids, bytes)
+    val groups = starts.zip(ends).map { case ((s, rows, bounds, bytes), e) =>
+      RowGroup(s, e - s, rows, bounds, bytes)
     }.toArray
     footers.synchronized(footers.put(key, groups))
     Some(groups)
   }
 
-  /** Whether a row group can hold one of the sorted hits. */
-  private def holdsHit(sorted: Array[Long], g: RowGroup): Boolean = g.ids.forall {
+  /** Whether a row group whose ids span `ids` (None: not recorded) can hold
+    * one of the sorted hits. */
+  private def holdsHit(sorted: Array[Long], ids: Option[(Long, Long)]): Boolean = ids.forall {
     case (lo, hi) =>
       val i = java.util.Arrays.binarySearch(sorted, lo)
       val at = if (i >= 0) i else -i - 1

@@ -15,6 +15,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.errors.QueryExecutionErrors
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils,
   HadoopFsRelation}
 import org.apache.spark.sql.sources.Filter
@@ -23,6 +24,9 @@ import org.apache.spark.util.Utils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Spark's DIVIDE_BY_ZERO error, as ANSI-mode `/` raises it. */
+  def divideByZero(): ArithmeticException = QueryExecutionErrors.divideByZeroError(null)
 
   /** Drain the async listener bus: scheduler-counter snapshots (Bench's
     * per-query jobs/stages/tasks record) must see every event already

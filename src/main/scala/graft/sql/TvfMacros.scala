@@ -596,14 +596,8 @@ object TvfMacros {
       s"lateral_topk(outer, inner, outer_col, inner_col, outer_key, k[, metric]) " +
         s"takes 6 or 7 arguments, got ${args.length}")
     val spark = SparkSession.active
-    // Both TABLE(...) args may resolve the same relation with shared
-    // attribute ids (self-lateral); re-aliasing every column gives each
-    // side fresh ids so lateralTopK's dataset-column references stay
-    // unambiguous. The redundant aliases are gone (RemoveRedundantAliases)
-    // before the index-join rule pattern-matches the inner side.
-    def freshIds(df: DataFrame): DataFrame = df.toDF(df.columns.toIndexedSeq: _*)
-    Vss.lateralTopK(freshIds(table(spark, args(0), "lateral_topk outer")),
-      freshIds(table(spark, args(1), "lateral_topk inner")),
+    Vss.lateralTopK(table(spark, args(0), "lateral_topk outer"),
+      table(spark, args(1), "lateral_topk inner"),
       str(args(2), "lateral_topk outer_col"), str(args(3), "lateral_topk inner_col"),
       str(args(4), "lateral_topk outer_key"), intLit(args(5), "lateral_topk k"),
       if (args.length == 7) str(args(6), "lateral_topk metric") else "l2sq")

@@ -108,21 +108,23 @@ object TextFunctions {
    * standard cheap pre-filter for corpus curation: long-enough docs with
    * mostly alphabetic content and sane token lengths score high; symbol
    * soup, fragments, and over-long tokens score low.
+   *
+   *   round(least(n_tokens / 20, 1) × 0.25 + alpha_ratio × 0.35
+   *     + (1 − least(punct_ratio × 4, 1)) × 0.2
+   *     + (mean_tok_len between 2 and 12 ? 1 : 0.25) × 0.2, 6)
+   *
+   * The 4-decimal inputs × 2-decimal weights make every term an exact
+   * 6-decimal value, so rounding at 6 never sits on a half boundary —
+   * engines with different round-half conventions (DuckDB vs JVM
+   * BigDecimal HALF_UP) agree bit-for-bit. Rounding at 4 would not:
+   * e.g. alpha_ratio 0.815 × 0.35 = 0.28525 lands exactly on .xxxx5.
+   *
+   * One expression ([[graft.expressions.QualityScore]], one byte pass), not
+   * a composition over [[textStats]]: a filter pushed below a projection
+   * substitutes the projected expression into every reference to the text,
+   * and a composition refers to it once per feature.
    */
-  def qualityScore(text: Column): Column = {
-    val st = textStats(text)
-    val lengthOk = least(st.getField("n_tokens").cast("double") / 20.0, lit(1.0))
-    val alphaOk = st.getField("alpha_ratio")
-    val punctOk = lit(1.0) - least(st.getField("punct_ratio") * 4.0, lit(1.0))
-    val tokLen = st.getField("mean_tok_len")
-    val tokOk = when(tokLen.between(2.0, 12.0), 1.0).otherwise(0.25)
-    // The 4-decimal inputs × 2-decimal weights make every term an exact
-    // 6-decimal value, so rounding at 6 never sits on a half boundary —
-    // engines with different round-half conventions (DuckDB vs JVM
-    // BigDecimal HALF_UP) agree bit-for-bit. Rounding at 4 would not:
-    // e.g. alpha_ratio 0.815 × 0.35 = 0.28525 lands exactly on .xxxx5.
-    round((lengthOk * 0.25 + alphaOk * 0.35 + punctOk * 0.2 + tokOk * 0.2), 6)
-  }
+  def qualityScore(text: Column): Column = col(graft.expressions.QualityScore(expr(text)))
 
   /** Keep rows whose [[qualityScore]] meets `minScore` — the corpus filter. */
   def filterByQuality(df: org.apache.spark.sql.DataFrame, textCol: String,

@@ -943,6 +943,63 @@ class DedupSpec extends SparkSuite {
     assert(kept.contains(1L) && !kept.contains(2L))
   }
 
+  /** The score as the composition over `textStats` spelled it. */
+  private def composedQualityScore(text: org.apache.spark.sql.Column) = {
+    val st = TF.textStats(text)
+    val lengthOk = least(st.getField("n_tokens").cast("double") / 20.0, lit(1.0))
+    val punctOk = lit(1.0) - least(st.getField("punct_ratio") * 4.0, lit(1.0))
+    val tokOk = when(st.getField("mean_tok_len").between(2.0, 12.0), 1.0).otherwise(0.25)
+    round(lengthOk * 0.25 + st.getField("alpha_ratio") * 0.35 + punctOk * 0.2 + tokOk * 0.2, 6)
+  }
+
+  test("qualityScore equals the textStats composition, NULL and empty text included") {
+    val edge = Seq(null, "a", " ", "   ", "!!!! ???? ...", "naïve café — 東京 😀 ok",
+      "ÀÉÎ õü 123 abc", "x" * 400, "one two  three   four", "12 34 56", "a\tb\nc")
+    val texts = (spark.read.parquet(sf("0.01") + "/documents.parquet").select("text")
+      .as[String].collect().toSeq ++ edge ++ Seq("")).toDF("text")
+    def both(df: org.apache.spark.sql.DataFrame) =
+      df.select(TF.qualityScore(col("text")), composedQualityScore(col("text")))
+    val saved = spark.conf.getOption("spark.sql.ansi.enabled")
+    try for (ansi <- Seq("false", "true")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val nonEmpty = texts.where(col("text").isNull || length(col("text")) > 0)
+      val pairs = both(nonEmpty).collect()
+      assert(pairs.length >= 500 + edge.size)
+      pairs.foreach(r => assert(r.get(0) == r.get(1), r))
+      assert(pairs.count(_.isNullAt(0)) == 1)
+      // Interpreted, as a filter folded into a local relation evaluates it.
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(edge.map(org.apache.spark.sql.Row(_)): _*), nonEmpty.schema)
+      both(local).collect().foreach(r => assert(r.get(0) == r.get(1), r))
+      assert(local.where(TF.qualityScore(col("text")) >= 0.0).count() == edge.size - 1)
+      val empty = Seq("").toDF("text")
+      if (ansi == "true") {
+        def err(c: org.apache.spark.sql.Column) =
+          intercept[org.apache.spark.SparkThrowable](empty.select(c).collect()).getCondition
+        assert(err(TF.qualityScore(col("text"))) == "DIVIDE_BY_ZERO")
+        assert(err(composedQualityScore(col("text"))) == "DIVIDE_BY_ZERO")
+      } else assert(both(empty).collect().head == org.apache.spark.sql.Row(null, null))
+    } finally saved.fold(spark.conf.unset("spark.sql.ansi.enabled"))(
+      spark.conf.set("spark.sql.ansi.enabled", _))
+  }
+
+  test("a quality filter over a scrubbed text evaluates the scrub once per row in the filter") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scrub").toFile
+    val path = new java.io.File(dir, "docs").getAbsolutePath
+    Seq((1L, "mail me at a@b.com please"), (2L, "call 555-123-4567 now")).toDF("id", "text")
+      .write.parquet(path)
+    val scrubbed = spark.read.parquet(path).withColumn("text", TF.redactPii(col("text")))
+    def redacts(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case n => n.expressions.map(_.collect {
+        case e: graft.expressions.RedactPii => e }.size).sum }.sum
+    // One in the projection, one in the filter pushed below it.
+    val q = TF.filterByQuality(scrubbed, "text", 0.0)
+    assert(redacts(q) == 2, q.queryExecution.optimizedPlan)
+    assert(q.count() == 2)
+    // The composition refers to the text once per feature.
+    assert(redacts(scrubbed.where(composedQualityScore(col("text")) >= 0.0)) > 2)
+  }
+
   test("dropRepeatedSubstrings: spans removed everywhere, overlaps merge") {
     // 3-token windows. "a b c d" appears in docs 1 and 2 (offset 0 and 1):
     // doc1 tokens a,b,c,d are covered by repeated windows (a b c), (b c d);

@@ -111,6 +111,29 @@ class HnswFetchSpec extends SparkSuite {
     } finally Hnsw.dropIndex(spark, "fetch_groups")
   }
 
+  test("indexes keyed by two id columns of one file each prune by their own id's statistics") {
+    // id2 runs opposite to id, so a row group's id and id2 ranges differ.
+    val (_, t) = indexed("fetch_id", _.option("parquet.block.size", "4096"),
+      _.withColumn("id2", lit(1999L) - col("id")))
+    def byId2(seed: Int) = {
+      val rnd = new scala.util.Random(seed)
+      t.select(col("id2"), array_distance(col("vec"),
+        lit_vector(Array.fill(8)(rnd.nextGaussian().toFloat))).as("d")).orderBy("d").limit(10)
+    }
+    try {
+      query(t, 1).collect() // the footers are summarized for the id index's fetch
+      Hnsw.dropIndex(spark, "fetch_id")
+      Hnsw.createIndex(spark, "fetch_id2", t, "vec", "id2", Map("ef_search" -> "100000"),
+        overwrite = true)
+      for (seed <- 1 to 3) {
+        val q = byId2(seed)
+        val got = q.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(metric(q, "rowGroupsRead") + metric(q, "rowGroupsCached") <= 10)
+        assert(got == bruteForce(byId2(seed)).map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      }
+    } finally Hnsw.dropIndex(spark, "fetch_id2")
+  }
+
   test("a partitioned table, the partition column in the projection and the condition") {
     val (_, t) = indexed("fetch_parts", _.partitionBy("part"))
     try {

@@ -218,10 +218,126 @@ class HnswIndexSpec extends SparkSuite {
     val df = spark.read.parquet(path)
     val (meta, jobs) = jobsOf(Hnsw.createIndex(spark, "dim_idx", df, "vec", "id", overwrite = true))
     assert(meta.dim == 4 && meta.count == 300)
-    // The count (two jobs under AQE), the range partitioner's sample and the
-    // build; a head(1) for the dimension would be a fifth.
-    assert(jobs == 4, s"createIndex ran $jobs jobs")
+    // The footers size the build, so the build is the only job; a head(1)
+    // for the dimension would be a second.
+    assert(jobs == 1, s"createIndex ran $jobs jobs")
     Hnsw.dropIndex(spark, "dim_idx")
+  }
+
+  /** Jobs `body` starts and the shuffle bytes its tasks write. */
+  private def jobsAndShuffle[T](body: => T): (T, Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    Bridge.drainListenerBus(spark, 60000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (r, jobs) = jobsOf(body)
+      (r, jobs, bytes.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** `n` rows of (id, 8-dim vec), every `nullEvery`-th vector NULL (0: none),
+    * written as `files` parquet files. */
+  private def vectorTable(n: Int, files: Int, nullEvery: Int = 0) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val path = new java.io.File(Files.createTempDirectory("graft-build").toFile, "t").getAbsolutePath
+    (0 until n).map { i =>
+      (i.toLong, if (nullEvery > 0 && i % nullEvery == 0) null
+        else Array.fill(8)(rnd.nextGaussian().toFloat))
+    }.toDF("id", "vec").withColumn("vec", col("vec").cast("array<float>"))
+      .repartition(files).write.parquet(path)
+    val t = spark.read.parquet(path)
+    assert(t.inputFiles.length == files)
+    t
+  }
+
+  private def segmentBytes(name: String): Array[Byte] = {
+    val meta = IndexCatalog.load(base, name)
+    assert(meta.segments == Seq("part-00000.hnsw"), meta.segments)
+    Files.readAllBytes(new java.io.File(IndexCatalog.indexDir(base, name), meta.segments.head).toPath)
+  }
+
+  test("a one-segment build is one job with no shuffle, and its file does not depend on the input plan") {
+    val t = vectorTable(600, files = 3)
+    val (meta, jobs, shuffled) = jobsAndShuffle(
+      Hnsw.createIndex(spark, "one_scan", t, "vec", "id", overwrite = true))
+    assert(meta.count == 600 && meta.segments.size == 1)
+    assert(jobs == 1, s"createIndex ran $jobs jobs")
+    assert(shuffled == 0L, s"createIndex wrote $shuffled shuffle bytes")
+    val scanned = segmentBytes("one_scan")
+
+    // The same rows as a local relation: also one job, no shuffle.
+    val local = spark.createDataFrame(java.util.Arrays.asList(t.collect(): _*), t.schema)
+    val (_, localJobs, localShuffled) = jobsAndShuffle(
+      Hnsw.createIndex(spark, "one_local", local, "vec", "id", overwrite = true))
+    assert(localJobs == 1 && localShuffled == 0L, s"$localJobs jobs, $localShuffled bytes")
+    assert(java.util.Arrays.equals(segmentBytes("one_local"), scanned))
+
+    // Behind a join the input keeps its own partitions and meets one
+    // single-partition exchange: the same rows make the same file.
+    val joined = t.join(spark.range(0, 600).toDF("id"), "id")
+    val (_, _, joinShuffled) = jobsAndShuffle(
+      Hnsw.createIndex(spark, "one_join", joined, "vec", "id", overwrite = true))
+    assert(joinShuffled > 0L)
+    assert(java.util.Arrays.equals(segmentBytes("one_join"), scanned))
+    Seq("one_scan", "one_local", "one_join").foreach(Hnsw.dropIndex(spark, _))
+  }
+
+  test("NULL vectors count in the footer bound but not in the index") {
+    val t = vectorTable(300, files = 2, nullEvery = 3)
+    val fs = t.queryExecution.analyzed.collectFirst {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(
+        r: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) => r
+    }.get
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(graft.plans.RowidFetch.rowCount(session, fs) == Some(300L))
+    val (meta, jobs) = jobsOf(Hnsw.createIndex(spark, "nulls_idx", t, "vec", "id", overwrite = true))
+    assert(meta.count == 200 && meta.segments.size == 1 && jobs == 1, s"$meta, $jobs jobs")
+    Hnsw.dropIndex(spark, "nulls_idx")
+  }
+
+  test("a filtered scan whose footer bound exceeds a segment is counted, and builds one segment") {
+    val t = vectorTable(3000, files = 3)
+    spark.conf.set(Hnsw.MaxVectorsPerPartitionKey, "1000")
+    try {
+      val (meta, jobs) = jobsOf(
+        Hnsw.createIndex(spark, "filtered_idx", t.where(col("id") < 500), "vec", "id", overwrite = true))
+      assert(meta.count == 500 && meta.segments.size == 1, meta)
+      // The count (two jobs under AQE), then the build.
+      assert(jobs == 3, s"createIndex ran $jobs jobs")
+      // Unfiltered, the bound is exact and the build takes three segments.
+      val all = Hnsw.createIndex(spark, "filtered_idx", t, "vec", "id", overwrite = true)
+      assert(all.count == 3000 && all.segments.size == 3, all)
+    } finally {
+      spark.conf.unset(Hnsw.MaxVectorsPerPartitionKey)
+      Hnsw.dropIndex(spark, "filtered_idx")
+    }
+  }
+
+  test("insert of a local frame and compactIndex are sized without a count job") {
+    import spark.implicits._
+    val t = vectorTable(400, files = 2)
+    Hnsw.createIndex(spark, "maint_idx", t, "vec", "id", overwrite = true)
+    val extra = (1000 until 1050).map(i => (i.toLong, Array.fill(8)(i.toFloat))).toDF("id", "vec")
+      .withColumn("vec", col("vec").cast("array<float>"))
+    val (inserted, insertJobs, insertShuffled) = jobsAndShuffle(Hnsw.insert(spark, "maint_idx", extra))
+    assert(inserted.count == 450 && inserted.segments.size == 2)
+    assert(insertJobs == 1 && insertShuffled == 0L, s"$insertJobs jobs, $insertShuffled bytes")
+    Hnsw.delete(spark, "maint_idx", Seq(0L, 1L, 1000L))
+    // The live entries come from one task per old segment and meet one
+    // single-partition exchange: its map stage and the build.
+    val (compacted, compactJobs) = jobsOf(Hnsw.compactIndex(spark, "maint_idx"))
+    assert(compacted.count == 447 && compacted.segments.size == 1, compacted)
+    assert(compactJobs == 2, s"compactIndex ran $compactJobs jobs")
+    val hits = Hnsw.searchRaw(spark, "maint_idx", Array.fill(8)(1001f), 1)
+    assert(hits.head._1 == 1001L)
+    Hnsw.dropIndex(spark, "maint_idx")
   }
 
   test("segments that disagree on the dimension fail the build") {

@@ -228,6 +228,31 @@ class LateralTopKSpec extends SparkSuite {
     assert(self.length == 1000 && self.forall(t => t._1 == t._2 && t._3 == 0.0))
   }
 
+  test("an indexed self lateral join of one Dataset takes the index join, with the aggregate's rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lat-self").toFile.getAbsolutePath
+    val rnd = new scala.util.Random(5)
+    (1 to 300).map(i => (i.toLong, Array.fill(4)(rnd.nextGaussian().toFloat)))
+      .toDF("b_id", "b_vec").withColumn("b_vec", col("b_vec").cast("array<float>"))
+      .write.mode("overwrite").parquet(dir)
+    val items = spark.read.parquet(dir)
+    def rows(df: DataFrame): Seq[(Long, Long, Double, Int)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(2), math.rint(r.getDouble(4) * 1e6) / 1e6,
+        r.getInt(5))).sortBy(t => (t._1, t._4)).toSeq
+    def self = Vss.lateralTopK(items, items, "b_vec", "b_vec", "b_id", 3)
+    val brute = self
+    assert(planOf(brute).toLowerCase.contains("min_by"), planOf(brute))
+    val expected = rows(brute)
+    Hnsw.createIndex(spark, "lat_self_idx", items, "b_vec", "b_id",
+      Map("ef_search" -> "100000"), overwrite = true)
+    try {
+      val q = self
+      assert(planOf(q).contains("HnswIndexJoinCore"), planOf(q))
+      assert(rows(q) == expected)
+      assert(expected.size == 900 && expected.filter(_._4 == 1).forall(t => t._1 == t._2 && t._3 == 0.0))
+    } finally Hnsw.dropIndex(spark, "lat_self_idx")
+  }
+
   test("an indexed path the rule cannot bind (filtered inner, INT id) takes the aggregate, not the window") {
     // The rule binds only a bare inner (at most the IsNotNull(vector)
     // filter lateralTopK plants) with a BIGINT id column. Anything else over
