@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
 
-import graft.index.{GraphCache, HnswGraph, HnswIndexMeta, IndexCatalog, TombstoneCache}
+import graft.index.{ConcurrentIndexChangeException, GraphCache, HnswGraph, HnswIndexMeta, IndexCatalog, IndexManifest}
 import graft.plans.RowidFetch
 
 /**
@@ -32,7 +32,10 @@ import graft.plans.RowidFetch
  * the session's cores — the reference's N construction threads over one
  * shared graph (hnsw_index_physical_create.cpp:235-247), as a deterministic
  * batch build ([[HnswGraph.addAll]]). INSERT appends new
- * delta segments; DELETE appends tombstone keys; COMPACT rebuilds. Search
+ * delta segments; DELETE appends tombstone keys; COMPACT rebuilds. Each
+ * write commits one numbered manifest ([[IndexCatalog]]); a write that
+ * loses to a concurrent one throws [[ConcurrentIndexChangeException]] and
+ * deletes the segment files it wrote. Search
  * fans out over segments and merges top-k — per-segment recall at equal ef
  * is ≥ a single graph's, so partitioning is correctness-safe (SURVEY §7.3).
  */
@@ -115,10 +118,12 @@ object Hnsw {
           s"configuration option '$PersistenceKey' is set to true.")
     }
     val base = baseDir(spark)
-    if (IndexCatalog.exists(base, name)) {
-      if (!overwrite) throw new IllegalArgumentException(s"Index '$name' already exists")
-      IndexCatalog.drop(base, name)
+    if (IndexCatalog.exists(base, name) && !overwrite) {
+      throw new IllegalArgumentException(s"Index '$name' already exists")
     }
+    // Also clears a directory no manifest names: a failed build's or an
+    // older format's files.
+    IndexCatalog.drop(base, name)
     val opts = validateOptions(options)
 
     val field = df.schema.fields.find(_.name == column)
@@ -149,7 +154,6 @@ object Hnsw {
       segmentRanges = segments.map(s => (s._3, s._4)),
       centroids = segments.map(_._5))
     IndexCatalog.save(base, meta)
-    meta
   }
 
   def dropIndex(spark: SparkSession, name: String): Boolean =
@@ -173,11 +177,11 @@ object Hnsw {
     * otherwise a `count()` sizes the build. A bound only decides "one
     * segment", so NULL vectors and filters never add a segment.
     *
-    * Placement. One segment needs none: a bare scan or local relation is
-    * read by one task (`coalesce(1)`), so the whole build is one job with
-    * no shuffle; any other input keeps its map-side parallelism and meets
-    * one plain single-partition exchange. Several segments
-    * ([[BuildPartitionByKey]]):
+    * Placement. One segment needs none: a bare scan, a local relation or
+    * compaction's old segments are read by one task (`coalesce(1)`), so the
+    * whole build is one job with no shuffle; any other input keeps its
+    * map-side parallelism and meets one plain single-partition exchange.
+    * Several segments ([[BuildPartitionByKey]]):
     *  - "key" (default): range-partition on the id — deterministic
     *    placement, co-located id ranges keep the rowid fetch-back join
     *    prunable and key probes (delete) segment-prunable via the recorded
@@ -197,9 +201,9 @@ object Hnsw {
       opts: Options,
       rowsAtMost: Option[Long] = None): Seq[(String, Long, Long, Long, Array[Float])] = {
     val maxPer = spark.conf.getOption(MaxVectorsPerPartitionKey).map(_.toLong).getOrElse(262144L)
-    val fromMetadata = rowsFromMetadata(data)
+    val bound = rowsAtMost.orElse(rowsFromMetadata(data))
     val numParts =
-      if (rowsAtMost.orElse(fromMetadata).exists(_ <= maxPer)) 1
+      if (bound.exists(_ <= maxPer)) 1
       else math.max(1L, (data.count() + maxPer - 1) / maxPer).toInt
     val dirPath = dir.getAbsolutePath
     val (metric, m, m0, efc) = (opts.metric, opts.m, opts.m0, opts.efConstruction)
@@ -207,7 +211,7 @@ object Hnsw {
       spark.conf.getOption(BuildPartitionByKey).exists(_.equalsIgnoreCase("vector"))
     val parted: org.apache.spark.rdd.RDD[(Long, Array[Float])] =
       if (numParts == 1) {
-        (if (fromMetadata.isDefined) data.coalesce(1) else data.repartition(1)).rdd
+        (if (bound.isDefined) data.coalesce(1) else data.repartition(1)).rdd
       } else if (byVector) {
         import spark.implicits._
         graft.embedding.Cluster.kmeansAssign(
@@ -319,10 +323,10 @@ object Hnsw {
   /**
    * Compaction-race shield: run `body` against `meta`, and when a segment
    * file has vanished underneath it, reload the catalog entry and retry
-   * once. [[compactIndex]] writes the new generation completely and saves
-   * the catalog entry BEFORE deleting the old files, and generation-stamped
-   * names are never reused — so a reader that loaded meta pre-swap can only
-   * fail with missing-file, and the reloaded meta is always servable.
+   * once. [[compactIndex]] writes the new segments completely and commits
+   * its manifest BEFORE deleting the old files, and segment names are never
+   * reused — so a reader that loaded meta pre-swap can only fail with
+   * missing-file, and the reloaded meta is always servable.
    * Post-compaction contents are search-equivalent (compaction removes only
    * tombstoned entries, which search filters anyway). A task-side missing
    * file surfaces wrapped in SparkException; isMissingFile walks the cause
@@ -382,9 +386,9 @@ object Hnsw {
    * index join) and single-thread callers pass None.
    *
    * Only allowed nodes enter a segment's result ([[HnswGraph.search]]):
-   * those not tombstoned in the catalog and, when `allow` is given (sorted
-   * rowids, the filtered scan's allow-list), whose rowid it holds. A
-   * segment with no more allowed nodes than the candidate width
+   * those not tombstoned in the index's newest manifest and, when `allow`
+   * is given (sorted rowids, the filtered scan's allow-list), whose rowid it
+   * holds. A segment with no more allowed nodes than the candidate width
    * max(ef, k), or whose traversal returns fewer than k while at least k
    * are allowed, is answered by exact distances over its allowed nodes
    * ([[HnswGraph.exact]]). With `allow`, a query whose routed segments hold
@@ -398,7 +402,7 @@ object Hnsw {
       probe: Int, margin: Double, allow: Option[Array[Long]] = None): Found =
     withFreshMeta(base, meta) { meta =>
       val dirPath = IndexCatalog.indexDir(base, meta.name).getAbsolutePath
-      val tombs = TombstoneCache.bySegment(base, meta.name)
+      val tombs = IndexCatalog.current(base, meta.name).tombstones
       val allowIds = allow.orNull
       val width = math.max(ef, k)
       // Search each segment for the queries routed to it: segment → (query
@@ -478,12 +482,7 @@ object Hnsw {
       .as[(Long, Array[Float])]
     val dir = IndexCatalog.indexDir(base, name)
     val opts = Options(meta.metric, meta.efConstruction, meta.efSearch, meta.m, meta.m0)
-    // Monotonic stamp: max existing delta number + 1, never the segment
-    // count (compaction shrinks it, which would recycle live file names).
-    val stamp = meta.segments
-      .flatMap(s => DeltaName.findFirstMatchIn(s).map(_.group(1).toInt))
-      .foldLeft(meta.segments.size)(math.max) + 1
-    val segs = buildSegments(spark, data, dir, f"delta-$stamp%05d",
+    val segs = buildSegments(spark, data, dir, s"delta-${writeToken()}",
       Some(meta.dim).filter(_ > 0), opts)
     if (segs.isEmpty) return meta
     val dim = segmentDim(dir, segs)
@@ -503,9 +502,21 @@ object Hnsw {
       centroids =
         if (haveCentroids) meta.centroids ++ segs.map(_._5)
         else Seq.empty)
-    IndexCatalog.save(base, updated)
-    updated
+    committing(dir, segs.map(_._1))(IndexCatalog.save(base, updated))
   }
+
+  /** A name part no other write uses, so concurrent writes never write
+    * the same segment file. */
+  private def writeToken(): String = java.util.UUID.randomUUID().toString
+
+  /** Run `commit`; when it loses to a concurrent write, delete `written`,
+    * this write's own segment files, and rethrow. */
+  private def committing(dir: File, written: Seq[String])(commit: => HnswIndexMeta): HnswIndexMeta =
+    try commit catch {
+      case e: ConcurrentIndexChangeException =>
+        written.foreach(s => new File(dir, s).delete())
+        throw e
+    }
 
   /** Delete rowids (O12) by recording catalog tombstones — search drops
     * them until [[compactIndex]] rebuilds without them, matching the
@@ -518,9 +529,8 @@ object Hnsw {
     * graph, no matter how many segments the index has. */
   def delete(spark: SparkSession, name: String, keys: Seq[Long]): HnswIndexMeta = {
     val base = baseDir(spark)
-    val meta = IndexCatalog.load(base, name)
+    val IndexManifest(meta, existing) = IndexCatalog.current(base, name)
     val dirPath = IndexCatalog.indexDir(base, name).getAbsolutePath
-    val existing = IndexCatalog.tombstones(base, name)
     val distinctKeys = keys.distinct
     // Range-pruned probe plan: which keys could live in which segment.
     val probes: Seq[(String, Seq[Long])] = distinctKeys
@@ -530,7 +540,7 @@ object Hnsw {
       val g = GraphCache.get(new File(dirPath, s))
       ks.filter(g.contains).map(k => (s, k))
     }.flatten.toSeq
-    recordTombstones(base, name, meta, existing, hits)
+    recordTombstones(base, meta, existing, hits)
   }
 
   /**
@@ -538,15 +548,14 @@ object Hnsw {
    * on the driver as a collection — it is range-joined against a broadcast
    * of the per-segment key ranges, shuffled on segment, and each task probes
    * its segment's graph for membership. Only the HITS (keys actually present,
-   * = rows the tombstone file must record anyway) return to the driver.
+   * = rows the manifest must record anyway) return to the driver.
    * The Seq overload above keeps its direct path: for row-at-a-time deletes
    * (the reference's DELETE semantics) a Spark job costs more than the probe.
    */
   def delete(spark: SparkSession, name: String, keyDf: DataFrame): HnswIndexMeta = {
     val base = baseDir(spark)
-    val meta = IndexCatalog.load(base, name)
+    val IndexManifest(meta, existing) = IndexCatalog.current(base, name)
     val dirPath = IndexCatalog.indexDir(base, name).getAbsolutePath
-    val existing = IndexCatalog.tombstones(base, name)
     import spark.implicits._
     val keyCol = keyDf.columns.head
     // (segment, lo, hi) is tiny (one row per segment) — broadcast it so the
@@ -569,56 +578,51 @@ object Hnsw {
         rows.map(r => (r.getString(0), r.getLong(1)))
           .filter { case (s, k) => GraphCache.get(new File(dirPath, s)).contains(k) }
       }.collect().toSeq
-    recordTombstones(base, name, meta, existing, hits)
+    recordTombstones(base, meta, existing, hits)
   }
 
-  private def recordTombstones(base: String, name: String, meta: HnswIndexMeta,
-      existing: Set[(String, Long)], hits: Seq[(String, Long)]): HnswIndexMeta = {
-    val added = hits.toSet -- existing
-    IndexCatalog.writeTombstones(base, name, existing ++ added)
-    val updated = meta.copy(count = meta.count - added.map(_._2).size)
-    IndexCatalog.save(base, updated)
-    updated
+  /** Commit `hits`, the (segment, key) copies found, as tombstones on top
+    * of `existing`; `count` drops by the copies newly tombstoned. A delete
+    * that hides nothing new commits nothing. */
+  private def recordTombstones(base: String, meta: HnswIndexMeta,
+      existing: Map[String, Array[Long]], hits: Seq[(String, Long)]): HnswIndexMeta = {
+    val old = (s: String) => existing.getOrElse(s, Array.emptyLongArray)
+    val added = hits.groupBy(_._1).map { case (s, hs) =>
+      s -> hs.map(_._2).distinct.filter(java.util.Arrays.binarySearch(old(s), _) < 0)
+    }.filter(_._2.nonEmpty)
+    if (added.isEmpty) meta
+    else IndexCatalog.save(base, meta.copy(count = meta.count - added.valuesIterator.map(_.size).sum),
+      existing ++ added.map { case (s, ks) => s -> (old(s) ++ ks).sorted })
   }
 
   /** Rebuild segments without catalog-tombstoned entries (O13).
-    * The live entries never touch the driver: a task per old segment reads
-    * its graph from shared storage and emits survivors, and the normal
-    * partitioned build path writes the fresh segments. */
+    * The live entries never touch the driver: tasks read the old segments'
+    * graphs from shared storage and emit survivors, and the normal build
+    * path writes the fresh segments — for one segment, the same task. */
   def compactIndex(spark: SparkSession, name: String): HnswIndexMeta = {
     val base = baseDir(spark)
-    val meta = IndexCatalog.load(base, name)
+    val IndexManifest(meta, tombs) = IndexCatalog.current(base, name)
     val dir = IndexCatalog.indexDir(base, name)
     val dirPath = dir.getAbsolutePath
-    val tombs = IndexCatalog.tombstones(base, name)
     import spark.implicits._
     val live = spark.sparkContext
-      .parallelize(meta.segments, math.max(1, meta.segments.size))
-      .flatMap { s =>
+      .parallelize(meta.segments.map(s => (s, tombs.getOrElse(s, Array.emptyLongArray))),
+        math.max(1, meta.segments.size))
+      .flatMap { case (s, deleted) =>
         GraphCache.get(new File(dirPath, s)).entries
-          .filterNot { case (k, _) => tombs.contains((s, k)) }
+          .filter { case (k, _) => java.util.Arrays.binarySearch(deleted, k) < 0 }
       }.toDS()
     val opts = Options(meta.metric, meta.efConstruction, meta.efSearch, meta.m, meta.m0)
-    // Build the replacement segments first under a fresh generation prefix
-    // (max existing generation + 1 — a repeated count would reuse a live
-    // file name: the build would overwrite a segment the entries tasks
-    // are reading, then the cleanup below would delete it), then atomically
-    // swap via the metadata file.
-    val gen = meta.segments
-      .flatMap(s => CompactName.findFirstMatchIn(s).map(_.group(1).toInt))
-      .foldLeft(0)(math.max) + 1
     val segs =
       if (meta.segments.isEmpty) Seq.empty
-      else buildSegments(spark, live, dir, f"part-c$gen%03d", Some(meta.dim), opts,
+      else buildSegments(spark, live, dir, s"part-c${writeToken()}", Some(meta.dim), opts,
         rowsAtMost = Some(meta.count))
-    // Commit order: the new meta first, so a reader never reloads a meta
-    // that names deleted files (withFreshMeta's retry). Old tombstones name
-    // only old-generation segments, so a reader between the save and the
-    // clear drops nothing from the new generation.
-    val updated = meta.copy(count = segs.map(_._2).sum, segments = segs.map(_._1),
-      segmentRanges = segs.map(s => (s._3, s._4)), centroids = segs.map(_._5))
-    IndexCatalog.save(base, updated)
-    IndexCatalog.writeTombstones(base, name, Set.empty)
+    val updated = committing(dir, segs.map(_._1))(IndexCatalog.save(base,
+      meta.copy(count = segs.map(_._2).sum, segments = segs.map(_._1),
+        segmentRanges = segs.map(s => (s._3, s._4)), centroids = segs.map(_._5)),
+      Map.empty))
+    // The old segments go only after the commit, so the newest manifest
+    // never names a deleted file.
     meta.segments.foreach(s => new File(dir, s).delete())
     GraphCache.invalidate(dirPath)
     updated
@@ -647,15 +651,14 @@ object Hnsw {
     val rows = IndexCatalog.list(base).map { meta =>
       val dirPath = IndexCatalog.indexDir(base, meta.name).getAbsolutePath
       val stats = withFreshMeta(base, meta)(m => segmentStats(spark, dirPath, m.segments))
-      val tombs = IndexCatalog.tombstones(base, meta.name)
+      val deleted = IndexCatalog.current(base, meta.name).tombstones.valuesIterator.map(_.length.toLong).sum
       val levels = if (stats.isEmpty) 0 else stats.map(_.maxLevel).max + 1
       val mergedStats = (0 until levels).map { lvl =>
         val per = stats.map(_.levels.lift(lvl).getOrElse((0L, 0L, 0L, 0L)))
         Row(per.map(_._1).sum, per.map(_._2).sum, per.map(_._3).sum, per.map(_._4).sum)
       }
       Row(meta.name, meta.paths.mkString(","), meta.column, meta.idColumn,
-        meta.metric, meta.dim, meta.count,
-        tombs.size.toLong,
+        meta.metric, meta.dim, meta.count, deleted,
         meta.segments.size, levels,
         stats.map(_.memBytes).sum, mergedStats)
     }
@@ -679,9 +682,6 @@ object Hnsw {
       StructField("edges", LongType),
       StructField("max_edges", LongType),
       StructField("allocated_bytes", LongType)))))))
-
-  private val DeltaName = """delta-(\d+)""".r
-  private val CompactName = """part-c(\d+)""".r
 
   // --------------------------------------------------------------- options
 

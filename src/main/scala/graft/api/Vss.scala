@@ -24,7 +24,7 @@ import graft.functions.{array_cosine_similarity, array_distance, array_inner_pro
  * reference macro, which materializes the left table per chunk —
  * hnsw_index_macros.cpp:9-74): the query side must be broadcast-sized;
  * the indexed lateral path is the big-outer surface. The hint is guarded
- * by a leaf-sum size estimate ([[BroadcastQueryMaxBytesKey]]) so a query
+ * by a leaf-sum size estimate ([[DefaultBroadcastQueryMaxBytes]]) so a query
  * side past Spark's broadcast limits degrades to the slow-but-completing
  * AQE plan instead of failing the job.
  */
@@ -47,14 +47,11 @@ object Vss {
     * broadcast limits would otherwise fail the job outright where the
     * unhinted plan is slow but completes. The estimate is the PRE-filter
     * leaf sum (without CBO a pushed filter doesn't shrink it), so the
-    * default is generous — half of Spark's 8 GB hard broadcast cap — and
-    * a filtered-tiny query side over a huge table can raise it. 0 = never
-    * hint. */
-  val BroadcastQueryMaxBytesKey = "spark.graft.vss.broadcastQueryMaxBytes"
+    * ceiling is generous — half of Spark's 8 GB hard broadcast cap. */
   val DefaultBroadcastQueryMaxBytes: Long = 4L << 30
 
   /** The broadcast hint for the bounded query side of the brute-force
-    * cross joins, guarded by [[BroadcastQueryMaxBytesKey]]. UNKNOWN stats
+    * cross joins, guarded by [[DefaultBroadcastQueryMaxBytes]]. UNKNOWN stats
     * keep the hint (pre-guard behavior): that covers both estimation
     * failure AND leaves that report Spark's unknown-size sentinel
     * (`spark.sql.defaultSizeInBytes` = Long.MaxValue — LogicalRDD,
@@ -64,12 +61,10 @@ object Vss {
     * build-side trap bites hardest. Only a MEASURED leaf sum above the
     * ceiling skips the hint. */
   private def broadcastQuery(df: DataFrame): DataFrame = {
-    val max = graft.spark.ExecTuning.confLong(df.sparkSession,
-      BroadcastQueryMaxBytesKey, DefaultBroadcastQueryMaxBytes)
     val est = try Some(graft.spark.ExecTuning.inputBytes(df))
       catch { case _: Exception => None }
     val unknown = est.forall(_ >= BigInt(Long.MaxValue) / 4)
-    if (max > 0 && (unknown || est.forall(_ <= BigInt(max)))) broadcast(df)
+    if (unknown || est.forall(_ <= BigInt(DefaultBroadcastQueryMaxBytes))) broadcast(df)
     else df
   }
 

@@ -1,8 +1,7 @@
 package graft.index
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
-import java.nio.charset.StandardCharsets
-import java.nio.file.{AtomicMoveNotSupportedException, Files, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException}
 import java.util.Properties
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -11,8 +10,10 @@ import scala.jdk.CollectionConverters._
  * Durable metadata for one HNSW index. The Spark analogue of the reference's
  * catalog entry + serialized usearch blob
  * (/root/reference/src/hnsw/hnsw_index.cpp:532-585): an index is a directory
- * of immutable graph segment files plus a properties file, on storage shared
- * by driver and executors (local FS here; an object store on a real cluster).
+ * of immutable graph segment files plus numbered manifests ([[IndexCatalog]]),
+ * on storage shared by driver and executors (local FS here; an object store
+ * on a real cluster). `version` is the manifest version it was read at (0:
+ * not committed yet); [[IndexCatalog.save]] commits `version + 1`.
  *
  * `paths` records the root file paths of the indexed relation — our
  * substitute for DuckDB's table binding (hnsw_optimize_scan.cpp:91-98): the
@@ -43,9 +44,8 @@ case class HnswIndexMeta(
       * instead of all; [[routedSegments]]). Empty or misaligned (pre-r12
       * artifact, or an insert onto one) = unknown: route to every segment,
       * which is always correct. */
-    centroids: Seq[Array[Float]] = Seq.empty) {
-  def dir(base: String): String = s"$base/$name"
-
+    centroids: Seq[Array[Float]] = Seq.empty,
+    version: Long = 0L) {
   /** The `p` segments whose centroids are nearest `q` by the index metric
     * — the conf-gated sublinear scaling path for many-segment indexes
     * (every-segment fan-out grows ∝ segments while the answer needs k).
@@ -105,6 +105,34 @@ case class HnswIndexMeta(
     else segments
 }
 
+/** One committed version of an index: its metadata and its tombstoned keys,
+  * sorted, by segment file. */
+final case class IndexManifest(meta: HnswIndexMeta, tombstones: Map[String, Array[Long]])
+
+/** A commit that lost to another writer: `version` of index `index` was
+  * committed first. The loser's changes are not visible; it has nothing to
+  * undo but the segment files it wrote itself. */
+final class ConcurrentIndexChangeException(val index: String, val version: Long)
+  extends IllegalStateException(s"HNSW index '$index' was changed concurrently: " +
+    s"version $version was committed by another writer")
+
+/**
+ * The index catalog. Each commit of an index is one immutable manifest,
+ * `<index>/_manifest/<version>.properties`: segments, key ranges, centroids,
+ * count, tombstones and a format number. The newest version is the index;
+ * a segment file no manifest names (a crashed or losing writer's) is never
+ * read. A commit writes a temporary file and publishes it as version N + 1
+ * with a hard link, which fails when that name exists — put-if-absent log
+ * entries, as Delta Lake commits a table (Armbrust et al., VLDB 2020).
+ * Readers never see a partial manifest; of two writers that read version N,
+ * the second to publish gets a [[ConcurrentIndexChangeException]]. Each
+ * commit then deletes the manifests older than the newest two.
+ *
+ * A version is parsed once per JVM: [[current]] lists a couple of names and
+ * returns the cached parse of the newest. The cache also checks the file's
+ * mtime, so a dropped and re-created index, whose versions restart at 1, is
+ * never served an old parse.
+ */
 object IndexCatalog {
 
   val DefaultM = 16
@@ -112,123 +140,163 @@ object IndexCatalog {
   val DefaultEfConstruction = 128
   val DefaultEfSearch = 64
 
-  private val MetaFile = "meta.properties"
-  private[index] val TombFile = "tombstones.txt"
+  private val ManifestDir = "_manifest"
+  private val Format = "1"
+  private val VersionName = """(\d+)\.properties""".r
+  private val DeletedPrefix = "deleted."
+  /** Separates paths and segment names: no file path holds a NUL. */
+  private val Sep = "\u0000"
 
   def indexDir(base: String, name: String): File = new File(base, name)
 
-  def exists(base: String, name: String): Boolean =
-    new File(indexDir(base, name), MetaFile).isFile
+  private def manifestFile(dir: File, version: Long): File =
+    new File(new File(dir, ManifestDir), f"$version%020d.properties")
 
-  def list(base: String): Seq[HnswIndexMeta] = {
-    val root = new File(base)
-    if (!root.isDirectory) return Seq.empty
-    root.listFiles().toSeq
-      .filter(d => new File(d, MetaFile).isFile)
-      .map(d => load(base, d.getName))
-      .sortBy(_.name)
+  private def versions(dir: File): Seq[Long] =
+    Option(new File(dir, ManifestDir).list()).toSeq.flatten.collect {
+      case VersionName(v) => v.toLong
+    }
+
+  /** The parse of each index's newest manifest, by index directory. */
+  private final case class Parsed(version: Long, mtime: Long, manifest: IndexManifest)
+  private val parsedCache = TrieMap.empty[String, Parsed]
+  private val parseCount = new java.util.concurrent.atomic.AtomicLong
+
+  /** Manifests parsed since JVM start (diagnostic, like `GraphCache.stats`). */
+  def manifestParses: Long = parseCount.get()
+
+  def exists(base: String, name: String): Boolean = versions(indexDir(base, name)).nonEmpty
+
+  def list(base: String): Seq[HnswIndexMeta] =
+    Option(new File(base).listFiles()).toSeq.flatten
+      .flatMap(latest).map(_.meta).sortBy(_.name)
+
+  def load(base: String, name: String): HnswIndexMeta = current(base, name).meta
+
+  /** The newest committed version of index `name`. */
+  def current(base: String, name: String): IndexManifest =
+    latest(indexDir(base, name)).getOrElse(throw new java.io.FileNotFoundException(
+      s"HNSW index '$name' not found in $base"))
+
+  /** Tombstones are (segment file, key) pairs: a delete hides the key copy
+    * in the segments that existed at delete time, so a later re-insert (a
+    * fresh delta segment) is naturally visible again. */
+  def tombstones(base: String, name: String): Set[(String, Long)] =
+    current(base, name).tombstones.iterator
+      .flatMap { case (s, ks) => ks.iterator.map(k => (s, k)) }.toSet
+
+  /** The newest manifest in `dir`, None when it has none. A version that a
+    * newer commit deleted between the listing and the read sends the read
+    * to the newer one. */
+  @scala.annotation.tailrec
+  private def latest(dir: File): Option[IndexManifest] = {
+    val vs = versions(dir)
+    if (vs.isEmpty) None
+    else read(dir, vs.max) match {
+      case None => latest(dir)
+      case found => found
+    }
   }
 
-  def load(base: String, name: String): HnswIndexMeta = {
-    val p = new Properties()
-    val in = new FileInputStream(new File(indexDir(base, name), MetaFile))
-    try p.load(in) finally in.close()
-    HnswIndexMeta(
-      name = p.getProperty("name"),
-      paths = split(p.getProperty("paths")),
-      column = p.getProperty("column"),
-      idColumn = p.getProperty("idColumn"),
-      metric = p.getProperty("metric"),
-      dim = p.getProperty("dim").toInt,
-      m = p.getProperty("m").toInt,
-      m0 = p.getProperty("m0").toInt,
-      efConstruction = p.getProperty("efConstruction").toInt,
-      efSearch = p.getProperty("efSearch").toInt,
-      count = p.getProperty("count").toLong,
-      segments = split(p.getProperty("segments")),
-      segmentRanges = Option(p.getProperty("segmentRanges"))
-        .filter(_.nonEmpty)
-        .map(_.split(";", -1).toSeq.map { r =>
-          val i = r.indexOf(':')
-          (r.substring(0, i).toLong, r.substring(i + 1).toLong)
-        })
-        .getOrElse(Seq.empty),
-      centroids = Option(p.getProperty("centroids"))
-        .filter(_.nonEmpty)
-        .map(_.split(";", -1).toSeq.map(_.split(",").map(_.toFloat)))
-        .getOrElse(Seq.empty))
+  /** Version `version` of the index in `dir`; None when its file is gone. */
+  private def read(dir: File, version: Long): Option[IndexManifest] = {
+    val f = manifestFile(dir, version)
+    val key = dir.getAbsolutePath
+    val mtime = f.lastModified()
+    parsedCache.get(key) match {
+      case Some(c) if c.version == version && c.mtime == mtime => Some(c.manifest)
+      case cached =>
+        val p = new Properties()
+        try {
+          val in = Files.newInputStream(f.toPath)
+          try p.load(in) finally in.close()
+        } catch { case _: NoSuchFileException => return None }
+        parseCount.incrementAndGet()
+        val m = parse(p, version)
+        if (cached.forall(_.version <= version)) parsedCache.put(key, Parsed(version, mtime, m))
+        Some(m)
+    }
   }
 
-  def save(base: String, meta: HnswIndexMeta): Unit = {
+  private def parse(p: Properties, version: Long): IndexManifest = {
+    def get(k: String) = p.getProperty(k, "")
+    if (get("format") != Format) {
+      throw new IllegalStateException(
+        s"HNSW index '${get("name")}': unsupported manifest format '${get("format")}'")
+    }
+    def pairs(k: String) = seq(get(k), ";")
+    val meta = HnswIndexMeta(name = get("name"), paths = seq(get("paths"), Sep),
+      column = get("column"), idColumn = get("idColumn"), metric = get("metric"),
+      dim = get("dim").toInt, m = get("m").toInt, m0 = get("m0").toInt,
+      efConstruction = get("efConstruction").toInt, efSearch = get("efSearch").toInt,
+      count = get("count").toLong, segments = seq(get("segments"), Sep),
+      segmentRanges = pairs("segmentRanges").map { r =>
+        val i = r.indexOf(':')
+        (r.substring(0, i).toLong, r.substring(i + 1).toLong)
+      },
+      centroids = pairs("centroids").map(_.split(",").map(_.toFloat)),
+      version = version)
+    val tombstones = p.stringPropertyNames.asScala.iterator.filter(_.startsWith(DeletedPrefix))
+      .map(k => k.stripPrefix(DeletedPrefix) -> seq(get(k), ",").map(_.toLong).toArray).toMap
+    IndexManifest(meta, tombstones)
+  }
+
+  /** Commit `meta` as version `meta.version + 1`, keeping the tombstones of
+    * `meta.version`. */
+  def save(base: String, meta: HnswIndexMeta): HnswIndexMeta = {
+    val tombstones =
+      if (meta.version == 0) Map.empty[String, Array[Long]]
+      else read(indexDir(base, meta.name), meta.version).getOrElse(
+        throw new ConcurrentIndexChangeException(meta.name, meta.version + 1)).tombstones
+    save(base, meta, tombstones)
+  }
+
+  /** Commit `meta` with `tombstones` (sorted keys by segment file) as
+    * version `meta.version + 1`, and return the committed meta. Throws
+    * [[ConcurrentIndexChangeException]] when that version exists. */
+  def save(base: String, meta: HnswIndexMeta, tombstones: Map[String, Array[Long]]): HnswIndexMeta = {
     val dir = indexDir(base, meta.name)
-    dir.mkdirs()
+    val committed = meta.copy(version = meta.version + 1)
+    val kept = tombstones.filter(_._2.nonEmpty)
     val p = new Properties()
-    p.setProperty("name", meta.name)
-    p.setProperty("paths", join(meta.paths))
-    p.setProperty("column", meta.column)
-    p.setProperty("idColumn", meta.idColumn)
-    p.setProperty("metric", meta.metric)
-    p.setProperty("dim", meta.dim.toString)
-    p.setProperty("m", meta.m.toString)
-    p.setProperty("m0", meta.m0.toString)
-    p.setProperty("efConstruction", meta.efConstruction.toString)
-    p.setProperty("efSearch", meta.efSearch.toString)
-    p.setProperty("count", meta.count.toString)
-    p.setProperty("segments", join(meta.segments))
-    if (meta.segmentRanges.nonEmpty) {
-      p.setProperty("segmentRanges",
-        meta.segmentRanges.map { case (lo, hi) => s"$lo:$hi" }.mkString(";"))
-    }
-    if (meta.centroids.nonEmpty) {
+    (Seq("format" -> Format, "name" -> meta.name, "paths" -> meta.paths.mkString(Sep),
+      "column" -> meta.column, "idColumn" -> meta.idColumn, "metric" -> meta.metric,
+      "dim" -> meta.dim.toString, "m" -> meta.m.toString, "m0" -> meta.m0.toString,
+      "efConstruction" -> meta.efConstruction.toString, "efSearch" -> meta.efSearch.toString,
+      "count" -> meta.count.toString, "segments" -> meta.segments.mkString(Sep),
+      "segmentRanges" -> meta.segmentRanges.map { case (lo, hi) => s"$lo:$hi" }.mkString(";"),
       // Float.toString round-trips exactly through toFloat.
-      p.setProperty("centroids",
-        meta.centroids.map(_.mkString(",")).mkString(";"))
-    }
-    // Write-then-rename so a concurrent reader never sees a torn meta file.
-    val tmp = new File(dir, MetaFile + ".tmp")
-    val out = new FileOutputStream(tmp)
-    try p.store(out, "graft hnsw index") finally out.close()
-    Files.move(tmp.toPath, new File(dir, MetaFile).toPath,
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      "centroids" -> meta.centroids.map(_.mkString(",")).mkString(";")) ++
+      kept.map { case (s, ks) => (DeletedPrefix + s) -> ks.mkString(",") })
+      .foreach { case (k, v) => p.setProperty(k, v) }
+    val target = manifestFile(dir, committed.version)
+    target.getParentFile.mkdirs()
+    // Not Files.createTempFile: its owner-only mode would hide the manifest
+    // from executors running as another user.
+    val tmp = new File(target.getParentFile, s".commit-${java.util.UUID.randomUUID()}.tmp").toPath
+    try {
+      val out = Files.newOutputStream(tmp)
+      try p.store(out, "graft hnsw index") finally out.close()
+      Files.createLink(target.toPath, tmp)
+    } catch {
+      case _: FileAlreadyExistsException =>
+        throw new ConcurrentIndexChangeException(meta.name, committed.version)
+    } finally Files.deleteIfExists(tmp)
+    parsedCache.put(dir.getAbsolutePath,
+      Parsed(committed.version, target.lastModified(), IndexManifest(committed, kept)))
+    versions(dir).filter(_ < committed.version - 1).foreach(v => manifestFile(dir, v).delete())
+    committed
   }
 
   def drop(base: String, name: String): Boolean = {
     val dir = indexDir(base, name)
     if (!dir.isDirectory) return false
+    Option(new File(dir, ManifestDir).listFiles()).toSeq.flatten.foreach(_.delete())
     dir.listFiles().foreach(_.delete())
     dir.delete()
+    parsedCache.remove(dir.getAbsolutePath)
     GraphCache.invalidate(dir.getAbsolutePath)
     true
-  }
-
-  /** Tombstones are (segment file, key) pairs: a delete hides the key copy
-    * in the segments that existed at delete time, so a later re-insert (a
-    * fresh delta segment) is naturally visible again. */
-  def tombstones(base: String, name: String): Set[(String, Long)] = {
-    val f = new File(indexDir(base, name), TombFile)
-    if (!f.isFile) Set.empty
-    else Files.readAllLines(f.toPath, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).map { line =>
-        val i = line.lastIndexOf(',')
-        (line.substring(0, i), line.substring(i + 1).toLong)
-      }.toSet
-  }
-
-  def writeTombstones(base: String, name: String, entries: Set[(String, Long)]): Unit = {
-    val f = new File(indexDir(base, name), TombFile)
-    // Write-then-rename like save(): an in-place truncate+write lets a
-    // concurrent reader see a torn file — a cut last line crashes the
-    // parser, a cleanly-truncated one silently resurrects deleted keys
-    // (and TombstoneCache would pin the bad set under its mtime/size).
-    val tmp = new File(f.getParentFile, TombFile + ".tmp")
-    Files.write(tmp.toPath,
-      entries.toSeq.sorted.map { case (s, k) => s"$s,$k" }.mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-    try Files.move(tmp.toPath, f.toPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: AtomicMoveNotSupportedException =>
-      Files.move(tmp.toPath, f.toPath, StandardCopyOption.REPLACE_EXISTING)
-    }
   }
 
   def writeGraph(file: File, g: HnswGraph): Unit = {
@@ -241,26 +309,9 @@ object IndexCatalog {
     try HnswGraph.read(in) finally in.close()
   }
 
-  private def join(xs: Seq[String]): String =
-    xs.map(x => x.replace("\\", "\\\\").replace(",", "\\,")).mkString(",")
-
-  private def split(s: String): Seq[String] = {
-    if (s == null || s.isEmpty) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    var esc = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (esc) { cur += c; esc = false }
-      else if (c == '\\') esc = true
-      else if (c == ',') { out += cur.result(); cur.clear() }
-      else cur += c
-      i += 1
-    }
-    out += cur.result()
-    out.toSeq
-  }
+  /** `s` split at `sep`; no element when `s` is empty. */
+  private def seq(s: String, sep: String): Seq[String] =
+    if (s.isEmpty) Seq.empty else s.split(java.util.regex.Pattern.quote(sep), -1).toSeq
 }
 
 /**
@@ -342,7 +393,6 @@ object GraphCache {
 
   /** Total cached graph bytes — test/diagnostic introspection. */
   def currentBytes: Long = cache.synchronized(totalBytes)
-  def currentEntries: Int = cache.synchronized(cache.size())
 
   def invalidate(dirPrefix: String): Unit = cache.synchronized {
     // Match the DIRECTORY, not a raw string prefix: dropping index "foo"
@@ -355,31 +405,6 @@ object GraphCache {
       if (e.getKey.path.startsWith(dir) || e.getKey.path == dirPrefix) {
         totalBytes -= e.getValue.bytes; it.remove()
       }
-    }
-  }
-}
-
-/** Per-JVM tombstone cache, one entry per file path validated by
-  * (mtime, size) — search consults tombstones per query, which must not
-  * mean a file read per call. Replacing the entry on staleness (rather than
-  * keying by version) keeps old versions from accumulating across repeated
-  * deletes. */
-object TombstoneCache {
-  private case class Versioned(mtime: Long, size: Long, bySegment: Map[String, Array[Long]])
-  private val cache = TrieMap.empty[String, Versioned]
-
-  /** The index's tombstoned keys, by segment file. */
-  def bySegment(base: String, name: String): Map[String, Array[Long]] = {
-    val f = new File(IndexCatalog.indexDir(base, name), IndexCatalog.TombFile)
-    if (!f.isFile) return Map.empty
-    val (path, mtime, size) = (f.getAbsolutePath, f.lastModified(), f.length())
-    cache.get(path) match {
-      case Some(v) if v.mtime == mtime && v.size == size => v.bySegment
-      case _ =>
-        val grouped = IndexCatalog.tombstones(base, name).groupBy(_._1)
-          .map { case (s, ks) => s -> ks.iterator.map(_._2).toArray }
-        cache.put(path, Versioned(mtime, size, grouped))
-        grouped
     }
   }
 }

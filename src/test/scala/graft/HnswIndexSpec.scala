@@ -110,7 +110,7 @@ class HnswIndexSpec extends SparkSuite {
       Hnsw.createIndex(spark, "grid_del_df", gridDf, "vec", "id", overwrite = true)
       // 100k candidate keys as a distributed Dataset — the overload range-
       // joins them against broadcast segment ranges and probes per segment;
-      // only actual hits (even ids < 729) reach the driver's tombstone file.
+      // only actual hits (even ids < 729) reach the driver's manifest.
       val victims = spark.range(0L, 100000L).withColumn("id", col("id") * 2)
       val updated = Hnsw.delete(spark, "grid_del_df", victims.toDF("id"))
       val expectedHits = (0L until 729L).count(_ % 2 == 0)
@@ -330,14 +330,18 @@ class HnswIndexSpec extends SparkSuite {
     assert(inserted.count == 450 && inserted.segments.size == 2)
     assert(insertJobs == 1 && insertShuffled == 0L, s"$insertJobs jobs, $insertShuffled bytes")
     Hnsw.delete(spark, "maint_idx", Seq(0L, 1L, 1000L))
-    // The live entries come from one task per old segment and meet one
-    // single-partition exchange: its map stage and the build.
-    val (compacted, compactJobs) = jobsOf(Hnsw.compactIndex(spark, "maint_idx"))
+    // One task reads every old segment and builds: one job, no shuffle.
+    val (compacted, compactJobs, compactShuffled) = jobsAndShuffle(Hnsw.compactIndex(spark, "maint_idx"))
     assert(compacted.count == 447 && compacted.segments.size == 1, compacted)
-    assert(compactJobs == 2, s"compactIndex ran $compactJobs jobs")
+    assert(compactJobs == 1 && compactShuffled == 0L, s"$compactJobs jobs, $compactShuffled bytes")
     val hits = Hnsw.searchRaw(spark, "maint_idx", Array.fill(8)(1001f), 1)
     assert(hits.head._1 == 1001L)
-    Hnsw.dropIndex(spark, "maint_idx")
+    // The compacted segment is the file a fresh build of the live rows makes.
+    val live = t.where(!col("id").isin(0L, 1L)).unionByName(extra.where(col("id") =!= 1000L))
+    Hnsw.createIndex(spark, "maint_ref", live, "vec", "id", overwrite = true)
+    val compactedFile = new java.io.File(IndexCatalog.indexDir(base, "maint_idx"), compacted.segments.head)
+    assert(java.util.Arrays.equals(Files.readAllBytes(compactedFile.toPath), segmentBytes("maint_ref")))
+    Seq("maint_idx", "maint_ref").foreach(Hnsw.dropIndex(spark, _))
   }
 
   test("segments that disagree on the dimension fail the build") {

@@ -57,7 +57,7 @@ class HnswRoutingSpec extends SparkSuite {
     assert(meta.segments.size == Clusters)
     assert(meta.centroids.size == meta.segments.size)
     assert(meta.count == Clusters * PerCluster)
-    // Reload from disk: centroids round-trip through the properties file.
+    // Reload from disk: centroids round-trip through the manifest.
     val back = IndexCatalog.load(Hnsw.baseDir(spark), "route_spec_a")
     assert(back.centroids.size == Clusters)
     assert(back.centroids.head.length == Dim)

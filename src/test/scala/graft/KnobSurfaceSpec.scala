@@ -38,12 +38,11 @@ class KnobSurfaceSpec extends AnyFunSuite {
     "spark.graft.semijoin.maxBitmapBits",
     "spark.graft.smallQueryShufflePartitions",
     "spark.graft.sql.cosineOperator",
-    "spark.graft.text.broadcastVocabBytes",
-    "spark.graft.vss.broadcastQueryMaxBytes")
+    "spark.graft.text.broadcastVocabBytes")
 
   private val KeyLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
 
-  test("the spark.graft.* keys read under src/main/scala are exactly the listed 27") {
+  test("the spark.graft.* keys read under src/main/scala are exactly the listed 26") {
     val root: Path = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root),
       s"main sources not found at $root: run the suite from the project directory")
@@ -53,7 +52,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
         KeyLiteral.findAllMatchIn(Files.readString(f)).map(_.group(1))
       }.toSet
       finally files.close()
-    assert(Keys.size == 27)
+    assert(Keys.size == 26)
     assert((found -- Keys).isEmpty, s"keys not in the list: ${(found -- Keys).toSeq.sorted}")
     assert((Keys -- found).isEmpty, s"listed keys no longer read: ${(Keys -- found).toSeq.sorted}")
   }
