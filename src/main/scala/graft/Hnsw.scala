@@ -118,11 +118,14 @@ object Hnsw {
           s"configuration option '$PersistenceKey' is set to true.")
     }
     val base = baseDir(spark)
-    if (IndexCatalog.exists(base, name) && !overwrite) {
+    val dir = IndexCatalog.indexDir(base, name)
+    // An index of the older format (meta.properties, no manifest) is not
+    // read, but it still exists to a create that may not overwrite.
+    if (!overwrite && (IndexCatalog.exists(base, name) || new File(dir, "meta.properties").isFile)) {
       throw new IllegalArgumentException(s"Index '$name' already exists")
     }
-    // Also clears a directory no manifest names: a failed build's or an
-    // older format's files.
+    // Also clears files no manifest names: a failed build's, or an older
+    // format's under overwrite.
     IndexCatalog.drop(base, name)
     val opts = validateOptions(options)
 
@@ -141,7 +144,6 @@ object Hnsw {
       .where(col("_2").isNotNull)
       .as[(Long, Array[Float])]
 
-    val dir = IndexCatalog.indexDir(base, name)
     dir.mkdirs()
     // An empty source builds no segment: a valid, zero-count index.
     val segments = buildSegments(spark, data, dir, "part", None, opts)
@@ -475,7 +477,7 @@ object Hnsw {
    */
   def insert(spark: SparkSession, name: String, df: DataFrame): HnswIndexMeta = {
     val base = baseDir(spark)
-    val meta = IndexCatalog.load(base, name)
+    val IndexManifest(meta, tombs) = IndexCatalog.current(base, name)
     import spark.implicits._
     val data = df.select(col(meta.idColumn).cast(LongType).as("_1"), col(meta.column).as("_2"))
       .where(col("_2").isNotNull)
@@ -502,15 +504,15 @@ object Hnsw {
       centroids =
         if (haveCentroids) meta.centroids ++ segs.map(_._5)
         else Seq.empty)
-    committing(dir, segs.map(_._1))(IndexCatalog.save(base, updated))
+    committing(dir, segs.map(_._1))(IndexCatalog.save(base, updated, tombs))
   }
 
   /** A name part no other write uses, so concurrent writes never write
     * the same segment file. */
   private def writeToken(): String = java.util.UUID.randomUUID().toString
 
-  /** Run `commit`; when it loses to a concurrent write, delete `written`,
-    * this write's own segment files, and rethrow. */
+  /** Run `commit`; when it is refused, delete `written`, this write's own
+    * segment files (no manifest names them), and rethrow. */
   private def committing(dir: File, written: Seq[String])(commit: => HnswIndexMeta): HnswIndexMeta =
     try commit catch {
       case e: ConcurrentIndexChangeException =>
@@ -619,8 +621,7 @@ object Hnsw {
         rowsAtMost = Some(meta.count))
     val updated = committing(dir, segs.map(_._1))(IndexCatalog.save(base,
       meta.copy(count = segs.map(_._2).sum, segments = segs.map(_._1),
-        segmentRanges = segs.map(s => (s._3, s._4)), centroids = segs.map(_._5)),
-      Map.empty))
+        segmentRanges = segs.map(s => (s._3, s._4)), centroids = segs.map(_._5))))
     // The old segments go only after the commit, so the newest manifest
     // never names a deleted file.
     meta.segments.foreach(s => new File(dir, s).delete())

@@ -13,7 +13,9 @@ import scala.jdk.CollectionConverters._
  * of immutable graph segment files plus numbered manifests ([[IndexCatalog]]),
  * on storage shared by driver and executors (local FS here; an object store
  * on a real cluster). `version` is the manifest version it was read at (0:
- * not committed yet); [[IndexCatalog.save]] commits `version + 1`.
+ * not committed yet); [[IndexCatalog.save]] commits `version + 1`. `uid` is
+ * drawn when the index is created, so a dropped and re-created index of the
+ * same name is a different index to a commit.
  *
  * `paths` records the root file paths of the indexed relation — our
  * substitute for DuckDB's table binding (hnsw_optimize_scan.cpp:91-98): the
@@ -45,7 +47,8 @@ case class HnswIndexMeta(
       * artifact, or an insert onto one) = unknown: route to every segment,
       * which is always correct. */
     centroids: Seq[Array[Float]] = Seq.empty,
-    version: Long = 0L) {
+    version: Long = 0L,
+    uid: String = "") {
   /** The `p` segments whose centroids are nearest `q` by the index metric
     * — the conf-gated sublinear scaling path for many-segment indexes
     * (every-segment fan-out grows ∝ segments while the answer needs k).
@@ -109,24 +112,33 @@ case class HnswIndexMeta(
   * sorted, by segment file. */
 final case class IndexManifest(meta: HnswIndexMeta, tombstones: Map[String, Array[Long]])
 
-/** A commit that lost to another writer: `version` of index `index` was
-  * committed first. The loser's changes are not visible; it has nothing to
-  * undo but the segment files it wrote itself. */
-final class ConcurrentIndexChangeException(val index: String, val version: Long)
+/** A commit refused because version `base` of index `index`, which the
+  * change was made on, is no longer its newest: another writer committed
+  * first, or the index was dropped. The refused change is not visible; its
+  * writer has nothing to undo but the segment files it wrote itself. */
+final class ConcurrentIndexChangeException(val index: String, val base: Long)
   extends IllegalStateException(s"HNSW index '$index' was changed concurrently: " +
-    s"version $version was committed by another writer")
+    s"version $base, which this change was made on, is no longer the newest")
 
 /**
  * The index catalog. Each commit of an index is one immutable manifest,
  * `<index>/_manifest/<version>.properties`: segments, key ranges, centroids,
  * count, tombstones and a format number. The newest version is the index;
  * a segment file no manifest names (a crashed or losing writer's) is never
- * read. A commit writes a temporary file and publishes it as version N + 1
- * with a hard link, which fails when that name exists — put-if-absent log
- * entries, as Delta Lake commits a table (Armbrust et al., VLDB 2020).
- * Readers never see a partial manifest; of two writers that read version N,
- * the second to publish gets a [[ConcurrentIndexChangeException]]. Each
- * commit then deletes the manifests older than the newest two.
+ * read. A commit checks that its base version N is still the newest version
+ * of the same index (same `uid`), writes a temporary file and publishes it
+ * as version N + 1 with a hard link, which fails when that name exists —
+ * put-if-absent log entries, as Delta Lake commits a table (Armbrust et al.,
+ * VLDB 2020). Readers never see a partial manifest; a writer whose base is
+ * no longer the newest gets a [[ConcurrentIndexChangeException]]. Each
+ * commit then deletes the manifests older than the newest two, oldest first.
+ *
+ * The link alone would accept a base older than the two manifests kept (the
+ * trimmed names are free again) or a change to a dropped index; the check
+ * refuses both. In one JVM the check, link and trim run under one lock, so
+ * the refusal is exact. Across processes the link still refuses two writers
+ * on one base; a stale base slips through only if other writers commit and
+ * trim three versions between its check and its link.
  *
  * A version is parsed once per JVM: [[current]] lists a couple of names and
  * returns the cached parse of the newest. The cache also checks the file's
@@ -160,6 +172,8 @@ object IndexCatalog {
   /** The parse of each index's newest manifest, by index directory. */
   private final case class Parsed(version: Long, mtime: Long, manifest: IndexManifest)
   private val parsedCache = TrieMap.empty[String, Parsed]
+  /** Serializes this JVM's commits and drops: base check, link and trim. */
+  private val commitLock = new Object
   private val parseCount = new java.util.concurrent.atomic.AtomicLong
 
   /** Manifests parsed since JVM start (diagnostic, like `GraphCache.stats`). */
@@ -235,66 +249,67 @@ object IndexCatalog {
         (r.substring(0, i).toLong, r.substring(i + 1).toLong)
       },
       centroids = pairs("centroids").map(_.split(",").map(_.toFloat)),
-      version = version)
+      version = version, uid = get("uid"))
     val tombstones = p.stringPropertyNames.asScala.iterator.filter(_.startsWith(DeletedPrefix))
       .map(k => k.stripPrefix(DeletedPrefix) -> seq(get(k), ",").map(_.toLong).toArray).toMap
     IndexManifest(meta, tombstones)
   }
 
-  /** Commit `meta` as version `meta.version + 1`, keeping the tombstones of
-    * `meta.version`. */
-  def save(base: String, meta: HnswIndexMeta): HnswIndexMeta = {
-    val tombstones =
-      if (meta.version == 0) Map.empty[String, Array[Long]]
-      else read(indexDir(base, meta.name), meta.version).getOrElse(
-        throw new ConcurrentIndexChangeException(meta.name, meta.version + 1)).tombstones
-    save(base, meta, tombstones)
-  }
-
-  /** Commit `meta` with `tombstones` (sorted keys by segment file) as
-    * version `meta.version + 1`, and return the committed meta. Throws
-    * [[ConcurrentIndexChangeException]] when that version exists. */
-  def save(base: String, meta: HnswIndexMeta, tombstones: Map[String, Array[Long]]): HnswIndexMeta = {
+  /** Commit `meta` with `tombstones` (sorted keys by segment file; none by
+    * default) as version `meta.version + 1`, and return the committed meta.
+    * Version 1 gets a fresh `uid`. Throws [[ConcurrentIndexChangeException]]
+    * when `meta.version` is not the newest version of the index. */
+  def save(base: String, meta: HnswIndexMeta,
+      tombstones: Map[String, Array[Long]] = Map.empty): HnswIndexMeta = {
     val dir = indexDir(base, meta.name)
-    val committed = meta.copy(version = meta.version + 1)
+    val committed = meta.copy(version = meta.version + 1,
+      uid = if (meta.version == 0) java.util.UUID.randomUUID().toString else meta.uid)
     val kept = tombstones.filter(_._2.nonEmpty)
     val p = new Properties()
     (Seq("format" -> Format, "name" -> meta.name, "paths" -> meta.paths.mkString(Sep),
       "column" -> meta.column, "idColumn" -> meta.idColumn, "metric" -> meta.metric,
       "dim" -> meta.dim.toString, "m" -> meta.m.toString, "m0" -> meta.m0.toString,
       "efConstruction" -> meta.efConstruction.toString, "efSearch" -> meta.efSearch.toString,
-      "count" -> meta.count.toString, "segments" -> meta.segments.mkString(Sep),
+      "uid" -> committed.uid, "count" -> meta.count.toString, "segments" -> meta.segments.mkString(Sep),
       "segmentRanges" -> meta.segmentRanges.map { case (lo, hi) => s"$lo:$hi" }.mkString(";"),
       // Float.toString round-trips exactly through toFloat.
       "centroids" -> meta.centroids.map(_.mkString(",")).mkString(";")) ++
       kept.map { case (s, ks) => (DeletedPrefix + s) -> ks.mkString(",") })
       .foreach { case (k, v) => p.setProperty(k, v) }
     val target = manifestFile(dir, committed.version)
-    target.getParentFile.mkdirs()
     // Not Files.createTempFile: its owner-only mode would hide the manifest
     // from executors running as another user.
     val tmp = new File(target.getParentFile, s".commit-${java.util.UUID.randomUUID()}.tmp").toPath
-    try {
-      val out = Files.newOutputStream(tmp)
-      try p.store(out, "graft hnsw index") finally out.close()
-      Files.createLink(target.toPath, tmp)
-    } catch {
-      case _: FileAlreadyExistsException =>
-        throw new ConcurrentIndexChangeException(meta.name, committed.version)
-    } finally Files.deleteIfExists(tmp)
-    parsedCache.put(dir.getAbsolutePath,
-      Parsed(committed.version, target.lastModified(), IndexManifest(committed, kept)))
-    versions(dir).filter(_ < committed.version - 1).foreach(v => manifestFile(dir, v).delete())
+    def refused = new ConcurrentIndexChangeException(meta.name, meta.version)
+    commitLock.synchronized {
+      val onBase = versions(dir).maxOption match {
+        case None => meta.version == 0
+        case Some(v) => v == meta.version && read(dir, v).exists(_.meta.uid == meta.uid)
+      }
+      if (!onBase) throw refused
+      target.getParentFile.mkdirs()
+      try {
+        val out = Files.newOutputStream(tmp)
+        try p.store(out, "graft hnsw index") finally out.close()
+        Files.createLink(target.toPath, tmp)
+      } catch { case _: FileAlreadyExistsException => throw refused }
+      finally Files.deleteIfExists(tmp)
+      parsedCache.put(dir.getAbsolutePath,
+        Parsed(committed.version, target.lastModified(), IndexManifest(committed, kept)))
+      versions(dir).filter(_ < committed.version - 1).sorted.foreach(v => manifestFile(dir, v).delete())
+    }
     committed
   }
 
   def drop(base: String, name: String): Boolean = {
     val dir = indexDir(base, name)
     if (!dir.isDirectory) return false
-    Option(new File(dir, ManifestDir).listFiles()).toSeq.flatten.foreach(_.delete())
-    dir.listFiles().foreach(_.delete())
-    dir.delete()
-    parsedCache.remove(dir.getAbsolutePath)
+    commitLock.synchronized {
+      Option(new File(dir, ManifestDir).listFiles()).toSeq.flatten.foreach(_.delete())
+      dir.listFiles().foreach(_.delete())
+      dir.delete()
+      parsedCache.remove(dir.getAbsolutePath)
+    }
     GraphCache.invalidate(dir.getAbsolutePath)
     true
   }

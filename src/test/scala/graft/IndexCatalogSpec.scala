@@ -91,6 +91,74 @@ class IndexCatalogSpec extends SparkSuite {
     Hnsw.dropIndex(spark, "cat_race")
   }
 
+  test("a delete made on a version three commits old is refused, and loses no tombstone") {
+    Hnsw.createIndex(spark, "cat_stale", grid, "vec", "id", overwrite = true)
+    // A keyDf delete held between its catalog read (version 1) and its commit.
+    IndexCatalogSpecGate.latch = new CountDownLatch(2)
+    val gate = udf((id: Long) => IndexCatalogSpecGate.pass(id)).asNondeterministic()
+    import spark.implicits._
+    val keys = Seq(40L).toDF("k").select(gate(col("k")).as("k"))
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val held = Future(scala.util.Try(Hnsw.delete(spark, "cat_stale", keys)))
+    val deadline = System.nanoTime() + 60.seconds.toNanos
+    while (IndexCatalogSpecGate.latch.getCount > 1 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(IndexCatalogSpecGate.latch.getCount == 1, "the held delete never reached its job")
+    // Versions 2-4: versions 1 and 2 are trimmed, so the name 2 is free again.
+    Seq(41L, 42L, 43L).foreach(k => Hnsw.delete(spark, "cat_stale", Seq(k)))
+    assert(manifests("cat_stale").size == 2)
+    IndexCatalogSpecGate.latch.countDown()
+    val outcome = Await.result(held, 5.minutes)
+    assert(outcome.failed.toOption.exists(_.isInstanceOf[ConcurrentIndexChangeException]), outcome)
+    assert(IndexCatalog.load(base, "cat_stale").version == 4)
+    assert(IndexCatalog.tombstones(base, "cat_stale").map(_._2) == Set(41L, 42L, 43L))
+    assert(nearest("cat_stale", Array(1f, 5f, 5f), 1) == Seq(40L))
+    Hnsw.dropIndex(spark, "cat_stale")
+  }
+
+  test("a compaction made on a version three commits old is refused, and every named segment stays") {
+    Hnsw.createIndex(spark, "cat_old", grid, "vec", "id", overwrite = true)
+    val before = IndexCatalog.current(base, "cat_old")
+    (1L to 3L).foreach(k => Hnsw.delete(spark, "cat_old", Seq(k)))
+    // What a compaction that read `before` commits: new segments, no tombstones.
+    intercept[ConcurrentIndexChangeException](IndexCatalog.save(base,
+      before.meta.copy(segments = Seq("part-cstale-00000.hnsw")), Map.empty))
+    val now = IndexCatalog.current(base, "cat_old")
+    assert(now.meta.version == 4 && now.meta.segments == before.meta.segments)
+    assert(now.meta.segments.forall(s => new File(IndexCatalog.indexDir(base, "cat_old"), s).isFile))
+    assert(IndexCatalog.tombstones(base, "cat_old").map(_._2) == Set(1L, 2L, 3L))
+    assert(!nearest("cat_old", Array(1f, 1f, 2f), 3).exists(Set(1L, 2L, 3L)))
+    Hnsw.dropIndex(spark, "cat_old")
+  }
+
+  test("a change made on a dropped index is refused, also when a re-created one reached its version") {
+    Hnsw.createIndex(spark, "cat_gone", grid, "vec", "id", overwrite = true)
+    val stale = Hnsw.delete(spark, "cat_gone", Seq(1L))
+    assert(stale.version == 2)
+    Hnsw.createIndex(spark, "cat_gone", rows(0L until 5L), "vec", "id", overwrite = true)
+    intercept[ConcurrentIndexChangeException](IndexCatalog.save(base, stale))
+    // The new index at version 2 too: only its uid tells the two apart.
+    assert(Hnsw.delete(spark, "cat_gone", Seq(0L)).version == 2)
+    intercept[ConcurrentIndexChangeException](IndexCatalog.save(base, stale))
+    val now = IndexCatalog.load(base, "cat_gone")
+    assert(now.count == 4L && now.uid != stale.uid)
+    Hnsw.dropIndex(spark, "cat_gone")
+    intercept[ConcurrentIndexChangeException](IndexCatalog.save(base, now))
+    assert(!IndexCatalog.indexDir(base, "cat_gone").exists())
+  }
+
+  test("a create that may not overwrite refuses an index of the older format and keeps its files") {
+    val dir = IndexCatalog.indexDir(base, "cat_legacy")
+    dir.mkdirs()
+    Files.write(new File(dir, "meta.properties").toPath, "name=cat_legacy\n".getBytes("UTF-8"))
+    Files.write(new File(dir, "part-00000.hnsw").toPath, Array[Byte](1, 2, 3))
+    val e = intercept[IllegalArgumentException](Hnsw.createIndex(spark, "cat_legacy", grid, "vec", "id"))
+    assert(e.getMessage.contains("already exists"))
+    assert(dir.list().toSet == Set("meta.properties", "part-00000.hnsw"))
+    assert(Hnsw.createIndex(spark, "cat_legacy", grid, "vec", "id", overwrite = true).version == 1)
+    assert(dir.list().toSet == Set("_manifest", "part-00000.hnsw"))
+    Hnsw.dropIndex(spark, "cat_legacy")
+  }
+
   test("concurrent inserts: one wins, the others are refused and leave no segment file") {
     Hnsw.createIndex(spark, "cat_conc", rows(0L until 20L), "vec", "id", overwrite = true)
     val threads = 4
