@@ -32,10 +32,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     e.injectResolutionRule(s => new graft.sql.DistanceOperators.DistanceOperatorResolution(s))
-    // HNSW optimizer rules + planner strategy (SURVEY §2 O2/O3/O7).
+    // HNSW optimizer rules + planner strategy (SURVEY §2 O2-O7).
     e.injectOptimizerRule(_ => graft.rules.CosineDistanceRewrite)
-    e.injectOptimizerRule(s => new graft.rules.TopNToIndexScan(s))
-    e.injectOptimizerRule(s => new graft.rules.MinByKToIndexScan(s))
+    e.injectOptimizerRule(s => new graft.rules.TopKToIndexScan(s))
     e.injectOptimizerRule(s => new graft.rules.LateralTopKToIndexJoin(s))
     e.injectPlannerStrategy(s => new graft.plans.HnswStrategy(s))
     // Index DDL: CREATE INDEX … USING HNSW / DROP INDEX / PRAGMA … (O1 DDL surface)

@@ -13,6 +13,7 @@ import org.apache.spark.sql.types._
 
 import graft.index.{ConcurrentIndexChangeException, GraphCache, HnswGraph, HnswIndexMeta, IndexCatalog, IndexManifest}
 import graft.plans.RowidFetch
+import graft.spark.ExecTuning
 
 /**
  * Public index-management API — the Spark re-expression of the reference's
@@ -68,7 +69,7 @@ object Hnsw {
 
   /** Session routing width (0 = search every segment). */
   def probeSegments(spark: SparkSession): Int =
-    spark.conf.getOption(ProbeSegmentsKey).map(_.trim.toInt).getOrElse(0)
+    ExecTuning.confLong(spark, ProbeSegmentsKey, 0, Int.MinValue, Int.MaxValue).toInt
 
   /** Adaptive routing margin (true-distance ratio > 1; 0/<=1 = fixed-p
     * routing — the default). With probeSegments = p and margin = m, the
@@ -81,7 +82,7 @@ object Hnsw {
 
   /** Session adaptive-routing margin (0 = off, fixed-p). */
   def adaptiveProbeMargin(spark: SparkSession): Double =
-    spark.conf.getOption(AdaptiveProbeMarginKey).map(_.trim.toDouble).getOrElse(0.0)
+    ExecTuning.confDouble(spark, AdaptiveProbeMarginKey, 0.0, min = 0.0)
 
   def baseDir(spark: SparkSession): String =
     spark.conf.get(LocationKey,
@@ -90,7 +91,16 @@ object Hnsw {
   /** Query-time beam width: session conf overrides the index default
     * (`SET hnsw_ef_search`, hnsw_index.cpp:318-329). */
   def efSearch(spark: SparkSession, meta: HnswIndexMeta): Int =
-    spark.conf.getOption(EfSearchKey).map(_.toInt).getOrElse(meta.efSearch)
+    ExecTuning.confLong(spark, EfSearchKey, meta.efSearch, 1, Int.MaxValue).toInt
+
+  /** The optimizer rules' kill switch (on by default). */
+  def rewriteEnabled(spark: SparkSession): Boolean = flag(spark, RewriteEnabledKey, default = true)
+
+  def assumeUniqueWindowKey(spark: SparkSession): Boolean =
+    flag(spark, AssumeUniqueWindowKeyKey, default = false)
+
+  private def flag(spark: SparkSession, key: String, default: Boolean): Boolean =
+    ExecTuning.confChoice(spark, key, default.toString, "true", "false") == "true"
 
   // ---------------------------------------------------------------- create
 
@@ -112,7 +122,7 @@ object Hnsw {
     // behind `SET hnsw_enable_experimental_persistence = true`
     // (hnsw_index_plan.cpp:21-30). Our artifacts are always files, so the
     // conf defaults to enabled; setting it false reproduces the gate error.
-    if (!spark.conf.get(PersistenceKey, "true").toBoolean) {
+    if (!flag(spark, PersistenceKey, default = true)) {
       throw new IllegalStateException(
         "HNSW indexes can only be created in in-memory databases, or when the " +
           s"configuration option '$PersistenceKey' is set to true.")
@@ -202,15 +212,14 @@ object Hnsw {
       dim: Option[Int],
       opts: Options,
       rowsAtMost: Option[Long] = None): Seq[(String, Long, Long, Long, Array[Float])] = {
-    val maxPer = spark.conf.getOption(MaxVectorsPerPartitionKey).map(_.toLong).getOrElse(262144L)
+    val maxPer = ExecTuning.confLong(spark, MaxVectorsPerPartitionKey, 262144L, min = 1)
+    val byVector = ExecTuning.confChoice(spark, BuildPartitionByKey, "key", "key", "vector") == "vector"
     val bound = rowsAtMost.orElse(rowsFromMetadata(data))
     val numParts =
       if (bound.exists(_ <= maxPer)) 1
       else math.max(1L, (data.count() + maxPer - 1) / maxPer).toInt
     val dirPath = dir.getAbsolutePath
     val (metric, m, m0, efc) = (opts.metric, opts.m, opts.m0, opts.efConstruction)
-    val byVector = numParts > 1 &&
-      spark.conf.getOption(BuildPartitionByKey).exists(_.equalsIgnoreCase("vector"))
     val parted: org.apache.spark.rdd.RDD[(Long, Array[Float])] =
       if (numParts == 1) {
         (if (bound.isDefined) data.coalesce(1) else data.repartition(1)).rdd
@@ -323,21 +332,21 @@ object Hnsw {
       probeSegments(spark), adaptiveProbeMargin(spark)).hits.head
 
   /**
-   * Compaction-race shield: run `body` against `meta`, and when a segment
-   * file has vanished underneath it, reload the catalog entry and retry
-   * once. [[compactIndex]] writes the new segments completely and commits
-   * its manifest BEFORE deleting the old files, and segment names are never
-   * reused — so a reader that loaded meta pre-swap can only fail with
-   * missing-file, and the reloaded meta is always servable.
-   * Post-compaction contents are search-equivalent (compaction removes only
-   * tombstoned entries, which search filters anyway). A task-side missing
+   * Run `body` on one committed version of index `name`, the newest: its
+   * segments, centroids and tombstones come from one manifest, so a reader
+   * never pairs one version's segments with another's tombstones.
+   * Compaction-race shield: when a segment file has vanished underneath
+   * it, read the newest version again and retry once. [[compactIndex]]
+   * writes the new segments completely and commits its manifest BEFORE
+   * deleting the old files, and segment names are never reused — so a
+   * reader that read the version before can only fail with missing-file,
+   * and the version read after is always servable. A task-side missing
    * file surfaces wrapped in SparkException; isMissingFile walks the cause
    * chain.
    */
-  private def withFreshMeta[T](base: String, meta: HnswIndexMeta)(
-      body: HnswIndexMeta => T): T =
-    try body(meta) catch {
-      case e: Exception if isMissingFile(e) => body(IndexCatalog.load(base, meta.name))
+  private def withCurrentVersion[T](base: String, name: String)(body: IndexManifest => T): T =
+    try body(IndexCatalog.current(base, name)) catch {
+      case e: Exception if isMissingFile(e) => body(IndexCatalog.current(base, name))
     }
 
   @scala.annotation.tailrec
@@ -374,8 +383,11 @@ object Hnsw {
 
   /**
    * The index's one search: for each query (null → empty), the ascending
-   * top-k (rowid, index-metric distance) over its routed segments
-   * ([[graft.index.HnswIndexMeta.routedSegments]] at `probe`, `margin`).
+   * top-k (rowid, index-metric distance) over the routed segments
+   * ([[graft.index.HnswIndexMeta.routedSegments]] at `probe`, `margin`) of
+   * the newest version of `index` ([[withCurrentVersion]]), not of the
+   * version `index` was read at, which a plan may hold from before a
+   * compaction.
    *
    * Segment-outer: each routed segment is loaded once through GraphCache
    * and serves every query routed to it before the next segment is
@@ -388,7 +400,7 @@ object Hnsw {
    * index join) and single-thread callers pass None.
    *
    * Only allowed nodes enter a segment's result ([[HnswGraph.search]]):
-   * those not tombstoned in the index's newest manifest and, when `allow`
+   * those not tombstoned in that version and, when `allow`
    * is given (sorted rowids, the filtered scan's allow-list), whose rowid it
    * holds. A segment with no more allowed nodes than the candidate width
    * max(ef, k), or whose traversal returns fewer than k while at least k
@@ -400,11 +412,10 @@ object Hnsw {
    * job broadcasts once with its task binary.
    */
   private[graft] def searchBatch(spark: Option[SparkSession], base: String,
-      meta: HnswIndexMeta, queries: Array[Array[Float]], k: Int, ef: Int,
+      index: HnswIndexMeta, queries: Array[Array[Float]], k: Int, ef: Int,
       probe: Int, margin: Double, allow: Option[Array[Long]] = None): Found =
-    withFreshMeta(base, meta) { meta =>
+    withCurrentVersion(base, index.name) { case IndexManifest(meta, tombs) =>
       val dirPath = IndexCatalog.indexDir(base, meta.name).getAbsolutePath
-      val tombs = IndexCatalog.current(base, meta.name).tombstones
       val allowIds = allow.orNull
       val width = math.max(ef, k)
       // Search each segment for the queries routed to it: segment → (query
@@ -490,20 +501,12 @@ object Hnsw {
     val dim = segmentDim(dir, segs)
     // A previously deleted key re-inserted here lives in the new segment;
     // per-segment tombstones keep only the old copies hidden.
-    val haveRanges = meta.segmentRanges.size == meta.segments.size
-    val haveCentroids = meta.centroids.size == meta.segments.size
     val updated = meta.copy(
       dim = dim,
       count = meta.count + segs.map(_._2).sum,
       segments = meta.segments ++ segs.map(_._1),
-      // Only extend ranges/centroids when the existing ones are complete —
-      // a partial list would misalign and break pruning/routing.
-      segmentRanges =
-        if (haveRanges) meta.segmentRanges ++ segs.map(s => (s._3, s._4))
-        else Seq.empty,
-      centroids =
-        if (haveCentroids) meta.centroids ++ segs.map(_._5)
-        else Seq.empty)
+      segmentRanges = meta.segmentRanges ++ segs.map(s => (s._3, s._4)),
+      centroids = meta.centroids ++ segs.map(_._5))
     committing(dir, segs.map(_._1))(IndexCatalog.save(base, updated, tombs))
   }
 
@@ -562,12 +565,7 @@ object Hnsw {
     val keyCol = keyDf.columns.head
     // (segment, lo, hi) is tiny (one row per segment) — broadcast it so the
     // range join never shuffles the key set by anything but its hash.
-    // Incomplete range metadata (possible on legacy artifacts) degrades to
-    // probe-everywhere, the same fallback segmentsForKey uses.
-    val ranges =
-      if (meta.segmentRanges.size == meta.segments.size)
-        meta.segments.zip(meta.segmentRanges).map { case (s, (lo, hi)) => (s, lo, hi) }
-      else meta.segments.map(s => (s, Long.MinValue, Long.MaxValue))
+    val ranges = meta.segments.zip(meta.segmentRanges).map { case (s, (lo, hi)) => (s, lo, hi) }
     val rangeDf = broadcast(ranges.toDF("_seg", "_lo", "_hi"))
     val hits = keyDf.select(col(keyCol).cast(LongType).as("_k")).where(col("_k").isNotNull)
       .distinct()
@@ -649,10 +647,13 @@ object Hnsw {
     * (hnsw_index_pragmas.cpp:73-77). */
   def indexInfo(spark: SparkSession): DataFrame = {
     val base = baseDir(spark)
-    val rows = IndexCatalog.list(base).map { meta =>
-      val dirPath = IndexCatalog.indexDir(base, meta.name).getAbsolutePath
-      val stats = withFreshMeta(base, meta)(m => segmentStats(spark, dirPath, m.segments))
-      val deleted = IndexCatalog.current(base, meta.name).tombstones.valuesIterator.map(_.length.toLong).sum
+    val rows = IndexCatalog.list(base).map { listed =>
+      val dirPath = IndexCatalog.indexDir(base, listed.name).getAbsolutePath
+      // Segments, count and deleted_count of one version.
+      val (meta, stats, deleted) = withCurrentVersion(base, listed.name) {
+        case IndexManifest(m, tombs) => (m, segmentStats(spark, dirPath, m.segments),
+          tombs.valuesIterator.map(_.length.toLong).sum)
+      }
       val levels = if (stats.isEmpty) 0 else stats.map(_.maxLevel).max + 1
       val mergedStats = (0 until levels).map { lvl =>
         val per = stats.map(_.levels.lift(lvl).getOrElse((0L, 0L, 0L, 0L)))

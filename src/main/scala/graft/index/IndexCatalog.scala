@@ -38,23 +38,20 @@ case class HnswIndexMeta(
     segments: Seq[String],
     /** Per-segment (min key, max key), aligned with `segments` — written at
       * build time (segments are range-partitioned on the key) so key probes
-      * (delete, contains) prune driver-side without loading any graph.
-      * Empty = unknown (pre-range artifact): probe every segment. */
-    segmentRanges: Seq[(Long, Long)] = Seq.empty,
+      * (delete, contains) prune driver-side without loading any graph. */
+    segmentRanges: Seq[(Long, Long)],
     /** Per-segment mean vector, aligned with `segments` — written at build
       * time for query→segment ROUTING (probe the p nearest segments
-      * instead of all; [[routedSegments]]). Empty or misaligned (pre-r12
-      * artifact, or an insert onto one) = unknown: route to every segment,
-      * which is always correct. */
-    centroids: Seq[Array[Float]] = Seq.empty,
+      * instead of all; [[routedSegments]]). */
+    centroids: Seq[Array[Float]],
     version: Long = 0L,
     uid: String = "") {
   /** The `p` segments whose centroids are nearest `q` by the index metric
     * — the conf-gated sublinear scaling path for many-segment indexes
     * (every-segment fan-out grows ∝ segments while the answer needs k).
     * All segments when routing can't apply: p ≤ 0 (the default — exact
-    * parity with the reference's one-graph search), p ≥ segments, or
-    * unknown/misaligned centroids. Routing quality is the layout's job:
+    * parity with the reference's one-graph search) or p ≥ segments.
+    * Routing quality is the layout's job:
     * vector-clustered segments (build option) give IVF-like recall at
     * p ≪ segments; key-ranged segments have near-identical centroids and
     * routing degrades toward arbitrary pruning — keep p = 0 there. */
@@ -74,8 +71,7 @@ case class HnswIndexMeta(
     val adaptive = margin > 1.0 && metric != "ip"
     // Fixed-p routing is pointless at p >= segments (probe all); ADAPTIVE
     // still prunes there (escalate toward all only when margins are close).
-    if (p <= 0 || centroids.size != segments.size ||
-        (p >= segments.size && !adaptive)) segments
+    if (p <= 0 || (p >= segments.size && !adaptive)) segments
     else {
       val d: (Array[Float], Array[Float]) => Double = metric match {
         case "cosine" => graft.expressions.VectorMath.cosineDistance
@@ -98,14 +94,11 @@ case class HnswIndexMeta(
     }
   }
 
-  /** Segments that could contain `key` — range-pruned when ranges are known
-    * and aligned, every segment otherwise. */
+  /** Segments that could contain `key`, by their key ranges. */
   def segmentsForKey(key: Long): Seq[String] =
-    if (segmentRanges.size == segments.size && segments.nonEmpty)
-      segments.zip(segmentRanges).collect {
-        case (s, (lo, hi)) if key >= lo && key <= hi => s
-      }
-    else segments
+    segments.zip(segmentRanges).collect {
+      case (s, (lo, hi)) if key >= lo && key <= hi => s
+    }
 }
 
 /** One committed version of an index: its metadata and its tombstoned keys,
@@ -175,15 +168,29 @@ object IndexCatalog {
   /** Serializes this JVM's commits and drops: base check, link and trim. */
   private val commitLock = new Object
   private val parseCount = new java.util.concurrent.atomic.AtomicLong
+  /** Index directories [[list]] has warned about. */
+  private val refusedWarned = TrieMap.empty[String, Unit]
 
   /** Manifests parsed since JVM start (diagnostic, like `GraphCache.stats`). */
   def manifestParses: Long = parseCount.get()
 
   def exists(base: String, name: String): Boolean = versions(indexDir(base, name)).nonEmpty
 
+  /** The newest version of every index under `base`, by name. An index
+    * whose newest manifest is refused ([[parse]]) is left out, with one
+    * warning per JVM, so it cannot fail every query's index match; loading
+    * it by name still fails. */
   def list(base: String): Seq[HnswIndexMeta] =
-    Option(new File(base).listFiles()).toSeq.flatten
-      .flatMap(latest).map(_.meta).sortBy(_.name)
+    Option(new File(base).listFiles()).toSeq.flatten.flatMap { dir =>
+      try latest(dir) catch {
+        case e: IllegalStateException =>
+          if (refusedWarned.putIfAbsent(dir.getAbsolutePath, ()).isEmpty) {
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"HNSW index directory $dir is not served: ${e.getMessage}")
+          }
+          None
+      }
+    }.map(_.meta).sortBy(_.name)
 
   def load(base: String, name: String): HnswIndexMeta = current(base, name).meta
 
@@ -250,6 +257,11 @@ object IndexCatalog {
       },
       centroids = pairs("centroids").map(_.split(",").map(_.toFloat)),
       version = version, uid = get("uid"))
+    if (meta.segmentRanges.size != meta.segments.size || meta.centroids.size != meta.segments.size) {
+      throw new IllegalStateException(s"HNSW index '${meta.name}': manifest version $version " +
+        s"lists ${meta.segments.size} segments, ${meta.segmentRanges.size} key ranges and " +
+        s"${meta.centroids.size} centroids")
+    }
     val tombstones = p.stringPropertyNames.asScala.iterator.filter(_.startsWith(DeletedPrefix))
       .map(k => k.stripPrefix(DeletedPrefix) -> seq(get(k), ",").map(_.toLong).toArray).toMap
     IndexManifest(meta, tombstones)

@@ -82,13 +82,12 @@ case class HnswIndexJoinCoreExec(
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val out = output
-    // Re-resolve the index metadata now, not at plan time: a long-lived
-    // streaming plan (Vss.annTopK) would otherwise pin the segment list
-    // while compaction — including StreamingIndex.maintainIndex's own
-    // auto-compaction — replaces the files underneath it. Micro-batch
-    // execution re-plans per batch, so this load keeps each batch fresh.
-    val execMeta = graft.index.IndexCatalog.load(base, meta.name)
-    val (b, m, q, kk, e) = (base, execMeta, queryExpr, k, ef)
+    // Each search reads the index's newest version (Hnsw.searchBatch), not
+    // the plan's: a long-lived streaming plan (Vss.annTopK) must not pin
+    // the segment list while compaction — including
+    // StreamingIndex.maintainIndex's own auto-compaction — replaces the
+    // files underneath it.
+    val (b, m, q, kk, e) = (base, meta, queryExpr, k, ef)
     // Segment-routing width: a per-PLAN override when the caller pinned one
     // (gates must not flip session confs that outlive their builder —
     // execution happens after the builder returns), else the session conf,

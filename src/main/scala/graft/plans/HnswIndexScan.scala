@@ -15,7 +15,8 @@ import graft.Hnsw
 import graft.index.HnswIndexMeta
 
 /**
- * Logical ANN index scan — what the TopN/min_by rewrites install in place of
+ * Logical ANN index scan — what the top-k rewrite (`TopKToIndexScan`, for
+ * TopN and min_by) installs in place of
  * `Limit(k, Sort(dist, scan))`. The Spark analogue of the reference's
  * `hnsw_index_scan` table function (/root/reference/src/hnsw/
  * hnsw_index_scan.cpp:22-192): emits the base relation's rows for the k

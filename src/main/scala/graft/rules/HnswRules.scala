@@ -2,6 +2,7 @@ package graft.rules
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -10,6 +11,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
 
 import graft.Hnsw
+import graft.aggregates.MinMaxByK
 import graft.expressions._
 import graft.index.{HnswIndexMeta, IndexCatalog}
 import graft.plans.{HnswIndexJoinCore, HnswIndexScan}
@@ -34,17 +36,26 @@ object CosineDistanceRewrite extends Rule[LogicalPlan] {
 }
 
 /**
- * O3 — TopN → index-scan rewrite: matches
- * `Limit(k, Sort(dist ASC, [Project(...,)] FileRelation))` where `dist` is a
- * distance function between the indexed column and a foldable query vector,
- * and replaces the subtree with [[HnswIndexScan]]
- * (/root/reference/src/hnsw/hnsw_optimize_scan.cpp:30-256).
+ * O3 + O4 — top-k → index-scan rewrite. Replaces, with an [[HnswIndexScan]]
+ * of the k nearest rows,
+ *  - `Limit(k, Sort(dist ASC, child))`, with or without a projection
+ *    between the limit and the sort (O3, the reference's
+ *    hnsw_optimize_scan.cpp:30-256), and
+ *  - `min_by(col, dist, k)` with no GROUP BY: the same aggregate over the
+ *    scan, which feeds it only the k nearest rows (O4,
+ *    hnsw_optimize_topk.cpp:67-228). The reference
+ *    swaps the aggregate for `list(col ORDER BY dist)`; re-running our
+ *    bounded k-heap aggregate over the k scanned rows is equivalent (it
+ *    returns them best-first).
+ * `dist` is a distance function between an indexed column and a foldable
+ * query vector ([[HnswMatch.matchIndex]]).
  *
  * Guard clauses mirror the reference's bail-outs: ASC only, single sort key,
- * 0 < k < 2048, distance function must match the index metric, and the
- * query vector dimension must equal the index dimension. Kill switch:
- * `spark.graft.hnsw.rewrite.enabled=false` (the `PRAGMA disable_optimizer`
- * analogue used by hnsw_rewrite.test).
+ * a single min_by aggregate without DISTINCT or FILTER, 0 < k < 2048
+ * (hnsw_optimize_topk.cpp:112-121,171-174), distance function must match the
+ * index metric, and the query vector dimension must equal the index
+ * dimension. Kill switch: `spark.graft.hnsw.rewrite.enabled=false` (the
+ * `PRAGMA disable_optimizer` analogue used by hnsw_rewrite.test).
  *
  * A Filter under the Sort (`WHERE p ORDER BY dist LIMIT k` — the single most
  * common real ANN query) rewrites to a *filtered* index scan: the reference
@@ -54,173 +65,96 @@ object CosineDistanceRewrite extends Rule[LogicalPlan] {
  * the index once with the allow-list of rowids that pass, preserving
  * standard SQL semantics. Mirroring the reference's refusal to rewrite under dynamic
  * filters (hnsw_optimize_scan.cpp:82-85), only deterministic, subquery-free
- * predicates over the scanned relation qualify.
+ * predicates over the scanned relation qualify. Under min_by a filter bails
+ * out, as in the reference.
  */
-class TopNToIndexScan(session: SparkSession) extends Rule[LogicalPlan] {
+class TopKToIndexScan(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!session.conf.get(Hnsw.RewriteEnabledKey, "true").toBoolean) return plan
+    if (!Hnsw.rewriteEnabled(session)) return plan
     plan.transformDown {
+      // The Limit's output is the sort child's: a scan that fetches fewer
+      // columns is projected back to it.
       case l @ Limit(IntegerLiteral(k),
-          Sort(Seq(SortOrder(key, Ascending, _, _)), true, child, _))
-          if k > 0 && k < 2048 =>
-        rewriteChild(child, key, k, None).getOrElse(l)
+          Sort(Seq(SortOrder(key, Ascending, _, _)), true, child, _)) if HnswMatch.validK(k) =>
+        indexScan(child, key, k, child.outputSet, filters = true)
+          .map(p => if (p.output == child.output) p else Project(child.output, p))
+          .getOrElse(l)
       // PushProjectionThroughLimit moves post-sort projections between the
       // limit and the sort; the reference's MergeProjections handles the
       // same shape (hnsw_optimize_scan.cpp:211-249). The outer projection's
       // references bound what the scan must fetch (projection pushdown).
       case l @ Limit(IntegerLiteral(k),
           Project(pl, Sort(Seq(SortOrder(key, Ascending, _, _)), true, child, _)))
-          if k > 0 && k < 2048 =>
-        rewriteChild(child, key, k, Some(AttributeSet(pl.flatMap(_.references))))
+          if HnswMatch.validK(k) =>
+        indexScan(child, key, k, AttributeSet(pl.flatMap(_.references)), filters = true)
           .map(Project(pl, _)).getOrElse(l)
-    }
-  }
-
-  /** Try to rewrite; None restores the original shape. Peels the optimized
-    * sub-plan `[Project(pl)] [Filter(p)] [Project(attrs)] relation`,
-    * resolving the sort key through projection aliases on the way down.
-    * `outerNeeded` (the enclosing projection's references, when one sits
-    * between the limit and the sort) bounds the scan's `required` columns so
-    * the rowid fetch reads only consumed columns — the analogue of the
-    * reference's fetch projection pushdown (hnsw_index_scan.cpp:95-121). */
-  private def rewriteChild(child: LogicalPlan, key: Expression, k: Int,
-      outerNeeded: Option[AttributeSet]): Option[LogicalPlan] = {
-    def aliasResolve(projList: Seq[NamedExpression], e: Expression): Expression = {
-      val m = projList.collect { case al: Alias => al.toAttribute.exprId -> al.child }.toMap
-      e.transform { case a: Attribute if m.contains(a.exprId) => m(a.exprId) }
-    }
-    var plan = child
-    var dist = key
-    var topProj: Option[Seq[NamedExpression]] = None
-    plan match {
-      case Project(pl, c) if pl.exists(_.isInstanceOf[Alias]) =>
-        topProj = Some(pl); dist = aliasResolve(pl, dist); plan = c
-      case _ => ()
-    }
-    var cond: Option[Expression] = None
-    plan match {
-      case Filter(p, c) => cond = Some(p); plan = c
-      case _ => ()
-    }
-    plan match {
-      // Column pruning may sit between the filter and the scan.
-      case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) => plan = c
-      case _ => ()
-    }
-    plan match {
-      case rel: LogicalRelation
-          // Dynamic-filter analogue (hnsw_optimize_scan.cpp:82-85): only
-          // deterministic, subquery-free predicates over the relation.
-          if cond.forall(c => c.deterministic &&
-            c.references.subsetOf(rel.outputSet) &&
-            !c.exists(_.isInstanceOf[PlanExpression[_]])) =>
-        matchIndexScan(rel, dist, k, cond).map { scan0 =>
-          // Narrow the intermediate projection to entries the outer
-          // projection consumes, then fetch only the referenced columns
-          // (+ the id column the rank join needs). The residual predicate
-          // is applied under the fetch projection, so its columns need not
-          // be in `required`.
-          val prunedTopProj = (topProj, outerNeeded) match {
-            case (Some(pl), Some(need)) =>
-              val kept = pl.filter(ne => need.contains(ne.toAttribute))
-              Some(if (kept.nonEmpty) kept else pl)
-            case (tp, _) => tp
-          }
-          val baseRefs: AttributeSet = prunedTopProj
-            .map(pl => AttributeSet(pl.flatMap(_.references)))
-            .getOrElse(outerNeeded.getOrElse(child.outputSet))
-          val required = rel.output.filter(a =>
-            baseRefs.contains(a) || a.name == scan0.meta.idColumn)
-          val scan = scan0.copy(required = required)
-          prunedTopProj match {
-            case Some(pl) => Project(pl, scan)
-            // Arm 2 (outerNeeded defined) wraps its own projection; arm 1
-            // restores the original arity when pruning narrowed the scan.
-            case None if outerNeeded.isDefined => scan
-            case None if child.output != scan.output => Project(child.output, scan)
-            case None => scan
-          }
-        }
-      case _ => None
-    }
-  }
-
-  private def matchIndexScan(rel: LogicalRelation, dist: Expression, k: Int,
-      cond: Option[Expression]): Option[HnswIndexScan] = {
-    val base = Hnsw.baseDir(session)
-    HnswMatch.distanceArgs(dist).flatMap { case (metrics, a, b) =>
-      HnswMatch.findIndex(base, rel, metrics, a, b).map { case (meta, qvec) =>
-        HnswIndexScan(rel, base, meta, qvec, k, Hnsw.efSearch(session, meta), cond)
-      }
-    }
-  }
-}
-
-/**
- * O4 — `min_by(col, dist, k)` (no GROUP BY) → the same aggregate over an
- * [[HnswIndexScan]] feeding only the k nearest candidate rows
- * (/root/reference/src/hnsw/hnsw_optimize_topk.cpp:67-228). The reference
- * swaps the aggregate for `list(col ORDER BY dist)`; re-running our bounded
- * k-heap aggregate over the k scanned rows is equivalent (it returns them
- * best-first) and keeps output ordering guaranteed by the aggregate itself.
- *
- * Guards mirror the reference: single aggregate expression, constant
- * 0 < k < 2048 (hnsw_optimize_topk.cpp:112-121,171-174), bare scan below
- * (filters under the aggregate bail out automatically).
- */
-class MinByKToIndexScan(session: SparkSession) extends Rule[LogicalPlan] {
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!session.conf.get(Hnsw.RewriteEnabledKey, "true").toBoolean) return plan
-    plan.transformDown {
-      case agg @ Aggregate(groups, aggExprs, child, _) if groups.isEmpty =>
-        val aggFns = aggExprs.flatMap(_.collect {
-          case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression => ae
-        })
-        aggFns match {
-          case Seq(ae) => ae.aggregateFunction match {
-            case graft.aggregates.MinMaxByK(_, order, IntegerLiteral(k), true, _, _)
-                if k > 0 && k < 2048 && !ae.isDistinct =>
-              rewriteAggChild(child, order, k, agg.references)
-                .map(newChild => agg.copy(child = newChild))
-                .getOrElse(agg)
-            case _ => agg
-          }
+      case agg @ Aggregate(Nil, aggs, child, _) =>
+        aggs.flatMap(_.collect { case ae: AggregateExpression => ae }) match {
+          // A FILTER clause selects rows the k nearest may not hold.
+          case Seq(AggregateExpression(MinMaxByK(_, order, IntegerLiteral(k), true, _, _), _,
+              false, None, _)) if HnswMatch.validK(k) =>
+            indexScan(child, order, k, agg.references, filters = false)
+              .map(scan => agg.copy(child = scan)).getOrElse(agg)
           case _ => agg
         }
     }
   }
 
-  private def rewriteAggChild(child: LogicalPlan, order: Expression, k: Int,
-      aggRefs: AttributeSet): Option[LogicalPlan] =
-    child match {
-      case rel: LogicalRelation =>
-        matchScan(rel, order, k, aggRefs)
-      case p @ Project(projList, rel: LogicalRelation) =>
-        val aliasMap = projList.collect { case al: Alias => al.toAttribute.exprId -> al.child }.toMap
-        val resolved = order.transform {
-          case a: Attribute if aliasMap.contains(a.exprId) => aliasMap(a.exprId)
-        }
-        // Only the projection entries the aggregate consumes need to exist;
-        // their references bound the fetch columns.
-        val kept = projList.filter(ne => aggRefs.contains(ne.toAttribute))
-        val pl = if (kept.nonEmpty) kept else projList
-        matchScan(rel, resolved, k, AttributeSet(pl.flatMap(_.references)))
-          .map(scan => Project(pl, scan))
-      case _ => None
+  /** The index scan that replaces `child`, ordered by `key`, or None.
+    * Peels `[Project with aliases] [Filter] [Project of attributes]
+    * relation`, resolving `key` through the aliases. `filters = false`
+    * (under min_by) refuses a Filter and keeps any projection over the
+    * relation above the scan, not only an aliasing one. `needed` (what the
+    * consumer reads of `child`) prunes that projection to the entries it
+    * consumes, and the scan's `required` columns are then that
+    * projection's references (else `needed`) plus the id column, so the
+    * rowid fetch reads only consumed columns — the analogue of the
+    * reference's fetch projection pushdown (hnsw_index_scan.cpp:95-121).
+    * The residual predicate is applied under the fetch projection, so its
+    * columns need not be in `required`. */
+  private def indexScan(child: LogicalPlan, key: Expression, k: Int, needed: AttributeSet,
+      filters: Boolean): Option[LogicalPlan] = {
+    val (topProj, belowTop) = child match {
+      case Project(pl, c) if !filters || pl.exists(_.isInstanceOf[Alias]) => (Some(pl), c)
+      case c => (None, c)
     }
-
-  private def matchScan(rel: LogicalRelation, dist: Expression, k: Int,
-      needed: AttributeSet): Option[HnswIndexScan] = {
-    val base = Hnsw.baseDir(session)
-    HnswMatch.distanceArgs(dist).flatMap { case (metrics, a, b) =>
-      HnswMatch.findIndex(base, rel, metrics, a, b).map { case (meta, qvec) =>
-        val required = rel.output.filter(a =>
-          needed.contains(a) || a.name == meta.idColumn)
-        HnswIndexScan(rel, base, meta, qvec, k, Hnsw.efSearch(session, meta),
-          required = required)
-      }
+    val (cond, belowFilter) = belowTop match {
+      case Filter(p, c) if filters => (Some(p), c)
+      case c => (None, c)
+    }
+    val relation = belowFilter match {
+      // Column pruning may sit between the filter and the scan.
+      case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) => c
+      case c => c
+    }
+    relation match {
+      // The scan fetches rows through the file reader, which serves the
+      // table's own columns: a relation that also outputs a metadata column
+      // (`_metadata`) keeps its ordinary plan. Dynamic-filter analogue
+      // (hnsw_optimize_scan.cpp:82-85): only deterministic, subquery-free
+      // predicates over the relation.
+      case rel @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if rel.output.forall(o => fs.schema.fieldNames.contains(o.name)) &&
+            cond.forall(c => c.deterministic && c.references.subsetOf(rel.outputSet) &&
+              !c.exists(_.isInstanceOf[PlanExpression[_]])) =>
+        val dist = topProj.fold(key)(HnswMatch.resolveAliases(_, key))
+        val base = Hnsw.baseDir(session)
+        for {
+          (meta, query) <- HnswMatch.matchIndex(base, rel, dist)
+          qvec <- HnswMatch.foldableVec(query) if qvec.length == meta.dim
+        } yield {
+          val pruned = topProj.map { pl =>
+            val kept = pl.filter(ne => needed.contains(ne.toAttribute))
+            if (kept.nonEmpty) kept else pl
+          }
+          val refs = pruned.fold(needed)(pl => AttributeSet(pl.flatMap(_.references)))
+          val scan = HnswIndexScan(rel, base, meta, qvec, k,
+            Hnsw.efSearch(session, meta), cond,
+            required = rel.output.filter(a => refs.contains(a) || a.name == meta.idColumn))
+          pruned.fold[LogicalPlan](scan)(Project(_, scan))
+        }
+      case _ => None
     }
   }
 }
@@ -266,7 +200,7 @@ class MinByKToIndexScan(session: SparkSession) extends Rule[LogicalPlan] {
 class LateralTopKToIndexJoin(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!session.conf.get(Hnsw.RewriteEnabledKey, "true").toBoolean) return plan
+    if (!Hnsw.rewriteEnabled(session)) return plan
     plan.transformDown {
       case f @ Filter(cond, w: Window) =>
         tryRewrite(cond, w).getOrElse(f)
@@ -278,7 +212,7 @@ class LateralTopKToIndexJoin(session: SparkSession) extends Rule[LogicalPlan] {
     // either tagged by Vss.lateralTopK (its outerKey contract) or the user
     // opted in, asserting their window partition key is unique per row.
     if (!w.getTagValue(LateralTopKToIndexJoin.PerRowWindowTag).contains(true) &&
-      !session.conf.get(Hnsw.AssumeUniqueWindowKeyKey, "false").toBoolean) return None
+      !Hnsw.assumeUniqueWindowKey(session)) return None
     // Single row_number window expression ordered ASC by one key.
     val (rnAlias, orderKey) = w match {
       case Window(Seq(al @ Alias(WindowExpression(RowNumber(), _), _)), _,
@@ -295,7 +229,7 @@ class LateralTopKToIndexJoin(session: SparkSession) extends Rule[LogicalPlan] {
       case Seq(GreaterThanOrEqual(IntegerLiteral(n), a: Attribute)) if a.semanticEquals(rnAttr) => n
       case _ => return None
     }
-    if (k <= 0 || k >= 2048) return None
+    if (!HnswMatch.validK(k)) return None
 
     // Child: optional projection over an unconditioned Inner/Cross join.
     val (projList, join) = w.child match {
@@ -307,13 +241,8 @@ class LateralTopKToIndexJoin(session: SparkSession) extends Rule[LogicalPlan] {
       (join.joinType != Inner && join.joinType != Cross)) return None
 
     // Resolve the order key through the projection, then match the index.
-    val aliasMap = projList.map(_.collect { case al: Alias => al.toAttribute.exprId -> al.child }.toMap)
-      .getOrElse(Map.empty)
-    val dist = orderKey.transform {
-      case a: Attribute if aliasMap.contains(a.exprId) => aliasMap(a.exprId)
-    }
+    val dist = projList.fold(orderKey)(HnswMatch.resolveAliases(_, orderKey))
     val base = Hnsw.baseDir(session)
-    val (metrics, a, b) = HnswMatch.distanceArgs(dist).getOrElse(return None)
 
     // Which side is the indexed inner relation? Accept a bare relation, a
     // column-pruning (attribute-only) projection, and/or an
@@ -337,12 +266,18 @@ class LateralTopKToIndexJoin(session: SparkSession) extends Rule[LogicalPlan] {
     orientations.view.flatMap { case (outer, innerPlan) =>
       asInnerRel(innerPlan) match {
         case Some((innerRel, innerPruned, notNullAttr)) =>
-          HnswMatch.findIndexJoin(base, innerRel, metrics, a, b, outer.outputSet).flatMap {
+          HnswMatch.matchIndex(base, innerRel, dist).flatMap {
             case (meta, queryExpr) =>
-              // Partition key must be outer-side only, and a peeled IsNotNull
+              // The query side must be a per-row vector over the outer side
+              // only, and so must the partition key; a peeled IsNotNull
               // must be on the indexed vector column (no-op) — any other
               // column's filter changes semantics.
-              if (w.partitionSpec.isEmpty ||
+              val perRowQuery = queryExpr.references.nonEmpty &&
+                queryExpr.references.subsetOf(outer.outputSet) && (queryExpr.dataType match {
+                  case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+                  case _ => false
+                })
+              if (!perRowQuery || w.partitionSpec.isEmpty ||
                 !w.partitionSpec.forall(_.references.subsetOf(outer.outputSet)) ||
                 notNullAttr.exists(_.name != meta.column)) None
               else {
@@ -393,10 +328,13 @@ object LateralTopKToIndexJoin {
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean]("graft.hnsw.perRowLateralWindow")
 }
 
-/** Shared index-matching helpers for the O3/O4/O6 rules — the analogue of
+/** Index matching shared by the rewrite rules — the analogue of
   * `HNSWIndex::TryMatchDistanceFunction` + `TryBindIndexExpression`
   * (/root/reference/src/hnsw/hnsw_index.cpp:635-689). */
 object HnswMatch {
+
+  /** The k range every rewrite accepts (hnsw_optimize_topk.cpp:171-174). */
+  def validK(k: Int): Boolean = k > 0 && k < 2048
 
   /** (metrics that serve this function, arg a, arg b). l2sq indexes serve
     * both `array_distance` (sqrt) and `array_squared_distance` — monotone
@@ -415,6 +353,13 @@ object HnswMatch {
     case other => other
   }
 
+  /** `e` with the attributes `projList` aliases replaced by their
+    * definitions. */
+  def resolveAliases(projList: Seq[NamedExpression], e: Expression): Expression = {
+    val defs = projList.collect { case al: Alias => al.toAttribute.exprId -> al.child }.toMap
+    e.transform { case a: Attribute if defs.contains(a.exprId) => defs(a.exprId) }
+  }
+
   /** Evaluate a foldable vector argument to Array[Float]. */
   def foldableVec(e: Expression): Option[Array[Float]] =
     if (!e.foldable) None
@@ -424,58 +369,29 @@ object HnswMatch {
       case _ => None
     }
 
-  /** Join-flavored matching: the query side is a non-foldable expression over
-    * the outer relation's attributes (the per-row query vector). Returns the
-    * matched index and that expression. */
-  def findIndexJoin(base: String, rel: LogicalRelation, metrics: Set[String],
-      a: Expression, b: Expression,
-      outerAttrs: AttributeSet): Option[(HnswIndexMeta, Expression)] = {
-    val relPaths = rel.relation match {
+  /** The catalog index that serves distance expression `dist` on a column
+    * of file relation `rel`, and the other argument (the query side), trying
+    * both argument orders. An index serves when its metric serves the
+    * function and it was built over `rel`'s root paths, on that column,
+    * keyed by a BIGINT id column of `rel`; of several, the first by name.
+    * The catalog is listed once. Callers check the query side. */
+  def matchIndex(base: String, rel: LogicalRelation,
+      dist: Expression): Option[(HnswIndexMeta, Expression)] = {
+    val (metrics, a, b) = distanceArgs(dist).getOrElse(return None)
+    val paths = rel.relation match {
       case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString).distinct.sorted
       case _ => return None
     }
-    val vecType: Expression => Boolean = _.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
+    val sides = Seq((stripCast(a), b), (stripCast(b), a)).collect {
+      case (column: AttributeReference, query) if rel.output.exists(_.exprId == column.exprId) =>
+        (column.name, query)
     }
-    Seq((stripCast(a), b), (stripCast(b), a)).view.flatMap {
-      case (colRef: AttributeReference, querySide)
-          if rel.output.exists(_.exprId == colRef.exprId) &&
-            querySide.references.nonEmpty &&
-            querySide.references.subsetOf(outerAttrs) && vecType(querySide) =>
-        IndexCatalog.list(base).find { m =>
-          metrics.contains(m.metric) && m.paths == relPaths && m.column == colRef.name &&
-            rel.output.exists(o => o.name == m.idColumn && o.dataType == LongType)
-        }.map(m => (m, querySide))
-      case _ => None
-    }.headOption
-  }
-
-  /** Match (indexed column attr, foldable query vec) in either arg order and
-    * find a catalog index bound to this relation + column + metric + dim. */
-  def findIndex(base: String, rel: LogicalRelation, metrics: Set[String],
-      a: Expression, b: Expression): Option[(HnswIndexMeta, Array[Float])] = {
-    val relPaths = rel.relation match {
-      // The scan fetches rows through the file reader, which serves the
-      // table's own columns: a relation that also outputs a metadata
-      // column (`_metadata`) keeps its ordinary plan.
-      case fs: HadoopFsRelation if rel.output.forall(o => fs.schema.fieldNames.contains(o.name)) =>
-        fs.location.rootPaths.map(_.toString).distinct.sorted
-      case _ => return None
-    }
-    val candidates = Seq((stripCast(a), b), (stripCast(b), a))
-    candidates.view.flatMap {
-      case (colRef: AttributeReference, queryside) =>
-        for {
-          qvec <- foldableVec(queryside)
-          meta <- IndexCatalog.list(base).find { m =>
-            metrics.contains(m.metric) && m.paths == relPaths &&
-              m.column == colRef.name && m.dim == qvec.length &&
-              rel.output.exists(_.exprId == colRef.exprId) &&
-              rel.output.exists(o => o.name == m.idColumn && o.dataType == LongType)
-          }
-        } yield (meta, qvec)
-      case _ => None
+    if (sides.isEmpty) return None
+    val indexes = IndexCatalog.list(base).filter(m =>
+      metrics.contains(m.metric) && m.paths == paths &&
+        rel.output.exists(o => o.name == m.idColumn && o.dataType == LongType))
+    sides.view.flatMap { case (column, query) =>
+      indexes.find(_.column == column).map(m => (m, query))
     }.headOption
   }
 }

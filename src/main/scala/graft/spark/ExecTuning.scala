@@ -101,14 +101,38 @@ object ExecTuning {
     } catch { case _: Exception => false }
   }
 
-  /** Session conf as Long, naming the offending key on a bad value — the
-    * one copy of the parse-with-context idiom every numeric knob uses. */
+  /** Session conf as Long in [min, max], naming the offending key on a bad
+    * value. */
   private[graft] def confLong(spark: org.apache.spark.sql.SparkSession,
-      key: String, default: Long): Long =
-    spark.conf.getOption(key).map(v => try v.toLong catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$key must be a number, got '$v'")
-    }).getOrElse(default)
+      key: String, default: Long, min: Long = Long.MinValue, max: Long = Long.MaxValue): Long =
+    parsedConf(spark, key, default,
+      if (min == Long.MinValue && max == Long.MaxValue) "a number" else s"a number from $min to $max"
+    )(_.toLongOption.filter(n => n >= min && n <= max))
+
+  /** Session conf as a finite Double of at least `min`, naming the key on a
+    * bad value. */
+  private[graft] def confDouble(spark: org.apache.spark.sql.SparkSession,
+      key: String, default: Double, min: Double): Double =
+    parsedConf(spark, key, default, s"a finite number of at least $min")(
+      _.toDoubleOption.filter(x => x >= min && x < Double.PositiveInfinity))
+
+  /** Session conf as one of `choices` (any case; "true"/"false" for a
+    * boolean), naming the key on any other value. */
+  private[graft] def confChoice(spark: org.apache.spark.sql.SparkSession,
+      key: String, default: String, choices: String*): String =
+    parsedConf(spark, key, default, s"one of ${choices.mkString(", ")}")(v =>
+      choices.find(_.equalsIgnoreCase(v)))
+
+  /** The one copy of the parse-with-context idiom every knob uses: the
+    * session's value of `key` through `parse`, `default` when unset, and an
+    * IllegalArgumentException naming the key and what it `must` be when
+    * `parse` refuses it. Reads with a null default: `conf.getOption` throws
+    * and catches an exception for an unset key, and the optimizer rules
+    * read their keys on every pass. */
+  private def parsedConf[T](spark: org.apache.spark.sql.SparkSession, key: String,
+      default: T, must: String)(parse: String => Option[T]): T =
+    Option(spark.conf.get(key, null)).fold(default)(v => parse(v.trim).getOrElse(
+      throw new IllegalArgumentException(s"$key must be $must, got '$v'")))
 
   /** Scan splits per core targeted for LARGE inputs (0 disables the
     * raise). The session default `maxPartitionBytes` is sized for the

@@ -31,7 +31,7 @@ import graft.expressions.{ShingleHitCount, TextHash}
  * that bounds the broadcast near the repo-wide 256 MB driver-payload
  * ceiling documented in [[graft.ops.SemiJoins]]). Past the cap the plan
  * goes TWO-PHASE instead (r13): a Bloom filter over the eval grams'
- * 64-bit shingle hashes (`spark.graft.decontam.bloomFpp`, default 1%)
+ * 64-bit shingle hashes (1% false positives)
  * screens the corpus in the same scan-only shape — zero Bloom positives
  * PROVES a document clean (no false negatives) — and only the screened
  * candidates (true hits + the FPP tail) pay the exact string-level
@@ -44,6 +44,9 @@ import graft.expressions.{ShingleHitCount, TextHash}
 object Decontaminate {
 
   private val MaxGramsConf = "spark.graft.decontam.maxEvalGrams"
+
+  /** The past-cap Bloom screen's false-positive rate. */
+  private val BloomFpp = 0.01
 
   /** Sorted (hashes, grams) broadcast pair for the fused path, or None if
     * the eval set's distinct-shingle count exceeds the cap. */
@@ -106,8 +109,6 @@ object Decontaminate {
       textCol: String, n: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     val spark = corpus.sparkSession
-    val fpp = spark.conf.getOption("spark.graft.decontam.bloomFpp")
-      .map(_.toDouble).getOrElse(0.01)
     def hashesOf(df: DataFrame) = Bridge.column(
       graft.expressions.WordShingleHashes(Bridge.expression(df(textCol)), n))
     val evalHashes = eval.where(col(textCol).isNotNull)
@@ -116,7 +117,7 @@ object Decontaminate {
     // the distinct count, so the filter is sized at or below the asked
     // fpp. One extra linear pass over the eval side only.
     val items = math.max(evalHashes.count(), 1L)
-    val bf = evalHashes.stat.bloomFilter("_g64", items, fpp)
+    val bf = evalHashes.stat.bloomFilter("_g64", items, BloomFpp)
     val bfBc = spark.sparkContext.broadcast(bf)
     val screenHits = Bridge.column(graft.expressions.BloomHitCount(
       Bridge.expression(hashesOf(corpus)), bfBc))

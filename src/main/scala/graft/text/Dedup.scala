@@ -304,14 +304,12 @@ object Dedup {
   }
 
   /** Bucket size beyond which a warning is logged when the banded LSH
-    * frame executes (`spark.graft.dedup.hotBucketWarnBucketSize`, 0
-    * disables). A bucket of B members emits B(B−1)/2 candidate pairs,
+    * frame executes. A bucket of B members emits B(B−1)/2 candidate pairs,
     * so one degenerate bucket — boilerplate, templated spam, replicas —
     * degrades the whole job quadratically; `maxBucketSize` bounds it but
     * defaults OFF for gate exactness, and without this warning a scale
     * user discovers the knob only after the job hangs. */
-  private[graft] val HotBucketWarnSizeKey = "spark.graft.dedup.hotBucketWarnBucketSize"
-  private[graft] val DefaultHotBucketWarnSize: Long = 100000L
+  private val HotBucketWarnSize: Long = 100000L
 
   /** Sessions that already carry the hot-bucket QueryExecutionListener
     * (weak keys: a retired session must not be pinned by the registry). */
@@ -387,19 +385,14 @@ object Dedup {
                 durationNs: Long): Unit =
               qe.observedMetrics.foreach { case (name, row) =>
                 if (name.startsWith(HotBucketMetricPrefix) && !row.isNullAt(0)) {
-                  // Re-read per event: the listener registers once per
-                  // session, but the threshold is runtime conf the user
-                  // may change between queries.
-                  val warnAt = graft.spark.ExecTuning.confLong(spark,
-                    HotBucketWarnSizeKey, DefaultHotBucketWarnSize)
                   val maxB = row.getLong(0)
                   lastObservedMaxBucket.set(maxB)
                   observedMaxBuckets.synchronized {
                     observedMaxBuckets.put(name, java.lang.Long.valueOf(maxB))
                   }
-                  if (warnAt > 0 && maxB > warnAt)
+                  if (maxB > HotBucketWarnSize)
                     org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(
-                      s"LSH band bucket of $maxB members (> $warnAt): one " +
+                      s"LSH band bucket of $maxB members (> $HotBucketWarnSize): one " +
                         s"bucket of B members emits B(B-1)/2 candidate " +
                         s"pairs — set maxBucketSize on " +
                         s"nearDupPairs/dropNearDuplicates to bound it " +

@@ -46,6 +46,52 @@ class HnswIndexSpec extends SparkSuite {
     assert(Hnsw.validateOptions(Map("M" -> "8")).m0 == 16)
   }
 
+  test("a bad spark.graft.hnsw.* value fails with IllegalArgumentException naming its key") {
+    val dir = Files.createTempDirectory("graft-idx-conf").toFile.getAbsolutePath
+    gridDf.write.mode("overwrite").parquet(dir)
+    val table = spark.read.parquet(dir)
+    Hnsw.createIndex(spark, "conf_grid", table, "vec", "id", overwrite = true)
+    val q = graft.functions.lit_vector(Array(1f, 2f, 3f))
+    def topK() = table.orderBy(graft.functions.array_distance(col("vec"), q)).limit(3).collect()
+    // A hand-written top-k-per-row window: the lateral rule reads its
+    // opt-in key before anything else.
+    def perRow() = {
+      import spark.implicits._
+      Seq((1L, Array(1f, 2f, 3f))).toDF("qid", "q").crossJoin(table)
+        .withColumn("d", graft.functions.array_distance(col("vec"), col("q")))
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("qid").orderBy("d")))
+        .where(col("rn") <= 3).collect()
+    }
+    def build() = Hnsw.createIndex(spark, "conf_build", gridDf, "vec", "id", overwrite = true)
+    def failsNaming(key: String, value: String)(body: => Any): Unit = {
+      spark.conf.set(key, value)
+      try {
+        val e = intercept[Exception](body)
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+          t.getMessage.contains(key) && t.getMessage.contains(value)),
+          chain.map(_.toString).mkString(" <- "))
+      } finally spark.conf.unset(key)
+    }
+    failsNaming(Hnsw.EfSearchKey, "abc")(topK())
+    failsNaming(Hnsw.EfSearchKey, "0")(topK())
+    failsNaming(Hnsw.ProbeSegmentsKey, "two")(topK())
+    failsNaming(Hnsw.AdaptiveProbeMarginKey, "-1.5")(topK())
+    failsNaming(Hnsw.AdaptiveProbeMarginKey, "Infinity")(topK())
+    failsNaming(Hnsw.RewriteEnabledKey, "maybe")(topK())
+    failsNaming(Hnsw.AssumeUniqueWindowKeyKey, "maybe")(perRow())
+    failsNaming(Hnsw.PersistenceKey, "maybe")(build())
+    failsNaming(Hnsw.MaxVectorsPerPartitionKey, "0")(build())
+    failsNaming(Hnsw.BuildPartitionByKey, "vectors")(build())
+    // Good values still serve.
+    spark.conf.set(Hnsw.BuildPartitionByKey, "VECTOR")
+    try assert(build().segments.size == 1) finally spark.conf.unset(Hnsw.BuildPartitionByKey)
+    assert(topK().head.getLong(0) == 11L)
+    Hnsw.dropIndex(spark, "conf_grid")
+    Hnsw.dropIndex(spark, "conf_build")
+  }
+
   test("non-FLOAT[] key column rejected (hnsw_index_plan.cpp:88)") {
     import spark.implicits._
     val bad = Seq((1L, Array(1.0, 2.0))).toDF("id", "vec") // array<double>

@@ -166,6 +166,17 @@ class HnswRewriteSpec extends SparkSuite {
     assert(qProj.collect().head.getSeq[Long](0).head == 11L)
   }
 
+  test("min_by with a FILTER clause is not rewritten: the k nearest may all fail the filter") {
+    Hnsw.createIndex(spark, "rw_l2", grid, "vec", "id", overwrite = true)
+    grid.createOrReplaceTempView("grid_filter_t")
+    val q = spark.sql("""SELECT min_by(id, array_distance(vec, CAST(array(1, 2, 3) AS ARRAY<FLOAT>)), 3)
+        FILTER (WHERE id >= 400) AS ids FROM grid_filter_t""")
+    assert(!planOf(q).contains("HnswIndexScan"), planOf(q))
+    // None of the 3 nearest ids passes the filter; 3 other rows do.
+    val ids = q.collect().head.getSeq[Long](0)
+    assert(ids.length == 3 && ids.forall(_ >= 400L), ids)
+  }
+
   test("projection permutations all work on the index path (hnsw_projection.test:20-37)") {
     val qv = lit_vector(Array(1f, 2f, 3f))
     val d = array_distance(col("vec"), qv)

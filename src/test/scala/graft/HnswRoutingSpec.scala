@@ -8,8 +8,8 @@ import graft.index.{HnswIndexMeta, IndexCatalog}
 
 /** Segment routing (r12): centroid-routed search over a vector-clustered
   * many-segment layout must keep ANN recall at p ≪ segments, default-off
-  * routing must stay exact-parity, and pre-r12 artifacts (no centroids)
-  * must keep working. */
+  * routing must stay exact-parity, and inserts keep centroids aligned
+  * with segments. */
 class HnswRoutingSpec extends SparkSuite {
   import spark.implicits._
 
@@ -125,25 +125,6 @@ class HnswRoutingSpec extends SparkSuite {
     val exhaustive = graft.api.Vss.annTopK(qDf, "route_spec_f", "q_vec", 10)
       .select(col("neighbor_id")).collect().map(_.getLong(0)).toSet
     assert(exhaustive == bruteTop(q._2, 10))
-  }
-
-  test("pre-r12 metas (no centroids) route to all segments; misaligned inserts disable routing") {
-    val meta = buildRouted("route_spec_d")
-    // Strip centroids, as a pre-r12 artifact would present.
-    IndexCatalog.save(Hnsw.baseDir(spark), meta.copy(centroids = Seq.empty))
-    val q = corpus.head._2
-    assert(IndexCatalog.load(Hnsw.baseDir(spark), "route_spec_d")
-      .routedSegments(q, 4).size == Clusters)
-    // Routing off is simply all segments, regardless of centroids.
-    assert(meta.routedSegments(q, 0) == meta.segments)
-    // Insert onto the stripped meta: centroids stay absent (never a
-    // partial, misaligned list), and search remains correct.
-    Hnsw.insert(spark, "route_spec_d",
-      Seq((100000L, corpus.head._2)).toDF("id", "vec"))
-    val after = IndexCatalog.load(Hnsw.baseDir(spark), "route_spec_d")
-    assert(after.centroids.isEmpty)
-    val got = Hnsw.searchRaw(spark, "route_spec_d", q, 2).map(_._1).toSet
-    assert(got.contains(corpus.head._1) && got.contains(100000L))
   }
 
   test("insert onto a routed index appends an aligned centroid") {

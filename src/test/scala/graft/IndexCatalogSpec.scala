@@ -267,4 +267,48 @@ class IndexCatalogSpec extends SparkSuite {
     assert(meta.version == 1 && meta.count == 5L)
     Hnsw.dropIndex(spark, "cat_again")
   }
+
+  test("a search with a plan's meta from before a compaction reads the compacted version") {
+    Hnsw.createIndex(spark, "cat_window", grid, "vec", "id", overwrite = true)
+    Hnsw.delete(spark, "cat_window", Seq(11L))
+    val old = IndexCatalog.load(base, "cat_window")
+    val qv = Array(1f, 2f, 3f)
+    val q = grid.select(col("id"), array_distance(col("vec"), lit_vector(qv)).as("d"))
+      .orderBy("d").limit(3)
+    assert(q.queryExecution.executedPlan.toString.contains("HnswIndexScan"))
+    // The window between compaction's commit and its deletion of the old
+    // segment files: keep the old files aside, compact, put them back.
+    val dir = IndexCatalog.indexDir(base, "cat_window").toPath
+    old.segments.foreach(s => Files.createLink(dir.resolve(s + ".aside"), dir.resolve(s)))
+    Hnsw.compactIndex(spark, "cat_window")
+    old.segments.foreach(s => Files.createLink(dir.resolve(s), dir.resolve(s + ".aside")))
+    val raw = Hnsw.searchBatch(None, base, old, Array(qv), 3, 64, 0, 0.0).hits.head.map(_._1)
+    assert(raw.length == 3 && !raw.contains(11L), raw.toSeq)
+    val sql = q.collect().map(_.getLong(0))
+    assert(sql.length == 3 && !sql.contains(11L), sql.toSeq)
+    Hnsw.dropIndex(spark, "cat_window")
+  }
+
+  test("a manifest missing one centroid fails load, naming the index, and is not listed") {
+    Hnsw.createIndex(spark, "cat_misaligned", rows(1L to 3L), "vec", "id", overwrite = true)
+    val meta = Hnsw.insert(spark, "cat_misaligned", rows(4L to 5L))
+    assert(meta.segments.size == 2 && meta.centroids.size == 2)
+    val manifestDir = new File(IndexCatalog.indexDir(base, "cat_misaligned"), "_manifest")
+    val p = new java.util.Properties()
+    val in = Files.newInputStream(new File(manifestDir, f"${meta.version}%020d.properties").toPath)
+    try p.load(in) finally in.close()
+    p.setProperty("centroids", p.getProperty("centroids").split(";").head)
+    val out = Files.newOutputStream(new File(manifestDir, f"${meta.version + 1}%020d.properties").toPath)
+    try p.store(out, null) finally out.close()
+    val e = intercept[IllegalStateException](IndexCatalog.load(base, "cat_misaligned"))
+    assert(e.getMessage.contains("'cat_misaligned'") && e.getMessage.contains("1 centroids"), e.getMessage)
+    // It cannot fail the index match of other queries.
+    Hnsw.createIndex(spark, "cat_aligned", grid, "vec", "id", overwrite = true)
+    assert(!IndexCatalog.list(base).exists(_.name == "cat_misaligned"))
+    assert(nearest("cat_aligned", Array(1f, 2f, 3f), 1) == Seq(11L))
+    assert(grid.orderBy(array_distance(col("vec"), lit_vector(Array(1f, 2f, 3f)))).limit(1)
+      .queryExecution.executedPlan.toString.contains("HnswIndexScan"))
+    Hnsw.dropIndex(spark, "cat_aligned")
+    Hnsw.dropIndex(spark, "cat_misaligned")
+  }
 }

@@ -15,11 +15,9 @@ class KnobSurfaceSpec extends AnyFunSuite {
   private val Keys = Set(
     "spark.graft.aqe.smallQueryBytes",
     "spark.graft.classifier.localFitMaxBytes",
-    "spark.graft.decontam.bloomFpp",
     "spark.graft.decontam.maxEvalGrams",
     "spark.graft.dedup.candidateSemiMinBytes",
     "spark.graft.dedup.forestTaskEdges",
-    "spark.graft.dedup.hotBucketWarnBucketSize",
     "spark.graft.dedup.reliableCheckpointDir",
     "spark.graft.hnsw.adaptiveProbeMargin",
     "spark.graft.hnsw.build.maxVectorsPerPartition",
@@ -42,7 +40,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
 
   private val KeyLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
 
-  test("the spark.graft.* keys read under src/main/scala are exactly the listed 26") {
+  test("the spark.graft.* keys read under src/main/scala are exactly the listed 24") {
     val root: Path = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root),
       s"main sources not found at $root: run the suite from the project directory")
@@ -52,7 +50,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
         KeyLiteral.findAllMatchIn(Files.readString(f)).map(_.group(1))
       }.toSet
       finally files.close()
-    assert(Keys.size == 26)
+    assert(Keys.size == 24)
     assert((found -- Keys).isEmpty, s"keys not in the list: ${(found -- Keys).toSeq.sorted}")
     assert((Keys -- found).isEmpty, s"listed keys no longer read: ${(Keys -- found).toSeq.sorted}")
   }

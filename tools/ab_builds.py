@@ -12,18 +12,26 @@ spark-warehouse), with the JVM options of build.sbt's forked `run`.
 Usage:
   SPARK_GRAFT_ONLY=q2_join_agg,q7_ship_volume SPARK_GRAFT_SF_DIR=<sf dir> \\
   SPARK_GRAFT_CPUS=4 SPARK_DRIVER_MEM=4g \\
-    python3 tools/ab_builds.py <tree A> <tree B> [--pairs N] [--out FILE]
+    python3 tools/ab_builds.py <tree A> <tree B> [--pairs N] [--out FILE] [--plans]
 
 Every SPARK_GRAFT_* variable is passed through to Bench unchanged. Output:
 per gate, each arm's q1/median/q3 seconds (Bench's min of two timed runs),
 B's wins (pairs where B was faster), and each arm's jobs/stages/tasks
 counters (flagged when they vary across runs). --out writes the raw runs
 and the summary as JSON.
+
+--plans runs no Bench: it dumps each tree's `explain("formatted")` of the
+gates in SPARK_GRAFT_ONLY (every gate when unset) at SPARK_GRAFT_SF_DIR with
+`graft.tools.PlanDump`, and lists the gates whose plans differ once
+expression ids (`#123`) and array identity hashes (`[F@6b5dc4bb`) are
+stripped, with the first differing lines. It exits 1 when any plan differs.
 """
+import difflib
 import argparse
 import json
 import os
 import pathlib
+import re
 import statistics
 import subprocess
 import sys
@@ -75,6 +83,44 @@ def run_bench(tree, cp, scratch, tag):
     return json.loads(out.read_text())
 
 
+# Expression ids (`#123`) and the identity hashes of arrays printed without
+# a toString (`[F@6b5dc4bb`) differ from one JVM to the next.
+EXPR_ID = re.compile(r"#\d+|(?<=\[[A-Z])@[0-9a-f]+")
+
+
+def dump_plans(tree, cp, out_dir):
+    """Each gate's formatted plan from `tree`, expression ids stripped."""
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf:
+        sys.exit("--plans needs SPARK_GRAFT_SF_DIR")
+    gates = os.environ.get("SPARK_GRAFT_ONLY", "all")
+    proc = subprocess.run(["java", *jvm_options(), "-cp", cp, "graft.tools.PlanDump",
+                           sf, str(out_dir), "plan", gates],
+                          cwd=tree, capture_output=True, text=True)
+    if proc.returncode != 0:
+        sys.exit(f"PlanDump in {tree} failed (exit {proc.returncode}):\n{proc.stderr[-3000:]}")
+    return {f.name[:-len("_plan.txt")]: EXPR_ID.sub("", f.read_text())
+            for f in sorted(pathlib.Path(out_dir).glob("*_plan.txt"))}
+
+
+def compare_plans(trees, cps):
+    """Print the gates whose plans differ between the trees; 1 if any do."""
+    with tempfile.TemporaryDirectory(prefix="ab_plans_") as scratch:
+        plans = {arm: dump_plans(trees[arm], cps[arm], pathlib.Path(scratch) / arm)
+                 for arm in ("A", "B")}
+    gates = sorted(set(plans["A"]) | set(plans["B"]))
+    differ = [g for g in gates if plans["A"].get(g) != plans["B"].get(g)]
+    for g in differ:
+        print(f"== {g}: plans differ")
+        diff = difflib.unified_diff((plans["A"].get(g) or "").splitlines(),
+                                    (plans["B"].get(g) or "").splitlines(),
+                                    "A", "B", lineterm="", n=1)
+        print("\n".join(list(diff)[:40]))
+    print(f"plans: {len(gates)} gates, {len(differ)} differ"
+          + (f": {', '.join(differ)}" if differ else ""))
+    return 1 if differ else 0
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -116,9 +162,13 @@ def main():
     ap.add_argument("b", help="source tree B (the change)")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--out", help="write runs and summary as JSON here")
+    ap.add_argument("--plans", action="store_true",
+                    help="compare the gates' formatted plans instead of timing them")
     args = ap.parse_args()
     trees = {"A": os.path.abspath(args.a), "B": os.path.abspath(args.b)}
     cps = {arm: classpath(t) for arm, t in trees.items()}
+    if args.plans:
+        sys.exit(compare_plans(trees, cps))
     runs = []
     with tempfile.TemporaryDirectory(prefix="ab_builds_") as scratch:
         for i in range(args.pairs):
