@@ -35,7 +35,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // HNSW optimizer rules + planner strategy (SURVEY §2 O2-O7).
     e.injectOptimizerRule(_ => graft.rules.CosineDistanceRewrite)
     e.injectOptimizerRule(s => new graft.rules.TopKToIndexScan(s))
-    e.injectOptimizerRule(s => new graft.rules.LateralTopKToIndexJoin(s))
     e.injectPlannerStrategy(s => new graft.plans.HnswStrategy(s))
     // Index DDL: CREATE INDEX … USING HNSW / DROP INDEX / PRAGMA … (O1 DDL surface)
     e.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))

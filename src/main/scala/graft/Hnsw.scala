@@ -45,14 +45,6 @@ object Hnsw {
   val LocationKey = "spark.graft.index.location"
   val EfSearchKey = "spark.graft.hnsw.efSearch"
   val RewriteEnabledKey = "spark.graft.hnsw.rewrite.enabled"
-  /** Opt-in: let the lateral-top-k rewrite fire on hand-written
-    * `Filter(rn <= k, Window(row_number))` SQL whose partition key the USER
-    * asserts is unique per outer row (the reference accelerates any
-    * decorrelated LATERAL, where `delim_get` proves per-row grouping
-    * structurally — hnsw_optimize_join.cpp:349-697; Spark plans carry no
-    * such proof, hence the assertion). With duplicate keys the window
-    * semantics differ (top-k per GROUP), so this defaults to off. */
-  val AssumeUniqueWindowKeyKey = "spark.graft.hnsw.rewrite.assumeUniqueWindowKey"
   /** Parity no-op: files are always persistent (SURVEY §2 O17). */
   val PersistenceKey = "spark.graft.hnsw.enableExperimentalPersistence"
   val MaxVectorsPerPartitionKey = "spark.graft.hnsw.build.maxVectorsPerPartition"
@@ -93,11 +85,9 @@ object Hnsw {
   def efSearch(spark: SparkSession, meta: HnswIndexMeta): Int =
     ExecTuning.confLong(spark, EfSearchKey, meta.efSearch, 1, Int.MaxValue).toInt
 
-  /** The optimizer rules' kill switch (on by default). */
+  /** The index rewrites' kill switch (on by default): the optimizer rules
+    * and `Vss.lateralTopK`'s index join. */
   def rewriteEnabled(spark: SparkSession): Boolean = flag(spark, RewriteEnabledKey, default = true)
-
-  def assumeUniqueWindowKey(spark: SparkSession): Boolean =
-    flag(spark, AssumeUniqueWindowKeyKey, default = false)
 
   private def flag(spark: SparkSession, key: String, default: Boolean): Boolean =
     ExecTuning.confChoice(spark, key, default.toString, "true", "false") == "true"

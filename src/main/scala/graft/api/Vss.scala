@@ -3,7 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{array_cosine_similarity, array_distance, array_inner_product, max_by_k, min_by_k}
+import graft.functions.{array_cosine_distance, array_cosine_similarity, array_distance,
+  array_inner_product, array_negative_inner_product, max_by_k, min_by_k}
 
 /**
  * Brute-force k-NN similarity join/match — the Spark re-expression of the
@@ -30,14 +31,21 @@ import graft.functions.{array_cosine_similarity, array_distance, array_inner_pro
  */
 object Vss {
 
-  private case class Metric(score: (Column, Column) => Column, smallestIsBest: Boolean)
+  /** A metric's score for the vss macros (`smallestIsBest` orders it) and
+    * its distance for the lateral join (always smallest first). */
+  private case class Metric(score: (Column, Column) => Column, smallestIsBest: Boolean,
+      distance: (Column, Column) => Column)
 
-  private def metricOf(name: String): Metric = name match {
-    case "l2sq" | "l2" => Metric(array_distance, smallestIsBest = true)
-    case "cosine" | "cos" => Metric(array_cosine_similarity, smallestIsBest = false)
-    case "ip" => Metric(array_inner_product, smallestIsBest = false)
-    case other => throw new IllegalArgumentException(s"Unknown metric: $other")
+  private val Metrics: Map[String, Metric] = {
+    val l2 = Metric(array_distance, smallestIsBest = true, array_distance)
+    val cosine = Metric(array_cosine_similarity, smallestIsBest = false, array_cosine_distance)
+    Map("l2sq" -> l2, "l2" -> l2, "cosine" -> cosine, "cos" -> cosine,
+      "ip" -> Metric(array_inner_product, smallestIsBest = false, array_negative_inner_product))
   }
+
+  private def metricOf(name: String): Metric = Metrics.getOrElse(name,
+    throw new IllegalArgumentException(
+      s"Unknown metric '$name': expected one of ${Metrics.keys.toSeq.sorted.mkString(", ")}"))
 
   private def topK(value: Column, order: Column, k: Int, smallestIsBest: Boolean): Column =
     if (smallestIsBest) min_by_k(value, order, k) else max_by_k(value, order, k)
@@ -126,83 +134,101 @@ object Vss {
    * best first), like the reference join's row_number output.
    *
    * `outerKey` must uniquely identify outer rows (lateral semantics). The
-   * call builds the canonical Filter(rn<=k, Window(row_number over dist))
-   * shape and lets the LateralTopKToIndexJoin rule decide: when its
-   * optimized plan holds the index join, that plan is the answer;
-   * otherwise (no matching index, a filtered inner, a non-BIGINT id, the
-   * rewrite switched off) the brute-force path computes per-row top-k with
-   * the bounded-heap aggregate instead of a full-cross-product window
-   * shuffle (see [[lateralTopKAggregate]]). NULL vectors never match on
-   * either side, on every path.
+   * call picks its path once, when it builds the plan: when an index
+   * serves the inner side ([[lateralIndexJoin]]), the index join; otherwise
+   * (no matching index, a filtered inner, a non-BIGINT id, k out of range,
+   * the rewrite switched off) the brute-force path computes per-row top-k
+   * with the bounded-heap aggregate ([[lateralTopKAggregate]]). The index
+   * join reads `spark.graft.hnsw.efSearch` here, not when the plan runs.
+   * NULL vectors never match on either side, on both paths.
    */
   def lateralTopK(outer: DataFrame, inner: DataFrame, outerCol: String, innerCol: String,
       outerKey: String, k: Int, metric: String = "l2sq"): DataFrame = {
-    // Both sides may be one relation with shared attribute ids (a self
-    // lateral join: one Dataset, or two TABLE(...) arguments naming it);
-    // re-aliasing every column gives each side fresh ids, so the window
-    // form's column references stay unambiguous. The redundant aliases are
-    // gone (RemoveRedundantAliases) before the index-join rule matches the
-    // inner side.
-    def freshIds(df: DataFrame): DataFrame = df.toDF(df.columns.toIndexedSeq: _*)
-    val (outerF, innerF) = (freshIds(outer), freshIds(inner))
-    // NULL-vector semantics, unified across all three execution paths
-    // (index join / window / bounded-heap aggregate): a NULL outer vector
-    // emits no rows, a NULL inner vector never matches — the reference's
+    val m = metricOf(metric)
+    outer(outerKey) // an unknown key fails on both paths
+    // NULL-vector semantics, one for both paths: a NULL outer vector emits
+    // no rows, a NULL inner vector never matches — the reference's
     // semantics (NULL never matches, hnsw_lateral_join.test:49-58; index
-    // builds exclude NULL keys). Without the outer filter the window
-    // fallback would rank a NULL-vector outer row against NULL distances
-    // (Spark ASC = NULLS FIRST) while the index path emits nothing —
-    // the round-4 verdict's divergence.
-    val outerNN = outerF.where(outerF(outerCol).isNotNull)
-    val innerNN = innerF.where(innerF(innerCol).isNotNull)
-    val metricName = metric match {
-      case "l2sq" | "l2" => "l2sq"
-      case "cosine" | "cos" => "cosine"
-      case "ip" => "ip"
+    // builds exclude NULL keys).
+    val outerNN = outer.where(outer(outerCol).isNotNull)
+    val innerNN = inner.where(inner(innerCol).isNotNull)
+    lateralIndexJoin(outerNN, innerNN, outerCol, innerCol, k, m)
+      .getOrElse(lateralTopKAggregate(outerNN, innerNN, outerCol, innerCol, outerKey, k, m))
+  }
+
+  /** The index path of [[lateralTopK]], or None when no index serves it:
+    * [[graft.plans.HnswIndexJoinCore]] over the outer rows, joined to the
+    * inner relation on the hit rowids — the plan of the reference's join
+    * rewrite (hnsw_optimize_join.cpp:349-697). The inner side qualifies as
+    * `[Project of attributes] [Filter(IsNotNull(vector))] relation` once
+    * optimized; any other filter would drop rows the index returns. */
+  private def lateralIndexJoin(outerNN: DataFrame, innerNN: DataFrame, outerCol: String,
+      innerCol: String, k: Int, m: Metric): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeMap, AttributeReference, EqualTo, IsNotNull}
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Project}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
+    import graft.rules.HnswMatch
+    val spark = outerNN.sparkSession
+    val (outerVec, innerVec) = (Bridge.expression(outerNN(outerCol)), Bridge.expression(innerNN(innerCol)))
+    val innerId = innerVec.references.head.exprId
+    val perRowQuery = outerVec.dataType match {
+      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+      case _ => false
     }
-    Some(lateralTopKWindow(outerNN, innerNN, outerF, innerF, outerCol, innerCol,
-        outerKey, k, metricName))
-      .filter(_.queryExecution.optimizedPlan.exists(_.isInstanceOf[graft.plans.HnswIndexJoinCore]))
-      .getOrElse(lateralTopKAggregate(outerNN, innerNN, outerCol, innerCol, outerKey, k, metricName))
-  }
-
-  private def lateralDist(a: Column, b: Column, metricName: String): Column = metricName match {
-    case "l2sq" => array_distance(a, b)
-    case "cosine" => graft.functions.array_cosine_distance(a, b)
-    case "ip" => graft.functions.array_negative_inner_product(a, b)
-  }
-
-  /** The canonical Filter(rn<=k, Window(row_number over dist)) shape the
-    * LateralTopKToIndexJoin rule accelerates — returned only when the rule
-    * fired, so the cross product below the window is plan-surgery input,
-    * never an executed brute path. */
-  private def lateralTopKWindow(outerNN: DataFrame, innerNN: DataFrame,
-      outer: DataFrame, inner: DataFrame, outerCol: String, innerCol: String,
-      outerKey: String, k: Int, metricName: String): DataFrame = {
-    val dist = lateralDist(outer(outerCol), inner(innerCol), metricName)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(outer(outerKey)).orderBy(col("dist").asc)
-    val df = outerNN.crossJoin(innerNN)
-      .withColumn("dist", dist)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-    // Tag the row_number Window so LateralTopKToIndexJoin may fire: the
-    // rewrite is only sound when window groups are exactly outer rows, which
-    // this API's outerKey-uniqueness contract guarantees but no plan shape
-    // can prove (see the rule's scaladoc). First Window in pre-order is the
-    // one built above — outer/inner sub-plans sit below it.
-    var tagged = false
-    df.queryExecution.analyzed.foreach {
-      case win: org.apache.spark.sql.catalyst.plans.logical.Window if !tagged =>
-        win.setTagValue(graft.rules.LateralTopKToIndexJoin.PerRowWindowTag, true)
-        tagged = true
-      case _ => ()
+    if (!perRowQuery || !HnswMatch.validK(k) || !graft.Hnsw.rewriteEnabled(spark)) return None
+    val innerPlan = innerNN.queryExecution.optimizedPlan
+    val rel = (innerPlan match {
+      case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) => c
+      case c => c
+    }) match {
+      case Filter(IsNotNull(a: AttributeReference), r: LogicalRelation)
+          if a.exprId == innerId => r
+      case r: LogicalRelation => r
+      case _ => return None
     }
-    df
+    if (!rel.relation.isInstanceOf[HadoopFsRelation]) return None
+    val base = graft.Hnsw.baseDir(spark)
+    // The metric's distance over the two columns themselves, for matching.
+    val dist = Bridge.expression(m.distance(outerNN(outerCol), innerNN(innerCol)))
+      .withNewChildren(Seq(outerVec, innerVec))
+    for {
+      (meta, q) <- HnswMatch.matchIndex(base, rel, dist)
+      if q.semanticEquals(outerVec)
+      id <- rel.output.find(_.name == meta.idColumn)
+    } yield {
+      // The inner side gets attribute ids of its own, so it stays apart
+      // from an outer side over the same relation (a self lateral join).
+      // The join reads the rowid even where the inner side pruned it.
+      val fresh = rel.newInstance()
+      val renew = AttributeMap(rel.output.zip(fresh.output))
+      val right = (innerPlan match {
+        case Project(pl, c) if !pl.exists(_.exprId == id.exprId) => Project(pl :+ id, c)
+        case p => p
+      }).transformUp {
+        case r if r eq rel => fresh
+        case p => p.transformExpressions { case a: AttributeReference => renew.getOrElse(a, a) }
+      }
+      val extra = Seq(
+        AttributeReference("__hnsw_id", LongType, nullable = false)(),
+        AttributeReference("__hnsw_dist", DoubleType, nullable = false)(),
+        AttributeReference("__hnsw_rn", LongType, nullable = false)())
+      val core = graft.plans.HnswIndexJoinCore(outerNN.queryExecution.analyzed, base, meta,
+        outerVec, k, graft.Hnsw.efSearch(spark, meta), extra)
+      val innerOut = right.output.take(innerNN.columns.length).map(Bridge.column)
+      Bridge.ofRows(spark, Join(core, right, Inner, Some(EqualTo(extra.head, renew(id))),
+          JoinHint.NONE))
+        .select(core.child.output.map(Bridge.column) ++ innerOut :+
+          m.distance(Bridge.column(outerVec), innerOut(innerPlan.output.indexWhere(_.exprId == innerId)))
+            .as("dist") :+
+          Bridge.column(extra(2)).cast("int").as("rn"): _*)
+    }
   }
 
-  /** Brute-force path without an index: same output shape as the window
-    * form, but top-k per outer row is computed with the bounded-heap
+  /** Brute-force path without an index: same output shape as the index
+    * join, with top-k per outer row computed by the bounded-heap
     * [[graft.aggregates.MinMaxByK]] aggregate — map-side partial
     * aggregation ships at most k candidates per (outer row, partition)
     * into one shuffle, the same plan shape as [[vssJoin]]. (Spark's
@@ -213,14 +239,13 @@ object Vss {
     * Ties at equal distance may break differently from row_number, as
     * between any two brute plans. */
   private def lateralTopKAggregate(outerNN: DataFrame, innerNN: DataFrame,
-      outerCol: String, innerCol: String, outerKey: String, k: Int,
-      metricName: String): DataFrame = {
+      outerCol: String, innerCol: String, outerKey: String, k: Int, m: Metric): DataFrame = {
     val outerCols = outerNN.columns.toSeq
     val innerCols = innerNN.columns.toSeq
     val scored = broadcastQuery(outerNN.select(struct(outerCols.map(col): _*).as("_o")))
       .crossJoin(innerNN.select(struct(innerCols.map(col): _*).as("_i")))
       .withColumn("dist",
-        lateralDist(col("_o").getField(outerCol), col("_i").getField(innerCol), metricName))
+        m.distance(col("_o").getField(outerCol), col("_i").getField(innerCol)))
     scored
       .groupBy(col("_o").getField(outerKey).as("_gk"))
       .agg(first(col("_o")).as("_o"),
@@ -236,11 +261,10 @@ object Vss {
    * Index-backed per-row ANN enrichment: `df.*` plus
    * `(neighbor_id, distance, rn)` for the k nearest index entries to each
    * row's `queryCol` vector — [[graft.plans.HnswIndexJoinCore]] planted
-   * directly, no window shape needed. Because the exec is a stateless
-   * per-partition map over executor-cached segments, this works on
-   * STREAMING DataFrames too (stream-static ANN join — `lateralTopK`'s
-   * row_number window cannot exist on a stream), micro-batch rows enriched
-   * as they arrive. NULL query vectors produce no output rows.
+   * directly, with no join back to the indexed table. Because the exec is
+   * a stateless per-partition map over executor-cached segments, this
+   * works on STREAMING DataFrames too (stream-static ANN join), micro-batch
+   * rows enriched as they arrive. NULL query vectors produce no output rows.
    */
   def annTopK(df: DataFrame, indexName: String, queryCol: String, k: Int): DataFrame =
     annTopK(df, indexName, queryCol, k, probeSegments = None)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Exp
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics, UnaryNode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 import graft.Hnsw
@@ -19,14 +20,13 @@ import graft.index.HnswIndexMeta
  * to k rows extended with `(__hnsw_id, __hnsw_dist, __hnsw_rn)`: the rowids
  * of the k nearest inner vectors, their index-metric distance, and a
  * 1-indexed rank (the reference emits the same 1-indexed row_number,
- * hnsw_optimize_join.cpp:146). The LateralTopKToIndexJoin rule joins this
- * node back to the inner relation on the rowid to recover inner columns.
+ * hnsw_optimize_join.cpp:146). `Vss.lateralTopK` joins this node back to
+ * the inner relation on the rowid to recover inner columns; `Vss.annTopK`
+ * returns it as is.
  *
  * NULL outer vectors produce no output rows. `Vss.lateralTopK` filters NULL
- * outer vectors before building any plan, so every execution path agrees
- * (without that filter the window fallback would rank NULL distances FIRST —
- * Spark's ASC default is NULLS FIRST — where this node emits nothing; the
- * round-4 verdict's divergence).
+ * outer vectors before building either of its plans, so its brute-force
+ * path agrees.
  */
 case class HnswIndexJoinCore(
     child: LogicalPlan,
@@ -79,6 +79,13 @@ case class HnswIndexJoinCoreExec(
 
   override def output: Seq[Attribute] = child.output ++ extra
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "exactSearches" -> SQLMetrics.createMetric(sparkContext, "exact segment searches"),
+    "segmentsSearched" -> SQLMetrics.createMetric(sparkContext, "segments searched"),
+    "graphLoads" -> SQLMetrics.createMetric(sparkContext, "graph loads"),
+    "graphLoadTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "graph load time"))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val out = output
@@ -101,6 +108,8 @@ case class HnswIndexJoinCoreExec(
       case ArrayType(DoubleType, _) => _.toDoubleArray().map(_.toFloat)
       case other => throw new IllegalStateException(s"unexpected query vector type $other")
     }
+    val Seq(rowsOut, exact, segments, loads, loadTime) = Seq("numOutputRows",
+      "exactSearches", "segmentsSearched", "graphLoads", "graphLoadTime").map(metrics)
     child.execute().mapPartitions { iter =>
       val bound = BindReferences.bindReference(q, childOutput)
       val resultProj = UnsafeProjection.create(out, out)
@@ -113,7 +122,13 @@ case class HnswIndexJoinCoreExec(
           val v = bound.eval(row)
           if (v == null) null else toFloats(v.asInstanceOf[ArrayData])
         }
-        val hits = Hnsw.searchBatch(None, b, m, queries, kk, e, probe, margin).hits
+        val found = Hnsw.searchBatch(None, b, m, queries, kk, e, probe, margin)
+        val hits = found.hits
+        rowsOut += hits.map(_.length).sum
+        exact += found.exactSearches
+        segments += found.segments
+        loads += found.graphLoads
+        loadTime += found.loadNanos
         rows.iterator.zipWithIndex.flatMap { case (outerRow, ri) =>
           hits(ri).iterator.zipWithIndex.map { case ((id, d), i) =>
             resultProj(joined(outerRow,

@@ -251,8 +251,8 @@ object HnswQueries {
     }),
     "hnsw_lateral_topk" -> ((s, dir) => {
       ensureIndexes(s, dir)
-      // O5/O6 shape: per-outer-row top-k; the window/filter plan is
-      // rewritten onto HnswIndexJoinCore because the inner side is indexed.
+      // O5/O6 shape: per-outer-row top-k; lateralTopK plants
+      // HnswIndexJoinCore because an index serves the inner side.
       val outer = Tables.load(s, dir, "embeddings").where(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val inner = Tables.load(s, dir, "embeddings")
@@ -338,12 +338,11 @@ object HnswQueries {
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val prevEf = s.conf.getOption(Hnsw.EfSearchKey)
       s.conf.set(Hnsw.EfSearchKey, graft.index.IndexCatalog.DefaultEfSearch.toString)
-      // The lateral rule resolves ef at OPTIMIZATION time, which for a lazy
-      // DataFrame happens after this builder returns (and after the finally
-      // restores the conf — the gate would then run at the gate index's
-      // exhaustive meta ef and could never fail). Execute the ANN side
-      // inside the conf scope; its ≤ 60 rows compare driver-side against
-      // the ensure-cached truth below.
+      // lateralTopK reads ef when it builds the plan, so the call must sit
+      // inside the conf scope (outside it, the gate would run at the gate
+      // index's exhaustive meta ef and could never fail). The ANN side also
+      // executes there; its ≤ 60 rows compare driver-side against the
+      // ensure-cached truth below.
       val got =
         try graft.api.Vss.lateralTopK(queries,
             Tables.load(s, dir, "embeddings"), "q_vec", "embedding", "q_id", 3)

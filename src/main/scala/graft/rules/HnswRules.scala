@@ -3,7 +3,6 @@ package graft.rules
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -14,12 +13,12 @@ import graft.Hnsw
 import graft.aggregates.MinMaxByK
 import graft.expressions._
 import graft.index.{HnswIndexMeta, IndexCatalog}
-import graft.plans.{HnswIndexJoinCore, HnswIndexScan}
+import graft.plans.HnswIndexScan
 
 /**
  * O7 — scalar rewrite `1.0 - array_cosine_similarity(a,b)` →
- * `array_cosine_distance(a,b)`, enabling the TopN/min_by/join rules to match
- * cosine indexes (/root/reference/src/hnsw/hnsw_optimize_expr.cpp:17-70).
+ * `array_cosine_distance(a,b)`, enabling the top-k rule to match cosine
+ * indexes (/root/reference/src/hnsw/hnsw_optimize_expr.cpp:17-70).
  */
 object CosineDistanceRewrite extends Rule[LogicalPlan] {
   private def isOne(e: Expression): Boolean = e match {
@@ -159,177 +158,8 @@ class TopKToIndexScan(session: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/**
- * O5+O6 — lateral top-k → index join. Matches Spark's canonical top-k-per-
- * outer-row shape (what `Vss.lateralTopK` and hand-written window queries
- * produce). Note Spark's analyzer REJECTS the reference's SQL spelling
- * (`LATERAL … ORDER BY dist(outer,inner) LIMIT k` fails with
- * UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY.CORRELATED_REFERENCE — outer
- * references are only allowed in WHERE/HAVING), so the window form below is
- * the one way this query exists in Spark, and the one shape to accelerate:
- *
- *   Filter(rn <= k,
- *     Window([rn := row_number() over (partition by outerKey order by dist ASC)],
- *       [Project], Join(outer, indexedInner, Inner|Cross, no condition)))
- *
- * and replaces it with
- *
- *   Project(original output,
- *     Join(HnswIndexJoinCore(outer), indexedInner, Inner, __hnsw_id = rowid))
- *
- * — the analogue of the reference's delim-join pattern match + plan surgery
- * (/root/reference/src/hnsw/hnsw_optimize_join.cpp:349-697), re-targeted at
- * Spark's decorrelation shape (SURVEY §2 O6). Guards: single ASC order key
- * matching the inner index, constant 0 < k < 2048
- * (hnsw_optimize_join.cpp:457-461), partition key(s) drawn entirely from the
- * outer side, join without condition, and — load-bearing for soundness — the
- * Window node must carry [[LateralTopKToIndexJoin.PerRowWindowTag]].
- *
- * The tag is why the rewrite is semantics-preserving: window `row_number`
- * gives top-k per partition *group*, while the index join gives top-k per
- * outer *row* — equal only when window groups are exactly outer rows. No
- * partition spec can prove that from the plan alone (even `PARTITION BY` all
- * outer columns diverges on duplicate outer rows), so only
- * [[graft.api.Vss.lateralTopK]] — whose `outerKey` contract guarantees
- * per-row groups — tags its Window. This mirrors the reference exactly: it
- * rewrites only genuine decorrelated-LATERAL plans, where `delim_get`
- * structurally guarantees per-row grouping
- * (hnsw_optimize_join.cpp:368-436); a hand-written window query is not
- * accelerated there either.
- */
-class LateralTopKToIndexJoin(session: SparkSession) extends Rule[LogicalPlan] {
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!Hnsw.rewriteEnabled(session)) return plan
-    plan.transformDown {
-      case f @ Filter(cond, w: Window) =>
-        tryRewrite(cond, w).getOrElse(f)
-    }
-  }
-
-  private def tryRewrite(cond: Expression, w: Window): Option[LogicalPlan] = {
-    // Soundness gate: only windows whose groups are provably outer rows —
-    // either tagged by Vss.lateralTopK (its outerKey contract) or the user
-    // opted in, asserting their window partition key is unique per row.
-    if (!w.getTagValue(LateralTopKToIndexJoin.PerRowWindowTag).contains(true) &&
-      !Hnsw.assumeUniqueWindowKey(session)) return None
-    // Single row_number window expression ordered ASC by one key.
-    val (rnAlias, orderKey) = w match {
-      case Window(Seq(al @ Alias(WindowExpression(RowNumber(), _), _)), _,
-          Seq(SortOrder(key, Ascending, _, _)), _, _) => (al, key)
-      case _ => return None
-    }
-    val rnAttr = rnAlias.toAttribute
-    // Filter: conjuncts on rn must be exactly one `rn <= k`; others survive.
-    val conjuncts = splitConjuncts(cond)
-    val (onRn, rest) = conjuncts.partition(_.references.contains(rnAttr))
-    val k = onRn match {
-      case Seq(LessThanOrEqual(a: Attribute, IntegerLiteral(n))) if a.semanticEquals(rnAttr) => n
-      case Seq(LessThan(a: Attribute, IntegerLiteral(n))) if a.semanticEquals(rnAttr) => n - 1
-      case Seq(GreaterThanOrEqual(IntegerLiteral(n), a: Attribute)) if a.semanticEquals(rnAttr) => n
-      case _ => return None
-    }
-    if (!HnswMatch.validK(k)) return None
-
-    // Child: optional projection over an unconditioned Inner/Cross join.
-    val (projList, join) = w.child match {
-      case Project(pl, j: Join) => (Some(pl), j)
-      case j: Join => (None, j)
-      case _ => return None
-    }
-    if (join.condition.isDefined ||
-      (join.joinType != Inner && join.joinType != Cross)) return None
-
-    // Resolve the order key through the projection, then match the index.
-    val dist = projList.fold(orderKey)(HnswMatch.resolveAliases(_, orderKey))
-    val base = Hnsw.baseDir(session)
-
-    // Which side is the indexed inner relation? Accept a bare relation, a
-    // column-pruning (attribute-only) projection, and/or an
-    // `IsNotNull(indexed column)` filter over one — the filter is what
-    // `Vss.lateralTopK` plants for NULL-inner parity, and it is a no-op for
-    // the index path (index builds exclude NULL vectors). Any OTHER filter
-    // must block the rewrite: the index would return rows the filter drops.
-    def asInnerRel(p: LogicalPlan): Option[(LogicalRelation, LogicalPlan, Option[Attribute])] = {
-      def peelNotNull(q: LogicalPlan): Option[(LogicalRelation, Option[Attribute])] = q match {
-        case rel: LogicalRelation => Some((rel, None))
-        case Filter(IsNotNull(nn: AttributeReference), rel: LogicalRelation) => Some((rel, Some(nn)))
-        case _ => None
-      }
-      p match {
-        case pr @ Project(pl, q) if pl.forall(_.isInstanceOf[AttributeReference]) =>
-          peelNotNull(q).map { case (rel, nn) => (rel, pr, nn) }
-        case q => peelNotNull(q).map { case (rel, nn) => (rel, p, nn) }
-      }
-    }
-    val orientations = Seq((join.left, join.right), (join.right, join.left))
-    orientations.view.flatMap { case (outer, innerPlan) =>
-      asInnerRel(innerPlan) match {
-        case Some((innerRel, innerPruned, notNullAttr)) =>
-          HnswMatch.matchIndex(base, innerRel, dist).flatMap {
-            case (meta, queryExpr) =>
-              // The query side must be a per-row vector over the outer side
-              // only, and so must the partition key; a peeled IsNotNull
-              // must be on the indexed vector column (no-op) — any other
-              // column's filter changes semantics.
-              val perRowQuery = queryExpr.references.nonEmpty &&
-                queryExpr.references.subsetOf(outer.outputSet) && (queryExpr.dataType match {
-                  case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-                  case _ => false
-                })
-              if (!perRowQuery || w.partitionSpec.isEmpty ||
-                !w.partitionSpec.forall(_.references.subsetOf(outer.outputSet)) ||
-                notNullAttr.exists(_.name != meta.column)) None
-              else {
-                val idAttr = innerRel.output.find(_.name == meta.idColumn).getOrElse(return None)
-                // The rowid must be available on the join's right side.
-                val joinRight = innerPruned match {
-                  case pr @ Project(pl, relOrFilter) if !pl.exists(_.exprId == idAttr.exprId) =>
-                    Project(pl :+ idAttr, relOrFilter)
-                  case other => other
-                }
-                val extra = Seq(
-                  AttributeReference("__hnsw_id", LongType, nullable = false)(),
-                  AttributeReference("__hnsw_dist", DoubleType, nullable = false)(),
-                  AttributeReference("__hnsw_rn", LongType, nullable = false)())
-                val core = HnswIndexJoinCore(outer, base, meta, queryExpr, k,
-                  Hnsw.efSearch(session, meta), extra)
-                val newJoin = Join(core, joinRight, Inner,
-                  Some(EqualTo(extra.head, idAttr)), JoinHint.NONE)
-                // Reproduce the original output: window child's columns
-                // (via the original projection when present) + rn.
-                val rnExpr = Alias(Cast(extra(2), rnAttr.dataType), rnAttr.name)(
-                  exprId = rnAttr.exprId)
-                val outCols = projList.getOrElse(join.output.map(identity[NamedExpression])) :+ rnExpr
-                val projected = Project(outCols, newJoin)
-                Some(if (rest.isEmpty) projected
-                else Filter(rest.reduce(And), projected))
-              }
-          }
-        case None => None
-      }
-    }.headOption
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
-}
-
-object LateralTopKToIndexJoin {
-  /** Set by [[graft.api.Vss.lateralTopK]] on the row_number Window it
-    * builds, asserting that window groups coincide with outer rows (the
-    * `outerKey`-is-unique API contract) — the Spark stand-in for the
-    * reference's `delim_get` structural guarantee
-    * (hnsw_optimize_join.cpp:368-436). Catalyst copies tags through
-    * `makeCopy`/`withNewChildren`, so the tag survives optimization. */
-  val PerRowWindowTag: org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean] =
-    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean]("graft.hnsw.perRowLateralWindow")
-}
-
-/** Index matching shared by the rewrite rules — the analogue of
-  * `HNSWIndex::TryMatchDistanceFunction` + `TryBindIndexExpression`
+/** Index matching shared by [[TopKToIndexScan]] and `Vss.lateralTopK` — the
+  * analogue of `HNSWIndex::TryMatchDistanceFunction` + `TryBindIndexExpression`
   * (/root/reference/src/hnsw/hnsw_index.cpp:635-689). */
 object HnswMatch {
 

@@ -53,16 +53,6 @@ class HnswIndexSpec extends SparkSuite {
     Hnsw.createIndex(spark, "conf_grid", table, "vec", "id", overwrite = true)
     val q = graft.functions.lit_vector(Array(1f, 2f, 3f))
     def topK() = table.orderBy(graft.functions.array_distance(col("vec"), q)).limit(3).collect()
-    // A hand-written top-k-per-row window: the lateral rule reads its
-    // opt-in key before anything else.
-    def perRow() = {
-      import spark.implicits._
-      Seq((1L, Array(1f, 2f, 3f))).toDF("qid", "q").crossJoin(table)
-        .withColumn("d", graft.functions.array_distance(col("vec"), col("q")))
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("qid").orderBy("d")))
-        .where(col("rn") <= 3).collect()
-    }
     def build() = Hnsw.createIndex(spark, "conf_build", gridDf, "vec", "id", overwrite = true)
     def failsNaming(key: String, value: String)(body: => Any): Unit = {
       spark.conf.set(key, value)
@@ -80,7 +70,6 @@ class HnswIndexSpec extends SparkSuite {
     failsNaming(Hnsw.AdaptiveProbeMarginKey, "-1.5")(topK())
     failsNaming(Hnsw.AdaptiveProbeMarginKey, "Infinity")(topK())
     failsNaming(Hnsw.RewriteEnabledKey, "maybe")(topK())
-    failsNaming(Hnsw.AssumeUniqueWindowKeyKey, "maybe")(perRow())
     failsNaming(Hnsw.PersistenceKey, "maybe")(build())
     failsNaming(Hnsw.MaxVectorsPerPartitionKey, "0")(build())
     failsNaming(Hnsw.BuildPartitionByKey, "vectors")(build())

@@ -61,6 +61,12 @@ class HnswRoutingSpec extends SparkSuite {
     val back = IndexCatalog.load(Hnsw.baseDir(spark), "route_spec_a")
     assert(back.centroids.size == Clusters)
     assert(back.centroids.head.length == Dim)
+    // The harness keeps this suite's indexes out of the shared default
+    // directory, which Bench's hnsw_index_info lists.
+    val default = new java.io.File(sys.props("java.io.tmpdir"), "graft-indexes").getCanonicalPath
+    val base = new java.io.File(Hnsw.baseDir(spark)).getCanonicalPath
+    assert(IndexCatalog.exists(base, "route_spec_a"))
+    assert(base != default && !base.startsWith(default + java.io.File.separator), base)
   }
 
   test("recall@10 >= 0.9 at p=4 of 32 segments (scan path); p=0 stays exact-parity") {

@@ -25,7 +25,6 @@ class KnobSurfaceSpec extends AnyFunSuite {
     "spark.graft.hnsw.efSearch",
     "spark.graft.hnsw.enableExperimentalPersistence",
     "spark.graft.hnsw.probeSegments",
-    "spark.graft.hnsw.rewrite.assumeUniqueWindowKey",
     "spark.graft.hnsw.rewrite.enabled",
     "spark.graft.index.location",
     "spark.graft.kernel.spreadMaxBytes",
@@ -40,7 +39,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
 
   private val KeyLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
 
-  test("the spark.graft.* keys read under src/main/scala are exactly the listed 24") {
+  test("the spark.graft.* keys read under src/main/scala are exactly the listed 23") {
     val root: Path = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root),
       s"main sources not found at $root: run the suite from the project directory")
@@ -50,7 +49,7 @@ class KnobSurfaceSpec extends AnyFunSuite {
         KeyLiteral.findAllMatchIn(Files.readString(f)).map(_.group(1))
       }.toSet
       finally files.close()
-    assert(Keys.size == 24)
+    assert(Keys.size == 23)
     assert((found -- Keys).isEmpty, s"keys not in the list: ${(found -- Keys).toSeq.sorted}")
     assert((Keys -- found).isEmpty, s"listed keys no longer read: ${(Keys -- found).toSeq.sorted}")
   }

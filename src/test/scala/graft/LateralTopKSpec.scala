@@ -71,35 +71,6 @@ class LateralTopKSpec extends SparkSuite {
     } finally spark.conf.set(Hnsw.RewriteEnabledKey, "true")
   }
 
-  test("opt-in conf accelerates hand-written window top-k SQL (assumeUniqueWindowKey)") {
-    Hnsw.createIndex(spark, "lat_sql_idx", inner, "b_vec", "b_id",
-      Map("ef_search" -> "100000"), overwrite = true)
-    outer.createOrReplaceTempView("lat_outer")
-    inner.createOrReplaceTempView("lat_inner")
-    // The window form a SQL user writes by hand — no Vss tag on the Window,
-    // so by default it runs brute-force (per-row grouping is unprovable from
-    // the plan; the conf is the user's uniqueness assertion on a_id).
-    def q = spark.sql(
-      """SELECT a_id, b_id, dist, rn FROM (
-        |  SELECT o.a_id, i.b_id,
-        |         array_distance(o.a_vec, i.b_vec) AS dist,
-        |         row_number() OVER (PARTITION BY o.a_id
-        |                            ORDER BY array_distance(o.a_vec, i.b_vec)) AS rn
-        |  FROM lat_outer o, lat_inner i)
-        |WHERE rn <= 3""".stripMargin)
-    assert(!planOf(q).contains("HnswIndexJoinCore"))
-    val brute = q.collect().map(r => (r.getLong(0), r.getInt(3), r.getDouble(2)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    spark.conf.set(Hnsw.AssumeUniqueWindowKeyKey, "true")
-    try {
-      assert(planOf(q).contains("HnswIndexJoinCore"), planOf(q))
-      val accel = q.collect().map(r => (r.getLong(0), r.getInt(3), r.getDouble(2)))
-        .sortBy(t => (t._1, t._2)).toSeq
-      assert(accel == brute)
-    } finally spark.conf.unset(Hnsw.AssumeUniqueWindowKeyKey)
-    Hnsw.dropIndex(spark, "lat_sql_idx")
-  }
-
   test("extra filter conjuncts survive the rewrite") {
     def q = Vss.lateralTopK(outer, inner, "a_vec", "b_vec", "a_id", 3)
       .where(col("a_id") =!= 3L)
@@ -152,7 +123,7 @@ class LateralTopKSpec extends SparkSuite {
       Map("ef_search" -> "100000"), overwrite = true)
     // Three outer rows, but `grp` has duplicates: window semantics are top-k
     // per GROUP (4 rows at k=2 over 2 groups), index-join semantics would be
-    // top-k per ROW (6 rows) — the rewrite must not fire.
+    // top-k per ROW (6 rows) — the window must stay a window.
     val outerDup = Seq(
       (10L, 1L, Array(1f, 2f, 3f)),
       (11L, 1L, Array(4f, 5f, 6f)),
@@ -166,9 +137,9 @@ class LateralTopKSpec extends SparkSuite {
       .where(col("rn") <= 2)
     assert(!planOf(q).contains("HnswIndexJoinCore"), planOf(q))
     assert(q.count() == 4) // un-rewritten window semantics preserved
-    // Same shape with a unique key still does not rewrite (only the tagged
-    // lateral API proves per-row groups — reference parity: DuckDB does not
-    // accelerate hand-written window queries either).
+    // Same shape with a unique key still runs as a window: only
+    // Vss.lateralTopK plants the index join (reference parity: DuckDB does
+    // not accelerate hand-written window queries either).
     val w2 = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a_id")).orderBy(col("dist").asc)
     val q2 = outerDup.crossJoin(inner)
@@ -253,11 +224,11 @@ class LateralTopKSpec extends SparkSuite {
     } finally Hnsw.dropIndex(spark, "lat_self_idx")
   }
 
-  test("an indexed path the rule cannot bind (filtered inner, INT id) takes the aggregate, not the window") {
-    // The rule binds only a bare inner (at most the IsNotNull(vector)
+  test("an indexed path the index join cannot bind (filtered inner, INT id) takes the aggregate, not the window") {
+    // The index join binds only a bare inner (at most the IsNotNull(vector)
     // filter lateralTopK plants) with a BIGINT id column. Anything else over
-    // an indexed path must not leave the row_number window over the cross
-    // product to execute.
+    // an indexed path must run the aggregate, not a row_number window over
+    // the cross product.
     import spark.implicits._
     def write(idType: String): DataFrame = {
       val dir = Files.createTempDirectory(s"graft-lat-$idType").toFile.getAbsolutePath
@@ -361,5 +332,44 @@ class LateralTopKSpec extends SparkSuite {
     assert(planOf(q).contains("HnswIndexJoinCore"), planOf(q))
     val ids = q.collect().map(_.getAs[Long]("b_id")).toSet
     assert(ids == Set(1L, 3L)) // the NULL row is not in the index
+  }
+
+  test("an unknown metric fails naming it and the accepted names, from the API and the TVF") {
+    def failsNaming(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        Seq("'hamming'", "cosine", "ip", "l2sq").forall(t.getMessage.contains)),
+        chain.map(_.toString).mkString(" <- "))
+    }
+    failsNaming(Vss.lateralTopK(outer, inner, "a_vec", "b_vec", "a_id", 3, "hamming"))
+    outer.createOrReplaceTempView("lat_metric_outer")
+    inner.createOrReplaceTempView("lat_metric_inner")
+    failsNaming(spark.sql(
+      """SELECT * FROM lateral_topk(TABLE(lat_metric_outer), TABLE(lat_metric_inner),
+        |  'a_vec', 'b_vec', 'a_id', 3, 'hamming')""".stripMargin).collect())
+  }
+
+  test("the index join core publishes its SQL metrics, through lateralTopK and annTopK") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    def core(df: DataFrame): graft.plans.HnswIndexJoinCoreExec =
+      Plans.collect(df.queryExecution.executedPlan) {
+        case e: graft.plans.HnswIndexJoinCoreExec => e
+      }.headOption.getOrElse(fail(planOf(df)))
+    Hnsw.createIndex(spark, "lat_metrics_idx", inner, "b_vec", "b_id", overwrite = true)
+    try {
+      for ((df, rows) <- Seq(
+          (() => Vss.lateralTopK(outer, inner, "a_vec", "b_vec", "a_id", 3), 9),
+          (() => Vss.annTopK(outer, "lat_metrics_idx", "a_vec", 2), 6))) {
+        graft.index.GraphCache.invalidate(base)
+        val q = df()
+        assert(q.collect().length == rows)
+        val m = core(q).metrics.map { case (name, metric) => name -> metric.value }
+        assert(m("numOutputRows") == rows, m)
+        assert(m("segmentsSearched") >= 1 && m("exactSearches") <= m("segmentsSearched"), m)
+        assert(m("graphLoads") >= 1 && m("graphLoadTime") > 0, m)
+      }
+    } finally Hnsw.dropIndex(spark, "lat_metrics_idx")
   }
 }

@@ -14,10 +14,20 @@ object SparkSuite {
     current
   }
 
+  /** Where a suite that sets no index location of its own keeps its
+    * indexes: one fresh directory per test JVM, removed at exit, so no
+    * test index is left in the shared default under `java.io.tmpdir`. */
+  private lazy val indexDir: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft-test-indexes").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+    d.getAbsolutePath
+  }
+
   private def build(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config(Hnsw.LocationKey, indexDir)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
